@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Queries surfaced in the compact stdout line: the five BASELINE.md
@@ -22,9 +21,6 @@ object Bench {
     "s_layout_zorder",
     "s_topk_custom_plan")
 
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   /** `value` stays the COLD total (comparable round-over-round with
     * r1–r6); `queries` carries the WARM (second-run) per-query time —
     * the number host-load noise can't fake (VERDICT r6: four rounds of
@@ -41,72 +37,32 @@ object Bench {
                        errors: Seq[(String, String)],
                        sfDir: String, n: Int, withErrors: Boolean): String = {
     val qs = entries.map {
-      case (k, Right(v)) => "\"" + k + "\":" + fmt(v)
+      case (k, Right(v)) => "\"" + k + "\":" + Harness.fmt(v)
       case (k, Left(_))  => "\"" + k + "\":\"err\""
     }.mkString("{", ",", "}")
-    val esc = (s: String) => s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
     val errField =
       if (!withErrors) ""
-      else errors.map { case (k, m) => "\"" + k + "\":\"" + esc(m) + "\"" }
+      else errors.map { case (k, m) => "\"" + k + "\":" + Harness.quote(m) }
         .mkString(""","errors":{""", ",", "}")
-    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"queries are warm (2nd run); value is cold total; failed queries are 'err' and excluded from totals","warm_total":${fmt(warmTotal)},"n_failed":${errors.size}$errField,"queries":$qs,"sf":"$sfDir","n_queries":$n}"""
+    s"""{"metric":"total","value":${Harness.fmt(total)},"unit":"sec","timing":"queries are warm (2nd run); value is cold total; failed queries are 'err' and excluded from totals","warm_total":${Harness.fmt(warmTotal)},"n_failed":${errors.size}$errField,"queries":$qs,"sf":"$sfDir","n_queries":$n}"""
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // coalesce tiny post-shuffle partitions down to the target size
-      // instead of defending parallelism — at bench scale most shuffles
-      // are far below one 64MB partition and the 32-way task scheduling
-      // IS the cost; big shuffles still split by size
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up: pay one-off session/JIT/codegen/parquet-footer/page-cache
-    // costs before the timing loop so the first timed query measures the
-    // query, not JVM startup (BASELINE.md notes ~2s of one-off session
-    // cost otherwise). One cheap query per base table: the alphabetically
-    // first query touching a table otherwise absorbs its whole cold-scan
-    // cost (q_curate_fuzzy was charged ~2.5s of first-documents-read).
-    Seq("q_agg_pricing_summary", "q_agg_distinct_daily",
-        "q_text_quality", "q_sim_cosine_topk").foreach { q =>
-      SparkEntry.queries.get(q).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
-    }
-    // Local-iteration filter (same shape as Verify's): comma-separated
-    // names or substrings. The driver never sets this.
-    val only = sys.env.get("GRAFT_BENCH_ONLY").map(_.split(',').toSet)
-    // cold/warm pair per query, same JVM, no cache clear inside the pair
-    // (TimeQ's exact protocol — warm numbers are what TIMEQ_r{4,6}.md
-    // compare against); cache clears BETWEEN queries so operators'
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
+    Harness.warmUp(spark, sfDir)
+    // cold/warm pair per query, same JVM, no cache clear inside the pair;
+    // Harness.each clears the cache BETWEEN queries so operators'
     // intra-query persists don't charge later queries for earlier ones'
-    // storage (the clear itself is outside both timed windows)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        only.forall(o => o.contains(name) || o.exists(name.contains)) }
-      .map { case (name, fn) =>
-      def once(): Either[String, Double] = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
-          Left((e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage)).linesIterator.mkString(" ").take(200))
-        }
-      }
-      val cold = once()
-      val warm = if (cold.isRight) once() else cold
-      Blocks.dropAll(spark) // incl. leaked result-checkpoint blocks
-      (name, cold, warm)
+    // storage (the clear itself is outside both timed windows). A cold
+    // failure fails both runs; a warm one only the warm.
+    val results = Harness.each(spark,
+        Harness.only(SparkEntry.queries.toSeq.sortBy(_._1)), passes = 2) {
+      (_, fn) => Harness.secs(fn(spark, sfDir).count())
+    }.map { o =>
+      def run(i: Int): Either[String, Double] = o.passes.lift(i)
+        .toRight(o.error.fold("")(Harness.describe(_, 200)))
+      (o.name, run(0), run(1))
     }
     val total = results.flatMap(_._2.toOption).sum
     val warmTotal = results.flatMap(_._3.toOption).sum
@@ -121,13 +77,7 @@ object Bench {
     // (SPARK_GRAFT_BENCH_OUT=/root/repo/BENCH_LOCAL_r{N}.json) that no
     // other invocation ever touches.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LOCAL.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch {
-      // never fail the bench over the file copy, but never hide it either —
-      // a silent miss here is exactly the lost-output failure this exists for
-      case e: Throwable => System.err.println(s"[bench] could not write $outPath: $e")
-    }
+    Harness.save(outPath, full + "\n")
     // stop BEFORE printing: shutdown logging must not push the JSON out of
     // the driver's tail window
     spark.stop()

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Between-query session cleanup shared by the harness mains (Bench,
-  * Verify, TimeQ, PlanDigest).
+/** Between-query session cleanup, run after every query by the shared
+  * per-query loop `Harness.each` (Bench, Verify, HostFactor, PlanDigest
+  * and the Harness main).
   *
   * `spark.catalog.clearCache()` drops only the SQL relation cache —
   * localCheckpoint blocks from iterative operators (PageRank,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Host-state adjudication probe (VERDICT r15 #1): re-runs five pinned
   * cheap queries under the exact Bench session/protocol and emits ONE
@@ -13,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * queries, then each pinned query three times in a fixed order — so
   * JIT/codegen warmth at each measurement is reproducible run-to-run
   * and the reference constants compare like-for-like (the r12 lesson:
-  * single TimeQ runs read 30–100% above full-bench stamps because
+  * single isolated runs read 30–100% above full-bench stamps because
   * warmth differs; HostFactor only ever compares HostFactor runs).
   * Per query the statistic is min(run2, run3): the best warm time is
   * the host's capability — genuine co-tenant load elevates even the
@@ -24,6 +23,9 @@ import org.apache.spark.sql.SparkSession
   * TIMEQ_r15.md's stamp-1 capability anchor calls healthy. Re-baking
   * them requires a committed TIMEQ note (they are the denominator of
   * every future adjudication).
+  *
+  * The refs were taken at `local[32]`: run it with SPARK_GRAFT_CPUS=32
+  * (the line's `cpus` field records the width it ran at).
   *
   * Usage: `sbt "runMain graft.HostFactor"` — writes the JSON line to
   * stdout and to SPARK_GRAFT_HOSTFACTOR_OUT (default untracked
@@ -47,56 +49,38 @@ object HostFactor {
     "q_evt_tumbling_hourly" -> 0.320,
     "q_sim_cosine_topk"     -> 0.526)
 
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // identical warm-up to Bench: one cheap query per base table
-    Seq("q_agg_pricing_summary", "q_agg_distinct_daily",
-        "q_text_quality", "q_sim_cosine_topk").foreach { q =>
-      SparkEntry.queries.get(q).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
+    Harness.warmUp(spark, sfDir) // identical warm-up to Bench
+    val registry = SparkEntry.queries
+    val outcomes = Harness.each(spark,
+        pinned.map { case (name, _) => name -> registry(name) }, passes = 3) {
+      (_, fn) => Harness.secs(fn(spark, sfDir).count())
     }
-    val measured = pinned.map { case (name, ref) =>
-      val fn = SparkEntry.queries(name)
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      Blocks.dropAll(spark)
-      (name, ref, math.min(times(1), times(2)))
+    val measured = pinned.zip(outcomes).flatMap {
+      case ((name, ref), Harness.Outcome(_, Seq(_, t2, t3), _)) =>
+        Some((name, ref, math.min(t2, t3)))
+      case (_, o) =>
+        System.err.println(s"[hostfactor] ${o.name} failed: " +
+          o.error.fold("")(Harness.describe(_, 200)))
+        None
     }
     spark.stop()
     val ratios = measured.collect { case (n, ref, w) if ref > 0 => (n, w / ref) }
     val factor =
       if (ratios.isEmpty) -1.0
       else { val s = ratios.map(_._2).sorted; s(s.length / 2) } // median of 5
-    val qs = measured.map { case (n, _, w) => "\"" + n + "\":" + fmt(w) }
+    val qs = measured.map { case (n, _, w) => "\"" + n + "\":" + Harness.fmt(w) }
       .mkString("{", ",", "}")
-    val rs = ratios.map { case (n, r) => "\"" + n + "\":" + fmt(r) }
+    val rs = ratios.map { case (n, r) => "\"" + n + "\":" + Harness.fmt(r) }
       .mkString("{", ",", "}")
-    val refs = measured.map { case (n, ref, _) => "\"" + n + "\":" + fmt(ref) }
+    val refs = measured.map { case (n, ref, _) => "\"" + n + "\":" + Harness.fmt(ref) }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"host_factor","value":${fmt(factor)},"stat":"min(run2,run3) per query, median ratio across queries; ~1.0 = the committed healthy anchor, >1 = uniform host drift","queries":$qs,"ratios":$rs,"refs":$refs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"host_factor","value":${Harness.fmt(factor)},"stat":"min(run2,run3) per query, median ratio across queries; ~1.0 = the committed healthy anchor, >1 = uniform host drift","queries":$qs,"ratios":$rs,"refs":$refs,"sf":"$sfDir","cpus":${Harness.cpus}}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_HOSTFACTOR_OUT",
       "/root/repo/HOSTFACTOR.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"[hostfactor] could not write $outPath: $e") }
+    Harness.save(outPath, line + "\n")
     println(line)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec, GenerateExec, SortExec, FileSourceScanExec, RDDScanExec, ExternalRDDScanExec, LocalTableScanExec, EmptyRelationExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike, ReusedExchangeExec}
@@ -100,34 +99,19 @@ object PlanDigest {
   def main(args: Array[String]): Unit = {
     val outFile = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val lines = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try {
+    val spark = Harness.session(Harness.cpus)
+    val lines = Harness.each(spark, SparkEntry.queries.toSeq.sortBy(_._1)) {
+      (_, fn) =>
         val df = fn(spark, sfDir)
         df.collect() // finalize the adaptive plan
-        val d = digest(df.queryExecution.executedPlan)
-        val fields = d.toSeq.sortBy(_._1)
+        digest(df.queryExecution.executedPlan).toSeq.sortBy(_._1)
           .map { case (k, v) => s""""$k":$v""" }.mkString(",")
-        Blocks.dropAll(spark)
-        Some(s"""  "$name": {$fields}""")
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[plandigest] $name failed: ${e.getMessage}")
-          None
-      }
+    }.flatMap { o =>
+      o.error.foreach(e =>
+        System.err.println(s"[plandigest] ${o.name} failed: ${e.getMessage}"))
+      o.passes.map(fields => s"""  "${o.name}": {$fields}""")
     }
-    val json = lines.mkString("{\n", ",\n", "\n}\n")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      json.getBytes("UTF-8"))
+    Harness.save(outFile, lines.mkString("{\n", ",\n", "\n}\n"))
     println(s"[plandigest] wrote ${lines.size} digests to $outFile")
     spark.stop()
   }

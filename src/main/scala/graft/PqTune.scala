@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** IVF-PQ recall/scan tuning harness (the r10/r13 trade tables):
   * `runMain graft.PqTune [sfDir]` prints mean recall@5 vs the exact
   * cosine top-5 for a grid of (nlist, nprobe, spill, kmIters, rerank)
@@ -12,14 +10,7 @@ object PqTune {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     val emb = Tables.t(spark, sfDir, "embeddings")
     val exact = graft.queries.SimQueries.queries("q_sim_cosine_topk")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)

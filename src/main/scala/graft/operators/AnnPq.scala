@@ -136,10 +136,6 @@ object AnnPq {
       return ivfPqTopK(spark, embeddings, probeMaxId, k, m, codes, rerank,
         seed, maxTrain, nlist, nprobe, spill, kmIters)
     import spark.implicits._
-    def dbg(msg: String): Unit =
-      if (sys.env.contains("GRAFT_PQ_DEBUG"))
-        println(f"[pq] $msg t=${System.nanoTime() / 1e9}%.2f")
-    dbg("start")
     graft.functions.VectorFunctions.register(spark)
     // deterministic bounded training sample, L2-normalized; doubles as the
     // emptiness probe (no separate isEmpty job) and is REUSED for the IVF
@@ -149,11 +145,9 @@ object AnnPq {
       return Seq.empty[(Long, Long, Double, Long)]
         .toDF("probe_id", "neighbor_id", "sim", "rn")
     }
-    dbg("train collected")
     val dim = train(0).length
     val subDim = dim / m
     val books = trainCodebooks(train, m, codes, seed)
-    dbg("codebooks trained")
 
     // ---- encode: per subspace, argmin over its K sub-centroids ----
     // A typed mapPartitions kernel, deliberately: the encode is a dense
@@ -210,7 +204,6 @@ object AnnPq {
     // ---- probes' ADC lookup tables: lut[b*K + j] = |p_b - c_{b,j}|² ----
     val probeRows = encoded.filter(col("vec_id") < probeMaxId)
       .select(col("vec_id"), col("v"), col("e_nrm")).collect()
-    dbg("probes collected (cache populated)")
     val luts = probeRows.map { r =>
       val raw = r.getSeq[Float](1).toArray.map(_.toDouble)
       val n = r.getDouble(2)

@@ -45,10 +45,6 @@ object DedupClusters {
     // materialize the (possibly expensive) pair detector ONCE before the
     // union — its two branches would otherwise each evaluate the upstream
     // plan; every propagation round then re-reads only these rows
-    def dbg(m: String): Unit =
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] $m t=${System.nanoTime() / 1e9}%.2f")
-    dbg("start")
     // localCheckpoint, not Dataset.persist: a checkpoint stores raw
     // UnsafeRow bytes where persist builds a compressed COLUMNAR cache —
     // measured at sf0.1, the columnar encode/decode made q_curate_fuzzy
@@ -59,17 +55,14 @@ object DedupClusters {
     val beforeIds = sc.getPersistentRDDs.keySet
     val half = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .localCheckpoint()
-    dbg("half ckpt")
     // the union over the materialized half is cheap to recompute per
     // round — a second checkpoint would only add a copy of the data
     val edges = half
       .union(half.select(col("dst").as("src"), col("src").as("dst")))
-    dbg("edges built")
     var labels = edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("nb_min"))
       .select(col("id"), least(col("id"), col("nb_min")).as("lbl"))
       .localCheckpoint()
-    dbg("labels init")
     var iters = 0
     var changed = 1L
     while (changed > 0 && iters < maxIters) {
@@ -99,8 +92,6 @@ object DedupClusters {
             .localCheckpoint()
         }
       iters += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $iters changed=$changed t=${System.nanoTime()/1e9}")
     }
     require(changed == 0,
       s"components did not converge after $maxIters rounds — the pair graph " +

@@ -53,11 +53,7 @@ object PageRank {
                  srcCol: String = "src", dstCol: String = "dst",
                  tol: Double = 0.0): (DataFrame, Int) = {
     require(iters >= 0, s"iters must be non-negative, got $iters")
-    def dbg(m: String): Unit =
-      if (sys.env.contains("GRAFT_PR_DEBUG"))
-        println(f"[pr] $m t=${System.nanoTime() / 1e9}%.2f")
     val sc = edges.sparkSession.sparkContext
-    dbg("start")
     val beforeIds = sc.getPersistentRDDs.keySet
     // materialize the (possibly expensive) upstream pair detector once;
     // every round re-reads only these raw rows
@@ -77,10 +73,8 @@ object PageRank {
       .withColumn("deg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("src")))
       .localCheckpoint()
-    dbg("eDeg ckpt")
     val nodes = eDeg.select(col("src").as("id"))
       .union(eDeg.select(col("dst").as("id"))).distinct().localCheckpoint()
-    dbg("nodes ckpt")
     // dangling = appears only as a destination (no out-edges). The set is
     // STATIC, so a graph with none (every undirected/symmetric graph)
     // skips the per-round mass branch entirely — two stages per round.
@@ -93,7 +87,6 @@ object PageRank {
     var ranks = nodes.crossJoin(nDf)
       .select(col("id"), (lit(1.0) / col("n")).as("rank"))
       .localCheckpoint()
-    dbg("ranks init")
     // ids backing the CURRENT ranks checkpoint — the superseded one is
     // freed INSIDE the loop as soon as its successor is materialized
     // (localCheckpoint is eager, so the old blocks back nothing once the
@@ -153,8 +146,7 @@ object PageRank {
         val moved = next.agg(coalesce(sum(abs(col("rank") - col("prev"))), lit(0.0)))
           .first().getDouble(0)
         converged = moved < tol
-        dbg(f"round $it moved $moved%.3e")
-      } else dbg(s"round $it")
+      }
     }
     // free every checkpoint block this method created except the one
     // backing the returned table (ids are monotonic — max is the result's)
@@ -162,7 +154,6 @@ object PageRank {
     if (added.nonEmpty)
       (added - added.max).foreach(id =>
         sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    dbg("done")
     (ranks, it)
   }
 

@@ -47,7 +47,7 @@ class BloomJoinSpec extends SparkSpec {
 
   test("measured: the reduction deletes most of the fact side's shuffle bytes") {
     def run(pre: org.apache.spark.sql.DataFrame): Long = {
-      val (_, write, _, _) = ShuffleAudit.measure(spark) {
+      val (_, write, _, _) = Harness.bytes(spark) {
         pre.hint("shuffle_hash").join(dim, Seq("c_custkey"))
           .groupBy("c_custkey").agg(count(lit(1))).collect()
       }

@@ -12,7 +12,7 @@ class ShuffleAuditSpec extends SparkSpec {
   test("map-only query audits at zero shuffle bytes; shuffling aggregate does not") {
     // q_mm_enriched_filter: broadcast join + filter, exchanges:0 in the
     // plan digest — nothing may cross the wire
-    val (r0, w0, _, in0) = ShuffleAudit.measure(spark) {
+    val (r0, w0, _, in0) = Harness.bytes(spark) {
       SparkEntry.queries("q_mm_enriched_filter")(spark, dir).count()
     }
     assert(r0 == 0 && w0 == 0, s"map-only query shuffled: read=$r0 write=$w0")
@@ -20,7 +20,7 @@ class ShuffleAuditSpec extends SparkSpec {
 
     // s_agg_salted: two-phase salted aggregate — the partial results
     // must actually cross the wire
-    val (r1, w1, _, _) = ShuffleAudit.measure(spark) {
+    val (r1, w1, _, _) = Harness.bytes(spark) {
       SparkEntry.queries("s_agg_salted")(spark, dir).count()
     }
     assert(r1 > 0 && w1 > 0, s"salted aggregate reported no shuffle: read=$r1 write=$w1")
