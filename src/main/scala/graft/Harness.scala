@@ -18,7 +18,8 @@ import scala.jdk.CollectionConverters._
   * and writes one JSON record per query to OUT: cold/warm seconds and
   * rows, then the warm run's layers — jobs, stages, tasks, time outside
   * every stage, summed stage wall, task run, task CPU and GC time, and
-  * shuffle_read_mb / shuffle_write_mb / spilled_mb / input_mb.
+  * shuffle_read_bytes / shuffle_write_bytes / spilled_bytes /
+  * input_bytes as integers.
   */
 object Harness {
 
@@ -243,6 +244,15 @@ object Harness {
     try Files.write(Paths.get(path), text.getBytes(UTF_8))
     catch { case e: Throwable => System.err.println(s"[graft] could not write $path: $e") }
 
+  /** One query's JSON record: cold and warm seconds, rows, and the warm
+    * run's layers, bytes as integers.
+    */
+  def record(name: String, rows: Long, cold: Layers, w: Layers): String =
+    s"""${quote(name)}: {"cold_s":${fmt(cold.wallMs / 1e3)},"warm_s":${fmt(w.wallMs / 1e3)},"rows":$rows,""" +
+      s""""jobs":${w.jobs},"stages":${w.stages},"tasks":${w.tasks},"outside_stage_ms":${w.outsideStageMs},""" +
+      s""""stage_ms":${w.stageMs},"task_run_ms":${w.taskRunMs},"task_cpu_ms":${w.taskCpuMs},"gc_ms":${w.gcMs},""" +
+      s""""shuffle_read_bytes":${w.shuffleRead},"shuffle_write_bytes":${w.shuffleWrite},"spilled_bytes":${w.spilled},"input_bytes":${w.input}}"""
+
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("LAYERS.json")
     val sf = sfDir()
@@ -251,16 +261,12 @@ object Harness {
     val names = if (args.length > 1) args.toSeq.drop(1) else registry.keys.toSeq.sorted
     val (known, unknown) = names.partition(registry.contains)
     unknown.foreach(n => println(s"[harness] unknown query: $n"))
-    def mb(b: Long): String = fmt(b / 1048576.0, 2)
     val records = each(spark, known.map(n => n -> registry(n)), passes = 2) {
       (_, fn) => measure(spark)(fn(spark, sf).count())
     }.map {
       case Outcome(name, Seq((rows, cold), (_, w)), _) =>
         println(f"[harness] $name%-28s cold ${cold.wallMs / 1e3}%6.2f s  warm ${w.wallMs / 1e3}%6.2f s  rows $rows  jobs ${w.jobs}  stages ${w.stages}  tasks ${w.tasks}  outside ${w.outsideStageMs} ms")
-        s"""${quote(name)}: {"cold_s":${fmt(cold.wallMs / 1e3)},"warm_s":${fmt(w.wallMs / 1e3)},"rows":$rows,""" +
-          s""""jobs":${w.jobs},"stages":${w.stages},"tasks":${w.tasks},"outside_stage_ms":${w.outsideStageMs},""" +
-          s""""stage_ms":${w.stageMs},"task_run_ms":${w.taskRunMs},"task_cpu_ms":${w.taskCpuMs},"gc_ms":${w.gcMs},""" +
-          s""""shuffle_read_mb":${mb(w.shuffleRead)},"shuffle_write_mb":${mb(w.shuffleWrite)},"spilled_mb":${mb(w.spilled)},"input_mb":${mb(w.input)}}"""
+        record(name, rows, cold, w)
       case o =>
         val msg = o.error.fold("no result")(describe(_, 200))
         println(s"[harness] ${o.name} failed: $msg")

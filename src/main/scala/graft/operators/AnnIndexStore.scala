@@ -507,9 +507,13 @@ object AnnIndexStore {
     }.toArray
   }
 
+  /** The nlist centroids in list_id order. An explicit schema spares
+    * the schema-inference job, and the collected nlist rows sort
+    * locally in place of a distributed orderBy.
+    */
   private def loadCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    spark.read.parquet(s"$dir/centroids").orderBy("list_id")
-      .collect().map(_.getSeq[Double](1).toArray)
+    spark.read.schema("list_id INT, c ARRAY<DOUBLE>").parquet(s"$dir/centroids")
+      .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   private def writeLists(vectors: DataFrame, centroids: Array[Array[Double]],
                          dir: String, overwrite: Boolean): Unit =

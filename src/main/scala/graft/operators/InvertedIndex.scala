@@ -174,11 +174,15 @@ object InvertedIndex {
     // select BEFORE distinct: partition discovery appends the bucket
     // column, and a doc's terms span many buckets — distinct over
     // (doc_id, dl, bucket) would duplicate docs and corrupt _stats
-    spark.read.schema("doc_id BIGINT, dl BIGINT").parquet(segDir)
-      .select("doc_id", "dl").distinct()
-      .write.mode("overwrite").parquet(s"$segDir/_doclen")
-    spark.read.schema("doc_id BIGINT, dl BIGINT").parquet(s"$segDir/_doclen")
-      .agg(count(lit(1)).as("n_docs"), sum("dl").as("tot_dl"))
+    // _stats is the (count, sum) observed on the _doclen write — no
+    // re-read of the table just written
+    val (_, stats) = Observed.observing(
+        spark.read.schema("doc_id BIGINT, dl BIGINT").parquet(segDir)
+          .select("doc_id", "dl").distinct(),
+        count(lit(1)).as("n_docs"), sum("dl").as("tot_dl")) {
+      _.write.mode("overwrite").parquet(s"$segDir/_doclen")
+    }
+    spark.createDataFrame(java.util.List.of(stats), stats.schema)
       .write.mode("overwrite").parquet(s"$segDir/_stats")
     // per-term score-bound aux (the MaxScore/WAND dictionary): df plus
     // the tf/dl extremes that bound any posting's BM25 tf-norm (the
@@ -256,7 +260,7 @@ object InvertedIndex {
       // compacted store with a FRESH checkpoint (batch ids restart at 0
       // and collide with retired segment names) — fail loudly; the
       // operator picks a new checkpoint-unique segment prefix.
-      require(!referencedSegs(spark, dir).contains(s"seg=$seg"),
+      require(!referenced(spark, dir, "seg").contains(s"seg=$seg"),
         s"seg=$seg exists under $dir but is referenced by an older retained " +
           "manifest (a superseded pre-compaction segment, not this batch's " +
           "staged data) — refusing to adopt it; append this batch under a " +
@@ -320,28 +324,32 @@ object InvertedIndex {
     }
     val toMerge = bySize.take(live.size - targetSegs + 1)
     val kept = bySize.drop(live.size - targetSegs + 1)
-    // re-derive dl per doc from the merged postings (window by doc_id)
-    // instead of carrying the column through the group-by: uniform for
-    // legacy segments that predate the inline-dl layout, and exact
-    // because a doc's postings are wholly contained in the merged set
-    // (the disjoint-doc append precondition again).
     // Tombstoned docs are dropped HERE — compact is where a logical
     // delete becomes physical erasure: their postings never enter the
     // merged segment, whose freshly-derived _doclen/_stats aux then
     // excludes them for free.
-    val tomb = tombstonesOf(spark, dir, cur)
     val hasTombs = cur >= 0 && StoreManifest.read(spark, dir, cur, "tomb").nonEmpty
-    val mergedRaw = spark.read.option("basePath", dir)
-      .parquet(toMerge.map(s => s"$dir/$s"): _*)
-      .select("term", "doc_id", "positions", "tf")
-    val merged = (if (hasTombs)
-      mergedRaw.join(broadcast(tomb.select("doc_id")), Seq("doc_id"), "left_anti")
-    else mergedRaw)
-      .groupBy("term", "doc_id")
-      .agg(sort_array(flatten(collect_list("positions"))).as("positions"),
-        sum("tf").as("tf"))
-      .withColumn("dl", sum("tf").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
+    val paths = toMerge.map(s => s"$dir/$s")
+    // segments carrying the inline-dl aux fold as a REWRITE (read with
+    // the stored schema — doc_id BIGINT, as every aux read assumes):
+    // appends carry disjoint doc_ids, so each (term, doc_id) posting
+    // already occurs once and its stored dl equals the doc's sum(tf).
+    // Legacy segments without the aux re-aggregate and re-derive dl per
+    // doc (window by doc_id) — exact because a doc's postings are wholly
+    // contained in the merged set (the same precondition).
+    val merged =
+      if (toMerge.forall(s => new java.io.File(dir, s"$s/_stats").exists()))
+        minusTombstones(spark, dir, cur, spark.read.option("basePath", dir)
+            .schema("term STRING, doc_id BIGINT, positions ARRAY<INT>, tf BIGINT, dl BIGINT")
+            .parquet(paths: _*))
+          .select("term", "doc_id", "positions", "tf", "dl")
+      else minusTombstones(spark, dir, cur, spark.read.option("basePath", dir)
+          .parquet(paths: _*).select("term", "doc_id", "positions", "tf"))
+        .groupBy("term", "doc_id")
+        .agg(sort_array(flatten(collect_list("positions"))).as("positions"),
+          sum("tf").as("tf"))
+        .withColumn("dl", sum("tf").over(
+          org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
     val segName = freshSegName(spark, dir, i => s"seg=c$i", next) // see write()
     val segDir = new java.io.File(dir, segName)
     val tmp = new java.io.File(dir, s".tmp_$segName")
@@ -359,20 +367,18 @@ object InvertedIndex {
     // the rewrite below must not re-read the OLD tomb dir after vacuum
     // could sweep it.
     val keptTomb =
-      if (!hasTombs || kept.isEmpty) tomb.limit(0)
-      else tomb.join(docLengthsOf(spark, dir, kept).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-    val keptTombRows = keptTomb.localCheckpoint()
-    val tombLines =
-      if (keptTombRows.isEmpty) Nil
-      else {
-        val tombName = freshName(spark, dir, "tomb", i => s"tomb=t$i", next)
-        val tombTmp = new java.io.File(dir, s".tmp_$tombName")
-        graft.Fs.rmTree(tombTmp.toString)
-        keptTombRows.coalesce(1).write.mode("overwrite").parquet(tombTmp.toString)
-        graft.Fs.atomicMove(tombTmp.toString, new java.io.File(dir, tombName).toString)
-        Seq(s"tomb\t$tombName")
-      }
+      if (!hasTombs || kept.isEmpty) None
+      else Some(Observed.checkpoint(tombstonesOf(spark, dir, cur)
+          .join(docLengthsOf(spark, dir, kept).select("doc_id"), Seq("doc_id"), "left_semi"),
+        count(lit(1)).as("n"))).collect { case (rows, n) if n.getLong(0) > 0L => rows }
+    val tombLines = keptTomb.toSeq.map { rows =>
+      val tombName = freshName(spark, dir, "tomb", i => s"tomb=t$i", next)
+      val tombTmp = new java.io.File(dir, s".tmp_$tombName")
+      graft.Fs.rmTree(tombTmp.toString)
+      rows.coalesce(1).write.mode("overwrite").parquet(tombTmp.toString)
+      graft.Fs.atomicMove(tombTmp.toString, new java.io.File(dir, tombName).toString)
+      s"tomb\t$tombName"
+    }
     StoreManifest.commit(spark, dir, next, // THE commit point
       s"buckets\t$b" +: (tombLines ++ (kept :+ segName).sorted.map("seg\t" + _)))
     vacuum(spark, dir, retainVersions)
@@ -386,12 +392,6 @@ object InvertedIndex {
   private def segBytes(d: java.io.File): Long =
     Option(d.listFiles()).toSeq.flatten
       .map(f => if (f.isDirectory) segBytes(f) else f.length()).sum
-
-  /** Segment names referenced by ANY retained manifest — the set whose
-    * members must never be deleted or overwritten pre-commit.
-    */
-  private def referencedSegs(spark: SparkSession, dir: String): Set[String] =
-    referenced(spark, dir, "seg")
 
   /** `tag`-values referenced by ANY retained manifest (segments AND
     * tombstone dirs share the never-delete-before-commit discipline).

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** In-flight pipeline metrics via `Dataset.observe` — the zero-cost
   * observability story for a 100 TB pass: the counters are
@@ -31,4 +33,27 @@ object Observed {
       max(col(valueCol)).as("max_value"))
     (instrumented, obs)
   }
+
+  /** The bound on the wait for an action's observed row: it arrives
+    * with the action, and `get` would wait forever if it never did.
+    */
+  val MetricsWait: FiniteDuration = 60.seconds
+
+  /** Run `action` over `df` with the metrics observed on it: the
+    * action's value plus the metrics row, in place of a follow-up count
+    * or collect job. Throws if the row is not there [[MetricsWait]]
+    * after the action.
+    */
+  def observing[A](df: DataFrame, metric: Column, more: Column*)(
+      action: DataFrame => A): (A, Row) = {
+    val obs = Observation()
+    val out = action(df.observe(obs, metric, more: _*))
+    (out, Await.result(obs.future, MetricsWait))
+  }
+
+  /** `df.localCheckpoint()` with the metrics observed on its own job. On
+    * empty input a `count` reads 0 and a `collect_set` an empty array.
+    */
+  def checkpoint(df: DataFrame, metric: Column, more: Column*): (DataFrame, Row) =
+    observing(df, metric, more: _*)(_.localCheckpoint())
 }

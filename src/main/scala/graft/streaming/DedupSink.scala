@@ -21,7 +21,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale per trigger: one batch-sized fingerprint aggregate plus a
   * seen-set probe pruned to the fingerprint buckets the batch touches
-  * (~batch × corpus/buckets rows read), never the whole seen-set.
+  * (~batch × corpus/buckets rows read), never the whole seen-set. No
+  * job probes the batch for emptiness first: an empty trigger costs the
+  * keep-first checkpoint alone and commits nothing.
   */
 object DedupSink {
 
@@ -44,11 +46,11 @@ object DedupSink {
     docs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          DedupStore.appendBatch(spark, batch, dir, buckets, near, emb)
-          if (DedupStore.seenFileCount(spark, dir) > maxSeenFiles)
-            DedupStore.compactSeen(spark, dir)
-        }
+        // no emptiness probe: nothing survives keep-first on an empty
+        // batch, so the append commits nothing
+        DedupStore.appendBatch(spark, batch, dir, buckets, near, emb)
+        if (DedupStore.seenFileCount(spark, dir) > maxSeenFiles)
+          DedupStore.compactSeen(spark, dir)
         ()
       }
       .option("checkpointLocation", checkpoint)

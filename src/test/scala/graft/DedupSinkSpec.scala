@@ -546,6 +546,143 @@ class DedupSinkSpec extends SparkSpec {
     } finally Fs.rmTree(dir)
   }
 
+  // ---- the one-join near-dup probe: batch rule and store rule fused ----
+
+  /** Disjoint word runs: `run(k, n)` never shares a token with another k. */
+  private def run(k: Int, n: Int): String =
+    (0 until n).map(i => s"r${k}x$i").mkString(" ")
+
+  test("near probe: a chain a < b < c with b~a, c~b, c!~a drops both b and c (batch rule)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsink_ch").toString
+    try {
+      // b shares a 30-token run with a and another with c; a and c share
+      // nothing. At J ≈ 0.45 a pair meets in a band only about two times
+      // in three, so the fixture takes the first of 12 disjoint chains
+      // whose thresholded pairs are exactly (a, b) and (b, c)
+      def chain(s: Int) = Seq(100L * s + 1 -> (run(10 * s + 1, 4) + " " + run(10 * s + 2, 30)),
+        100L * s + 2 -> (run(10 * s + 2, 30) + " " + run(10 * s + 3, 30)),
+        100L * s + 3 -> (run(10 * s + 3, 30) + " " + run(10 * s + 4, 4)))
+      val pairs = operators.MinHashDedup.nearDupPairs(
+          mkDocs((0 until 12).flatMap(chain): _*), threshold = 0.3)
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+      val s = (0 until 12).find(s => pairs.filter(_._1 / 100 == s) ==
+        Set(100L * s + 1 -> (100L * s + 2), 100L * s + 2 -> (100L * s + 3)))
+      assert(s.isDefined, s"fixture drifted: no exact chain among $pairs")
+      val rows = chain(s.get).map { case (id, text) => (id % 100) -> text }
+      // keep-first drops the b-side of EVERY thresholded pair, so c drops
+      // on b even though b itself drops (a greedy rule would keep c)
+      assert(DedupStore.appendBatch(spark, mkDocs(rows: _*), dir, buckets = 4,
+        near = near) == 1L)
+      assert(DedupStore.readDocs(spark, dir).select("doc_id").as[Long]
+        .collect().toSet == Set(1L))
+      assert(spark.read.parquet(s"$dir/near").select("doc_id").as[Long]
+        .collect().toSet == Set(1L), "bands land for the accepted doc only")
+    } finally Fs.rmTree(dir)
+  }
+
+  test("near probe: a doc that is both a batch drop and a store drop drops once; bands land for the accepted only") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsink_bs").toString
+    try {
+      assert(DedupStore.appendBatch(spark, mkDocs(1L -> para(1)), dir,
+        buckets = 4, near = near) == 1L)
+      // 11 is a near-dup of the stored 1 AND of the smaller batch id 10
+      val batch = mkDocs(10L -> (para(1) + " tail"), 11L -> (para(1) + " end"),
+        12L -> para(12))
+      val pairs = operators.MinHashDedup.nearDupPairs(
+          mkDocs(1L -> para(1), 10L -> (para(1) + " tail"),
+            11L -> (para(1) + " end"), 12L -> para(12)), threshold = 0.3)
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+      assert(Set(1L -> 10L, 1L -> 11L, 10L -> 11L).subsetOf(pairs) &&
+        !pairs.exists(_._2 == 12L), s"fixture drifted: $pairs")
+      val st = DedupStore.appendBatchStats(spark, batch, dir)
+      assert(st.exactFresh == 3L && st.lexicalKept == 1L && st.accepted == 1L, st.toString)
+      assert(DedupStore.readDocs(spark, dir).select("doc_id").as[Long]
+        .collect().toSet == Set(1L, 12L))
+      val nearRows = spark.read.parquet(s"$dir/near")
+      assert(nearRows.select("doc_id").as[Long].collect().toSet == Set(1L, 12L))
+      assert(nearRows.count() == 2L * near.get.bands, "one band row per band per doc")
+    } finally Fs.rmTree(dir)
+  }
+
+  test("appendBatchStats: the gate waterfall over every drop kind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsink_wf").toString
+    try {
+      assert(DedupStore.appendBatch(spark, mkEmbDocs((1L, para(1), ev(0))), dir,
+        buckets = 4, near = near, emb = embCfg) == 1L)
+      val batch = Seq(
+        ("x", "unparseable id", ev(4)),   // invalid → exact
+        ("2", para(1), ev(5)),            // exact dup of the store → exact
+        ("3", para(3), ev(1)),            // fresh → accepted
+        ("4", para(3), ev(2)),            // within-batch exact dup of 3 → exact
+        ("5", para(1) + " tail", ev(3)),  // lexical dup of 1 → lexical
+        ("6", para(6), ev(0, 0.1f)),      // semantic dup of 1 → semantic
+        ("7", para(7), ev(6)))            // fresh → accepted
+        .toDF("doc_id", "text", "embedding")
+      val v = StoreManifest.currentVersion(spark, dir)
+      assert(DedupStore.appendBatchStats(spark, batch, dir) ==
+        DedupStore.AppendStats(batchRows = 7L, exactFresh = 4L, lexicalKept = 3L,
+          accepted = 2L, version = v + 1))
+      assert(DedupStore.readDocs(spark, dir).select("doc_id").as[Long]
+        .collect().toSet == Set(1L, 3L, 7L))
+    } finally Fs.rmTree(dir)
+  }
+
+  test("an all-invalid batch and an empty batch commit nothing and return") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsink_ev").toString
+    try {
+      val invalid = Seq(("x", "bad", ev(0)), (null, "bad too", ev(1)))
+        .toDF("doc_id", "text", "embedding")
+      val empty = invalid.limit(0)
+      def timed[A](f: => A): A = {
+        val t0 = System.nanoTime()
+        val out = f
+        assert((System.nanoTime() - t0) / 1e9 < operators.Observed.MetricsWait.toSeconds)
+        out
+      }
+      // on a fresh store (nothing committed yet) and on a committed one
+      for (prime <- Seq(false, true)) {
+        if (prime) assert(DedupStore.appendBatch(spark, mkEmbDocs((1L, para(1), ev(0))),
+          dir, buckets = 4, near = near, emb = embCfg) == 1L)
+        val v = StoreManifest.currentVersion(spark, dir)
+        for (batch <- Seq(invalid, empty)) {
+          assert(timed(DedupStore.appendBatch(spark, batch, dir, buckets = 4,
+            near = near, emb = embCfg)) == 0L)
+          val st = timed(DedupStore.appendBatchStats(spark, batch, dir, buckets = 4,
+            near = near, emb = embCfg))
+          assert(st == DedupStore.AppendStats(batch.count(), 0L, 0L, 0L, -1L), st.toString)
+          assert(StoreManifest.currentVersion(spark, dir) == v, "nothing may commit")
+        }
+      }
+    } finally Fs.rmTree(dir)
+  }
+
+  test("emb probe: a chain a < b < c drops both b and c; a store match drops a batch doc once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsink_ec").toString
+    try {
+      // b sits between a's axis and c's (cosine ≈ 0.71 to each); a and c
+      // are orthogonal
+      val diag = Seq(1f, 1f) ++ Seq.fill(6)(0f)
+      val rows = Seq((1L, "text one", ev(0)), (2L, "text two", diag),
+        (3L, "text three", ev(1)))
+      val pairs = operators.AnnLsh.nearDupPairs(spark,
+          mkEmbDocs(rows: _*).select(col("doc_id").as("vec_id"), col("embedding")))
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+      assert(pairs == Set(1L -> 2L, 2L -> 3L), s"fixture drifted: $pairs")
+      assert(DedupStore.appendBatch(spark, mkEmbDocs(rows: _*), dir, buckets = 4,
+        emb = embCfg) == 1L)
+      // 11 and 12 both match the stored 1, and 12 also matches the
+      // smaller batch id 11; 13 is fresh
+      val st = DedupStore.appendBatchStats(spark, mkEmbDocs(
+        (11L, "text eleven", ev(0, 0.1f)), (12L, "text twelve", ev(0, 0.2f)),
+        (13L, "text thirteen", ev(5))), dir)
+      assert(st.lexicalKept == 3L && st.accepted == 1L, st.toString)
+      assert(DedupStore.readDocs(spark, dir).select("doc_id").as[Long]
+        .collect().toSet == Set(1L, 13L))
+      assert(spark.read.parquet(s"$dir/embs").select("doc_id").as[Long]
+        .collect().toSet == Set(1L, 13L), "emb rows land for the accepted only")
+    } finally Fs.rmTree(dir)
+  }
+
   test("poison rows drop instead of wedging the trigger; bucket modulus is baked") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dsink_p").toString
     try {

@@ -44,5 +44,14 @@ class HarnessSpec extends SparkSpec {
     assert(l.jobs >= 1 && l.stages >= 2 && l.tasks >= l.stages, l.toString)
     assert(l.shuffleWrite > 0 && l.shuffleRead > 0, l.toString)
     assert(l.outsideStageMs >= 0 && l.outsideStageMs <= l.wallMs, l.toString)
+    // the record carries the bytes as integers, so a small shuffle
+    // reads non-zero instead of rounding to 0.00 MB
+    val rec = Harness.record("q", rows, l, l)
+    val field = """"(\w+_bytes)":(\d+)""".r
+    val bytes = field.findAllMatchIn(rec).map(m => m.group(1) -> m.group(2).toLong).toMap
+    assert(bytes.keySet == Set("shuffle_read_bytes", "shuffle_write_bytes",
+      "spilled_bytes", "input_bytes"), rec)
+    assert(bytes("shuffle_read_bytes") == l.shuffleRead && bytes("shuffle_read_bytes") > 0, rec)
+    assert(bytes("shuffle_write_bytes") == l.shuffleWrite && bytes("shuffle_write_bytes") > 0, rec)
   }
 }

@@ -469,6 +469,90 @@ class InvertedIndexSpec extends SparkSpec {
     } finally Fs.rmTree(dir)
   }
 
+  /** A segment's postings, `_doclen`, `_stats` and `_terms` as sorted
+    * row lists (row multisets).
+    */
+  private def segContents(segDir: String): Map[String, Seq[String]] = {
+    def rows(path: String, cols: Seq[String]) =
+      spark.read.parquet(path).select(cols.map(col): _*)
+        .collect().map(_.toSeq.map {
+          case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+          case v => String.valueOf(v)
+        }.mkString("|")).toSeq.sorted
+    Map(
+      "postings" -> rows(segDir, Seq("bucket", "term", "doc_id", "positions", "tf", "dl")),
+      "_doclen" -> rows(s"$segDir/_doclen", Seq("doc_id", "dl")),
+      "_stats" -> rows(s"$segDir/_stats", Seq("n_docs", "tot_dl")),
+      "_terms" -> rows(s"$segDir/_terms", Seq("term", "df", "max_tf", "min_dl")))
+  }
+
+  test("compact of inline-dl segments == write(build(survivors)), with and without a tombstone") {
+    import spark.implicits._
+    val docs = Tables.t(spark, sfDir, "documents")
+    for (tomb <- Seq(false, true)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_idxrw").toString
+      val ref = java.nio.file.Files.createTempDirectory("graft_idxrw_ref").toString
+      try {
+        (0 until 3).foreach { i =>
+          assert(InvertedIndex.append(docs.filter(col("doc_id") % 3 === i), dir, s"s$i"))
+        }
+        val erased = docs.filter(col("doc_id") % 7 === 0).select("doc_id")
+          .as[Long].collect().toSet
+        if (tomb) assert(InvertedIndex.delete(spark, dir, erased.toSeq) == erased.size)
+        val before = InvertedIndex.segments(spark, dir)
+        // the tombstone case folds two of three segments, so the kept
+        // segment's tombstones must carry forward; the other folds all
+        val target = if (tomb) 2 else 1
+        assert(InvertedIndex.compact(spark, dir, targetSegs = target) == 4 - target)
+        val after = InvertedIndex.segments(spark, dir)
+        val kept = before.intersect(after)
+        val merged = after.diff(before)
+        assert(merged.size == 1 && kept.size == target - 1, s"$before -> $after")
+        val foldedRes = before.diff(kept).map(_.stripPrefix("seg=s").toInt)
+        val survivors = docs.filter(col("doc_id").isin(
+          docs.select("doc_id").as[Long].collect().filter(id =>
+            foldedRes.contains((id % 3).toInt) && !(tomb && erased(id))).toSeq: _*))
+        InvertedIndex.write(InvertedIndex.build(survivors), ref)
+        val got = segContents(s"$dir/${merged.head}")
+        val want = segContents(s"$ref/${InvertedIndex.segments(spark, ref).head}")
+        for (part <- want.keys)
+          assert(got(part) == want(part), s"tomb=$tomb: $part differs from a rebuild")
+        val dls = got("_doclen").map(_.split('|')(1).toLong)
+        assert(got("_stats") == Seq(s"${dls.size}|${dls.sum}"),
+          s"tomb=$tomb: _stats is not (count, sum) of _doclen")
+        val keptTombs = InvertedIndex.tombstones(spark, dir).select("doc_id")
+          .as[Long].collect().toSet
+        val keptRes = kept.map(_.stripPrefix("seg=s").toInt)
+        assert(keptTombs == erased.filter(id => keptRes.contains((id % 3).toInt)),
+          s"tomb=$tomb: tombstones must shrink to the kept segment's docs")
+      } finally { Fs.rmTree(dir); Fs.rmTree(ref) }
+    }
+  }
+
+  test("compact: an aux-less legacy segment without inline dl takes the aggregate path") {
+    val docs = Tables.t(spark, sfDir, "documents")
+    val dir = java.nio.file.Files.createTempDirectory("graft_idxlg").toString
+    val ref = java.nio.file.Files.createTempDirectory("graft_idxlg_ref").toString
+    try {
+      assert(InvertedIndex.append(docs.filter(col("doc_id") % 2 === 0), dir, "a"))
+      assert(InvertedIndex.append(docs.filter(col("doc_id") % 2 === 1), dir, "b"))
+      // seg=a as a store written before inline dl: no aux, no dl column
+      val segA = s"$dir/seg=a"
+      val tmpA = java.nio.file.Files.createTempDirectory("graft_idxlg_a").toString
+      spark.read.parquet(segA).select("term", "doc_id", "positions", "tf", "bucket")
+        .write.partitionBy("bucket").mode("overwrite").parquet(tmpA)
+      Fs.rmTree(segA)
+      Fs.atomicMove(tmpA, segA)
+      assert(InvertedIndex.compact(spark, dir) == 2)
+      // a rewrite would carry seg=a's missing dl through as null; the
+      // aggregate path re-derives it
+      InvertedIndex.write(InvertedIndex.build(docs), ref)
+      val got = segContents(s"$dir/${InvertedIndex.segments(spark, dir).head}")
+      val want = segContents(s"$ref/${InvertedIndex.segments(spark, ref).head}")
+      for (part <- want.keys) assert(got(part) == want(part), s"$part differs from a rebuild")
+    } finally { Fs.rmTree(dir); Fs.rmTree(ref) }
+  }
+
   test("docLengths/searchBm25: aux-stripped segments fall back; compaction retires the fallback FIRST") {
     import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents")
