@@ -71,77 +71,44 @@ object InvertedIndex {
     // overwriting it would lose that batch (review r10). Our own
     // crashed attempts stay untouched too and vacuum sweeps them once
     // unreferenced.
-    val segName = freshSegName(spark, dir,
+    val segName = freshName(spark, dir, "seg",
       i => if (i == 0) "seg=base" else s"seg=r$i", next)
     val segDir = new java.io.File(dir, segName)
     val tmp = new java.io.File(dir, s".tmp_$segName")
     graft.Fs.rmTree(tmp.toString)
     writeSegment(index, tmp.toString, buckets)
     graft.Fs.atomicMove(tmp.toString, segDir.toString)
-    // the bucket count is part of the committed layout (ADVICE r10: a
-    // store searched with a different `buckets` than it was written with
-    // prunes the wrong dirs and silently returns wrong results) — write
-    // is a REBUILD, so its caller-chosen count becomes the store's
+    // write is a REBUILD, so its caller-chosen bucket count becomes the
+    // store's committed one (see storedBuckets)
     StoreManifest.commit(spark, dir, next,
       Seq(s"buckets\t$buckets", s"seg\t$segName")) // THE commit point
     if (next > 0) vacuum(spark, dir)
   }
 
-  /** The store's committed bucket count — the manifest line every read
-    * and append path resolves INSTEAD of trusting the caller's
-    * parameter (ADVICE r10: a mismatched caller default made searches
-    * prune the wrong bucket dirs and silently miss postings; compact
-    * could even re-bucket a store out from under its readers).
-    *
-    * When the manifest predates the buckets line (or the dir is a
-    * legacy un-manifested store), the modulus is DERIVED from the
-    * segments' own `bucket=` dirs (max value + 1 — exact whenever any
-    * segment populates its top bucket, overwhelmingly likely under
-    * xxhash64's uniform spread for any real term count) instead of
-    * trusting the caller's default: append/compact STAMP this value
-    * into the next manifest, and stamping the 32 fallback into a store
-    * written with another count would bake the wrong modulus in
-    * permanently — the exact poisoning delete() carries its line
-    * verbatim to avoid (ADVICE r11). `fallback` is reached only for a
-    * store with no line AND no segment dirs (nothing to prune anyway).
-    *
-    * Derivation reads only COMMITTED segments (the current manifest's
-    * `seg` lines; for an un-manifested legacy dir, its on-disk `seg=`
-    * dirs). Callers that stage a new segment and then commit must
-    * resolve the count ONCE, BEFORE staging — a post-stage call would
-    * derive from the segment just written and, on a fresh store whose
-    * first small batch leaves the top bucket empty, under-stamp the
-    * modulus its own data was bucketed with.
+  /** The bucket count committed at version `v` — the modulus every
+    * read prunes with and every later append and compact writes with.
+    * A caller's count reaches only [[write]] and the first [[append]]
+    * into an empty dir (ADVICE r10: a store searched with another
+    * count than it was written with prunes the wrong dirs and silently
+    * misses postings).
     */
-  def storedBuckets(spark: SparkSession, dir: String, fallback: Int): Int = {
+  private def storedBuckets(spark: SparkSession, dir: String, v: Long): Int =
+    StoreManifest.read(spark, dir, v, "buckets").head.toInt
+
+  /** The current committed version. A dir with no manifest is not an
+    * index store (a flat layout or a mistyped path): reads refuse it
+    * instead of answering "no documents".
+    */
+  private def committed(spark: SparkSession, dir: String): Long = {
     val cur = StoreManifest.currentVersion(spark, dir)
-    val line =
-      if (cur < 0) None
-      else StoreManifest.read(spark, dir, cur, "buckets").headOption.map(_.toInt)
-    line.getOrElse {
-      val segs =
-        if (cur >= 0) StoreManifest.read(spark, dir, cur, "seg")
-        else Option(new java.io.File(dir).listFiles()).toSeq.flatten
-          .map(_.getName).filter(_.startsWith("seg="))
-      val bucketVals = for {
-        s <- segs
-        d <- Option(new java.io.File(dir, s).listFiles()).toSeq.flatten
-        n = d.getName if n.startsWith("bucket=")
-      } yield n.stripPrefix("bucket=").toInt
-      if (bucketVals.isEmpty) fallback else bucketVals.max + 1
-    }
+    require(cur >= 0, s"no committed index store under $dir (no manifest)")
+    cur
   }
 
-  /** First generated segment name (index ≥ `from`) that no retained
-    * manifest references and that has no dir on disk — the
-    * never-delete-before-commit discipline for generated names.
-    */
-  private def freshSegName(spark: SparkSession, dir: String,
-                           name: Long => String, from: Long): String =
-    freshName(spark, dir, "seg", name, from)
-
-  /** [[freshSegName]] generalized over the manifest tag (`seg` dirs and
-    * `tomb` dirs follow the same discipline).
+  /** First generated name (index ≥ `from`) that no retained manifest
+    * references under `tag` and that has no dir on disk — the
+    * never-delete-before-commit discipline for generated `seg` and
+    * `tomb` names.
     */
   private def freshName(spark: SparkSession, dir: String, tag: String,
                         name: Long => String, from: Long): String = {
@@ -198,15 +165,13 @@ object InvertedIndex {
   }
 
   /** Live segment dirs of the current committed version (empty for a
-    * dir that was never written). Falls back to directory listing for a
-    * legacy un-manifested index.
+    * dir with no manifest).
     */
-  def segments(spark: SparkSession, dir: String): Seq[String] = {
-    val cur = StoreManifest.currentVersion(spark, dir)
-    if (cur >= 0) StoreManifest.read(spark, dir, cur, "seg").sorted
-    else Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .map(_.getName).filter(_.startsWith("seg=")).sorted
-  }
+  def segments(spark: SparkSession, dir: String): Seq[String] =
+    segsOf(spark, dir, StoreManifest.currentVersion(spark, dir))
+
+  private def segsOf(spark: SparkSession, dir: String, v: Long): Seq[String] =
+    if (v < 0) Nil else StoreManifest.read(spark, dir, v, "seg").sorted
 
   /** Incrementally index a batch of NEW documents as segment `seg`:
     * data staged in a reader-invisible tmp dir, renamed to its final
@@ -226,28 +191,24 @@ object InvertedIndex {
     * a replayed trigger is a no-op. A seg dir present but UNREFERENCED
     * is the crash window between data rename and manifest commit: the
     * data is complete (the rename was atomic), so the replay skips the
-    * rewrite and just commits the manifest.
+    * rewrite and just commits the manifest — as version 0 when the
+    * crashed append was the store's first.
+    *
+    * `buckets` founds an empty store; once a version is committed, its
+    * count wins — a segment bucketed differently from its siblings
+    * would be pruned wrongly forever.
     */
   def append(docs: DataFrame, dir: String, seg: String,
              buckets: Int = 32): Boolean = {
     val spark = docs.sparkSession
     val cur = StoreManifest.currentVersion(spark, dir)
-    val live =
-      if (cur >= 0) StoreManifest.read(spark, dir, cur, "seg")
-      else Option(new java.io.File(dir).listFiles()).toSeq.flatten // legacy adopt
-        .map(_.getName).filter(_.startsWith("seg="))
+    val live = segsOf(spark, dir, cur)
     if (live.contains(s"seg=$seg")) return false // committed already: replay no-op
-    // resolved ONCE, before staging: the post-stage dir must not feed
-    // the derivation path (see storedBuckets) — write and stamp must
-    // agree on the same modulus
-    val b = storedBuckets(spark, dir, buckets)
+    val b = if (cur < 0) buckets else storedBuckets(spark, dir, cur)
     val segDir = new java.io.File(dir, s"seg=$seg")
     if (!segDir.exists()) { // else: crashed between rename and commit — data is whole
       val tmp = new java.io.File(dir, s".tmp_seg_$seg") // dot: reader-invisible
       graft.Fs.rmTree(tmp.toString) // a torn earlier attempt restages cleanly
-      // append joins an existing store: the store's committed bucket
-      // count wins over the caller's parameter — a segment bucketed
-      // differently from its siblings would be pruned wrongly forever
       writeSegment(build(docs), tmp.toString, b)
       graft.Fs.atomicMove(tmp.toString, segDir.toString)
     } else {
@@ -269,7 +230,7 @@ object InvertedIndex {
     // tombstones carry forward unchanged: an append introduces new docs
     // (disjoint ids, the precondition above), so the erased set is the
     // erased set
-    val tombs = if (cur >= 0) StoreManifest.read(spark, dir, cur, "tomb") else Nil
+    val tombs = if (cur < 0) Nil else StoreManifest.read(spark, dir, cur, "tomb")
     StoreManifest.commit(spark, dir, cur + 1, // THE commit point
       s"buckets\t$b" +:
         (tombs.sorted.map("tomb\t" + _) ++
@@ -302,62 +263,36 @@ object InvertedIndex {
     * segment and any SUBSET of segments can merge independently.
     * Returns the number of segments merged (0 = at/below target).
     */
-  def compact(spark: SparkSession, dir: String, buckets: Int = 32,
+  def compact(spark: SparkSession, dir: String,
               targetSegs: Int = 1, retainVersions: Int = 2): Int = {
     val cur = StoreManifest.currentVersion(spark, dir)
-    val live =
-      if (cur >= 0) StoreManifest.read(spark, dir, cur, "seg")
-      else Option(new java.io.File(dir).listFiles()).toSeq.flatten // legacy adopt
-        .map(_.getName).filter(_.startsWith("seg="))
+    val live = segsOf(spark, dir, cur)
     if (live.size <= targetSegs) return 0
     val next = cur + 1
-    // smallest first (name tiebreak keeps the pick deterministic);
-    // segments missing the inline-dl `_stats` aux sort as size −1 so a
-    // legacy segment — however large — is folded by the NEXT merge,
-    // which rewrites it with the aux and actually retires searchBm25's
-    // corpus-width fallback (size-tiering alone would graduate a big
-    // legacy segment out of the pool forever)
-    val bySize = live.sortBy { s =>
-      val sz = if (new java.io.File(dir, s"$s/_stats").exists())
-        segBytes(new java.io.File(dir, s)) else -1L
-      (sz, s)
-    }
+    // smallest first (name tiebreak keeps the pick deterministic)
+    val bySize = live.sortBy(s => (segBytes(new java.io.File(dir, s)), s))
     val toMerge = bySize.take(live.size - targetSegs + 1)
     val kept = bySize.drop(live.size - targetSegs + 1)
     // Tombstoned docs are dropped HERE — compact is where a logical
     // delete becomes physical erasure: their postings never enter the
     // merged segment, whose freshly-derived _doclen/_stats aux then
     // excludes them for free.
-    val hasTombs = cur >= 0 && StoreManifest.read(spark, dir, cur, "tomb").nonEmpty
-    val paths = toMerge.map(s => s"$dir/$s")
-    // segments carrying the inline-dl aux fold as a REWRITE (read with
-    // the stored schema — doc_id BIGINT, as every aux read assumes):
-    // appends carry disjoint doc_ids, so each (term, doc_id) posting
-    // already occurs once and its stored dl equals the doc's sum(tf).
-    // Legacy segments without the aux re-aggregate and re-derive dl per
-    // doc (window by doc_id) — exact because a doc's postings are wholly
-    // contained in the merged set (the same precondition).
-    val merged =
-      if (toMerge.forall(s => new java.io.File(dir, s"$s/_stats").exists()))
-        minusTombstones(spark, dir, cur, spark.read.option("basePath", dir)
-            .schema("term STRING, doc_id BIGINT, positions ARRAY<INT>, tf BIGINT, dl BIGINT")
-            .parquet(paths: _*))
-          .select("term", "doc_id", "positions", "tf", "dl")
-      else minusTombstones(spark, dir, cur, spark.read.option("basePath", dir)
-          .parquet(paths: _*).select("term", "doc_id", "positions", "tf"))
-        .groupBy("term", "doc_id")
-        .agg(sort_array(flatten(collect_list("positions"))).as("positions"),
-          sum("tf").as("tf"))
-        .withColumn("dl", sum("tf").over(
-          org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
-    val segName = freshSegName(spark, dir, i => s"seg=c$i", next) // see write()
+    val hasTombs = StoreManifest.read(spark, dir, cur, "tomb").nonEmpty
+    // the fold is a REWRITE (read with the stored schema — doc_id
+    // BIGINT, as every aux read assumes): appends carry disjoint
+    // doc_ids, so each (term, doc_id) posting already occurs once and
+    // its stored dl equals the doc's sum(tf)
+    val merged = minusTombstones(spark, dir, cur, spark.read.option("basePath", dir)
+        .schema("term STRING, doc_id BIGINT, positions ARRAY<INT>, tf BIGINT, dl BIGINT")
+        .parquet(toMerge.map(s => s"$dir/$s"): _*))
+      .select("term", "doc_id", "positions", "tf", "dl")
+    val segName = freshName(spark, dir, "seg", i => s"seg=c$i", next) // see write()
     val segDir = new java.io.File(dir, segName)
     val tmp = new java.io.File(dir, s".tmp_$segName")
     graft.Fs.rmTree(tmp.toString)
-    // compact must rewrite in the STORE's bucket count, not the
-    // caller's: a re-bucketed merged segment would be pruned with the
-    // wrong modulus by every reader holding the committed count
-    val b = storedBuckets(spark, dir, buckets)
+    // compact rewrites in the STORE's bucket count: a re-bucketed merged
+    // segment would be pruned with the wrong modulus by every reader
+    val b = storedBuckets(spark, dir, cur)
     writeSegment(merged, tmp.toString, b)
     graft.Fs.atomicMove(tmp.toString, segDir.toString)
     // shrink the tombstone set to docs still PHYSICALLY present — i.e.
@@ -420,8 +355,7 @@ object InvertedIndex {
   }
 
   /** Tombstoned (doc_id, dl) rows of the current committed version —
-    * empty for stores with no deletions (or legacy un-manifested dirs,
-    * which predate the delete API). The carried `dl` is what keeps
+    * empty for stores with no deletions. The carried `dl` is what keeps
     * post-delete BM25 EXACT: [[searchBm25]] subtracts the erased docs'
     * counts from the segments' `_stats` sums, so corpus stats (and
     * therefore every surviving doc's score) equal a fresh index built
@@ -438,10 +372,7 @@ object InvertedIndex {
     val tombs =
       if (version < 0) Nil
       else StoreManifest.read(spark, dir, version, "tomb")
-    if (tombs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, dl BIGINT"))
+    if (tombs.isEmpty) emptyFrame(spark, "doc_id BIGINT, dl BIGINT")
     else spark.read.schema("doc_id BIGINT, dl BIGINT")
       .parquet(tombs.map(t => s"$dir/$t"): _*)
   }
@@ -453,7 +384,7 @@ object InvertedIndex {
     */
   private def minusTombstones(spark: SparkSession, dir: String, version: Long,
                               df: DataFrame): DataFrame =
-    if (version < 0 || StoreManifest.read(spark, dir, version, "tomb").isEmpty) df
+    if (StoreManifest.read(spark, dir, version, "tomb").isEmpty) df
     else df.join(broadcast(tombstonesOf(spark, dir, version).select("doc_id")),
       Seq("doc_id"), "left_anti")
 
@@ -485,10 +416,7 @@ object InvertedIndex {
     * absent from the index are no-ops (so a replay commits nothing).
     */
   def delete(spark: SparkSession, dir: String, docIds: DataFrame): Long = {
-    val cur = StoreManifest.currentVersion(spark, dir)
-    require(cur >= 0,
-      s"delete requires a manifested index store under $dir (legacy " +
-        "un-manifested dirs have no commit pointer to flip — rebuild first)")
+    val cur = committed(spark, dir)
     val segs = StoreManifest.read(spark, dir, cur, "seg")
     if (segs.isEmpty) return 0L // zero-segment store: nothing to erase
     val oldTomb = tombstonesOf(spark, dir, cur)
@@ -513,13 +441,8 @@ object InvertedIndex {
     oldTomb.unionByName(newly).coalesce(1)
       .write.mode("overwrite").parquet(tmp.toString)
     graft.Fs.atomicMove(tmp.toString, new java.io.File(dir, tombName).toString)
-    // carry the committed bucket line VERBATIM (0 or 1 lines): delete
-    // takes no buckets parameter, and inventing the 32 default here
-    // would poison a pre-buckets-line store written with another count
-    // — every later search would prune with the wrong modulus (review
-    // r11; the exact ADVICE-r10 failure this line exists to prevent)
     StoreManifest.commit(spark, dir, next, // THE commit point
-      StoreManifest.read(spark, dir, cur, "buckets").map("buckets\t" + _) ++
+      s"buckets\t${storedBuckets(spark, dir, cur)}" +:
         (s"tomb\t$tombName" +: segs.sorted.map("seg\t" + _)))
     vacuum(spark, dir)
     n
@@ -534,68 +457,40 @@ object InvertedIndex {
   /** Read ONLY the buckets that can hold `terms` — the directory-level
     * prune that makes an index lookup O(terms), not O(index). Segments
     * resolve through the manifest pointer (a committed version is read
-    * in full or not at all); a legacy un-manifested dir falls back to
-    * directory discovery.
+    * in full or not at all).
     */
-  def readForTerms(spark: SparkSession, dir: String, terms: Seq[String],
-                   buckets: Int = 32): DataFrame = {
-    // prune with the COMMITTED bucket count — the caller's parameter is
-    // only the legacy-store fallback (ADVICE r10)
-    val wanted = terms.map(t => bucketOf(t, storedBuckets(spark, dir, buckets))).distinct
-    val cur = StoreManifest.currentVersion(spark, dir)
-    val base =
-      if (cur < 0) spark.read.parquet(dir) // legacy layout
-      else {
-        val segs = StoreManifest.read(spark, dir, cur, "seg")
-        if (segs.isEmpty)
-          return spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType.fromDDL(
-              "term STRING, doc_id BIGINT, positions ARRAY<INT>, tf BIGINT, " +
-                "dl BIGINT, seg STRING, bucket INT"))
-        spark.read.option("basePath", dir).parquet(segs.map(s => s"$dir/$s"): _*)
-      }
-    // erased docs filter out of every posting read — deletion commits
-    // take effect atomically with the manifest flip (delete API)
-    minusTombstones(spark, dir, cur, base
-      .filter(col("bucket").isin(wanted: _*))
-      .filter(col("term").isin(terms: _*)))
+  def readForTerms(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
+    val cur = committed(spark, dir)
+    val segs = segsOf(spark, dir, cur)
+    if (segs.isEmpty)
+      emptyFrame(spark, "term STRING, doc_id BIGINT, positions ARRAY<INT>, tf BIGINT, " +
+        "dl BIGINT, seg STRING, bucket INT")
+    else livePosts(spark, dir, terms, segs, cur)
   }
+
+  private def emptyFrame(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** Per-doc token counts (doc_id, dl) of the current version — the
     * union of the live segments' co-committed `_doclen` tables. Exact
     * because a doc's postings live in exactly ONE segment (the append
-    * precondition), so no re-aggregation is needed. Segments written
-    * before the aux existed (legacy adopts) fall back to deriving
-    * lengths from their own postings — correct but it scans those
-    * segments' full posting lists; the first compaction that folds
-    * them rewrites the aux and retires the fallback.
+    * precondition), so no re-aggregation is needed.
     */
   def docLengths(spark: SparkSession, dir: String): DataFrame = {
-    val segs = segments(spark, dir)
+    val cur = committed(spark, dir)
+    val segs = segsOf(spark, dir, cur)
     require(segs.nonEmpty, s"no live segments under $dir")
-    minusTombstones(spark, dir, StoreManifest.currentVersion(spark, dir),
-      docLengthsOf(spark, dir, segs))
+    minusTombstones(spark, dir, cur, docLengthsOf(spark, dir, segs))
   }
 
   /** [[docLengths]] over an already-resolved segment list — the form
-    * [[searchBm25]] uses so every read in one query shares one
-    * committed version.
+    * [[compact]] and [[delete]] use so every read in one operation
+    * shares one committed version.
     */
   private def docLengthsOf(spark: SparkSession, dir: String,
-                           segs: Seq[String]): DataFrame = {
-    val (withAux, legacy) =
-      segs.partition(s => new java.io.File(s"$dir/$s/_doclen").exists())
-    val parts =
-      withAux.headOption.map(_ => spark.read
-        .parquet(withAux.map(s => s"$dir/$s/_doclen"): _*)
-        .select("doc_id", "dl")).toSeq ++
-      legacy.headOption.map(_ => spark.read.option("basePath", dir)
-        .parquet(legacy.map(s => s"$dir/$s"): _*)
-        .groupBy("doc_id").agg(sum("tf").as("dl"))
-        .select("doc_id", "dl")).toSeq
-    parts.reduce(_ unionByName _)
-  }
+                           segs: Seq[String]): DataFrame =
+    spark.read.parquet(segs.map(s => s"$dir/$s/_doclen"): _*).select("doc_id", "dl")
 
   /** The BM25 per-(term, doc) score term over columns
     * (tf, df, dl, n_docs, tot_dl), k1 = 1.2, b = 0.75, as ONE textual
@@ -655,15 +550,13 @@ object InvertedIndex {
   /** One-row (n_docs, tot_dl) corpus summary of the current version —
     * the union of the live segments' co-committed `_stats` rows (sums
     * are exact by the disjoint-doc append precondition). O(segments)
-    * tiny files; requires every live segment to carry the aux (the
-    * inline-dl layout) — [[searchBm25]] routes legacy stores through
-    * [[docLengths]] instead.
+    * tiny files.
     */
   def corpusStats(spark: SparkSession, dir: String): DataFrame = {
-    val segs = segments(spark, dir)
+    val cur = committed(spark, dir)
+    val segs = segsOf(spark, dir, cur)
     require(segs.nonEmpty, s"no live segments under $dir")
-    adjustStats(spark, dir, StoreManifest.currentVersion(spark, dir),
-      statsOf(spark, dir, segs))
+    adjustStats(spark, dir, cur, statsOf(spark, dir, segs))
   }
 
   /** Subtract the version's tombstoned docs from a one-row
@@ -673,7 +566,7 @@ object InvertedIndex {
     */
   private def adjustStats(spark: SparkSession, dir: String, version: Long,
                           stats: DataFrame): DataFrame =
-    if (version < 0 || StoreManifest.read(spark, dir, version, "tomb").isEmpty) stats
+    if (StoreManifest.read(spark, dir, version, "tomb").isEmpty) stats
     else stats.crossJoin(broadcast(tombstonesOf(spark, dir, version)
         .agg(count(lit(1)).as("t_docs"),
           coalesce(sum("dl"), lit(0L)).as("t_dl"))))
@@ -681,7 +574,7 @@ object InvertedIndex {
         (col("tot_dl") - col("t_dl")).as("tot_dl"))
 
   /** [[corpusStats]] over an already-resolved segment list (the
-    * [[searchBm25]] one-version form, mirroring [[docLengthsOf]]).
+    * [[searchBm25]] one-version form).
     */
   private def statsOf(spark: SparkSession, dir: String,
                       segs: Seq[String]): DataFrame =
@@ -728,63 +621,37 @@ object InvertedIndex {
 
   /** End-to-end: BM25-score a PERSISTED index for query `terms`,
     * reading only those terms' buckets plus the per-segment one-row
-    * `_stats` aux. A store with any pre-inline-dl segment falls back
-    * to joining [[docLengths]] (corpus-width but narrow); [[compact]]
-    * folds aux-less segments FIRST, so one merge retires the fallback.
+    * `_stats` aux.
     *
-    * The manifest resolves exactly ONCE: postings, corpus stats, and
-    * any fallback length join all read the SAME committed segment list
-    * — resolving per-read would let a concurrent append/compact supply
-    * stats for documents whose postings were never read, producing
-    * scores that match no committed snapshot.
+    * The manifest resolves exactly ONCE: postings and corpus stats both
+    * read the SAME committed segment list — resolving per-read would
+    * let a concurrent append/compact supply stats for documents whose
+    * postings were never read, producing scores that match no
+    * committed snapshot.
     */
-  def searchBm25(spark: SparkSession, dir: String, terms: Seq[String],
-                 buckets: Int = 32): DataFrame = {
-    val segs = segments(spark, dir)
-    if (segs.isEmpty) {
-      // a COMMITTED store with zero segments legitimately answers
-      // "no documents"; zero seg= dirs with no manifest is a flat
-      // legacy layout or a mistyped path — fail loudly like the old
-      // docLengths require did, instead of a silent empty result
-      require(StoreManifest.currentVersion(spark, dir) >= 0,
-        s"no live segments under $dir (not a seg=-layout index store)")
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, n_terms BIGINT, bm25 DOUBLE"))
-    }
-    val cur = StoreManifest.currentVersion(spark, dir)
+  def searchBm25(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
+    val cur = committed(spark, dir)
+    val segs = segsOf(spark, dir, cur)
+    // a committed store with zero segments legitimately answers "no
+    // documents"
+    if (segs.isEmpty) return emptyFrame(spark, "doc_id BIGINT, n_terms BIGINT, bm25 DOUBLE")
     // erased docs drop out of the candidate set inside livePosts, and
     // adjustStats subtracts their (count, dl) from the corpus summary —
     // together the two make post-delete scores bit-equal to a rebuild
-    // without them. Bucket pruning uses the committed bucket count,
-    // never the caller's (ADVICE r10).
-    val posts = livePosts(spark, dir, terms, buckets, segs, cur)
-    val inlined = posts.columns.contains("dl") &&
-      segs.forall(s => new java.io.File(s"$dir/$s/_stats").exists())
-    if (inlined) bm25(posts, adjustStats(spark, dir, cur, statsOf(spark, dir, segs)))
-    else {
-      // transitional path: materialize the doc-length table once — it
-      // feeds BOTH the candidate join and the stats aggregate, and for
-      // truly legacy segments each evaluation would re-scan their full
-      // posting lists. Tombstones already filtered out of dls, so the
-      // derived stats need no adjustment.
-      val dls = minusTombstones(spark, dir, cur,
-        docLengthsOf(spark, dir, segs)).localCheckpoint()
-      bm25(posts.drop("dl").join(dls, "doc_id"),
-        dls.agg(count(lit(1)).as("n_docs"), sum("dl").as("tot_dl")))
-    }
+    // without them
+    bm25(livePosts(spark, dir, terms, segs, cur),
+      adjustStats(spark, dir, cur, statsOf(spark, dir, segs)))
   }
 
   /** The bucket-pruned, tombstone-filtered posting read of one
-    * committed version — shared by [[searchBm25]]'s phases and
+    * committed version — shared by [[readForTerms]], [[searchBm25]] and
     * [[searchBm25TopK]] so every read in one query resolves the SAME
-    * segment list.
+    * segment list and prunes with the committed bucket count.
     */
   private def livePosts(spark: SparkSession, dir: String, terms: Seq[String],
-                        buckets: Int, segs: Seq[String], cur: Long): DataFrame = {
-    val wanted =
-      terms.map(t => bucketOf(t, storedBuckets(spark, dir, buckets))).distinct
+                        segs: Seq[String], cur: Long): DataFrame = {
+    val b = storedBuckets(spark, dir, cur)
+    val wanted = terms.map(t => bucketOf(t, b)).distinct
     minusTombstones(spark, dir, cur, spark.read
       .option("basePath", dir)
       .parquet(segs.map(s => s"$dir/$s"): _*)
@@ -808,19 +675,14 @@ object InvertedIndex {
     * the prune comparison backs off 1e-6.
     */
   def maxScorePlan(spark: SparkSession, dir: String, terms: Seq[String],
-                   k: Int, buckets: Int = 32): (Seq[String], Option[Double]) = {
+                   k: Int): (Seq[String], Option[Double]) = {
     val qTerms = terms.distinct
     require(qTerms.nonEmpty, "maxScorePlan requires at least one query term")
-    val segs = segments(spark, dir)
-    require(segs.nonEmpty && segs.forall(s =>
-      new java.io.File(s"$dir/$s/_stats").exists() &&
-        new java.io.File(s"$dir/$s/_terms").exists()),
-      s"maxScorePlan requires every live segment under $dir to carry the " +
-        "_stats and _terms aux (searchBm25TopK falls back to the " +
-        "exhaustive scorer for such stores)")
-    val cur = StoreManifest.currentVersion(spark, dir)
+    val cur = committed(spark, dir)
+    val segs = segsOf(spark, dir, cur)
+    require(segs.nonEmpty, s"no live segments under $dir")
     maxScorePlanResolved(spark, dir, qTerms, k, segs, cur,
-      livePosts(spark, dir, qTerms, buckets, segs, cur),
+      livePosts(spark, dir, qTerms, segs, cur),
       adjustStats(spark, dir, cur, statsOf(spark, dir, segs)))
   }
 
@@ -838,7 +700,7 @@ object InvertedIndex {
     val nDocs = statsRow.getLong(0)
     val totDl = statsRow.getLong(1)
     val tombCount =
-      if (cur < 0 || StoreManifest.read(spark, dir, cur, "tomb").isEmpty) 0L
+      if (StoreManifest.read(spark, dir, cur, "tomb").isEmpty) 0L
       else tombstonesOf(spark, dir, cur).count()
     val tr = spark.read.schema("term STRING, df BIGINT, max_tf BIGINT, min_dl BIGINT")
       .parquet(segs.map(s => s"$dir/$s/_terms"): _*)
@@ -882,25 +744,23 @@ object InvertedIndex {
     * the scoring aggregate. On a skewed query (one rare high-idf term
     * among common ones) the common terms' doc sets never aggregate:
     * the scored-posting-row reduction is measured in InvertedIndexSpec.
-    * Costs one extra tiny job (phase-1 θ probe). Stores predating the
-    * `_terms` aux fall back to the exhaustive scorer — correct,
-    * unpruned.
+    * Costs one extra tiny job (phase-1 θ probe).
+    *
+    * `buckets` is unused — pruning always takes the store's committed
+    * count; the parameter stays only for source compatibility with
+    * callers that pass it positionally.
     */
   def searchBm25TopK(spark: SparkSession, dir: String, terms: Seq[String],
                      k: Int, buckets: Int = 32): DataFrame = {
-    val segs = segments(spark, dir)
     val qTerms = terms.distinct
-    def exhaustive() = searchBm25(spark, dir, terms, buckets)
-      .orderBy(col("bm25").desc, col("doc_id")).limit(k)
-    val prunable = qTerms.nonEmpty && segs.nonEmpty && segs.forall(s =>
-      new java.io.File(s"$dir/$s/_stats").exists() &&
-        new java.io.File(s"$dir/$s/_terms").exists())
-    if (!prunable) return exhaustive()
     // resolve the store ONCE: segments, version, pruned postings and
     // adjusted stats are shared by the planning probe and the final
     // scoring (review r11 — the first cut rebuilt all four twice)
-    val cur = StoreManifest.currentVersion(spark, dir)
-    val posts = livePosts(spark, dir, qTerms, buckets, segs, cur)
+    val cur = committed(spark, dir)
+    val segs = segsOf(spark, dir, cur)
+    if (qTerms.isEmpty || segs.isEmpty)
+      return searchBm25(spark, dir, terms).orderBy(col("bm25").desc, col("doc_id")).limit(k)
+    val posts = livePosts(spark, dir, qTerms, segs, cur)
     val stats = adjustStats(spark, dir, cur, statsOf(spark, dir, segs))
     val (essential, _) =
       maxScorePlanResolved(spark, dir, qTerms, k, segs, cur, posts, stats)
@@ -979,8 +839,7 @@ object InvertedIndex {
   /** End-to-end: search a PERSISTED index for a literal phrase, reading
     * only the phrase terms' buckets.
     */
-  def searchPhrase(spark: SparkSession, dir: String, tokens: Seq[String],
-                   buckets: Int = 32): DataFrame =
-    phraseOccurrences(readForTerms(spark, dir, tokens, buckets),
+  def searchPhrase(spark: SparkSession, dir: String, tokens: Seq[String]): DataFrame =
+    phraseOccurrences(readForTerms(spark, dir, tokens),
       phraseFrame(spark, tokens))
 }

@@ -80,13 +80,12 @@ object RollupNav {
   /** The current committed cube as a frame (day STRING + dims +
     * partial-aggregate columns) — the ONLY read path: file list and
     * schema come from the manifest, so an in-flight maintenance batch
-    * is invisible until its one-rename commit. A legacy un-manifested
-    * dir falls back to plain partitioned discovery.
+    * is invisible until its one-rename commit. A dir with no manifest
+    * holds no cube and throws.
     */
   def readStore(spark: SparkSession, dir: String): DataFrame = {
     val cur = StoreManifest.currentVersion(spark, dir)
-    if (cur < 0)
-      return spark.read.parquet(dir).withColumn("day", col("day").cast("string"))
+    require(cur >= 0, s"no committed rollup cube under $dir (no manifest)")
     val (schema, files) = readManifest(spark, dir, cur)
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -149,44 +148,28 @@ object RollupNav {
   private def maintainImpl(spark: SparkSession, dir: String, rollup: Rollup,
                            batch: DataFrame, batchId: Option[Long]): Unit = {
     import spark.implicits._
-    var cur = StoreManifest.currentVersion(spark, dir)
-    // a legacy un-manifested cube (pre-r10 layout: day= dirs, no
-    // manifest) ADOPTS as version 0 before anything else — treating it
-    // as empty would commit a manifest omitting all history and the
-    // trailing vacuum would DELETE the legacy files (review-pass r10)
+    val cur = StoreManifest.currentVersion(spark, dir)
+    // cur < 0: never materialized — the batch bootstraps version 0 (lets
+    // a streaming rollup sink start from an empty dir). The dir may then
+    // hold only `v0-` data files: orphans of a crashed, never-committed
+    // bootstrap (the sole writer that stages at version 0), which the
+    // replay ignores and vacuum sweeps. Any other data file means a
+    // manifest once committed it and was lost: which files it referenced
+    // is unknowable, so REFUSE rather than commit a guess and let vacuum
+    // delete the rest.
     if (cur < 0) {
-      // v0- prefixed files on a manifest-less dir can only be orphans
-      // of a crashed, never-committed BOOTSTRAP batch (bootstrap is the
-      // sole writer that stages at version 0), NOT legacy history —
-      // adopting them would double-count the replayed batch (review
-      // r10). v1+- files here mean the manifest dir was lost/stripped:
-      // we cannot know which files the lost manifest referenced, so
-      // REFUSE loudly rather than commit a guess and let vacuum delete
-      // the rest (second review pass). True pre-manifest layouts carry
-      // Spark's own part-*.parquet names.
       val crashedBootstrap = """v0-.*""".r
-      val strippedManifest = """v[1-9]\d*-.*""".r
-      val all = Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      val foreign = Option(new java.io.File(dir).listFiles()).toSeq.flatten
         .filter(d => d.isDirectory && d.getName.startsWith("day="))
         .flatMap(d => Option(d.listFiles()).toSeq.flatten
           .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .map(f => s"${d.getName}/${f.getName}"))
-      require(!all.exists(f =>
-        strippedManifest.matches(f.substring(f.indexOf('/') + 1))),
-        s"cube at $dir holds versioned data files but no manifest — the " +
-          "manifest dir was lost; restore it (or rebuild with materialize) " +
-          "instead of adopting an unknowable file set")
-      val legacy = all.filterNot(f =>
-        crashedBootstrap.matches(f.substring(f.indexOf('/') + 1)))
-      if (legacy.nonEmpty) {
-        val schema = spark.read.parquet(dir)
-          .withColumn("day", col("day").cast("string")).schema
-        StoreManifest.commitFiles(spark, dir, 0L, schema, legacy)
-        cur = 0L
-      }
+          .map(_.getName))
+        .filterNot(crashedBootstrap.matches)
+      require(foreign.isEmpty,
+        s"cube at $dir holds data files but no manifest — the manifest " +
+          "dir was lost; restore it (or rebuild with materialize) instead " +
+          "of adopting an unknowable file set")
     }
-    // cur < 0 still: never materialized — the batch bootstraps version 0
-    // (lets a streaming rollup sink start from an empty dir)
     val applied =
       if (cur >= 0) StoreManifest.read(spark, dir, cur, "batch") else Seq.empty
     if (batchId.exists(id => applied.contains(id.toString))) return // replay no-op

@@ -89,11 +89,9 @@ object EraseSink {
         // (try_cast, not ANSI cast) — a poisoned request must not
         // wedge the erasure queue forever on checkpoint replay
         // (review r11)
-        val batchIds =
-          if (batch.isEmpty) Seq.empty[Long]
-          else batch.selectExpr("try_cast(doc_id AS LONG) AS doc_id")
-            .filter(col("doc_id").isNotNull)
-            .distinct().collect().map(_.getLong(0)).toSeq
+        val batchIds = batch.selectExpr("try_cast(doc_id AS LONG) AS doc_id")
+          .filter(col("doc_id").isNotNull)
+          .distinct().collect().map(_.getLong(0)).toSeq
         // fresh tickets owe every maintained store; carried-over pending
         // ids keep their remaining flags (settled stores stay settled —
         // a snapshot row erased last trigger will never be "present"

@@ -38,15 +38,19 @@ object IndexSink {
 
   /** Start the sink over a stream of (doc_id, text) rows; `dir` may
     * start empty or hold an index built by [[InvertedIndex.write]].
+    * `buckets` founds an empty dir's bucket count; a committed store
+    * keeps its own.
     */
   def start(docs: DataFrame, dir: String, checkpoint: String,
             buckets: Int = 32, maxSegments: Int = 8): StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // the emptiness probe stays: append commits a segment (and a
+        // version) even for an empty batch
         if (!batch.isEmpty) {
           InvertedIndex.append(batch, dir, s"b$batchId", buckets)
           if (InvertedIndex.segments(batch.sparkSession, dir).size > maxSegments)
-            InvertedIndex.compact(batch.sparkSession, dir, buckets,
+            InvertedIndex.compact(batch.sparkSession, dir,
               targetSegs = math.max(1, maxSegments / 2))
         }
         ()

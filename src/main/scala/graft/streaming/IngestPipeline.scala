@@ -106,7 +106,7 @@ object IngestPipeline {
         // also sweeps any version a prior crash left un-consumed
         indexCatchUp(spark, dedupDir, indexDir, idxBuckets)
         if (InvertedIndex.segments(spark, indexDir).size > maxSegments)
-          InvertedIndex.compact(spark, indexDir, idxBuckets,
+          InvertedIndex.compact(spark, indexDir,
             targetSegs = math.max(1, maxSegments / 2))
         annDir.foreach(ad => annCatchUp(spark, dedupDir, ad, annNlist))
         // vacuumRetain > 0 bounds the dedup store's manifest/file growth

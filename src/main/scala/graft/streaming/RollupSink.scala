@@ -39,10 +39,9 @@ object RollupSink {
             checkpoint: String): StreamingQuery =
     facts.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          RollupNav.maintain(batch.sparkSession, dir, rollup, batch,
-            Some(batchId))
-        ()
+        // an empty batch aggregates to no days, and maintain returns
+        // before committing
+        RollupNav.maintain(batch.sparkSession, dir, rollup, batch, Some(batchId))
       }
       .option("checkpointLocation", checkpoint)
       .start()

@@ -42,11 +42,9 @@ object UserEraseSink {
     requests.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val ids =
-          if (batch.isEmpty) Seq.empty[Long]
-          else batch.selectExpr("try_cast(user_id AS LONG) AS user_id")
-            .filter(col("user_id").isNotNull)
-            .distinct().collect().map(_.getLong(0)).toSeq
+        val ids = batch.selectExpr("try_cast(user_id AS LONG) AS user_id")
+          .filter(col("user_id").isNotNull)
+          .distinct().collect().map(_.getLong(0)).toSeq
         // run even on an id-less trigger: a crashed predecessor's
         // journal may still owe the cube a refresh
         UserErase.eraseUsers(spark, ids, snapshotDir, dayCol, cube,

@@ -96,39 +96,6 @@ class ErasureSpec extends SparkSpec {
     } finally Fs.rmTree(dir)
   }
 
-  test("InvertedIndex.delete on a pre-buckets-line manifest carries NO invented bucket count") {
-    // review r11: delete stamping the 32 fallback into the manifest
-    // would poison a pre-r11 store written with another bucket count —
-    // every later search would prune with the wrong modulus
-    val dir = java.nio.file.Files.createTempDirectory("graft_era_b8").toString
-    try {
-      InvertedIndex.write(InvertedIndex.build(docs), dir, buckets = 8)
-      // simulate the pre-buckets-line era: rewrite v0 without the line
-      val lines = StoreManifest.readLines(spark, dir, 0L)
-        .filterNot(_.startsWith("buckets\t"))
-      val m = new java.io.File(dir, s"${StoreManifest.ManifestDir}/v0.manifest")
-      java.nio.file.Files.write(m.toPath,
-        lines.mkString("\n").getBytes("UTF-8"))
-      // drop Hadoop LocalFS's checksum sidecar — the raw rewrite above
-      // invalidated it
-      java.nio.file.Files.deleteIfExists(new java.io.File(
-        dir, s"${StoreManifest.ManifestDir}/.v0.manifest.crc").toPath)
-      val terms = InvertedIndex.topSpan(docs).split(' ').toSeq.distinct
-      val before = bm25Rows(InvertedIndex.searchBm25(spark, dir, terms, buckets = 8))
-      assert(before.nonEmpty)
-      val dead = before.head._1
-      assert(InvertedIndex.delete(spark, dir, Seq(dead)) == 1L)
-      assert(StoreManifest.read(spark, dir, 1L, "buckets").isEmpty,
-        "delete must not invent a bucket count the store was not written with")
-      // the caller's buckets=8 fallback still reaches the right dirs —
-      // the wrong-modulus bug would lose most candidates (scores shift
-      // legitimately post-delete, so compare the doc set)
-      val after = bm25Rows(InvertedIndex.searchBm25(spark, dir, terms, buckets = 8))
-      assert(after.map(_._1) == before.map(_._1).filterNot(_ == dead),
-        "post-delete search through the legacy fallback lost candidates")
-    } finally Fs.rmTree(dir)
-  }
-
   test("InvertedIndex.delete: phrase search forgets; crash-window tomb dir invisible and swept") {
     val dir = java.nio.file.Files.createTempDirectory("graft_era_ph").toString
     try {
@@ -316,12 +283,16 @@ class ErasureSpec extends SparkSpec {
         val idxV = operators.StoreManifest.currentVersion(spark, idxDir)
         val dedupV = operators.StoreManifest.currentVersion(spark, dedupDir)
         val tombFiles = new java.io.File(s"$annDir/_tombstones").listFiles().length
+        def committedNothing() =
+          operators.MergeInto.currentVersion(spark, snapDir) == snapV &&
+            operators.StoreManifest.currentVersion(spark, idxDir) == idxV &&
+            operators.StoreManifest.currentVersion(spark, dedupDir) == dedupV &&
+            new java.io.File(s"$annDir/_tombstones").listFiles().length == tombFiles
         in.addData(dead.map(_.toString): _*); q.processAllAvailable()
-        assert(operators.MergeInto.currentVersion(spark, snapDir) == snapV &&
-          operators.StoreManifest.currentVersion(spark, idxDir) == idxV &&
-          operators.StoreManifest.currentVersion(spark, dedupDir) == dedupV &&
-          new java.io.File(s"$annDir/_tombstones").listFiles().length == tombFiles,
-          "replaying an applied erase batch must commit nothing")
+        assert(committedNothing(), "replaying an applied erase batch must commit nothing")
+        // an empty trigger commits nothing either
+        in.addData(Seq.empty[String]); q.processAllAvailable()
+        assert(committedNothing(), "an empty trigger must commit nothing")
         // ids the corpus never held, and POISONED ids that cast to null,
         // are absorbed silently — neither wedges the queue nor commits
         in.addData("-5", Long.MaxValue.toString, "not-a-doc-id")
@@ -560,11 +531,15 @@ class ErasureSpec extends SparkSpec {
         val (snapV, cubeV, servV) = (MergeInto.currentVersion(spark, snapDir),
           graft.operators.StoreManifest.currentVersion(spark, cubeDir),
           PartitionedServingSink.committedBatch(servDir))
+        def committedNothing() =
+          MergeInto.currentVersion(spark, snapDir) == snapV &&
+            graft.operators.StoreManifest.currentVersion(spark, cubeDir) == cubeV &&
+            PartitionedServingSink.committedBatch(servDir) == servV
         in.addData("2"); q.processAllAvailable()
-        assert(MergeInto.currentVersion(spark, snapDir) == snapV &&
-          graft.operators.StoreManifest.currentVersion(spark, cubeDir) == cubeV &&
-          PartitionedServingSink.committedBatch(servDir) == servV,
-          "a replayed ticket must not commit a version in any store")
+        assert(committedNothing(), "a replayed ticket must not commit a version in any store")
+        // an empty trigger commits nothing either
+        in.addData(Seq.empty[String]); q.processAllAvailable()
+        assert(committedNothing(), "an empty trigger must not commit a version in any store")
         assert(!new java.io.File(s"$root/ckpt_erase/_user_erase/user_erase_journal.tsv").exists(),
           "the crash journal must drain after a completed trigger")
       } finally q.stop()

@@ -130,8 +130,7 @@ class InvertedIndexSpec extends SparkSpec {
     try {
       InvertedIndex.write(InvertedIndex.build(docs.filter(col("doc_id") % 2 === 0)),
         dir, buckets = 8)
-      // caller passes a WRONG count everywhere from here on — the store's
-      // committed 8 must win
+      // the append passes a WRONG count — the store's committed 8 must win
       assert(InvertedIndex.append(docs.filter(col("doc_id") % 2 === 1),
         dir, "inc1", buckets = 16))
       def bucketDirs(seg: String): Set[String] =
@@ -143,60 +142,26 @@ class InvertedIndexSpec extends SparkSpec {
       val toks = docs.orderBy("doc_id")
         .select(split(col("text"), " ").as("t")).head().getSeq[String](0)
         .take(3).toSeq
-      def phr(b: Int) = InvertedIndex.searchPhrase(spark, dir, toks, buckets = b)
+      def phr() = InvertedIndex.searchPhrase(spark, dir, toks)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val truth = phr(8)
+      val truth = phr()
       assert(truth.nonEmpty)
-      assert(phr(32) == truth, "default-bucket search diverged from the store's count")
-      def bm(b: Int) = InvertedIndex.searchBm25(spark, dir, toks.distinct, buckets = b)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      assert(bm(32) == bm(8) && bm(8).nonEmpty)
-      // compact with yet another caller count must NOT re-bucket the store
-      assert(InvertedIndex.compact(spark, dir, buckets = 64) > 0)
+      // searchBm25TopK still takes a count: the default 32 must prune
+      // with the committed 8 and find every candidate the exhaustive
+      // scorer finds
+      val exhaustive = topkRows(InvertedIndex.searchBm25(spark, dir, toks.distinct)
+        .orderBy(col("bm25").desc, col("doc_id")).limit(5))
+      assert(exhaustive.nonEmpty)
+      assert(topkRows(InvertedIndex.searchBm25TopK(spark, dir, toks.distinct, 5,
+        buckets = 32)) == exhaustive, "default-count top-k diverged from the store's count")
+      // compact must rewrite in the committed count, not re-bucket
+      assert(InvertedIndex.compact(spark, dir) > 0)
       for (seg <- InvertedIndex.segments(spark, dir))
         assert(bucketDirs(seg).forall(_.stripPrefix("bucket=").toInt < 8),
           s"compact re-bucketed $seg out from under committed readers")
-      assert(phr(32) == truth, "post-compact default search diverged")
-      assert(InvertedIndex.storedBuckets(spark, dir, 32) == 8)
-    } finally Fs.rmTree(dir)
-  }
-
-  test("pre-buckets-line manifest: the modulus derives from the segment layout, never the caller default (ADVICE r11)") {
-    // a store committed before the buckets line existed, written with a
-    // non-default count: append/compact used to stamp the 32 FALLBACK
-    // into the next manifest, baking the wrong modulus in permanently
-    val docs = Tables.t(spark, sfDir, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxleg").toString
-    try {
-      InvertedIndex.write(InvertedIndex.build(docs.filter(col("doc_id") % 2 === 0)),
-        dir, buckets = 8)
-      val cur = graft.operators.StoreManifest.currentVersion(spark, dir)
-      val mf = new java.io.File(dir, s"_graft_manifest/v$cur.manifest")
-      val stripped = scala.io.Source.fromFile(mf, "UTF-8").getLines()
-        .filterNot(_.startsWith("buckets\t")).mkString("\n")
-      java.nio.file.Files.write(mf.toPath,
-        stripped.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // the in-place rewrite invalidates LocalFileSystem's checksum
-      // sidecar — drop it (a real pre-buckets-line store never had a
-      // crc for content it didn't write)
-      new java.io.File(mf.getParent, s".${mf.getName}.crc").delete()
-      assert(InvertedIndex.storedBuckets(spark, dir, 32) == 8,
-        "modulus must derive from the segments' bucket= dirs, not the fallback")
-      // an append with the default caller count must write AND stamp the
-      // derived 8 — and default-count searches keep finding everything
-      assert(InvertedIndex.append(docs.filter(col("doc_id") % 2 === 1), dir, "inc1"))
+      assert(phr() == truth, "post-compact search diverged")
       assert(graft.operators.StoreManifest.read(spark, dir,
-        graft.operators.StoreManifest.currentVersion(spark, dir), "buckets") == Seq("8"),
-        "append must stamp the derived modulus into the healed manifest")
-      val toks = docs.orderBy("doc_id")
-        .select(split(col("text"), " ").as("t")).head().getSeq[String](0)
-        .take(3).distinct.toSeq
-      val bmDefault = InvertedIndex.searchBm25(spark, dir, toks)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      val bm8 = InvertedIndex.searchBm25(spark, dir, toks, buckets = 8)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      assert(bmDefault == bm8 && bm8.nonEmpty,
-        "default-count search must resolve the stamped modulus")
+        graft.operators.StoreManifest.currentVersion(spark, dir), "buckets") == Seq("8"))
     } finally Fs.rmTree(dir)
   }
 
@@ -268,36 +233,55 @@ class InvertedIndexSpec extends SparkSpec {
     } finally Fs.rmTree(dir)
   }
 
-  test("append crash window: data renamed, manifest not committed — replay commits it") {
-    import spark.implicits._
-    val docs = Tables.t(spark, sfDir, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxcw").toString
+  /** A crashed append's leftovers: `docs` indexed by the writer into a
+    * scratch store and its segment renamed into `dir` as `seg`, with no
+    * manifest commit.
+    */
+  private def stageCrashedAppend(docs: org.apache.spark.sql.DataFrame,
+                                 dir: String, seg: String): Unit = {
+    val scratch = java.nio.file.Files.createTempDirectory("graft_idxstage").toString
     try {
-      InvertedIndex.write(InvertedIndex.build(docs.filter(col("doc_id") % 2 === 0)), dir)
-      val fresh = docs.filter(col("doc_id") % 2 === 1)
-      // simulate the crash: stage + rename the segment by hand, no commit
-      val tmp = new java.io.File(dir, ".tmp_seg_bX")
-      InvertedIndex.build(fresh)
-        .withColumn("bucket", pmod(xxhash64(col("term")), lit(32L)))
-        .repartition(col("bucket")).sortWithinPartitions("term", "doc_id")
-        .write.partitionBy("bucket").parquet(tmp.toString)
-      Fs.atomicMove(tmp.toString, new java.io.File(dir, "seg=bX").toString)
-      // readers on the committed version do not see the orphan segment
-      assert(InvertedIndex.segments(spark, dir) == Seq("seg=base"))
-      // the replayed append finds whole data and just commits the pointer
-      assert(InvertedIndex.append(fresh, dir, "bX"))
-      assert(InvertedIndex.segments(spark, dir).toSet == Set("seg=base", "seg=bX"))
-      val toks = docs.orderBy("doc_id")
-        .select(split(col("text"), " ").as("t")).head().getSeq[String](0)
-        .take(3).toSeq
-      val full = java.nio.file.Files.createTempDirectory("graft_idxcw_full").toString
-      try {
-        InvertedIndex.write(InvertedIndex.build(docs), full)
-        def res(d: String) = InvertedIndex.searchPhrase(spark, d, toks)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(res(dir) == res(full), "healed index search != full rebuild")
-      } finally Fs.rmTree(full)
-    } finally Fs.rmTree(dir)
+      InvertedIndex.write(InvertedIndex.build(docs), scratch)
+      Fs.atomicMove(s"$scratch/seg=base", new java.io.File(dir, seg).toString)
+    } finally Fs.rmTree(scratch)
+  }
+
+  test("append crash window: data renamed, manifest not committed — replay commits it") {
+    val docs = Tables.t(spark, sfDir, "documents")
+    val old = docs.filter(col("doc_id") % 2 === 0)
+    val fresh = docs.filter(col("doc_id") % 2 === 1)
+    val toks = docs.orderBy("doc_id")
+      .select(split(col("text"), " ").as("t")).head().getSeq[String](0)
+      .take(3).toSeq
+    def res(d: String) = InvertedIndex.searchPhrase(spark, d, toks)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def bm(d: String) = InvertedIndex.searchBm25(spark, d, toks.distinct)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val full = java.nio.file.Files.createTempDirectory("graft_idxcw_full").toString
+    try {
+      InvertedIndex.write(InvertedIndex.build(docs), full)
+      // the crashed append joins a committed base, or was the first
+      // append into an empty dir (healed as version 0)
+      for (withBase <- Seq(true, false)) {
+        val dir = java.nio.file.Files.createTempDirectory("graft_idxcw").toString
+        try {
+          if (withBase) InvertedIndex.write(InvertedIndex.build(old), dir)
+          stageCrashedAppend(fresh, dir, "seg=bX")
+          // readers on the committed version do not see the orphan segment
+          val committed = if (withBase) Seq("seg=base") else Nil
+          assert(InvertedIndex.segments(spark, dir) == committed)
+          // the replayed append finds whole data and just commits the pointer
+          assert(InvertedIndex.append(fresh, dir, "bX"))
+          assert(graft.operators.StoreManifest.currentVersion(spark, dir) ==
+            (if (withBase) 1L else 0L), s"withBase=$withBase: heal committed the wrong version")
+          assert(InvertedIndex.segments(spark, dir).toSet == (committed :+ "seg=bX").toSet)
+          if (!withBase) assert(InvertedIndex.append(old, dir, "bY"))
+          assert(res(dir) == res(full), s"withBase=$withBase: healed phrase search != full rebuild")
+          assert(bm(dir) == bm(full), s"withBase=$withBase: healed BM25 != full rebuild (bitwise)")
+        } finally Fs.rmTree(dir)
+      }
+      assert(res(full).nonEmpty && bm(full).nonEmpty)
+    } finally Fs.rmTree(full)
   }
 
   test("rebuild never claims a crashed append's segment name; the replayed batch survives") {
@@ -310,12 +294,7 @@ class InvertedIndexSpec extends SparkSpec {
       InvertedIndex.write(InvertedIndex.build(old), dir) // v0: seg=base
       // a crashed append whose caller-chosen name collides with the
       // rebuild's generated one: data renamed in, manifest never committed
-      val tmp = new java.io.File(dir, ".tmp_seg_r1")
-      InvertedIndex.build(fresh)
-        .withColumn("bucket", pmod(xxhash64(col("term")), lit(32L)))
-        .repartition(col("bucket")).sortWithinPartitions("term", "doc_id")
-        .write.partitionBy("bucket").parquet(tmp.toString)
-      Fs.atomicMove(tmp.toString, new java.io.File(dir, "seg=r1").toString)
+      stageCrashedAppend(fresh, dir, "seg=r1")
       // an in-place rebuild interleaves BEFORE the replay: claiming
       // seg=r1 would make the replay see its name committed and no-op —
       // the appended batch would be silently lost forever
@@ -529,90 +508,25 @@ class InvertedIndexSpec extends SparkSpec {
     }
   }
 
-  test("compact: an aux-less legacy segment without inline dl takes the aggregate path") {
-    val docs = Tables.t(spark, sfDir, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxlg").toString
-    val ref = java.nio.file.Files.createTempDirectory("graft_idxlg_ref").toString
-    try {
-      assert(InvertedIndex.append(docs.filter(col("doc_id") % 2 === 0), dir, "a"))
-      assert(InvertedIndex.append(docs.filter(col("doc_id") % 2 === 1), dir, "b"))
-      // seg=a as a store written before inline dl: no aux, no dl column
-      val segA = s"$dir/seg=a"
-      val tmpA = java.nio.file.Files.createTempDirectory("graft_idxlg_a").toString
-      spark.read.parquet(segA).select("term", "doc_id", "positions", "tf", "bucket")
-        .write.partitionBy("bucket").mode("overwrite").parquet(tmpA)
-      Fs.rmTree(segA)
-      Fs.atomicMove(tmpA, segA)
-      assert(InvertedIndex.compact(spark, dir) == 2)
-      // a rewrite would carry seg=a's missing dl through as null; the
-      // aggregate path re-derives it
-      InvertedIndex.write(InvertedIndex.build(docs), ref)
-      val got = segContents(s"$dir/${InvertedIndex.segments(spark, dir).head}")
-      val want = segContents(s"$ref/${InvertedIndex.segments(spark, ref).head}")
-      for (part <- want.keys) assert(got(part) == want(part), s"$part differs from a rebuild")
-    } finally { Fs.rmTree(dir); Fs.rmTree(ref) }
-  }
-
-  test("docLengths/searchBm25: aux-stripped segments fall back; compaction retires the fallback FIRST") {
-    import spark.implicits._
-    val docs = Tables.t(spark, sfDir, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxdl").toString
-    try {
-      // a is the LARGEST segment (half the corpus); b and c split the rest
-      assert(InvertedIndex.append(docs.filter(col("doc_id") % 4 < 2), dir, "a"))
-      assert(InvertedIndex.append(docs.filter(col("doc_id") % 4 === 2), dir, "b"))
-      assert(InvertedIndex.append(docs.filter(col("doc_id") % 4 === 3), dir, "c"))
-      val terms = InvertedIndex.topSpan(docs).split(' ').toSeq.distinct
-      def bm() = InvertedIndex.searchBm25(spark, dir, terms)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      def dls() = InvertedIndex.docLengths(spark, dir)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val (truth, aux) = (bm(), dls())
-      // simulate a pre-aux (legacy-adopted) segment: strip its aux dirs
-      Fs.rmTree(s"$dir/seg=a/_doclen")
-      assert(dls() == aux, "postings-derived lengths diverge from the aux")
-      Fs.rmTree(s"$dir/seg=a/_stats")
-      // searchBm25 routes through the docLengths join now; same inputs,
-      // same score expression, same ordered fold -> bitwise-same scores
-      val legacy = bm()
-      assert(legacy == truth, "fallback BM25 != inlined BM25 (bitwise)")
-      assert(legacy.nonEmpty)
-      // go further: make seg=a a TRUE pre-inline-dl segment — postings
-      // parquet WITHOUT the dl column (the shape a store written by the
-      // previous code version has), exercising the mixed-schema read
-      // and the posts.drop("dl") leg, not just the missing-aux leg
-      val segA = s"$dir/seg=a"
-      val noDl = spark.read.parquet(segA)
-        .select("term", "doc_id", "positions", "tf", "bucket")
-      val tmpA = java.nio.file.Files.createTempDirectory("graft_idxdl_nodl").toString
-      noDl.write.partitionBy("bucket").mode("overwrite").parquet(tmpA)
-      Fs.rmTree(segA)
-      Fs.atomicMove(tmpA, segA)
-      assert(bm() == truth, "true pre-dl segment BM25 != inlined (bitwise)")
-      // size-tiering alone would keep the LARGEST segment forever; the
-      // aux-less segment sorts as size -1, so one merge folds it and
-      // rewrites its aux — the corpus-width fallback actually retires
-      assert(InvertedIndex.compact(spark, dir, targetSegs = 2) == 2)
-      val live = InvertedIndex.segments(spark, dir)
-      assert(live.size == 2 && !live.contains("seg=a"),
-        s"legacy segment must be folded by the next merge: $live")
-      assert(live.forall(s => new java.io.File(s"$dir/$s/_stats").exists()),
-        "merged segment must carry the aux")
-      assert(bm() == truth, "post-retirement BM25 diverges (bitwise)")
-    } finally Fs.rmTree(dir)
-  }
-
   test("searchBm25: unmanifested dir fails loudly; committed zero-segment store answers empty") {
     val dir = java.nio.file.Files.createTempDirectory("graft_idxempty").toString
     try {
-      // bare dir, no manifest: a flat legacy layout or a typo'd path —
-      // must raise, not silently report "no relevant documents"
-      intercept[IllegalArgumentException] {
-        InvertedIndex.searchBm25(spark, dir, Seq("x")).collect()
-      }
+      // no manifest, even with a whole segment on disk: a typo'd path or
+      // a store whose manifest was lost — every read must raise, not
+      // silently report "no relevant documents"
+      stageCrashedAppend(handCorpus, dir, "seg=base")
+      assert(InvertedIndex.segments(spark, dir).isEmpty)
+      def refused(read: => Any): Unit = intercept[IllegalArgumentException](read)
+      refused(InvertedIndex.searchBm25(spark, dir, Seq("a")).collect())
+      refused(InvertedIndex.searchBm25TopK(spark, dir, Seq("a"), 5).collect())
+      refused(InvertedIndex.readForTerms(spark, dir, Seq("a")).collect())
+      refused(InvertedIndex.searchPhrase(spark, dir, Seq("a", "b")).collect())
+      refused(InvertedIndex.docLengths(spark, dir).collect())
+      refused(InvertedIndex.corpusStats(spark, dir).collect())
+      refused(InvertedIndex.maxScorePlan(spark, dir, Seq("a"), 5))
       // a COMMITTED store with zero segments legitimately answers empty
-      graft.operators.StoreManifest.commit(spark, dir, 0, Seq.empty)
-      assert(InvertedIndex.searchBm25(spark, dir, Seq("x")).collect().isEmpty)
+      graft.operators.StoreManifest.commit(spark, dir, 0, Seq("buckets\t32"))
+      assert(InvertedIndex.searchBm25(spark, dir, Seq("a")).collect().isEmpty)
     } finally Fs.rmTree(dir)
   }
 
@@ -654,12 +568,24 @@ class InvertedIndexSpec extends SparkSpec {
     val docs = Tables.t(spark, sfDir, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_idxgrow").toString
     try {
+      // the one layout every writer keeps: one buckets line per
+      // manifest, and every live segment carries its three aux dirs
+      def assertOneLayout(after: String): Unit = {
+        val cur = graft.operators.StoreManifest.currentVersion(spark, dir)
+        assert(graft.operators.StoreManifest.read(spark, dir, cur, "buckets").size == 1,
+          s"$after: v$cur must carry exactly one buckets line")
+        for (seg <- InvertedIndex.segments(spark, dir); aux <- Seq("_doclen", "_stats", "_terms"))
+          assert(new java.io.File(s"$dir/$seg/$aux").isDirectory, s"$after: $seg lacks $aux")
+      }
       // 12 appended slices with compaction every time the live list
       // exceeds 3 — the IndexSink loop, run synchronously
       (0 until 12).foreach { i =>
         InvertedIndex.append(docs.filter(col("doc_id") % 12 === i), dir, s"b$i")
-        if (InvertedIndex.segments(spark, dir).size > 3)
+        assertOneLayout(s"append b$i")
+        if (InvertedIndex.segments(spark, dir).size > 3) {
           InvertedIndex.compact(spark, dir)
+          assertOneLayout(s"compact after b$i")
+        }
       }
       val live = InvertedIndex.segments(spark, dir)
       assert(live.size <= 4, s"live segments unbounded: $live")
@@ -683,6 +609,9 @@ class InvertedIndexSpec extends SparkSpec {
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(res(dir) == res(full))
       } finally Fs.rmTree(full)
+      val first = docs.agg(min("doc_id")).head().getLong(0)
+      assert(InvertedIndex.delete(spark, dir, Seq(first)) == 1L)
+      assertOneLayout("delete")
     } finally Fs.rmTree(dir)
   }
 
@@ -731,6 +660,8 @@ class InvertedIndexSpec extends SparkSpec {
     try {
       InvertedIndex.write(InvertedIndex.build(docs), dir)
       val terms = InvertedIndex.topSpan(docs).split(' ').toSeq.distinct :+ "no_such_term"
+      // empty term list answers empty instead of crashing the planner
+      assert(InvertedIndex.searchBm25TopK(spark, dir, Seq.empty, 5).isEmpty)
       for (k <- Seq(1, 3, 10, 1000)) {
         val exhaustive = InvertedIndex.searchBm25(spark, dir, terms)
           .orderBy(col("bm25").desc, col("doc_id")).limit(k)
@@ -774,27 +705,6 @@ class InvertedIndexSpec extends SparkSpec {
       InvertedIndex.delete(spark, dir, Seq(0L))
       assert(topkRows(InvertedIndex.searchBm25TopK(spark, dir, terms, 2)) ==
         topkRows(exhaustive(2)), "post-delete pruned top-k diverged")
-    } finally Fs.rmTree(dir)
-  }
-
-  test("searchBm25TopK: store predating the _terms aux falls back to the exhaustive scorer; guards hold") {
-    val docs = Tables.t(spark, sfDir, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft_wand_leg").toString
-    try {
-      InvertedIndex.write(InvertedIndex.build(docs), dir)
-      val terms = InvertedIndex.topSpan(docs).split(' ').toSeq.distinct
-      // empty term list answers empty instead of crashing the planner
-      assert(InvertedIndex.searchBm25TopK(spark, dir, Seq.empty, 5).isEmpty)
-      InvertedIndex.segments(spark, dir).foreach(s =>
-        Fs.rmTree(s"$dir/$s/_terms"))
-      val exhaustive = InvertedIndex.searchBm25(spark, dir, terms)
-        .orderBy(col("bm25").desc, col("doc_id")).limit(5)
-      assert(topkRows(InvertedIndex.searchBm25TopK(spark, dir, terms, 5)) ==
-        topkRows(exhaustive))
-      // direct maxScorePlan on the aux-less store names its contract
-      val e = intercept[IllegalArgumentException](
-        InvertedIndex.maxScorePlan(spark, dir, terms, 5))
-      assert(e.getMessage.contains("_terms"), s"unhelpful error: $e")
     } finally Fs.rmTree(dir)
   }
 }

@@ -228,8 +228,19 @@ class RollupNavSpec extends SparkSpec {
       val in = MemoryStream[(String, String, Long)]
       val q = graft.streaming.RollupSink.start(
         in.toDF().toDF("day", "event_type", "v_us"), dir, shape, ckpt)
-      try slices.foreach { s => in.addData(s); q.processAllAvailable() }
-      finally q.stop()
+      // an empty trigger commits no version, before the first batch
+      // (the dir stays uncommitted) and after the last
+      def emptyTrigger(): Unit = {
+        val v = graft.operators.StoreManifest.currentVersion(spark, dir)
+        in.addData(Seq.empty[(String, String, Long)]); q.processAllAvailable()
+        assert(graft.operators.StoreManifest.currentVersion(spark, dir) == v,
+          "an empty trigger committed a cube version")
+      }
+      try {
+        emptyTrigger()
+        slices.foreach { s => in.addData(s); q.processAllAvailable() }
+        emptyTrigger()
+      } finally q.stop()
       val streamed = RollupNav.answer(spark, dir, shape, Seq("event_type"), "day").get
       val oneShotDir = tmp()
       try {
@@ -280,28 +291,6 @@ class RollupNavSpec extends SparkSpec {
     } finally Fs.rmTree(dir)
   }
 
-  test("legacy un-manifested cube: maintain adopts history instead of destroying it") {
-    val dir = tmp()
-    val truthDir = tmp()
-    try {
-      // simulate a pre-r10 cube: plain day-partitioned parquet, no manifest
-      val old = base.filter(col("day") < "2024-01-15")
-      old.groupBy(col("day").cast("string").as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n_rows"), sum("v_us").as("v_us_sum"),
-          min("v_us").as("v_us_min"), max("v_us").as("v_us_max"))
-        .write.partitionBy("day").mode("overwrite").parquet(dir)
-      assert(graft.operators.StoreManifest.currentVersion(spark, dir) == -1L)
-      // one maintain over the new days must adopt v0 first, then fold
-      RollupNav.maintain(spark, dir, shape,
-        base.filter(col("day") >= "2024-01-15"), Some(1L))
-      RollupNav.materialize(base, shape, truthDir)
-      val got = RollupNav.answer(spark, dir, shape, Seq("event_type"), "day").get
-      val truth = RollupNav.answer(spark, truthDir, shape, Seq("event_type"), "day").get
-      assert(got.exceptAll(truth).isEmpty && truth.exceptAll(got).isEmpty,
-        "legacy history was lost or double-counted on adoption")
-    } finally { Fs.rmTree(dir); Fs.rmTree(truthDir) }
-  }
-
   test("manifest-less versioned files: crashed bootstrap replays clean; stripped manifest refuses") {
     // crashed bootstrap: v0- files staged on a manifest-less dir are
     // orphans of the batch about to replay — adopting them as legacy
@@ -326,23 +315,40 @@ class RollupNavSpec extends SparkSpec {
       } finally Fs.rmTree(truthDir)
     } finally Fs.rmTree(dir)
 
-    // stripped manifest: v1+ files prove a manifest once committed them —
-    // the lost manifest's file set is unknowable, so maintain must refuse
-    // rather than adopt a guess and let vacuum delete the rest
-    val dir2 = tmp()
-    try {
-      RollupNav.materialize(base.filter(col("day") < "2024-01-10"), shape, dir2)
-      RollupNav.maintain(spark, dir2, shape,
+    // any other data file on a manifest-less dir: maintain refuses
+    // rather than adopt a guess and let vacuum delete the rest, and
+    // readStore refuses to read it. Inputs: a stripped manifest (v1+
+    // files prove a manifest once committed them) and a plain
+    // day-partitioned parquet tree that no manifest ever committed
+    val stripped = (d: String) => {
+      RollupNav.materialize(base.filter(col("day") < "2024-01-10"), shape, d)
+      RollupNav.maintain(spark, d, shape,
         base.filter(col("day").between("2024-01-10", "2024-01-11")), Some(1L))
-      Fs.rmTree(new java.io.File(dir2,
-        graft.operators.StoreManifest.ManifestDir).toString)
-      val e = intercept[IllegalArgumentException] {
-        RollupNav.maintain(spark, dir2, shape,
-          base.filter(col("day") >= "2024-01-12"), Some(2L))
-      }
-      assert(e.getMessage.contains("manifest"),
-        s"refusal must name the lost manifest: ${e.getMessage}")
-    } finally Fs.rmTree(dir2)
+      Fs.rmTree(new java.io.File(d, graft.operators.StoreManifest.ManifestDir).toString)
+    }
+    val unmanifested = (d: String) => {
+      base.filter(col("day") < "2024-01-10")
+        .groupBy(col("day").cast("string").as("day"), col("event_type"))
+        .agg(count(lit(1)).as("n_rows"), sum("v_us").as("v_us_sum"),
+          min("v_us").as("v_us_min"), max("v_us").as("v_us_max"))
+        .write.partitionBy("day").mode("overwrite").parquet(d)
+    }
+    for ((name, stage) <- Seq("stripped manifest" -> stripped, "unmanifested tree" -> unmanifested)) {
+      val dir2 = tmp()
+      try {
+        stage(dir2)
+        assert(graft.operators.StoreManifest.currentVersion(spark, dir2) == -1L)
+        val e = intercept[IllegalArgumentException] {
+          RollupNav.maintain(spark, dir2, shape,
+            base.filter(col("day") >= "2024-01-12"), Some(2L))
+        }
+        assert(e.getMessage.contains("manifest"),
+          s"$name: refusal must name the lost manifest: ${e.getMessage}")
+        intercept[IllegalArgumentException](RollupNav.readStore(spark, dir2))
+        assert(graft.operators.StoreManifest.currentVersion(spark, dir2) == -1L,
+          s"$name: a refused maintain must commit nothing")
+      } finally Fs.rmTree(dir2)
+    }
   }
 
   test("bounded growth: 30 maintenance batches leave <= 2 manifests and only referenced files") {

@@ -59,7 +59,7 @@ class VacuumSpec extends SparkSpec {
         }
         // bounded maintenance, same policies a sink runs
         if (InvertedIndex.segments(spark, idxDir).size > 3)
-          InvertedIndex.compact(spark, idxDir, buckets = 4, targetSegs = 2)
+          InvertedIndex.compact(spark, idxDir, targetSegs = 2)
         if (DedupStore.seenFileCount(spark, dedupDir) > 12)
           DedupStore.compactSeen(spark, dedupDir)
         Vacuum.sweepAll(spark, stores, retainVersions = 1, pipeline = true)
@@ -107,7 +107,7 @@ class VacuumSpec extends SparkSpec {
         DedupStore.compactSeen(spark, dedupDir); () },
       () => { IngestPipeline.indexCatchUp(spark, dedupDir, idxDir, 4); () },
       () => { if (InvertedIndex.segments(spark, idxDir).size > 3)
-        InvertedIndex.compact(spark, idxDir, buckets = 4, targetSegs = 2); () },
+        InvertedIndex.compact(spark, idxDir, targetSegs = 2); () },
       () => { IngestPipeline.annCatchUp(spark, dedupDir, annDir, nlist = 2); () },
       () => { IngestPipeline.vacuumSafe(spark, dedupDir, idxDir, 1, Some(annDir)); () })
     def triState(): (Set[Long], Set[Long], Set[Long]) = (
