@@ -3,9 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 
 /** The one recursive-delete used everywhere a query or sink cleans its
-  * scratch directories — previously five near-identical walk-and-delete
-  * copies (ServingSink ×2, PartitionedServingSink, OperatorQueries,
-  * MergeSpec); a fix here (symlinks, retries) now propagates.
+  * scratch directories; a fix here (symlinks, retries) propagates.
   */
 object Fs {
 

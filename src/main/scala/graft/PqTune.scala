@@ -119,7 +119,7 @@ object PqTune {
         approx.get(p).map(ap => ap.intersect(ex).size.toDouble / ex.size)
           .getOrElse(0.0)
       }
-      val nl = spark.read.parquet(s"$dir/centroids").count()
+      val nl = graft.operators.AnnIndexStore.centroidCount(spark, dir)
       println(f"[pqtune] r16 PERSISTED autoConfig store        nlist=$nl nprobe=${math.max(1, nl / 4)} recall@5 = ${rs.sum / rs.size}%.3f (scan 25.0%%, routed=${nl >= graft.operators.AnnPq.RoutedAssignThreshold}) n=$n")
       graft.Fs.rmTree(dir)
     }

@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Persistence for the ANN index family — the piece that turns AnnIvf/
   * AnnPq from per-query constructions into a 100 TB service: train ONCE,
@@ -10,22 +12,73 @@ import org.apache.spark.sql.functions._
   * searches and incrementally append new vectors without ever
   * retraining (round-6 verdict gap #4).
   *
-  * Layout under `dir`:
+  * Layout under `dir`, every data file named `v<N>-…` after the version
+  * that wrote it:
   * {{{
-  *   centroids/   (list_id, c ARRAY<DOUBLE>, c_normsq)   — nlist rows
-  *   codebooks/   (subspace, code, c ARRAY<DOUBLE>)      — m·K rows (optional)
-  *   lists/       list_id=<n>/...parquet with (vec_id, embedding, nrm)
+  *   centroids/     (list_id, c ARRAY<DOUBLE>, c_normsq)   — nlist rows
+  *   codebooks/     (subspace, code, c ARRAY<DOUBLE>)      — m·K rows (optional)
+  *   list_id=<n>/   (vec_id, embedding, nrm)               — cell n's vectors
+  *   _tombstones/   (vec_id)                               — deleted, not yet purged
   * }}}
   *
-  * Scale shape: `lists/` is PARTITIONED BY list id, so a search that
-  * probes `nprobe` of `nlist` cells reads exactly those directories —
+  * A [[StoreManifest]] store, like every versioned store here: a
+  * version's manifest names its centroid file, its codebook file, each
+  * list file, each tombstone file with its row count, the `nlist`, the
+  * list files' pinned `schema`, and one `hw` line — the highest batch
+  * id (or dedup version) already appended. Every write stages its files
+  * first and commits with ONE manifest rename, so a crash at any point
+  * leaves the previous version serving plus unreferenced files that
+  * readers never see and [[vacuum]] sweeps; a re-run converges.
+  *
+  * Scale shape: the lists are PARTITIONED BY list id, so a search that
+  * probes `nprobe` of `nlist` cells reads exactly those cells' files —
   * the probe pruning is parquet PARTITION pruning (PartitionFilters in
   * the scan, proven in AnnStoreSpec), not a post-scan filter. Append
   * assigns new vectors against the persisted centroids with the same
-  * argmin projection used at build time and appends new files to their
-  * cells' directories; existing files are never rewritten.
+  * argmin projection used at build time and adds new files to their
+  * cells; existing files are never rewritten.
   */
 object AnnIndexStore {
+
+  val TombDir = "_tombstones"
+
+  /** One committed version, decoded from its manifest (`v = -1`: none). */
+  private final case class Version(v: Long, hw: Long = -1L, nlist: Int = 0,
+                                   schema: Option[StructType] = None,
+                                   centroids: Seq[String] = Nil,
+                                   codebooks: Seq[String] = Nil,
+                                   lists: Seq[String] = Nil,
+                                   tombs: Seq[(String, Long)] = Nil) {
+    def lines: Seq[String] =
+      Seq(s"hw\t$hw", s"nlist\t$nlist") ++ schema.map(s => s"schema\t${s.json}") ++
+        centroids.map("centroids\t" + _) ++ codebooks.map("codebooks\t" + _) ++
+        lists.sorted.map("list\t" + _) ++ tombs.map { case (f, n) => s"tomb\t$f\t$n" }
+
+    def files: Seq[String] = centroids ++ codebooks ++ lists ++ tombs.map(_._1)
+  }
+
+  private def versionOf(spark: SparkSession, dir: String, v: Long): Version = {
+    val ls = StoreManifest.readLines(spark, dir, v).map(_.split('\t'))
+    def all(tag: String) = ls.collect { case l if l(0) == tag => l(1) }
+    Version(v, all("hw").head.toLong, all("nlist").head.toInt,
+      all("schema").headOption.map(DataType.fromJson(_).asInstanceOf[StructType]),
+      all("centroids"), all("codebooks"), all("list"),
+      ls.collect { case l if l(0) == "tomb" => (l(1), l(2).toLong) })
+  }
+
+  private def current(spark: SparkSession, dir: String): Version = {
+    val v = StoreManifest.currentVersion(spark, dir)
+    if (v < 0) Version(-1L) else versionOf(spark, dir, v)
+  }
+
+  private def trainedVersion(spark: SparkSession, dir: String): Version = {
+    val cur = current(spark, dir)
+    require(cur.centroids.nonEmpty, s"no trained ANN index under $dir")
+    cur
+  }
+
+  private def commit(spark: SparkSession, dir: String, ver: Version): Unit =
+    StoreManifest.commit(spark, dir, ver.v, ver.lines)
 
   /** Train (bounded driver-side sample) and persist the index. With
     * `m > 0` also trains and persists PQ sub-codebooks (AnnPq geometry)
@@ -35,13 +88,17 @@ object AnnIndexStore {
     * queries run; past [[AnnPq.RoutedAssignThreshold]] cells both the
     * build's list writes and every later append assign through the
     * two-level router (via AnnIvf.assign), and [[searchTopK]] ranks its
-    * probe cells the same way.
+    * probe cells the same way. One commit replaces the whole index
+    * (lists and tombstones); only the `hw` record carries over.
     */
   def save(spark: SparkSession, embeddings: DataFrame, dir: String,
            nlist: Int = 16, m: Int = 0, codes: Int = 16,
            seed: Long = 42, maxTrain: Int = 65536): Unit = {
-    train(spark, embeddings, dir, nlist, m, codes, seed, maxTrain)
-    writeLists(embeddings, loadCentroids(spark, dir), dir, overwrite = true)
+    val cur = current(spark, dir)
+    val (centroids, geom) = stageGeometry(spark, embeddings, dir, cur.v + 1,
+      nlist, m, codes, seed, maxTrain)
+    commit(spark, dir, geom.copy(hw = cur.hw,
+      lists = stageLists(spark, dir, embeddings, centroids, geom.v)))
   }
 
   /** Resolve an `nlist` argument: 0 → [[AnnPq.autoConfig]] sizing from
@@ -54,258 +111,137 @@ object AnnIndexStore {
   }
 
   /** Train and persist the GEOMETRY only (centroids + optional PQ
-    * codebooks) — no list data. The bootstrap half of [[save]], split
-    * out so a version-derived feeder ([[graft.streaming.IngestPipeline]]
-    * r13) can train once and route ALL data — including the training
-    * version's — through the idempotent [[appendBatch]]: a combined
-    * train-and-write has no safe replay point (a replay can neither
-    * re-save without wiping committed appends nor skip without knowing
-    * whether the data half finished).
+    * codebooks) — an empty index. The bootstrap half of [[save]], split
+    * out so a version-derived feeder ([[graft.streaming.IngestPipeline]])
+    * can train once and route ALL data — including the training
+    * version's — through [[appendBatch]], keyed by its own batch ids.
     */
   def train(spark: SparkSession, embeddings: DataFrame, dir: String,
             nlist: Int = 16, m: Int = 0, codes: Int = 16,
             seed: Long = 42, maxTrain: Int = 65536): Unit = {
+    val cur = current(spark, dir)
+    val (_, geom) = stageGeometry(spark, embeddings, dir, cur.v + 1,
+      nlist, m, codes, seed, maxTrain)
+    commit(spark, dir, geom.copy(hw = cur.hw))
+  }
+
+  /** Stage version `next`'s centroids (+ codebooks) trained on
+    * `embeddings`; returns the centroids and an uncommitted version
+    * naming the staged files, with no lists.
+    */
+  private def stageGeometry(spark: SparkSession, embeddings: DataFrame,
+                            dir: String, next: Long, nlist: Int, m: Int,
+                            codes: Int, seed: Long,
+                            maxTrain: Int): (Array[Array[Double]], Version) = {
     import spark.implicits._
     graft.functions.VectorFunctions.register(spark)
+    val root = new Path(dir)
     val sample = AnnIvf.collectTrain(embeddings, maxTrain)
     require(sample.nonEmpty, "cannot build an index over an empty corpus")
     val k = math.min(resolveNlist(embeddings, nlist), sample.length)
     val centroids = AnnIvf.localKMeans(sample, k, iters = 10, seed = seed)
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq, c.map(x => x * x).sum) }
-      .toSeq.toDF("list_id", "c", "c_normsq")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    if (m > 0) {
-      val books = AnnPq.trainCodebooks(sample, m, codes, seed)
-      books.zipWithIndex.flatMap { case (book, b) =>
-        book.zipWithIndex.map { case (c, j) => (b, j, c.toSeq) }
-      }.toSeq.toDF("subspace", "code", "c")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    }
+    val cFiles = StoreManifest.stageInto(spark, root,
+      centroids.zipWithIndex
+        .map { case (c, i) => (i, c.toSeq, c.map(x => x * x).sum) }
+        .toSeq.toDF("list_id", "c", "c_normsq").coalesce(1),
+      "centroids", next)
+    val bFiles =
+      if (m <= 0) Nil
+      else StoreManifest.stageInto(spark, root,
+        AnnPq.trainCodebooks(sample, m, codes, seed).zipWithIndex.flatMap {
+          case (book, b) => book.zipWithIndex.map { case (c, j) => (b, j, c.toSeq) }
+        }.toSeq.toDF("subspace", "code", "c").coalesce(1),
+        "codebooks", next)
+    val schema = embeddings.select(col("vec_id"), col("embedding")).schema
+      .add("nrm", "double").add("list_id", "int")
+    (centroids, Version(next, nlist = centroids.length, schema = Some(schema),
+      centroids = cFiles, codebooks = bFiles))
   }
 
-  /** Whether the geometry is committed (the centroids parquet finished
-    * its write — `_SUCCESS` lands last, so a torn train re-runs).
-    */
-  def trained(spark: SparkSession, dir: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(new Path(dir), "centroids/_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** Whether the current version carries trained geometry. */
+  def trained(spark: SparkSession, dir: String): Boolean =
+    current(spark, dir).centroids.nonEmpty
 
   /** OFFLINE RETRAIN — the documented refresh path for the frozen
     * geometry (append never retrains; a quantizer trained on an early
     * unrepresentative sample eventually wants this). Rebuilds centroids
-    * (+ codebooks) AND lists from the store's own live content, with
+    * (+ codebooks) AND lists from the current version's live content,
     * tombstoned ids excluded — a rebuild is also a purge, so the
-    * tombstones retire with it. Crash-safe via a source snapshot: the
-    * live rows land under `.rebuild-src` FIRST (parquet `_SUCCESS` is
-    * the snapshot commit), the save reads only the snapshot, and any
-    * crash mid-overwrite re-runs from the intact snapshot.
-    *
-    * ==The snapshot is SELF-EXPIRING (ADVICE r13)==
-    *
-    * A rebuild that crashed after [[save]] but before the snapshot
-    * delete used to leave a trusted-forever stale snapshot: if the
-    * ingest pipeline resumed appending before the re-run, the re-run
-    * restored the pre-append lists and the appended vectors were lost
-    * permanently (their `_ann_commits/b<v>` markers survive, so the
-    * catch-up never re-appends them). Now staging records the
-    * `_ann_commits` listing as a fingerprint (`.rebuild-marks`,
-    * written BEFORE the snapshot), and re-entry reconciles:
-    *
-    *   - fingerprint unchanged → nothing landed since staging: recover
-    *     from the snapshot (the torn-save case, as before);
-    *   - fingerprint changed and `lists/_SUCCESS` exists → the save
-    *     completed before the new commits, so `lists/` holds rebuilt
-    *     content PLUS the new appends: restage fresh from it;
-    *   - fingerprint changed, lists torn, new marks are all appends →
-    *     recover snapshot ∪ the new batches' marker-committed files
-    *     (deduped by vec_id — idempotent under re-crash);
-    *   - fingerprint changed, lists torn, a PURGE landed in the gap →
-    *     fail loudly (a purge racing a torn rebuild is doubly out of
-    *     the single-writer contract; silent recovery could resurrect
-    *     erased vectors).
-    *
-    * Tombstones that land after staging are re-applied right before the
-    * save (and only the tombstone files present then retire), so a
-    * delete in the crash gap cannot resurrect. The snapshot and
-    * fingerprint delete IMMEDIATELY after save() — the stale window is
-    * gone, not just narrowed. Batch markers survive throughout, so a
-    * version-derived feeder ([[graft.streaming.IngestPipeline]]) keeps
-    * its consumption record. Single-writer maintenance slot; like
-    * [[save]], readers must not race the rewrite (a live append DURING
-    * the rebuild aborts loudly at the pre-save fingerprint re-check).
-    * Returns vectors in the rebuilt index.
+    * tombstones retire with it — and keeps its `hw`. Everything is
+    * written under new names and commits in one manifest rename, only
+    * if the base version is still current: a write that landed in the
+    * meantime (out of the single-writer contract) aborts the rebuild
+    * loudly with nothing committed, and a crash before the commit
+    * leaves the old version serving. Returns vectors in the rebuilt
+    * index.
     */
   def rebuild(spark: SparkSession, dir: String, nlist: Int = 16, m: Int = 0,
               codes: Int = 16, seed: Long = 42, maxTrain: Int = 65536): Long = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = new Path(root, ".rebuild-src")
-    val srcNext = new Path(root, ".rebuild-src-next")
-    val marksFile = new Path(root, ".rebuild-marks")
-    def commitMarks(): Array[String] = {
-      val commits = new Path(root, "_ann_commits")
-      (if (fs.exists(commits)) fs.listStatus(commits) else Array.empty[org.apache.hadoop.fs.FileStatus])
-        .map(_.getPath.getName).sorted
-    }
-    def writeMarks(ms: Array[String]): Unit = {
-      val tmp = new Path(root, s".rebuild-marks-${java.util.UUID.randomUUID()}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(ms.mkString("\n").getBytes("UTF-8")) finally out.close()
-      fs.delete(marksFile, false)
-      require(fs.rename(tmp, marksFile), s"marks commit $tmp -> $marksFile failed")
-    }
-    def readMarks(): Option[Array[String]] =
-      if (!fs.exists(marksFile)) None
-      else {
-        val in = fs.open(marksFile)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        Some(s.split('\n').filter(_.nonEmpty).sorted)
-      }
-    def restageFresh(marks: Array[String]): Unit = {
-      fs.delete(src, true)
-      writeMarks(marks) // BEFORE staging: anything landing after is visible
-      val tomb = loadTombstones(spark, dir)
-      spark.read.parquet(s"$dir/lists")
-        .select(col("vec_id"), col("embedding"))
-        .join(tomb, Seq("vec_id"), "left_anti")
-        .dropDuplicates("vec_id") // crash-overlap copies fold (scaladoc on purge)
-        .write.mode("overwrite").parquet(src.toString)
-    }
-    // a crash between `delete(src)` and `rename(srcNext, src)` in the
-    // union path below leaves only the complete next-snapshot: adopt it
-    if (!fs.exists(new Path(src, "_SUCCESS")) &&
-        fs.exists(new Path(srcNext, "_SUCCESS"))) {
-      fs.delete(src, true)
-      require(fs.rename(srcNext, src), s"adopting $srcNext as $src failed")
-    }
-    fs.delete(srcNext, true)
-    val marksNow = commitMarks()
-    if (!fs.exists(new Path(src, "_SUCCESS"))) restageFresh(marksNow)
-    else readMarks() match {
-      case Some(staged) if staged.sameElements(marksNow) => () // intact recovery source
-      case stagedOpt =>
-        // commits landed after staging (or a legacy fingerprint-less
-        // snapshot whose gap is unknowable): the snapshot alone is stale
-        if (fs.exists(new Path(root, "lists/_SUCCESS"))) restageFresh(marksNow)
-        else {
-          val staged = stagedOpt.getOrElse(
-            throw new IllegalStateException(
-              s"legacy .rebuild-src under $dir with torn lists: cannot prove " +
-                "freshness — delete the snapshot after reconciling by hand"))
-          val news = marksNow.filterNot(staged.contains)
-          require(news.forall(_.startsWith("b")),
-            s"purge marker(s) ${news.filterNot(_.startsWith("b")).mkString(",")} " +
-              s"landed during a torn rebuild of $dir — reconcile by hand")
-          // marker-committed batches are complete files in lists/ even
-          // though the dir as a whole is torn
-          val newFiles = news.flatMap { mark =>
-            val listsRoot = new Path(root, "lists")
-            (if (fs.exists(listsRoot)) fs.listStatus(listsRoot) else Array.empty[org.apache.hadoop.fs.FileStatus])
-              .filter(_.isDirectory).flatMap(cell =>
-                fs.listStatus(cell.getPath).filter(f => f.isFile &&
-                  f.getPath.getName.startsWith(s"$mark-") &&
-                  f.getPath.getName.endsWith(".parquet")).map(_.getPath.toString))
-          }
-          val base = spark.read.parquet(src.toString)
-          val unioned = if (newFiles.isEmpty) base
-            else base.unionByName(
-              spark.read.schema(base.schema)
-                .parquet(newFiles.toIndexedSeq: _*)
-                .select(col("vec_id"), col("embedding")))
-          unioned.dropDuplicates("vec_id")
-            .write.mode("overwrite").parquet(srcNext.toString)
-          fs.delete(src, true)
-          require(fs.rename(srcNext, src), s"rename $srcNext -> $src failed")
-          writeMarks(marksNow) // LAST: a crash before this re-unions (idempotent)
-        }
-    }
-    // tombstones that landed AFTER staging still need excluding, and only
-    // the files excluded here may retire after the save
-    val tombSnapshot = tombFiles(fs, new Path(root, TombDir)).map(_.getPath)
-    // reads src + _tombstones only — save() rewrites lists/centroids,
-    // neither of which this plan touches, so no checkpoint is needed
-    val live = spark.read.parquet(src.toString)
-      .join(loadTombstones(spark, dir), Seq("vec_id"), "left_anti")
+    val base = trainedVersion(spark, dir)
+    val live = listsOf(spark, dir, base).select("vec_id", "embedding")
+      .join(tombsOf(spark, dir, base), Seq("vec_id"), "left_anti")
     val n = live.count()
     require(n > 0, "rebuild over an empty (or fully-tombstoned) index")
-    // loud abort on a LIVE append racing this rebuild (out of contract):
-    // failing here, before lists/ is touched, loses nothing
-    require(commitMarks().sameElements(marksNow),
-      s"_ann_commits changed during rebuild of $dir — single-writer violated")
-    save(spark, live, dir, nlist, m, codes, seed, maxTrain)
-    // the recovery source retires IMMEDIATELY (the old stale window);
-    // a crash past here re-runs as a fresh restage from complete lists
-    fs.delete(src, true)
-    fs.delete(marksFile, false)
-    tombSnapshot.foreach(p => fs.delete(p, false))
+    val (centroids, geom) = stageGeometry(spark, live, dir, base.v + 1,
+      nlist, m, codes, seed, maxTrain)
+    val lists = stageLists(spark, dir, live, centroids, geom.v)
+    val now = StoreManifest.currentVersion(spark, dir)
+    if (now != base.v) throw new IllegalStateException(
+      s"ANN store $dir moved from version ${base.v} to $now during its " +
+        "rebuild — single writer violated; nothing committed")
+    commit(spark, dir, geom.copy(hw = base.hw, lists = lists))
     n
   }
 
   /** Incrementally add vectors: assign against the PERSISTED centroids
     * (no retrain — the index geometry is frozen at build time, exactly
-    * the production contract) and append files to the assigned cells.
+    * the production contract) and add files to the assigned cells.
     */
-  def append(spark: SparkSession, newVectors: DataFrame, dir: String): Unit =
-    writeLists(newVectors, loadCentroids(spark, dir), dir, overwrite = false)
+  def append(spark: SparkSession, newVectors: DataFrame, dir: String): Unit = {
+    val cur = trainedVersion(spark, dir)
+    appendTo(spark, dir, cur, newVectors, cur.hw)
+  }
 
   /** Idempotent batch append — the streaming-maintenance building block
-    * (AnnIndexSink): replaying the same `batchId` with the same rows
-    * (foreachBatch's at-least-once contract over a replayable source)
-    * leaves the index content unchanged.
-    *
-    *   1. a committed-batch marker short-circuits full replays;
-    *   2. the batch stages into a scratch dir OUTSIDE `lists/` (readers
-    *      scan only `lists/`, so a crash mid-stage leaves invisible
-    *      orphans);
-    *   3. staged files move in under DETERMINISTIC names
-    *      (`b<batchId>-<i>.parquet` per cell, i in staged-name order) —
-    *      a replay after a crash mid-move overwrites the same targets
-    *      with the same content instead of duplicating rows;
-    *   4. the marker commits LAST.
+    * ([[graft.streaming.AnnIndexSink]], IngestPipeline's ANN arm): the
+    * batch commits together with `hw = batchId`, and a batch at or below
+    * the committed `hw` returns at once, so replaying a trigger
+    * (foreachBatch's at-least-once contract) leaves the index
+    * unchanged. Sound because a feeder's batch ids only grow. A crash
+    * before the commit leaves orphans the replay never reads.
     */
   def appendBatch(spark: SparkSession, newVectors: DataFrame, dir: String,
                   batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, s"_ann_commits/b$batchId")
-    if (fs.exists(marker)) return // exact replay of a committed batch
-    val tmp = new Path(root, s".append-tmp-b$batchId")
-    fs.delete(tmp, true) // half-staged leftovers from a crashed attempt
-    writeListsTo(newVectors, loadCentroids(spark, dir), tmp.toString,
-      overwrite = true)
-    val listsRoot = new Path(root, "lists")
-    fs.listStatus(tmp).filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("list_id=")).foreach { cell =>
-      val dst = new Path(listsRoot, cell.getPath.getName)
-      fs.mkdirs(dst)
-      fs.listStatus(cell.getPath)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName).zipWithIndex.foreach { case (f, i) =>
-          val to = new Path(dst, s"b$batchId-$i.parquet")
-          fs.delete(to, false) // replay overwrite, not duplicate
-          require(fs.rename(f.getPath, to), s"rename ${f.getPath} -> $to failed")
-        }
-    }
-    fs.delete(tmp, true)
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close() // THE commit point for this batch
+    val cur = trainedVersion(spark, dir)
+    if (batchId <= cur.hw) return // replay of an applied batch
+    appendTo(spark, dir, cur, newVectors, batchId)
+  }
+
+  /** Record `batchId` as applied without vectors — what a feeder commits
+    * for a batch that carries none (the store may not be trained yet).
+    */
+  def markApplied(spark: SparkSession, dir: String, batchId: Long): Unit = {
+    val cur = current(spark, dir)
+    if (batchId > cur.hw) commit(spark, dir, cur.copy(v = cur.v + 1, hw = batchId))
+  }
+
+  /** The highest batch id the store has applied; -1 if none. */
+  def highWater(spark: SparkSession, dir: String): Long = current(spark, dir).hw
+
+  private def appendTo(spark: SparkSession, dir: String, cur: Version,
+                       vectors: DataFrame, hw: Long): Unit = {
+    val next = cur.v + 1
+    val moved = stageLists(spark, dir, vectors, loadCentroids(spark, dir, cur), next)
+    commit(spark, dir, cur.copy(v = next, hw = hw, lists = cur.lists ++ moved))
   }
 
   /** Erase vectors from the index — the ANN half of the derived-store
     * erasure story (VERDICT r10 gap #1; [[InvertedIndex.delete]] is the
     * full-text half). Logical delete, physical drop at [[purgeDeletes]]:
-    * the ids land as ONE parquet file under `_tombstones/`, staged
-    * outside it and committed by a single atomic file rename (this
-    * store's commit primitive — it has deterministic names + markers,
-    * not a manifest), and [[searchTopK]] anti-joins candidates against
-    * the accumulated tombstones, so an erased vector is unreturnable
-    * the instant its rename lands. Ids already tombstoned (a replay) or
+    * the ids land as ONE tombstone file the new version names with its
+    * row count, and [[searchTopK]] anti-joins candidates against the
+    * version's tombstones, so an erased vector is unreturnable the
+    * instant the version commits. Ids already tombstoned (a replay) or
     * never indexed are dropped before the write — a no-op delete
     * commits nothing. Returns the count of newly tombstoned ids.
     *
@@ -314,35 +250,23 @@ object AnnIndexStore {
     * would mask it, and the purge would erase it) — purge first.
     */
   def delete(spark: SparkSession, dir: String, vecIds: DataFrame): Long = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cur = current(spark, dir)
     // membership semi-join (a vec_id-column-pruned scan): ids never
     // indexed are dropped, matching the documented contract and
     // InvertedIndex.delete — without it an erasure request racing ahead
     // of the ingest pipeline would tombstone the id and silently mask
     // the vector when it later arrives (review r11)
     val ids = vecIds.select(col("vec_id").cast("long").as("vec_id")).distinct()
-      .join(spark.read.parquet(s"$dir/lists").select("vec_id"),
-        Seq("vec_id"), "left_semi")
-    val existing = loadTombstones(spark, dir)
-    val newly = ids.join(existing, Seq("vec_id"), "left_anti").localCheckpoint()
+      .join(listsOf(spark, dir, cur).select("vec_id"), Seq("vec_id"), "left_semi")
+    val newly = ids.join(tombsOf(spark, dir, cur), Seq("vec_id"), "left_anti")
+      .localCheckpoint()
     val n = newly.count()
     if (n == 0L) return 0L
-    val tmp = new Path(root, ".tomb-tmp") // single-writer: fixed stage name
-    fs.delete(tmp, true) // a torn earlier attempt restages cleanly
-    newly.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val tombDir = new Path(root, TombDir)
-    fs.mkdirs(tombDir)
-    val taken = tombFiles(fs, tombDir).map(_.getPath.getName).toSet
-    val name = Iterator.from(0).map(i => s"t$i.parquet").filterNot(taken).next()
-    val part = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    require(part.length == 1, s"expected 1 staged tombstone file, got ${part.length}")
-    // THE commit point for this delete batch
-    require(fs.rename(part.head.getPath, new Path(tombDir, name)),
-      s"tombstone commit ${part.head.getPath} -> $tombDir/$name failed")
-    fs.delete(tmp, true)
+    val next = cur.v + 1
+    val staged = StoreManifest.stageInto(spark, new Path(dir), newly.coalesce(1),
+      TombDir, next)
+    require(staged.length == 1, s"expected 1 staged tombstone file, got ${staged.length}")
+    commit(spark, dir, cur.copy(v = next, tombs = cur.tombs :+ (staged.head -> n)))
     n
   }
 
@@ -352,188 +276,145 @@ object AnnIndexStore {
     delete(spark, dir, vecIds.toDF("vec_id"))
   }
 
-  val TombDir = "_tombstones"
-
-  private def tombFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        tombDir: org.apache.hadoop.fs.Path) =
-    (if (fs.exists(tombDir)) fs.listStatus(tombDir) else Array.empty[org.apache.hadoop.fs.FileStatus])
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-
-  /** Whether any delete has committed (and not yet purged) — a
-    * driver-side listing, used to keep tomb-less search plans identical
-    * to pre-delete ones.
+  /** Whether any delete has committed (and not yet purged) — a manifest
+    * read.
     */
-  def hasTombstones(spark: SparkSession, dir: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val tombDir = new Path(new Path(dir), TombDir)
-    val fs = tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    tombFiles(fs, tombDir).nonEmpty
-  }
+  def hasTombstones(spark: SparkSession, dir: String): Boolean =
+    current(spark, dir).tombs.nonEmpty
 
-  /** Total accumulated tombstoned ids, summed from the tombstone
-    * files' parquet FOOTERS driver-side — no Spark job. Exact because
-    * [[delete]] writes only newly-tombstoned ids (anti-joined against
-    * the existing set), so the files are disjoint. This is what lets a
-    * per-trigger maxTombstones check ([[graft.streaming.AnnIndexSink]])
-    * stay O(files) metadata reads instead of launching a cluster count
-    * on every micro-batch (ADVICE r11).
+  /** Total tombstoned ids, summed from the manifest's per-file row
+    * counts — no Spark job. Exact because [[delete]] writes only
+    * newly-tombstoned ids, so the files are disjoint. This is what lets
+    * a per-trigger maxTombstones check ([[graft.streaming.AnnIndexSink]])
+    * stay a metadata read instead of a cluster count on every
+    * micro-batch (ADVICE r11).
     */
-  def tombstoneCount(spark: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val tombDir = new Path(new Path(dir), TombDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = tombDir.getFileSystem(conf)
-    tombFiles(fs, tombDir).map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+  def tombstoneCount(spark: SparkSession, dir: String): Long =
+    current(spark, dir).tombs.map(_._2).sum
 
-  /** nlist, read from the centroids files' parquet FOOTERS driver-side
-    * — no Spark job. searchTopK's nprobe=0 path resolves the autoConfig
-    * ratio on every invocation, and s_sim_ann_store is a graded bench
-    * query: a per-call `centroidsDf.count()` was a whole extra job of
-    * serving overhead for one small integer (ADVICE r16).
+  /** nlist, from the manifest — no Spark job. searchTopK's nprobe=0
+    * path resolves the autoConfig ratio on every invocation, and
+    * s_sim_ann_store is a graded bench query: a per-call count was a
+    * whole extra job of serving overhead for one small integer
+    * (ADVICE r16).
     */
-  def centroidCount(spark: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val cDir = new Path(new Path(dir), "centroids")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = cDir.getFileSystem(conf)
-    fs.listStatus(cDir)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-  }
+  def centroidCount(spark: SparkSession, dir: String): Long =
+    trainedVersion(spark, dir).nlist.toLong
 
-  /** Accumulated tombstoned vec_ids (empty frame if none). */
-  def loadTombstones(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val tombDir = new Path(new Path(dir), TombDir)
-    val fs = tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = tombFiles(fs, tombDir)
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("vec_id BIGINT"))
+  /** The current version's tombstoned vec_ids (empty frame if none). */
+  def loadTombstones(spark: SparkSession, dir: String): DataFrame =
+    tombsOf(spark, dir, current(spark, dir))
+
+  private def tombsOf(spark: SparkSession, dir: String, ver: Version): DataFrame =
+    if (ver.tombs.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType.fromDDL("vec_id BIGINT"))
     else spark.read.schema("vec_id BIGINT")
-      .parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
-      .select("vec_id")
+      .parquet(ver.tombs.map(t => s"$dir/${t._1}"): _*)
+
+  /** The current version's inverted lists, (vec_id, embedding, nrm,
+    * list_id), tombstoned rows included — the ONE read of list data:
+    * files come from the manifest and `list_id` stays a partition
+    * column, so a filter on it prunes files as a PartitionFilter. A dir
+    * with no committed version is not an ANN store and throws.
+    */
+  def readLists(spark: SparkSession, dir: String): DataFrame = {
+    val cur = current(spark, dir)
+    require(cur.v >= 0, s"no ANN store under $dir (no manifest)")
+    listsOf(spark, dir, cur)
   }
 
-  /** Physically drop tombstoned vectors from `lists/` and retire the
-    * tombstones — the bytes-are-gone step of erasure (compact's role in
-    * the inverted index). Only the AFFECTED cells rewrite (found via a
-    * vec_id-column semi-join — a column-pruned scan, no vector data
-    * read): their surviving rows rewrite in ONE partitionBy job staged
-    * outside `lists/`, move in under purge-generation-deterministic
-    * names (`p<g>-<i>.parquet`), superseded files delete per cell, and
-    * the snapshot tombstone files drop LAST — so a crash at any point
-    * leaves the tombstones in place and a replay re-runs to the same
-    * content (rows are deduped by vec_id on rewrite, and [[searchTopK]]
-    * dedups candidates, so the transient add-before-delete overlap
-    * inside one cell is invisible). Returns vectors physically erased.
+  private def listsOf(spark: SparkSession, dir: String, ver: Version): DataFrame = {
+    val schema = ver.schema.getOrElse(StructType.fromDDL(
+      "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, list_id INT"))
+    if (ver.lists.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.option("basePath", dir).schema(schema)
+      .parquet(ver.lists.map(f => s"$dir/$f"): _*)
+  }
+
+  /** The cell of a list file (`list_id=<n>/…`). */
+  private def cellOf(listFile: String): Int =
+    listFile.takeWhile(_ != '/').stripPrefix("list_id=").toInt
+
+  /** Physically drop tombstoned vectors and retire the tombstones — the
+    * bytes-are-gone step of erasure (compact's role in the inverted
+    * index). Only the AFFECTED cells rewrite (found via a vec_id-column
+    * semi-join — a column-pruned scan, no vector data read): their
+    * surviving rows stage in ONE partitionBy job, and the new version
+    * names them in place of the cells' old files, with no tombstones.
+    * The superseded bytes stay readable through older manifests until
+    * [[vacuum]] expires them. Returns vectors physically erased.
     */
   def purgeDeletes(spark: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombDir = new Path(root, TombDir)
-    val snapshot = tombFiles(fs, tombDir).map(_.getPath).toIndexedSeq
-    if (snapshot.isEmpty) return 0L
-    val tomb = spark.read.schema("vec_id BIGINT")
-      .parquet(snapshot.map(_.toString): _*).select("vec_id")
-    val lists = spark.read.parquet(s"$dir/lists")
+    val cur = current(spark, dir)
+    if (cur.tombs.isEmpty) return 0L
+    val tomb = tombsOf(spark, dir, cur)
+    val lists = listsOf(spark, dir, cur)
     val affected = lists.join(tomb, Seq("vec_id"), "left_semi")
-      .select("list_id").distinct().collect().map(_.getInt(0)).toIndexedSeq
-    val purged = if (affected.isEmpty) 0L else {
-      val n = lists.filter(col("list_id").isin(affected: _*))
-        .join(tomb, Seq("vec_id"), "left_semi").count()
-      // purge generation: deterministic target names so a replay after a
-      // crash overwrites the same files with the same rows
-      val commits = new Path(root, "_ann_commits")
-      val g = (if (fs.exists(commits)) fs.listStatus(commits) else Array.empty[org.apache.hadoop.fs.FileStatus])
-        .map(_.getPath.getName).collect { case s if s.startsWith("p") => s.drop(1).toLong }
-        .foldLeft(-1L)(math.max) + 1
-      val tmp = new Path(root, ".purge-tmp")
-      fs.delete(tmp, true)
-      lists.filter(col("list_id").isin(affected: _*))
-        .join(tomb, Seq("vec_id"), "left_anti")
-        .dropDuplicates("vec_id") // replays of a crashed purge converge
-        .repartition(col("list_id"))
-        .write.partitionBy("list_id").mode("overwrite").parquet(tmp.toString)
-      val listsRoot = new Path(root, "lists")
-      affected.foreach { cell =>
-        val dst = new Path(listsRoot, s"list_id=$cell")
-        val src = new Path(tmp, s"list_id=$cell")
-        val fresh = if (!fs.exists(src)) Seq.empty[String] // cell fully erased
-        else fs.listStatus(src)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName).zipWithIndex.map { case (f, i) =>
-            val to = new Path(dst, s"p$g-$i.parquet")
-            fs.delete(to, false) // replay overwrite, not duplicate
-            require(fs.rename(f.getPath, to), s"rename ${f.getPath} -> $to failed")
-            to.getName
-          }.toSeq
-        // superseded originals go only AFTER their replacement is in
-        // place; the brief both-visible overlap dedups away (scaladoc)
-        fs.listStatus(dst)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet") &&
-            !fresh.contains(f.getPath.getName))
-          .foreach(f => fs.delete(f.getPath, false))
+      .select("list_id").distinct().collect().map(_.getInt(0)).toSet
+    val next = cur.v + 1
+    val (purged, kept) =
+      if (affected.isEmpty) (0L, cur.lists)
+      else {
+        val hit = lists.filter(col("list_id").isin(affected.toSeq: _*))
+        val n = hit.join(tomb, Seq("vec_id"), "left_semi").count()
+        val moved = StoreManifest.stageAndMove(spark, new Path(dir),
+          hit.join(tomb, Seq("vec_id"), "left_anti").repartition(col("list_id")),
+          "list_id", Some(affected.map(_.toString)), next)
+        (n, cur.lists.filterNot(f => affected(cellOf(f))) ++ moved)
       }
-      fs.delete(tmp, true)
-      fs.mkdirs(commits)
-      fs.create(new Path(commits, s"p$g"), true).close()
-      n
-    }
-    // tombstones retire LAST (only the snapshot — not batches raced in
-    // by a later delete): until here every read still filters them, so
-    // any crash above replays to the same end state
-    snapshot.foreach(p => fs.delete(p, false))
+    commit(spark, dir, cur.copy(v = next, lists = kept, tombs = Nil))
     purged
   }
 
+  /** Expire manifests past the newest `retain` versions and delete every
+    * data file no surviving version names (crashed writes' orphans,
+    * purged and rebuilt-away bytes); returns files deleted. Through
+    * [[StoreManifest.vacuumFiles]], like the other file stores.
+    */
+  def vacuum(spark: SparkSession, dir: String, retain: Int = 2): Long =
+    StoreManifest.vacuumFiles(spark, dir, retain, versionOf(spark, dir, _).files,
+      n => n.startsWith("list_id=") || n == "centroids" || n == "codebooks" ||
+        n == TombDir)
+
   /** Persisted PQ sub-codebooks as codebooks(subspace)(code) = centroid. */
   def loadCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$dir/codebooks")
+    val rows = spark.read.schema("subspace INT, code INT, c ARRAY<DOUBLE>")
+      .parquet(trainedVersion(spark, dir).codebooks.map(f => s"$dir/$f"): _*)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, bs) =>
       bs.sortBy(_._2).map(_._3)
     }.toArray
   }
 
-  /** The nlist centroids in list_id order. An explicit schema spares
-    * the schema-inference job, and the collected nlist rows sort
-    * locally in place of a distributed orderBy.
+  /** The nlist centroids in list_id order. The collected nlist rows
+    * sort locally in place of a distributed orderBy.
     */
-  private def loadCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    spark.read.schema("list_id INT, c ARRAY<DOUBLE>").parquet(s"$dir/centroids")
+  private def loadCentroids(spark: SparkSession, dir: String,
+                            ver: Version): Array[Array[Double]] =
+    spark.read.schema("list_id INT, c ARRAY<DOUBLE>")
+      .parquet(ver.centroids.map(f => s"$dir/$f"): _*)
       .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
-  private def writeLists(vectors: DataFrame, centroids: Array[Array[Double]],
-                         dir: String, overwrite: Boolean): Unit =
-    writeListsTo(vectors, centroids, s"$dir/lists", overwrite)
-
-  private def writeListsTo(vectors: DataFrame, centroids: Array[Array[Double]],
-                           listsDir: String, overwrite: Boolean): Unit = {
+  /** Assign `vectors` to their cells and stage them as version `next`'s
+    * list files; returns the staged files.
+    */
+  private def stageLists(spark: SparkSession, dir: String, vectors: DataFrame,
+                         centroids: Array[Array[Double]], next: Long): Seq[String] = {
     val assigned = AnnIvf.assign(vectors, centroids)
-    vectors.select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", sqrt(expr("graft_dot(embedding, embedding)")))
-      .join(assigned, "vec_id")
-      // one exchange keyed on list_id so each list lands in ONE task →
-      // one file per list dir, instead of (#input partitions) tiny files
-      // per dir from a raw partitionBy write (write amplification was the
-      // bulk of s_sim_ann_store's cost); at larger-than-task-size lists
-      // add a bucketing key here to split, the read path is unchanged
-      .repartition(col("list_id"))
-      .write.partitionBy("list_id")
-      .mode(if (overwrite) "overwrite" else "append")
-      .parquet(listsDir)
+    StoreManifest.stageAndMove(spark, new Path(dir),
+      vectors.select(col("vec_id"), col("embedding"))
+        .withColumn("nrm", sqrt(expr("graft_dot(embedding, embedding)")))
+        .join(assigned, "vec_id")
+        // one exchange keyed on list_id so each list lands in ONE task →
+        // one file per list dir, instead of (#input partitions) tiny
+        // files per dir from a raw partitionBy write (write
+        // amplification was the bulk of s_sim_ann_store's cost); at
+        // larger-than-task-size lists add a bucketing key here to
+        // split, the read path is unchanged
+        .repartition(col("list_id")),
+      "list_id", None, next)
   }
 
   /** Top-k cosine search over the persisted index: rank cells against
@@ -563,11 +444,12 @@ object AnnIndexStore {
   def searchTopK(spark: SparkSession, dir: String, probes: DataFrame,
                  k: Int = 5, nprobe: Int = 6): DataFrame = {
     graft.functions.VectorFunctions.register(spark)
-    val centroidsDf = spark.read.parquet(s"$dir/centroids")
+    val cur = trainedVersion(spark, dir)
+    val centroidsDf = spark.read.schema("list_id INT, c ARRAY<DOUBLE>, c_normsq DOUBLE")
+      .parquet(cur.centroids.map(f => s"$dir/$f"): _*)
     val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
       .withColumn("pn", sqrt(expr("graft_dot(pv, pv)")))
-    val np = if (nprobe > 0) nprobe
-      else math.max(1, centroidCount(spark, dir).toInt / 4)
+    val np = if (nprobe > 0) nprobe else math.max(1, cur.nlist / 4)
     val wLists = Window.partitionBy("probe_id").orderBy(col("dist2"), col("list_id"))
     val probeLists = p.crossJoin(broadcast(centroidsDf))
       .withColumn("dist2",
@@ -576,25 +458,24 @@ object AnnIndexStore {
       .withColumn("lr", row_number().over(wLists))
       .filter(col("lr") <= np)
       .select("probe_id", "pv", "pn", "list_id")
-    // static cell pruning: the probed cell ids collect to a tiny set and
-    // push into the scan as PartitionFilters — only those directories
-    // are read (the searched fraction IS the I/O fraction)
+    // static cell pruning: the probed cell ids collect to a tiny set;
+    // only those cells' manifest files reach the scan, and the filter
+    // pushes into it as PartitionFilters (the searched fraction IS the
+    // I/O fraction)
     val needed = probeLists.select("list_id").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val pruned = spark.read.parquet(s"$dir/lists")
+    val pruned = listsOf(spark, dir,
+        cur.copy(lists = cur.lists.filter(f => needed.contains(cellOf(f)))))
       .filter(col("list_id").isin(needed: _*))
     // erased vectors are unreturnable from the moment their delete
-    // commits; plan unchanged for stores with no tombstones (a
-    // driver-side file-listing check, no Spark job)
-    val lists = if (!hasTombstones(spark, dir)) pruned
-      else pruned.join(broadcast(loadTombstones(spark, dir)),
-        Seq("vec_id"), "left_anti")
+    // commits; plan unchanged for stores with no tombstones
+    val lists = if (cur.tombs.isEmpty) pruned
+      else pruned.join(broadcast(tombsOf(spark, dir, cur)), Seq("vec_id"), "left_anti")
     val wTop = Window.partitionBy("probe_id").orderBy(col("sim").desc, col("neighbor_id"))
     broadcast(probeLists).join(lists, Seq("list_id"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         round(expr("graft_dot(pv, embedding)") / (col("pn") * col("nrm")), 6).as("sim"))
-      .dropDuplicates("probe_id", "neighbor_id")
       .withColumn("rn", row_number().over(wTop).cast("long"))
       .filter(col("rn") <= k)
       .orderBy("probe_id", "rn")

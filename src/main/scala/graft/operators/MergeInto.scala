@@ -188,32 +188,8 @@ object MergeInto {
     * one-step time travel. Single-writer, like the merge itself.
     */
   def vacuum(spark: org.apache.spark.sql.SparkSession, dir: String,
-             retain: Int = 2): Long = {
-    import org.apache.hadoop.fs.Path
-    require(retain >= 1, s"must retain at least the current version, got $retain")
-    val root = new Path(dir)
-    val fs = hfs(spark, root)
-    if (StoreManifest.currentVersion(spark, dir) < 0) return 0L
-    val keep = StoreManifest.expire(spark, dir, retain)
-    val referenced: Set[String] =
-      keep.flatMap(v => readManifest(spark, dir, v)._2).toSet
-    var deleted = 0L
-    // sweep stray merge scratch dirs, then unreferenced data files
-    fs.listStatus(root).filter(_.getPath.getName.startsWith(".merge-tmp"))
-      .foreach(p => fs.delete(p.getPath, true))
-    fs.listStatus(root)
-      .filter(p => p.isDirectory && p.getPath.getName.contains("="))
-      .foreach { pd =>
-        fs.listStatus(pd.getPath).filter(_.isFile).foreach { f =>
-          val rel = s"${pd.getPath.getName}/${f.getPath.getName}"
-          if (!referenced.contains(rel)) {
-            fs.delete(f.getPath, false); deleted += 1
-          }
-        }
-        if (fs.listStatus(pd.getPath).isEmpty) fs.delete(pd.getPath, true)
-      }
-    deleted
-  }
+             retain: Int = 2): Long =
+    StoreManifest.vacuumFiles(spark, dir, retain, readManifest(spark, dir, _)._2)
 
   /** Partition-scoped copy-on-write MERGE against a parquet snapshot —
     * the file-level form of [[merge]], now with the Delta/Iceberg-style

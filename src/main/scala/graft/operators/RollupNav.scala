@@ -247,29 +247,8 @@ object RollupNav {
     * included); returns files deleted. retain ≥ 2 keeps the previous
     * version readable for in-flight readers.
     */
-  def vacuum(spark: SparkSession, dir: String, retain: Int = 2): Long = {
-    if (StoreManifest.currentVersion(spark, dir) < 0) return 0L
-    val keep = StoreManifest.expire(spark, dir, retain)
-    val referenced = keep.flatMap(v => readManifest(spark, dir, v)._2).toSet
-    val root = new java.io.File(dir)
-    // sweep crashed staging dirs, then unreferenced data files
-    Option(root.listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith(".merge-tmp"))
-      .foreach(f => graft.Fs.rmTree(f.toString))
-    var deleted = 0L
-    Option(root.listFiles()).toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("day="))
-      .foreach { d =>
-        Option(d.listFiles()).toSeq.flatten.filter(_.isFile).foreach { f =>
-          val rel = s"${d.getName}/${f.getName}"
-          if (!referenced.contains(rel)) {
-            java.nio.file.Files.deleteIfExists(f.toPath); deleted += 1
-          }
-        }
-        if (Option(d.listFiles()).exists(_.isEmpty)) graft.Fs.rmTree(d.toString)
-      }
-    deleted
-  }
+  def vacuum(spark: SparkSession, dir: String, retain: Int = 2): Long =
+    StoreManifest.vacuumFiles(spark, dir, retain, readManifest(spark, dir, _)._2)
 
   /** Route a (groupDims, grain) aggregate to the rollup. Returns None
     * when the rollup cannot answer it (dims outside the cube or a grain

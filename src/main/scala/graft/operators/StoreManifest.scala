@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE commit primitive every versioned store publishes through —
   * the Delta/Iceberg-style pointer protocol [[MergeInto]] proved out,
-  * extracted so the full-text index ([[InvertedIndex]]) and the rollup
-  * cube ([[RollupNav]]) commit the same way instead of via direct
+  * extracted so the full-text index ([[InvertedIndex]]), the rollup
+  * cube ([[RollupNav]]), the dedup store ([[DedupStore]]) and the ANN
+  * store ([[AnnIndexStore]]) commit the same way instead of via direct
   * directory renames (ADVICE r9: two sequential renames let a
   * concurrent reader transiently see a day missing; a plain
   * `Files.move` silently degrades to copy+delete on filesystems where
@@ -144,31 +145,82 @@ object StoreManifest {
                    partitionCol: String, values: Option[Set[String]],
                    next: Long): Seq[String] = {
     val fs = hfs(spark, root)
-    val tmp = new Path(root, s".merge-tmp-${java.util.UUID.randomUUID()}")
+    val tmp = scratch(root)
     df.write.partitionBy(partitionCol).mode("overwrite").parquet(tmp.toString)
-    val moved = Seq.newBuilder[String]
     // values = None moves every staged partition (bulk backfill: the
     // caller need not pre-collect the touched values — the ONE staged
     // write already enumerated them)
     val dirs = values.map(_.map(v => s"$partitionCol=${esc(v)}"))
       .getOrElse(fs.listStatus(tmp).map(_.getPath.getName)
         .filter(_.startsWith(s"$partitionCol=")).toSet)
-    dirs.foreach { d =>
-      val dstDir = new Path(root, d)
-      val srcDir = new Path(tmp, d)
-      if (fs.exists(srcDir)) {
-        fs.mkdirs(dstDir)
-        fs.listStatus(srcDir)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .foreach { f =>
-            val name = s"v$next-${f.getPath.getName}"
-            val to = new Path(dstDir, name)
-            require(fs.rename(f.getPath, to), s"rename ${f.getPath} -> $to failed")
-            moved += s"${dstDir.getName}/$name"
-          }
-      }
-    }
+    val moved = dirs.toSeq.flatMap(d =>
+      moveStaged(fs, new Path(tmp, d), new Path(root, d), next))
     fs.delete(tmp, true)
-    moved.result()
+    moved
+  }
+
+  /** [[stageAndMove]] for an unpartitioned frame: its data files move
+    * into `root/sub` under version-prefixed names (a store's small
+    * side files — the ANN store's centroids, codebooks, tombstones).
+    */
+  def stageInto(spark: SparkSession, root: Path, df: DataFrame, sub: String,
+                next: Long): Seq[String] = {
+    val fs = hfs(spark, root)
+    val tmp = scratch(root)
+    df.write.mode("overwrite").parquet(tmp.toString)
+    val moved = moveStaged(fs, tmp, new Path(root, sub), next)
+    fs.delete(tmp, true)
+    moved
+  }
+
+  private def scratch(root: Path): Path =
+    new Path(root, s".merge-tmp-${java.util.UUID.randomUUID()}")
+
+  /** Move `from`'s parquet files into `to` as `v<next>-<name>`; returns
+    * their paths relative to `to`'s parent.
+    */
+  private def moveStaged(fs: org.apache.hadoop.fs.FileSystem, from: Path,
+                         to: Path, next: Long): Seq[String] =
+    if (!fs.exists(from)) Nil
+    else {
+      fs.mkdirs(to)
+      fs.listStatus(from)
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        .toSeq.map { f =>
+          val name = s"v$next-${f.getPath.getName}"
+          val dst = new Path(to, name)
+          require(fs.rename(f.getPath, dst), s"rename ${f.getPath} -> $dst failed")
+          s"${to.getName}/$name"
+        }
+    }
+
+  /** The vacuum of every store whose manifests name data files one dir
+    * below the root: expire manifests past the newest `retain`, remove
+    * crashed staging dirs (`.merge-tmp*`), delete each file in a data
+    * dir (`isData`, by default every `col=value` dir) that no surviving
+    * version's `files` names, and drop data dirs left empty. Returns
+    * data files deleted. Single-writer, like every store write.
+    */
+  def vacuumFiles(spark: SparkSession, dir: String, retain: Int,
+                  files: Long => Seq[String],
+                  isData: String => Boolean = _.contains("=")): Long = {
+    require(retain >= 1, s"must retain at least the current version, got $retain")
+    if (currentVersion(spark, dir) < 0) return 0L
+    val root = new Path(dir)
+    val fs = hfs(spark, root)
+    val referenced = expire(spark, dir, retain).flatMap(files).toSet
+    val entries = fs.listStatus(root)
+    entries.filter(_.getPath.getName.startsWith(".merge-tmp"))
+      .foreach(p => fs.delete(p.getPath, true))
+    var deleted = 0L
+    entries.filter(d => d.isDirectory && isData(d.getPath.getName)).foreach { d =>
+      fs.listStatus(d.getPath).filter(_.isFile).foreach { f =>
+        if (!referenced(s"${d.getPath.getName}/${f.getPath.getName}")) {
+          fs.delete(f.getPath, false); deleted += 1
+        }
+      }
+      if (fs.listStatus(d.getPath).isEmpty) fs.delete(d.getPath, true)
+    }
+    deleted
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * single GDPR-window knob the per-store vacuums were missing (VERDICT
   * r12 missing #3): each store already reclaims correctly in isolation
   * ([[MergeInto.vacuum]], [[InvertedIndex.vacuum]], [[RollupNav
-  * .vacuum]], [[DedupStore.vacuum]], [[AnnIndexStore.purgeDeletes]]),
+  * .vacuum]], [[DedupStore.vacuum]], [[AnnIndexStore.vacuum]]),
   * but a deployment wants one driver that sweeps them all under one
   * number and understands the ingest pipeline's derivation floor.
   *
@@ -18,9 +18,9 @@ import org.apache.spark.sql.SparkSession
   * until then — that IS the GDPR audit window, uniformly: erase lands
   * logically at the delete's commit, physically at the sweep that
   * expires the last manifest referencing the bytes. `retain = 1` is
-  * erase-now. The ANN store has batch markers, not manifests — its
-  * window is "until the next sweep": [[AnnIndexStore.purgeDeletes]]
-  * drops tombstoned vectors' bytes here, every sweep.
+  * erase-now. The ANN store's tombstoned vectors leave its current
+  * version at [[AnnIndexStore.purgeDeletes]], which every sweep runs
+  * before that store's vacuum.
   *
   * ==Pipeline floor==
   *
@@ -30,12 +30,11 @@ import org.apache.spark.sql.SparkSession
   * .oldestLagging]]) — expiring those mid-crash would silently drop
   * documents from the derived stores forever (ADVICE r12).
   *
-  * Also swept: each store's crash-scratch dirs (`.merge-tmp-*` inside
-  * the manifest vacuums; the ANN store's `.append-tmp-*` /
-  * `.purge-tmp` / `.tomb-tmp` here). Live operational files (EraseSink
-  * pending tickets, UserErase journals) are NOT swept — they drain
-  * through their own protocols; only their atomic-rename staging
-  * leftovers (`.*.tmp`) are.
+  * Also swept: each store's crash-scratch dirs (`.merge-tmp-*`, inside
+  * the store vacuums). Live operational files (EraseSink pending
+  * tickets, UserErase journals) are NOT swept — they drain through
+  * their own protocols; only their atomic-rename staging leftovers
+  * (`.*.tmp`) are.
   *
   * ==What is recoverable at retain = N (verified by VacuumSpec's
   * restore drill — sweepAll(1) interleaved at every pipeline crash
@@ -54,20 +53,18 @@ import org.apache.spark.sql.SparkSession
   *             | un-consumed ingest version| re-acceptable BY DESIGN)
   *             | (pipeline floor — never   |
   *             | vacuum-able away)         |
-  *   ann       | no versioning: current    | tombstone-masked immediately;
-  *             | lists only                | bytes drop at the NEXT sweep
-  *             |                           | (purgeDeletes runs every sweep)
+  *   ann       | newest N manifests        | same; tombstone-masked at
+  *             |                           | delete, out of the current
+  *             |                           | version at the sweep's purge
   * }}}
   *
   * Corollaries. retain = 1 is erase-NOW: after the first sweep past a
   * delete, no store can produce the erased bytes (the drill asserts
   * unsearchability). retain = N > 1 is an N-manifest audit window per
-  * versioned store — but NOT for the ANN store, whose erase window is
-  * "until the next sweep" regardless of N. The pipeline floor can hold
-  * MORE than N dedup manifests alive while a derived store lags — that
-  * is the crash-safety contract, not a leak (the lagging versions'
-  * catch-up sources must survive); it releases the moment the
-  * catch-ups run. Replay after any crash + sweep interleaving
+  * store. The pipeline floor can hold MORE than N dedup manifests alive
+  * while a derived store lags — that is the crash-safety contract, not
+  * a leak (the lagging versions' catch-up sources must survive); it
+  * releases the moment the catch-ups run. Replay after any crash + sweep interleaving
   * converges every store to the crash-free end state.
   *
   * Single-writer like everything here: run the sweep from the
@@ -105,16 +102,10 @@ object Vacuum {
             spark, d, stores.index, stores.ann)
         else None
       out += "dedup" -> DedupStore.vacuum(spark, d, retainVersions, keepFrom)
-      // batch markers for versions the dedup store no longer retains are
-      // dead weight (annCatchUp reads markers only for retained versions)
-      if (pipeline) stores.ann.foreach(ad =>
-        out += "ann_markers" ->
-          graft.streaming.IngestPipeline.sweepAnnMarkers(spark, d, ad))
     }
     stores.ann.foreach { d =>
       out += "ann_purged" -> AnnIndexStore.purgeDeletes(spark, d)
-      out += "ann_scratch" -> sweepScratch(spark, d,
-        n => n.startsWith(".append-tmp") || n == ".purge-tmp" || n == ".tomb-tmp")
+      out += "ann" -> AnnIndexStore.vacuum(spark, d, retainVersions)
     }
     out += "journal_scratch" -> stores.journalDirs.map(d =>
       sweepScratch(spark, d, n => n.startsWith(".") && n.endsWith(".tmp"))).sum

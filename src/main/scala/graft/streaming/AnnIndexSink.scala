@@ -11,11 +11,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * as UpsertSink: foreachBatch + an idempotent storage commit.
   *
   * Exactly-once EFFECT from at-least-once delivery:
-  * [[AnnIndexStore.appendBatch]] is idempotent per (batchId, rows) —
-  * committed batches short-circuit on a marker, and a crash mid-append
-  * re-moves files onto the SAME deterministic names instead of
-  * duplicating rows — so a replayed trigger leaves the index content
-  * unchanged and search-after-stream ≡ batch append of the same vectors
+  * [[AnnIndexStore.appendBatch]] commits each batch together with its
+  * id as the store's `hw`, and a batch at or below `hw` is skipped; a
+  * crash before that commit leaves only unreferenced files — so a
+  * replayed trigger leaves the index content unchanged and
+  * search-after-stream ≡ batch append of the same vectors
   * (AnnStoreSpec).
   *
   * Scale shape per trigger: assignment is a broadcast-centroid argmin
@@ -34,10 +34,11 @@ object AnnIndexSink {
     * loop (the [[IndexSink]] auto-compact symmetry — there, compaction
     * retires the full-text tombstones as a side effect): once the
     * accumulated [[AnnIndexStore.delete]] tombstones reach the bound,
-    * the trigger runs [[AnnIndexStore.purgeDeletes]] after its append —
-    * safe because the sink is the store's single writer and purge is
-    * replay-convergent, and bounded because the read path's tombstone
-    * anti-join never grows past `maxTombstones` ids.
+    * the trigger runs [[AnnIndexStore.purgeDeletes]] after its append,
+    * then [[AnnIndexStore.vacuum]] — safe because the sink is the
+    * store's single writer and purge is replay-convergent, and bounded
+    * because the read path's tombstone anti-join never grows past
+    * `maxTombstones` ids and superseded list files leave the disk.
     */
   def start(vectors: DataFrame, dir: String, checkpoint: String,
             maxTombstones: Int = 0): StreamingQuery =
@@ -46,12 +47,14 @@ object AnnIndexSink {
         val spark = batch.sparkSession
         if (!batch.isEmpty)
           AnnIndexStore.appendBatch(spark, batch, dir, batchId)
-        // threshold test reads parquet footers driver-side, never a
-        // Spark job — per-trigger overhead must not scale with batch
-        // frequency when far below the bound (ADVICE r11)
+        // threshold test reads the manifest, never a Spark job —
+        // per-trigger overhead must not scale with batch frequency when
+        // far below the bound (ADVICE r11)
         if (maxTombstones > 0 &&
-            AnnIndexStore.tombstoneCount(spark, dir) >= maxTombstones)
+            AnnIndexStore.tombstoneCount(spark, dir) >= maxTombstones) {
           AnnIndexStore.purgeDeletes(spark, dir)
+          AnnIndexStore.vacuum(spark, dir)
+        }
         ()
       }
       .option("checkpointLocation", checkpoint)

@@ -117,7 +117,7 @@ object EraseSink {
                 .unionByName(InvertedIndex.tombstones(spark, d).select("doc_id")), ids))
               .getOrElse(Set.empty[Long])
             val annKnown = annDir.map(d =>
-              knownIn(spark.read.parquet(s"$d/lists").select(col("vec_id").as("doc_id"))
+              knownIn(AnnIndexStore.readLists(spark, d).select(col("vec_id").as("doc_id"))
                 .unionByName(AnnIndexStore.loadTombstones(spark, d)
                   .select(col("vec_id").as("doc_id"))), ids))
               .getOrElse(Set.empty[Long])

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{DedupStore, InvertedIndex, StoreManifest}
+import graft.operators.{AnnIndexStore, DedupStore, InvertedIndex, StoreManifest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -29,9 +29,9 @@ import org.apache.spark.sql.SparkSession
   *
   * The trigger snapshot also reports catch-up LAG as the three
   * high-waters the pipeline's derivations advance (max ingest version
-  * vs the index's dv mark vs the ANN arm's max batch marker) plus
+  * vs the index's dv mark vs the ANN store's `hw`) plus
   * [[IngestPipeline.oldestLagging]], and per-store live-object counts
-  * (retained manifests, doc/seen files, index segments, ANN markers) —
+  * (retained manifests, doc/seen files, index segments, ANN manifests) —
   * the numbers an operator needs to see a stuck derivation or an
   * unbounded store without reading manifests by hand.
   *
@@ -62,7 +62,7 @@ object IngestMetrics {
     val cur = StoreManifest.currentVersion(spark, dedupDir)
     val ingestHw = if (ingestVersions.isEmpty) -1L else ingestVersions.max
     val dvHw = IngestPipeline.dvHighWater(spark, indexDir)
-    val annHw = annDir.fold(-1L)(ad => annMarkerHighWater(spark, ad))
+    val annHw = annDir.fold(-1L)(ad => AnnIndexStore.highWater(spark, ad))
     val lagging = IngestPipeline.oldestLagging(spark, dedupDir,
       Some(indexDir), annDir)
     val (docFiles, seenFiles) =
@@ -70,12 +70,7 @@ object IngestMetrics {
       else (StoreManifest.read(spark, dedupDir, cur, "doc").length.toLong,
         DedupStore.seenFileCount(spark, dedupDir))
     val segments = InvertedIndex.segments(spark, indexDir).length.toLong
-    val annMarkers = annDir.fold(0L)(ad => {
-      val commits = new Path(ad, "_ann_commits")
-      val afs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!afs.exists(commits)) 0L
-      else afs.listStatus(commits).count(_.getPath.getName.startsWith("b")).toLong
-    })
+    val annManifests = annDir.fold(0)(ad => StoreManifest.versions(spark, ad).length)
     writeAtomic(fs, md, s"t$batchId.json",
       s"""{"batch_id":$batchId,"batch_rows":${stats.batchRows},""" +
         s""""accepted":${stats.accepted},""" +
@@ -87,20 +82,7 @@ object IngestMetrics {
         s""""lagging":${lagging.getOrElse(-1L)},""" +
         s""""manifests":${StoreManifest.versions(spark, dedupDir).length},""" +
         s""""doc_files":$docFiles,"seen_files":$seenFiles,""" +
-        s""""index_segments":$segments,"ann_markers":$annMarkers}""")
-  }
-
-  /** Max committed ANN batch marker (the arm's consumption high-water);
-    * -1 when none.
-    */
-  def annMarkerHighWater(spark: SparkSession, annDir: String): Long = {
-    val commits = new Path(annDir, "_ann_commits")
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val BMark = """b(\d+)""".r
-    if (!fs.exists(commits)) -1L
-    else fs.listStatus(commits).map(_.getPath.getName)
-      .collect { case BMark(v) => v.toLong }
-      .foldLeft(-1L)(math.max)
+        s""""index_segments":$segments,"ann_manifests":$annManifests}""")
   }
 
   /** Σ of the version-keyed acceptance records — the exactly-once

@@ -21,14 +21,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * docs would never reach the derived store. Instead each trigger runs
   * a catch-up per store: every retained dedup version carrying the
   * `ingest` manifest tag and no corresponding derived commit (index
-  * segment `dv<version>`; ANN batch marker `b<version>`) appends now,
+  * segment `dv<version>`; ANN store `hw` below the version) appends now,
   * reading exactly the doc files that version added (its `v<version>-`
   * prefixed names). Maintenance versions (delete, compactSeen) carry no
   * tag, so a survivor rewrite can never be re-ingested as new content.
   * Every half is idempotent (dedup appendBatch is content-convergent;
   * index append short-circuits on a committed segment; ANN appendBatch
-  * on its batch marker), so any crash point replays to the same end
-  * state.
+  * on its `hw`), so any crash point replays to the same end state.
   *
   * Ordering constraint: [[DedupStore.vacuum]] must never expire an
   * ingest version a derived store has not committed yet — a retain
@@ -203,10 +202,6 @@ object IngestPipeline {
     * either the old max or both (harmless). A delete-then-rename single
     * file would have a lost-mark crash window, and a lost mark after a
     * compaction folded the dv names would re-index those versions.
-    * Legacy note: an index built before the mark existed adopts at its
-    * next catch-up via the still-live dv names; if such an index was
-    * ALREADY compacted, folded versions are indistinguishable from
-    * unconsumed ones — seed the mark (one `v<N>` file) or rebuild.
     */
   private[streaming] def dvHighWater(spark: SparkSession, indexDir: String): Long = {
     val d = new Path(indexDir, DvHighWater)
@@ -264,32 +259,30 @@ object IngestPipeline {
     appended
   }
 
-  /** ANN-index every retained ingest version the ANN store has not
-    * committed yet (batch marker `b<version>`); returns versions
-    * appended. The FIRST version with any vectors trains the geometry
-    * ([[AnnIndexStore.train]] — centroids commit via parquet's own
-    * `_SUCCESS`, so a torn train re-runs); ALL data, including the
-    * training version's, then flows through the marker-idempotent
-    * [[AnnIndexStore.appendBatch]] keyed by the dedup version. A
-    * version with no vectors (or whose docs were all erased) commits a
-    * bare marker so it stops lagging. Rows with a null `embedding`
-    * land in the other stores but not here.
+  /** ANN-index every retained ingest version above the ANN store's
+    * `hw`; returns versions consumed. The FIRST version with any vectors
+    * trains the geometry ([[AnnIndexStore.train]]); ALL data, including
+    * the training version's, then flows through
+    * [[AnnIndexStore.appendBatch]] keyed by the dedup version, which
+    * commits the vectors and the raised `hw` together. Versions ascend
+    * and none is skipped, so `v <= hw` is exactly "done". A version with
+    * no vectors (or whose docs were all erased) commits an `hw` raise
+    * ([[AnnIndexStore.markApplied]]) so it stops lagging. Rows with a
+    * null `embedding` land in the other stores but not here.
     */
   def annCatchUp(spark: SparkSession, dedupDir: String, annDir: String,
                  nlist: Int = 16): Long = {
     val cur = StoreManifest.currentVersion(spark, dedupDir)
     if (cur < 0) return 0L
-    val fs = new Path(annDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val curDocFiles = StoreManifest.read(spark, dedupDir, cur, "doc").toSet
     val ingestVersions = ingestVersionsOf(spark, dedupDir)
+    val hw = AnnIndexStore.highWater(spark, annDir)
     var appended = 0L
-    for (v <- ingestVersions
-         if !fs.exists(new Path(annDir, s"_ann_commits/b$v"))) {
-      // legacy adoption (ADVICE r13): a version ingested before the ANN
-      // arm was armed may have a pinned schema with NO `embedding`
-      // column — selecting it would throw on EVERY trigger (a crash
-      // loop with no remediation). Such a version is vector-less by
-      // definition: commit its bare marker below like an empty one.
+    for (v <- ingestVersions if v > hw) {
+      // a version ingested before the ANN arm was armed may have a
+      // pinned schema with NO `embedding` column — selecting it would
+      // throw on EVERY trigger (ADVICE r13). Such a version is
+      // vector-less by definition: it only raises `hw` below.
       val hasEmbCol = DedupStore.schemaAt(spark, dedupDir, v).fieldNames.contains("embedding")
       // the version's non-empty vectors, checkpointed (read once: train
       // + append) with the emptiness test a count observed on that job
@@ -301,16 +294,12 @@ object IngestPipeline {
             .select(col("doc_id").as("vec_id"), col("embedding")),
             count(lit(1)).as("n")))
           .collect { case (vs, n) if n.getLong(0) > 0L => vs }
-      if (vecs.isDefined && !AnnIndexStore.trained(spark, annDir))
-        AnnIndexStore.train(spark, vecs.get, annDir, nlist)
-      if (vecs.isDefined && AnnIndexStore.trained(spark, annDir))
-        AnnIndexStore.appendBatch(spark, vecs.get, annDir, v)
-      else {
-        // nothing to index (and nothing to train on): a bare marker —
-        // same commit point appendBatch uses — ends the lag
-        val marker = new Path(annDir, s"_ann_commits/b$v")
-        fs.mkdirs(marker.getParent)
-        fs.create(marker, true).close()
+      vecs match {
+        case Some(vs) =>
+          if (!AnnIndexStore.trained(spark, annDir))
+            AnnIndexStore.train(spark, vs, annDir, nlist)
+          AnnIndexStore.appendBatch(spark, vs, annDir, v)
+        case None => AnnIndexStore.markApplied(spark, annDir, v)
       }
       appended += 1
     }
@@ -338,13 +327,10 @@ object IngestPipeline {
     val have = indexDir.fold(Set.empty[String])(d =>
       InvertedIndex.segments(spark, d).toSet)
     val hw = indexDir.fold(Long.MaxValue)(d => dvHighWater(spark, d))
-    val fs = annDir.map(ad =>
-      new Path(ad).getFileSystem(spark.sparkContext.hadoopConfiguration))
-    StoreManifest.versions(spark, dedupDir)
-      .filter(v => StoreManifest.read(spark, dedupDir, v, "ingest").nonEmpty)
+    val annHw = annDir.fold(Long.MaxValue)(ad => AnnIndexStore.highWater(spark, ad))
+    ingestVersionsOf(spark, dedupDir)
       .find(v => indexDir.exists(_ => v > hw && !have.contains(s"seg=dv$v")) ||
-        annDir.exists(ad =>
-          !fs.get.exists(new Path(ad, s"_ann_commits/b$v"))))
+        v > annHw)
   }
 
   /** Vacuum the dedup store WITHOUT ever expiring a version an
@@ -353,39 +339,13 @@ object IngestPipeline {
     * the index AND the ANN arm — regardless of how many maintenance
     * commits (compactSeen, erasure deletes) landed after it while the
     * pipeline was down (ADVICE r12). Use this — never a bare
-    * [[DedupStore.vacuum]] — on a pipeline-fed store. Returns files
-    * deleted.
+    * [[DedupStore.vacuum]] — on a pipeline-fed store. The ANN store,
+    * when armed, vacuums under the same `retain`. Returns files deleted.
     */
   def vacuumSafe(spark: SparkSession, dedupDir: String, indexDir: String,
                  retain: Int = 2, annDir: Option[String] = None): Long = {
     val swept = DedupStore.vacuum(spark, dedupDir, retain,
       keepFrom = oldestLagging(spark, dedupDir, indexDir, annDir))
-    swept + annDir.fold(0L)(ad => sweepAnnMarkers(spark, dedupDir, ad))
-  }
-
-  /** Retire `_ann_commits/b<v>` batch markers for ingest versions the
-    * dedup store no longer retains — without this sweep the marker dir
-    * grows one file per ingest version for the stream's LIFETIME
-    * (ADVICE r13), quietly contradicting the disk-bounded retention
-    * story. Safe by construction: [[annCatchUp]] consults markers only
-    * for RETAINED ingest versions (it iterates the surviving
-    * manifests), so a marker below the oldest retained version can
-    * never be read again. Purge-generation markers (`p<g>`) are a
-    * different namespace and never swept. Returns markers deleted.
-    */
-  def sweepAnnMarkers(spark: SparkSession, dedupDir: String,
-                      annDir: String): Long = {
-    val retained = ingestVersionsOf(spark, dedupDir)
-    if (retained.isEmpty) return 0L // adopt nothing: no retained floor to judge by
-    val floor = retained.min
-    val commits = new Path(annDir, "_ann_commits")
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(commits)) return 0L
-    val BMark = """b(\d+)""".r
-    val stale = fs.listStatus(commits).map(_.getPath.getName).collect {
-      case n @ BMark(v) if v.toLong < floor => n
-    }
-    stale.foreach(n => fs.delete(new Path(commits, n), false))
-    stale.length.toLong
+    swept + annDir.fold(0L)(ad => AnnIndexStore.vacuum(spark, ad, retain))
   }
 }

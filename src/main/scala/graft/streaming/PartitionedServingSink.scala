@@ -49,13 +49,11 @@ object PartitionedServingSink {
     * and ingest batch ids are decoupled (r12): `_COMMIT` line 1 is the
     * version every snapshot/manifest path resolves through; line 2 is
     * the highest APPLIED ingest batch id, which alone drives the
-    * replay-skip test. A single-line legacy file means the two were
-    * equal (the pre-r12 layout, where version WAS the batch id). The
-    * split is what lets a maintenance commit that consumes no ingest
-    * batch — [[eraseUsers]] — bump the version without making the
-    * replay guard swallow the NEXT real micro-batch (version N+1 would
-    * otherwise read as "batch N+1 already applied" and its data would
-    * be silently dropped).
+    * replay-skip test. The split is what lets a maintenance commit that
+    * consumes no ingest batch — [[eraseUsers]] — bump the version
+    * without making the replay guard swallow the NEXT real micro-batch
+    * (version N+1 would otherwise read as "batch N+1 already applied"
+    * and its data would be silently dropped).
     */
   def committedBatch(storeDir: String): Long = {
     val f = commitFile(storeDir)
@@ -63,15 +61,17 @@ object PartitionedServingSink {
   }
 
   /** Highest ingest batch id already folded into the committed state —
-    * the replay-skip floor. Falls back to the version for legacy
-    * single-line `_COMMIT` files.
+    * the replay-skip floor (line 2 of `_COMMIT`).
     */
   def appliedIngestBatch(storeDir: String): Long = {
     val f = commitFile(storeDir)
     if (!Files.exists(f)) -1L
     else {
       val lines = Files.readAllLines(f)
-      (if (lines.size() > 1) lines.get(1) else lines.get(0)).trim.toLong
+      require(lines.size() == 2,
+        s"$f holds ${lines.size()} line(s); a store commit writes two " +
+          s"(version, applied batch) — $storeDir is not a committed store")
+      lines.get(1).trim.toLong
     }
   }
 

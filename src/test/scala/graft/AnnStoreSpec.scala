@@ -71,7 +71,7 @@ class AnnStoreSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_auto").toString
     try {
       AnnIndexStore.save(spark, synth, dir, nlist = 0)
-      val nlist = spark.read.parquet(s"$dir/centroids").count().toInt
+      val nlist = AnnIndexStore.centroidCount(spark, dir).toInt
       assert(nlist >= AnnPq.RoutedAssignThreshold,
         s"autoConfig picked $nlist cells — the routed path is not engaged")
       // brute-force cosine top-5 per probe (self excluded)
@@ -128,9 +128,15 @@ class AnnStoreSpec extends SparkSpec {
     } finally graft.Fs.rmTree(dir)
   }
 
+  private def ids(dir: String): Set[Long] = {
+    import spark.implicits._
+    AnnIndexStore.readLists(spark, dir).select("vec_id").as[Long].collect().toSet
+  }
+
   test("rebuild: retrains from live content, drops tombstoned ids for good, retires tombstones; crash re-runs converge") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_rb").toString
+    val twin = java.nio.file.Files.createTempDirectory("graft_ann_rb_twin").toString
     try {
       AnnIndexStore.save(spark, emb, dir, nlist = 4)
       AnnIndexStore.append(spark,
@@ -138,117 +144,114 @@ class AnnStoreSpec extends SparkSpec {
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")), dir)
       assert(AnnIndexStore.delete(spark, dir, Seq(11L, 12L)) == 2L)
       val n = AnnIndexStore.rebuild(spark, dir, nlist = 8)
-      val lists = spark.read.parquet(s"$dir/lists")
+      val lists = AnnIndexStore.readLists(spark, dir)
       assert(n == lists.count(), "returned count must match the rebuilt lists")
-      val ids = lists.select("vec_id").as[Long].collect().toSet
-      assert(!ids.contains(11L) && !ids.contains(12L),
+      val live = lists.select("vec_id").as[Long].collect().toSet
+      assert(!live.contains(11L) && !live.contains(12L),
         "tombstoned ids must not survive a rebuild")
-      assert(ids.contains(1000001L), "appended vectors must survive a rebuild")
+      assert(live.contains(1000001L), "appended vectors must survive a rebuild")
       assert(!AnnIndexStore.hasTombstones(spark, dir),
         "rebuild purges, so tombstones retire with it")
       // the rebuilt geometry serves: every probe still finds its exact
       // appended twin at rank 1 (cosine 1.0 survives any quantizer)
-      val got = AnnIndexStore.searchTopK(spark, dir,
-          emb.filter(col("vec_id") < 3), k = 3, nprobe = 8)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+      def search(d: String) = rows(AnnIndexStore.searchTopK(spark, d,
+        emb.filter(col("vec_id") < 3), k = 3, nprobe = 8))
+      val got = search(dir)
       (0L until 3L).foreach { pid =>
         val top = got.filter(_._1 == pid).minBy(_._4)
         assert(top._2 == pid + 1000000L && top._3 == 1.0, s"probe $pid: $top")
       }
-      // crash window: a half-finished rebuild leaves the .rebuild-src
-      // snapshot — the re-run must read IT (not the possibly-torn
-      // lists) and converge to the same content
+      // crash window: a rebuild that dies after staging its geometry and
+      // lists, before its commit — the old version keeps answering, and
+      // the re-run converges to the crash-free rebuild (on a twin)
       AnnIndexStore.delete(spark, dir, Seq(13L))
-      val before = spark.read.parquet(s"$dir/lists")
-        .select("vec_id").as[Long].collect().toSet - 13L
-      // simulate: snapshot staged, then "crash" before save — re-run
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      spark.read.parquet(s"$dir/lists")
-        .join(AnnIndexStore.loadTombstones(spark, dir), Seq("vec_id"), "left_anti")
-        .select("vec_id", "embedding").dropDuplicates("vec_id")
-        .write.mode("overwrite").parquet(s"$dir/.rebuild-src")
+      val before = ids(dir) - 13L
+      val served = search(dir)
+      graft.Fs.cpTree(dir, twin)
+      AnnIndexStore.rebuild(spark, twin, nlist = 8)
+      crashBeforeCommit(dir)(d => AnnIndexStore.rebuild(spark, d, nlist = 8))
+      assert(search(dir) == served && AnnIndexStore.tombstoneCount(spark, dir) == 1L,
+        "an uncommitted rebuild must not change what the store answers")
       AnnIndexStore.rebuild(spark, dir, nlist = 8)
-      val after = spark.read.parquet(s"$dir/lists")
-        .select("vec_id").as[Long].collect().toSet
+      val after = ids(dir)
       assert(after == before, s"crash re-run diverged: ${after -- before} / ${before -- after}")
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/.rebuild-src")))
-    } finally graft.Fs.rmTree(dir)
+      assert(search(dir) == search(twin), "crash re-run != crash-free rebuild")
+      // a rebuild whose base version moves before its commit (a write
+      // out of the single-writer contract) aborts and commits nothing:
+      // the listener commits a copy of the current manifest as the next
+      // version when the rebuild's first job starts
+      val v = StoreManifest.currentVersion(spark, dir)
+      val mDir = java.nio.file.Paths.get(dir, StoreManifest.ManifestDir)
+      val bump = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          synchronized {
+            val to = mDir.resolve(s"v${v + 1}.manifest")
+            if (!java.nio.file.Files.exists(to))
+              java.nio.file.Files.copy(mDir.resolve(s"v$v.manifest"), to)
+          }
+      }
+      spark.sparkContext.addSparkListener(bump)
+      val e = try intercept[IllegalStateException](AnnIndexStore.rebuild(spark, dir, nlist = 8))
+        finally spark.sparkContext.removeSparkListener(bump)
+      assert(e.getMessage.contains("nothing committed"), e.getMessage)
+      assert(StoreManifest.currentVersion(spark, dir) == v + 1 &&
+        StoreManifest.readLines(spark, dir, v + 1) == StoreManifest.readLines(spark, dir, v),
+        "an aborted rebuild must commit nothing")
+      assert(ids(dir) == before && search(dir) == search(twin))
+    } finally { graft.Fs.rmTree(dir); graft.Fs.rmTree(twin) }
   }
 
   test("rebuild snapshot self-expires: appends landing after a crashed rebuild survive the re-run (ADVICE r13)") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_rb2").toString
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def stageCrashedRebuild(): Unit = {
-      // replicate rebuild's own staging order: fingerprint FIRST, then
-      // the snapshot — the state a rebuild leaves if it crashes after
-      // save() but before the src delete
-      val commits = new org.apache.hadoop.fs.Path(s"$dir/_ann_commits")
-      val marks = (if (fs.exists(commits)) fs.listStatus(commits)
-        else Array.empty[org.apache.hadoop.fs.FileStatus])
-        .map(_.getPath.getName).sorted
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/.rebuild-marks"), true)
-      try out.write(marks.mkString("\n").getBytes("UTF-8")) finally out.close()
-      spark.read.parquet(s"$dir/lists")
-        .select("vec_id", "embedding").dropDuplicates("vec_id")
-        .write.mode("overwrite").parquet(s"$dir/.rebuild-src")
-    }
-    def ids() = spark.read.parquet(s"$dir/lists")
-      .select("vec_id").as[Long].collect().toSet
+    // a rebuild that dies after staging everything, before its commit
+    def crashedRebuild(): Unit =
+      crashBeforeCommit(dir)(d => AnnIndexStore.rebuild(spark, d, nlist = 4))
     try {
       AnnIndexStore.save(spark, emb, dir, nlist = 4)
-      val baseIds = ids()
-      // --- case 1 (THE ADVICE scenario): crash after save(), pipeline
-      // appends batch b7, rebuild re-runs — the appended vectors used to
-      // be restored away permanently (marker survives, catch-up skips)
-      stageCrashedRebuild()
+      val baseIds = ids(dir)
+      // --- case 1 (THE ADVICE scenario): crash before the commit, the
+      // pipeline appends batch 7, the rebuild re-runs — the appended
+      // vectors must survive it
+      crashedRebuild()
       AnnIndexStore.appendBatch(spark,
         emb.filter(col("vec_id") < 5)
           .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding")),
         dir, batchId = 7L)
       AnnIndexStore.rebuild(spark, dir, nlist = 4)
-      assert(ids() == baseIds ++ (2000000L until 2000005L),
+      assert(ids(dir) == baseIds ++ (2000000L until 2000005L),
         "vectors appended after a crashed rebuild must survive the re-run")
-      // --- case 2: torn save (lists/_SUCCESS gone, dir half-written) +
-      // an interleaved append — recovery is snapshot ∪ the new batch's
-      // marker-committed files
-      stageCrashedRebuild()
-      val live = spark.read.parquet(s"$dir/lists")
-        .select("vec_id", "embedding").dropDuplicates("vec_id").localCheckpoint()
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/lists"), true)
-      // a torn overwrite: SOME cells re-written, no _SUCCESS
-      live.filter(col("vec_id") % 2 === 0).repartition(1)
-        .withColumn("list_id", lit(0))
-        .write.partitionBy("list_id").parquet(s"$dir/lists")
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/lists/_SUCCESS"), false)
+      // --- case 2: a crashed rebuild, then a crashed append (its files
+      // staged, uncommitted), then a committed append — recovery is the
+      // committed content, exactly
+      crashedRebuild()
+      crashBeforeCommit(dir)(d => AnnIndexStore.appendBatch(spark,
+        emb.filter(col("vec_id") < 9)
+          .select((col("vec_id") + 4000000L).as("vec_id"), col("embedding")),
+        d, batchId = 8L))
       AnnIndexStore.appendBatch(spark,
         emb.filter(col("vec_id") < 3)
           .select((col("vec_id") + 3000000L).as("vec_id"), col("embedding")),
         dir, batchId = 8L)
       AnnIndexStore.rebuild(spark, dir, nlist = 4)
-      assert(ids() == baseIds ++ (2000000L until 2000005L) ++ (3000000L until 3000003L),
-        "torn-save recovery must be snapshot ∪ marker-committed appends")
-      // --- case 3: a delete landing after the snapshot staged must
-      // still erase (tombstones re-apply pre-save; only those retire)
-      stageCrashedRebuild()
+      assert(ids(dir) == baseIds ++ (2000000L until 2000005L) ++ (3000000L until 3000003L),
+        "recovery must be the committed content: no crashed rebuild or append leaks in")
+      // --- case 3: a delete landing after a crashed rebuild must still
+      // erase, and its tombstone retires with the re-run
+      crashedRebuild()
       assert(AnnIndexStore.delete(spark, dir, Seq(2000001L)) == 1L)
       AnnIndexStore.rebuild(spark, dir, nlist = 4)
-      assert(!ids().contains(2000001L),
-        "a delete landing after the snapshot staged must not resurrect")
+      assert(!ids(dir).contains(2000001L),
+        "a delete landing after a crashed rebuild must not resurrect")
       assert(!AnnIndexStore.hasTombstones(spark, dir))
-      // --- case 4: a purge racing a TORN rebuild is unrecoverable by
-      // machine — must abort loudly, not silently resurrect erased bytes
-      stageCrashedRebuild()
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/lists/_SUCCESS"), false)
-      fs.create(new org.apache.hadoop.fs.Path(s"$dir/_ann_commits/p99"), true).close()
-      val e = intercept[IllegalArgumentException](
-        AnnIndexStore.rebuild(spark, dir, nlist = 4))
-      assert(e.getMessage.contains("p99"), s"wrong abort: ${e.getMessage}")
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_ann_commits/p99"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/.rebuild-src"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/.rebuild-marks"), false)
+      // --- case 4: a purge committed after a crashed rebuild survives
+      // the re-run: the purged vector stays gone
+      crashedRebuild()
+      assert(AnnIndexStore.delete(spark, dir, Seq(2000002L)) == 1L)
+      assert(AnnIndexStore.purgeDeletes(spark, dir) == 1L)
+      AnnIndexStore.rebuild(spark, dir, nlist = 4)
+      assert(ids(dir) == baseIds ++ Set(2000000L, 2000003L, 2000004L) ++
+        (3000000L until 3000003L),
+        "a purge committed after a crashed rebuild must survive the re-run")
     } finally graft.Fs.rmTree(dir)
   }
 
@@ -295,23 +298,28 @@ class AnnStoreSpec extends SparkSpec {
       } finally q.stop()
 
       // at-least-once replay: re-deliver batch 1's rows under its
-      // committed batchId — the marker must short-circuit
+      // committed batchId — the store's hw must short-circuit
       val (b1again, _) = newRows.splitAt(newRows.size / 2)
       AnnIndexStore.appendBatch(spark,
         b1again.toDF("vec_id", "embedding"), streamed, batchId = 0L)
-      // crash-mid-move replay: wipe the marker so the move re-runs onto
-      // the same deterministic names — content must not duplicate
-      val fs = new org.apache.hadoop.fs.Path(streamed)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$streamed/_ann_commits/b0"), false)
-      AnnIndexStore.appendBatch(spark,
-        b1again.toDF("vec_id", "embedding"), streamed, batchId = 0L)
+      // crash before the commit: a third batch's files land uncommitted —
+      // searches and counts still answer from the previous version, and
+      // the replay commits the batch once
+      val probes = emb.filter(col("vec_id") < 10)
+      val served = rows(AnnIndexStore.searchTopK(spark, streamed, probes))
+      val third = seed.filter(col("vec_id") < 120)
+        .select((col("vec_id") + 5000000L).as("vec_id"), col("embedding"))
+      crashBeforeCommit(streamed)(d => AnnIndexStore.appendBatch(spark, third, d, batchId = 2L))
+      assert(rows(AnnIndexStore.searchTopK(spark, streamed, probes)) == served &&
+        AnnIndexStore.tombstoneCount(spark, streamed) == 0L,
+        "an uncommitted append must not change what the store answers")
+      AnnIndexStore.appendBatch(spark, third, streamed, batchId = 2L)
+      AnnIndexStore.append(spark, third, batch)
 
-      val nStream = spark.read.parquet(s"$streamed/lists").count()
-      val nBatch = spark.read.parquet(s"$batch/lists").count()
+      val nStream = AnnIndexStore.readLists(spark, streamed).count()
+      val nBatch = AnnIndexStore.readLists(spark, batch).count()
       assert(nStream == nBatch,
         s"replay duplicated rows: streamed $nStream vs batch $nBatch")
-      val probes = emb.filter(col("vec_id") < 10)
       assert(rows(AnnIndexStore.searchTopK(spark, streamed, probes)) ==
              rows(AnnIndexStore.searchTopK(spark, batch, probes)),
         "search-after-stream diverged from the batch rebuild")

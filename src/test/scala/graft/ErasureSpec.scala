@@ -212,7 +212,7 @@ class ErasureSpec extends SparkSpec {
       assert(AnnIndexStore.delete(spark, dir, dead) == 0L, "replay is a no-op")
       assert(AnnIndexStore.delete(spark, dir, Seq(-1L, Long.MaxValue)) == 0L,
         "ids never indexed must not tombstone (they would mask a later append)")
-      // the driver-side footer count (what the sink's per-trigger
+      // the manifest's tombstone count (what the sink's per-trigger
       // maxTombstones check reads — no Spark job, ADVICE r11) is exact
       assert(AnnIndexStore.tombstoneCount(spark, dir) ==
         AnnIndexStore.loadTombstones(spark, dir).count())
@@ -226,7 +226,7 @@ class ErasureSpec extends SparkSpec {
       // purge: bytes gone, tombstones retired, search IDENTICAL
       val purged = AnnIndexStore.purgeDeletes(spark, dir)
       assert(purged == 2L, s"expected 2 physically erased, got $purged")
-      assert(spark.read.parquet(s"$dir/lists")
+      assert(AnnIndexStore.readLists(spark, dir)
         .filter(col("vec_id").isin(dead: _*)).isEmpty, "bytes must be gone")
       assert(!AnnIndexStore.hasTombstones(spark, dir), "tombstones retired")
       val after = AnnIndexStore.searchTopK(spark, dir, probes, k = 5, nprobe = 6)
@@ -282,12 +282,12 @@ class ErasureSpec extends SparkSpec {
         val snapV = operators.MergeInto.currentVersion(spark, snapDir)
         val idxV = operators.StoreManifest.currentVersion(spark, idxDir)
         val dedupV = operators.StoreManifest.currentVersion(spark, dedupDir)
-        val tombFiles = new java.io.File(s"$annDir/_tombstones").listFiles().length
+        val annV = operators.StoreManifest.currentVersion(spark, annDir)
         def committedNothing() =
           operators.MergeInto.currentVersion(spark, snapDir) == snapV &&
             operators.StoreManifest.currentVersion(spark, idxDir) == idxV &&
             operators.StoreManifest.currentVersion(spark, dedupDir) == dedupV &&
-            new java.io.File(s"$annDir/_tombstones").listFiles().length == tombFiles
+            operators.StoreManifest.currentVersion(spark, annDir) == annV
         in.addData(dead.map(_.toString): _*); q.processAllAvailable()
         assert(committedNothing(), "replaying an applied erase batch must commit nothing")
         // an empty trigger commits nothing either
@@ -300,7 +300,7 @@ class ErasureSpec extends SparkSpec {
         assert(q.isActive, "a poisoned request must not kill the query")
         assert(operators.MergeInto.currentVersion(spark, snapDir) == snapV &&
           operators.StoreManifest.currentVersion(spark, dedupDir) == dedupV &&
-          new java.io.File(s"$annDir/_tombstones").listFiles().length == tombFiles)
+          operators.StoreManifest.currentVersion(spark, annDir) == annV)
       } finally q.stop()
     } finally Fs.rmTree(root.toString)
   }
@@ -331,12 +331,12 @@ class ErasureSpec extends SparkSpec {
       try { in.addData(newRows: _*); q.processAllAvailable() } finally q.stop()
       assert(!AnnIndexStore.hasTombstones(spark, dir),
         "the sink must purge once tombstones reach the bound")
-      assert(spark.read.parquet(s"$dir/lists")
+      assert(AnnIndexStore.readLists(spark, dir)
         .filter(col("vec_id").isin(dead: _*)).isEmpty, "bytes must be gone")
       // erased stays erased AND the appended vectors are searchable
       val after = AnnIndexStore.searchTopK(spark, dir, probes, k = 3, nprobe = 4)
       assert(after.filter(col("neighbor_id").isin(dead: _*)).isEmpty)
-      assert(spark.read.parquet(s"$dir/lists")
+      assert(AnnIndexStore.readLists(spark, dir)
         .filter(col("vec_id") < 100).count() > 0, "append must have landed")
       assert(masked.nonEmpty && after.count() > 0)
     } finally Fs.rmTree(root.toString)
@@ -354,26 +354,21 @@ class ErasureSpec extends SparkSpec {
       val masked = AnnIndexStore.searchTopK(spark, dir, probes, k = 3, nprobe = 4)
         .collect().toSeq
 
-      // simulate the purge crash window: a purge-file landed in a cell
-      // but the superseded originals (and tombstones) are still there —
-      // readers see some vectors TWICE plus the tombstone filter; the
-      // candidate dedup must make this invisible
-      // the overlap must land in a cell the purge will rewrite — the
-      // dead vector's own cell
-      val deadCell = spark.read.parquet(s"$dir/lists")
-        .filter(col("vec_id") === dead.head)
-        .select("list_id").head().getInt(0)
-      val cell = new java.io.File(dir, s"lists/list_id=$deadCell")
-      val f = cell.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(cell, "p0-dup.parquet").toPath)
+      // the purge crash window: a purge that dies after staging the
+      // rewritten cell, before its commit — readers keep the previous
+      // version (tombstone filter included), so results are unchanged
+      val tombs = AnnIndexStore.tombstoneCount(spark, dir)
+      crashBeforeCommit(dir)(d => AnnIndexStore.purgeDeletes(spark, d))
       assert(AnnIndexStore.searchTopK(spark, dir, probes, k = 3, nprobe = 4)
         .collect().toSeq == masked,
-        "duplicate rows during a crashed purge must not change results")
+        "a purge's uncommitted files must not change results")
+      assert(AnnIndexStore.tombstoneCount(spark, dir) == tombs,
+        "an uncommitted purge must not retire tombstones")
 
-      // the real purge then converges: dedups the overlap, drops the rest
+      // the real purge then converges: drops the erased vector, leaves
+      // every other vector exactly once
       AnnIndexStore.purgeDeletes(spark, dir)
-      val all = spark.read.parquet(s"$dir/lists")
+      val all = AnnIndexStore.readLists(spark, dir)
       assert(all.filter(col("vec_id").isin(dead: _*)).isEmpty)
       assert(all.groupBy("vec_id").count().filter(col("count") > 1).isEmpty,
         "purge must leave each vector exactly once")

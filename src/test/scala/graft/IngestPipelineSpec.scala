@@ -284,7 +284,7 @@ class IngestPipelineSpec extends SparkSpec {
         "post-erasure re-entry must reach the index; erased doc must not")
       // the ANN store tombstones at delete (unreturnable now) and drops
       // bytes at purge — assert both halves of that contract
-      val searchable = spark.read.parquet(s"$annDir/lists")
+      val searchable = operators.AnnIndexStore.readLists(spark, annDir)
         .join(operators.AnnIndexStore.loadTombstones(spark, annDir)
           .select(col("vec_id")), Seq("vec_id"), "left_anti")
         .select("vec_id").as[Long].collect().toSet
@@ -308,7 +308,7 @@ class IngestPipelineSpec extends SparkSpec {
       .toDF("doc_id", "text", "embedding")
 
   private def annVecIds(dir: String): Set[Long] =
-    spark.read.parquet(s"$dir/lists").select("vec_id").as[Long].collect().toSet
+    operators.AnnIndexStore.readLists(spark, dir).select("vec_id").as[Long].collect().toSet
 
   test("ANN arm: one stream builds all three stores; dups reach none; hybrid retrieval runs over them") {
     implicit val sqlCtx = spark.sqlContext
@@ -398,6 +398,9 @@ class IngestPipelineSpec extends SparkSpec {
       assert(t1.contains("\"ingest_high_water\":1") &&
         t1.contains("\"dv_high_water\":1") && t1.contains("\"ann_high_water\":1"),
         s"high-waters must be level after catch-up: $t1")
+      // the ANN store's retained manifests: train, then one append per
+      // ingest version
+      assert(t1.contains("\"ann_manifests\":3"), s"ANN manifest count wrong: $t1")
       // re-recording the same trigger (a metrics-write replay) moves
       // nothing: version files are write-once
       IngestMetrics.record(spark, mDir, 1L,
@@ -421,7 +424,7 @@ class IngestPipelineSpec extends SparkSpec {
       DedupStore.appendBatch(spark, mkDocs((1L, "alpha beta")), dedupDir, buckets = 4)
       DedupStore.appendBatch(spark, mkDocs((2L, "gamma delta")), dedupDir)
       // arming the arm must NOT crash-loop on the legacy versions: they
-      // are vector-less by definition and commit bare markers
+      // are vector-less by definition and only raise the store's hw
       assert(IngestPipeline.annCatchUp(spark, dedupDir, annDir, nlist = 2) == 2L)
       assert(!operators.AnnIndexStore.trained(spark, annDir),
         "nothing to train on yet")
@@ -450,9 +453,15 @@ class IngestPipelineSpec extends SparkSpec {
       assert(DedupStore.delete(spark, dedupDir, Seq(3L)) == 1L)
       assert(IngestPipeline.oldestLagging(spark, dedupDir, idxDir,
         Some(annDir)).contains(0L)) // index never caught up here at all
+      // the first recovery attempt dies after staging its append, before
+      // the commit; the next one heals
+      crashBeforeCommit(annDir)(d => IngestPipeline.annCatchUp(spark, dedupDir, d))
+      assert(annVecIds(annDir) == Set(1L, 2L))
       assert(IngestPipeline.annCatchUp(spark, dedupDir, annDir) == 1L)
       assert(annVecIds(annDir) == Set(1L, 2L, 4L),
         "erased doc resurrected into the ANN store through the lagging version")
+      assert(operators.AnnIndexStore.readLists(spark, annDir).count() == 3L,
+        "the store must hold each vec_id exactly once after the replay")
       // replay: no versions lag, nothing commits
       assert(IngestPipeline.annCatchUp(spark, dedupDir, annDir) == 0L)
       // index still lags both versions — the ann arm being current must

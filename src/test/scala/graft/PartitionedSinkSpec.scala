@@ -34,9 +34,12 @@ class PartitionedSinkSpec extends SparkSpec {
       Files.writeString(tmp, rows.mkString("\n"))
       Files.move(tmp, Paths.get(in, name))
     }
+    // every commit writes the two-line pointer (version, applied batch)
+    def commitLines(): Int = Files.readAllLines(Paths.get(store, "_COMMIT")).size
     def drain(): Unit = {
       val q = PartitionedServingSink.start(spark, in, store, ckpt)
       q.awaitTermination()
+      assert(commitLines() == 2, "_COMMIT must hold exactly two lines")
     }
 
     // batch 0 touches hours 00 and 01
@@ -100,9 +103,18 @@ class PartitionedSinkSpec extends SparkSpec {
     val q = PartitionedServingSink.start(spark, in, store, dir.resolve("ckpt2").toString)
     q.awaitTermination()
     assert(PartitionedServingSink.committedBatch(store) == before)
+    assert(commitLines() == 2, "_COMMIT must hold exactly two lines")
     val replayed = PartitionedServingSink.countsPerUser(spark, store)
       .collect().map(r => (r.get(0).toString, r.getLong(1)) ->
         (r.getLong(2), r.getDecimal(3).toPlainString)).toMap
     assert(replayed == expectCounts, "replay must not change any counter")
+
+    // a one-line pointer is no commit this sink wrote: refused, naming
+    // the store
+    val bad = Files.createDirectory(dir.resolve("bad")).toString
+    Files.writeString(Paths.get(bad, "_COMMIT"), "3")
+    val e = intercept[IllegalArgumentException](
+      PartitionedServingSink.appliedIngestBatch(bad))
+    assert(e.getMessage.contains(bad), e.getMessage)
   }
 }

@@ -198,7 +198,7 @@ class QueueIngestSpec extends SparkSpec {
         .select("doc_id").as[Long].collect().toSet == accepted)
       assert(indexedDocIds(idxDir) == accepted,
         "the index holds exactly the accepted docs — no duplicate postings")
-      assert(spark.read.parquet(s"$annDir/lists")
+      assert(graft.operators.AnnIndexStore.readLists(spark, annDir)
         .select("vec_id").as[Long].collect().toSet == accepted,
         "the ANN store holds exactly the accepted docs' vectors")
       // ranked retrieval over the queue-fed segmented index ≡ fresh build

@@ -14,6 +14,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   val sfDir: String =
     sys.env.getOrElse("GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+  /** Leave `dir` as a store writer leaves it when it dies after staging
+    * its files and before its manifest commit: `write` runs on a copy
+    * of `dir`, and every file it added there, except manifests, is
+    * copied back.
+    */
+  def crashBeforeCommit(dir: String)(write: String => Unit): Unit = {
+    val src = java.nio.file.Paths.get(dir)
+    val clone = java.nio.file.Files.createTempDirectory("graft_crash")
+    try {
+      Fs.cpTree(src, clone)
+      write(clone.toString)
+      val tree = java.nio.file.Files.walk(clone)
+      try tree.filter(p => java.nio.file.Files.isRegularFile(p)).forEach { p =>
+        val rel = clone.relativize(p)
+        val to = src.resolve(rel)
+        if (!rel.startsWith(graft.operators.StoreManifest.ManifestDir) &&
+            !java.nio.file.Files.exists(to)) {
+          java.nio.file.Files.createDirectories(to.getParent)
+          java.nio.file.Files.copy(p, to)
+        }
+      } finally tree.close()
+    } finally Fs.rmTree(clone)
+  }
 }
 
 object SparkSpec {

@@ -75,7 +75,7 @@ class VacuumSpec extends SparkSpec {
         s"footprint must not trend up: $counts")
       // retain=1: exactly one manifest per versioned store, and the
       // pipeline floor released (nothing lagging after catch-ups)
-      for (d <- Seq(snapDir, dedupDir))
+      for (d <- Seq(snapDir, dedupDir, annDir))
         assert(StoreManifest.versions(spark, d).length == 1, s"$d manifests")
       assert(IngestPipeline.oldestLagging(spark, dedupDir, idxDir,
         Some(annDir)).isEmpty)
@@ -84,7 +84,7 @@ class VacuumSpec extends SparkSpec {
       assert(InvertedIndex.searchBm25(spark, idxDir, Seq("t3x0")).count() == 0)
       assert(DedupStore.readDocs(spark, dedupDir)
         .filter(col("doc_id") < 18).count() == 0)
-      assert(spark.read.parquet(s"$annDir/lists")
+      assert(AnnIndexStore.readLists(spark, annDir)
         .filter(col("vec_id") < 18).count() == 0)
     } finally Fs.rmTree(base)
   }
@@ -113,7 +113,7 @@ class VacuumSpec extends SparkSpec {
     def triState(): (Set[Long], Set[Long], Set[Long]) = (
       DedupStore.readDocs(spark, dedupDir).select("doc_id").as[Long].collect().toSet,
       InvertedIndex.docLengths(spark, idxDir).select("doc_id").as[Long].collect().toSet,
-      spark.read.parquet(s"$annDir/lists")
+      AnnIndexStore.readLists(spark, annDir)
         .join(AnnIndexStore.loadTombstones(spark, annDir), Seq("vec_id"), "left_anti")
         .select("vec_id").as[Long].collect().toSet)
     try {
@@ -179,10 +179,10 @@ class VacuumSpec extends SparkSpec {
       // the floor held WITHOUT an index store configured — the lagging
       // version's vectors still reach the ANN arm after recovery
       assert(IngestPipeline.annCatchUp(spark, dedupDir, annDir) == 1L)
-      assert(spark.read.parquet(s"$annDir/lists")
+      assert(AnnIndexStore.readLists(spark, annDir)
         .select("vec_id").as[Long].collect().toSet == Set(1L, 2L))
-      // marker boundedness: after more rounds at retain=1, b-markers for
-      // expired versions sweep instead of accumulating one per version
+      // boundedness: after more rounds at retain=1, the ANN store keeps
+      // one manifest instead of accumulating one per version
       for (i <- 3L to 6L) {
         DedupStore.appendBatch(spark,
           Seq((i, s"text $i round", vec(i))).toDF("doc_id", "text", "embedding"),
@@ -190,12 +190,11 @@ class VacuumSpec extends SparkSpec {
         IngestPipeline.annCatchUp(spark, dedupDir, annDir)
         Vacuum.sweepAll(spark, stores, retainVersions = 1, pipeline = true)
       }
-      val bMarkers = new java.io.File(s"$annDir/_ann_commits").listFiles()
-        .map(_.getName).filter(_.startsWith("b")).toSeq
-      assert(bMarkers.length == 1,
-        s"b-markers must sweep with their expired versions, got $bMarkers")
+      val annVersions = StoreManifest.versions(spark, annDir)
+      assert(annVersions.length == 1,
+        s"ANN manifests must expire at retain=1, got $annVersions")
       // everything that ever ingested is still in the ANN store
-      assert(spark.read.parquet(s"$annDir/lists")
+      assert(AnnIndexStore.readLists(spark, annDir)
         .select("vec_id").as[Long].collect().toSet == (1L to 6L).toSet)
     } finally Fs.rmTree(base)
   }
@@ -217,10 +216,14 @@ class VacuumSpec extends SparkSpec {
         dedupDir)
       DedupStore.compactSeen(spark, dedupDir)
       DedupStore.compactSeen(spark, dedupDir)
-      // plant crash scratch: a torn ANN append + a torn journal rewrite
-      new java.io.File(s"$annDir/.append-tmp-b99/x").getParentFile.mkdirs()
+      // plant crash scratch: a torn ANN staging dir, an uncommitted ANN
+      // list file + a torn journal rewrite
+      new java.io.File(s"$annDir/.merge-tmp-dead/x").getParentFile.mkdirs()
       java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$annDir/.append-tmp-b99/x"), Array[Byte](1))
+        java.nio.file.Paths.get(s"$annDir/.merge-tmp-dead/x"), Array[Byte](1))
+      new java.io.File(s"$annDir/list_id=0").mkdirs()
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$annDir/list_id=0/v99-orphan.parquet"), Array[Byte](1))
       new java.io.File(jDir).mkdirs()
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$jDir/.pending.tsv.tmp"), Array[Byte](1))
@@ -230,9 +233,10 @@ class VacuumSpec extends SparkSpec {
         Vacuum.Stores(index = Some(idxDir), ann = Some(annDir),
           dedup = Some(dedupDir), journalDirs = Seq(jDir)),
         retainVersions = 1, pipeline = true)
-      assert(swept("ann_scratch") == 1L && swept("journal_scratch") == 1L,
+      assert(swept("ann") >= 1L && swept("journal_scratch") == 1L,
         s"scratch not swept: $swept")
-      assert(!new java.io.File(s"$annDir/.append-tmp-b99").exists())
+      assert(!new java.io.File(s"$annDir/.merge-tmp-dead").exists())
+      assert(!new java.io.File(s"$annDir/list_id=0/v99-orphan.parquet").exists())
       // the LIVE pending file survives — only staging leftovers sweep
       assert(new java.io.File(s"$jDir/pending.tsv").exists())
       // the floor held: the lagging version's docs still reach both
