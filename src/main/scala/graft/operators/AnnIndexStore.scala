@@ -43,14 +43,16 @@ object AnnIndexStore {
   val TombDir = "_tombstones"
 
   /** One committed version, decoded from its manifest (`v = -1`: none). */
-  private final case class Version(v: Long, hw: Long = -1L, nlist: Int = 0,
+  private final case class Version(v: Long,
+                                   hw: StoreManifest.HighWater = StoreManifest.NoHighWater,
+                                   nlist: Int = 0,
                                    schema: Option[StructType] = None,
                                    centroids: Seq[String] = Nil,
                                    codebooks: Seq[String] = Nil,
                                    lists: Seq[String] = Nil,
                                    tombs: Seq[(String, Long)] = Nil) {
     def lines: Seq[String] =
-      Seq(s"hw\t$hw", s"nlist\t$nlist") ++ schema.map(s => s"schema\t${s.json}") ++
+      Seq(hw.line, s"nlist\t$nlist") ++ schema.map(s => s"schema\t${s.json}") ++
         centroids.map("centroids\t" + _) ++ codebooks.map("codebooks\t" + _) ++
         lists.sorted.map("list\t" + _) ++ tombs.map { case (f, n) => s"tomb\t$f\t$n" }
 
@@ -58,9 +60,10 @@ object AnnIndexStore {
   }
 
   private def versionOf(spark: SparkSession, dir: String, v: Long): Version = {
-    val ls = StoreManifest.readLines(spark, dir, v).map(_.split('\t'))
+    val lines = StoreManifest.readLines(spark, dir, v)
+    val ls = lines.map(_.split('\t'))
     def all(tag: String) = ls.collect { case l if l(0) == tag => l(1) }
-    Version(v, all("hw").head.toLong, all("nlist").head.toInt,
+    Version(v, StoreManifest.guard(dir, lines), all("nlist").headOption.fold(0)(_.toInt),
       all("schema").headOption.map(DataType.fromJson(_).asInstanceOf[StructType]),
       all("centroids"), all("codebooks"), all("list"),
       ls.collect { case l if l(0) == "tomb" => (l(1), l(2).toLong) })
@@ -204,32 +207,32 @@ object AnnIndexStore {
 
   /** Idempotent batch append — the streaming-maintenance building block
     * ([[graft.streaming.AnnIndexSink]], IngestPipeline's ANN arm): the
-    * batch commits together with `hw = batchId`, and a batch at or below
-    * the committed `hw` returns at once, so replaying a trigger
+    * batch commits together with `hw = batchId`, and the batch at the
+    * committed `hw` returns at once, so replaying a trigger
     * (foreachBatch's at-least-once contract) leaves the index
-    * unchanged. Sound because a feeder's batch ids only grow. A crash
-    * before the commit leaves orphans the replay never reads.
+    * unchanged; a batch below it, or at it from another streaming query,
+    * throws ([[StoreManifest.replayed]]). A crash before the commit
+    * leaves orphans the replay never reads.
     */
   def appendBatch(spark: SparkSession, newVectors: DataFrame, dir: String,
                   batchId: Long): Unit = {
     val cur = trainedVersion(spark, dir)
-    if (batchId <= cur.hw) return // replay of an applied batch
-    appendTo(spark, dir, cur, newVectors, batchId)
+    if (StoreManifest.replayed(spark, dir, cur.hw, batchId)) return
+    appendTo(spark, dir, cur, newVectors, StoreManifest.applying(spark, batchId))
   }
 
   /** Record `batchId` as applied without vectors — what a feeder commits
     * for a batch that carries none (the store may not be trained yet).
     */
-  def markApplied(spark: SparkSession, dir: String, batchId: Long): Unit = {
-    val cur = current(spark, dir)
-    if (batchId > cur.hw) commit(spark, dir, cur.copy(v = cur.v + 1, hw = batchId))
-  }
+  def markApplied(spark: SparkSession, dir: String, batchId: Long): Unit =
+    StoreManifest.markApplied(spark, dir, batchId)
 
   /** The highest batch id the store has applied; -1 if none. */
-  def highWater(spark: SparkSession, dir: String): Long = current(spark, dir).hw
+  def highWater(spark: SparkSession, dir: String): Long =
+    StoreManifest.highWater(spark, dir)
 
   private def appendTo(spark: SparkSession, dir: String, cur: Version,
-                       vectors: DataFrame, hw: Long): Unit = {
+                       vectors: DataFrame, hw: StoreManifest.HighWater): Unit = {
     val next = cur.v + 1
     val moved = stageLists(spark, dir, vectors, loadCentroids(spark, dir, cur), next)
     commit(spark, dir, cur.copy(v = next, hw = hw, lists = cur.lists ++ moved))

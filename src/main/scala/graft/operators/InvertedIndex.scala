@@ -60,30 +60,32 @@ object InvertedIndex {
     */
   def write(index: DataFrame, dir: String, buckets: Int = 32): Unit = {
     val spark = index.sparkSession
-    val next = StoreManifest.currentVersion(spark, dir) + 1
+    val cur = StoreManifest.currentVersion(spark, dir)
     // version-unique name on a REBUILD over an existing store: the live
     // base segment must survive until the new manifest commits (readers
     // of version N keep resolving it, and a crash here must not destroy
     // committed data) — it becomes unreferenced and vacuum sweeps it
-    // pick a name that neither any retained manifest references NOR
-    // exists on disk: an existing-but-unreferenced dir might be a
-    // crashed APPEND's complete data awaiting its replay — deleting or
-    // overwriting it would lose that batch (review r10). Our own
-    // crashed attempts stay untouched too and vacuum sweeps them once
-    // unreferenced.
     val segName = freshName(spark, dir, "seg",
-      i => if (i == 0) "seg=base" else s"seg=r$i", next)
-    val segDir = new java.io.File(dir, segName)
-    val tmp = new java.io.File(dir, s".tmp_$segName")
-    graft.Fs.rmTree(tmp.toString)
-    writeSegment(index, tmp.toString, buckets)
-    graft.Fs.atomicMove(tmp.toString, segDir.toString)
+      i => if (i == 0) "seg=base" else s"seg=r$i", cur + 1)
+    val written = writeSegment(index, s"$dir/$segName", buckets)
     // write is a REBUILD, so its caller-chosen bucket count becomes the
-    // store's committed one (see storedBuckets)
-    StoreManifest.commit(spark, dir, next,
-      Seq(s"buckets\t$buckets", s"seg\t$segName")) // THE commit point
-    if (next > 0) vacuum(spark, dir)
+    // store's committed one (see storedBuckets); tombstones retire with
+    // the old segments, and the replay guard carries forward
+    commit(spark, dir, cur + 1, buckets, StoreManifest.guard(spark, dir, cur), Nil,
+      written.toSeq) // THE commit point
+    if (cur >= 0) vacuum(spark, dir)
   }
+
+  /** Commit version `v` of the index: its bucket count, replay guard,
+    * tombstone dirs and live segments — every index commit writes all
+    * four, so none is lost to a later commit.
+    */
+  private def commit(spark: SparkSession, dir: String, v: Long, buckets: Int,
+                     hw: StoreManifest.HighWater, tombs: Seq[String],
+                     segs: Seq[String]): Unit =
+    StoreManifest.commit(spark, dir, v,
+      Seq(s"buckets\t$buckets", hw.line) ++
+        tombs.sorted.map("tomb\t" + _) ++ segs.sorted.map("seg\t" + _))
 
   /** The bucket count committed at version `v` — the modulus every
     * read prunes with and every later append and compact writes with.
@@ -108,7 +110,8 @@ object InvertedIndex {
   /** First generated name (index ≥ `from`) that no retained manifest
     * references under `tag` and that has no dir on disk — the
     * never-delete-before-commit discipline for generated `seg` and
-    * `tomb` names.
+    * `tomb` names: a write lands straight under the name, and only the
+    * manifest rename publishes it.
     */
   private def freshName(spark: SparkSession, dir: String, tag: String,
                         name: Long => String, from: Long): String = {
@@ -118,16 +121,26 @@ object InvertedIndex {
       .get
   }
 
-  private def writeSegment(index: DataFrame, segDir: String, buckets: Int): Unit = {
+  /** Write `index` as a segment at `segDir`, named by the result — or,
+    * when it holds no posting, stop after the posting write that counts
+    * them and return None: the caller commits no segment (an index with
+    * no documents has none), and vacuum sweeps the dir.
+    */
+  private def writeSegment(index: DataFrame, segDir: String,
+                           buckets: Int): Option[String] = {
     require(index.columns.contains("dl"),
       "writeSegment expects dl-bearing postings (the build() schema)")
-    index.withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.partitionBy("bucket").mode("overwrite").parquet(segDir)
+    val (_, posted) = Observed.observing(
+        index.withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
+          .repartition(col("bucket"))
+          .sortWithinPartitions("term", "doc_id"),
+        count(lit(1)).as("n")) {
+      _.write.partitionBy("bucket").mode("overwrite").parquet(segDir)
+    }
+    if (posted.getLong(0) == 0L) return None
     // per-doc token counts (the standalone doc-length table backing
     // [[docLengths]]) plus a ONE-ROW `_stats` (n_docs, tot_dl) summary,
-    // co-committed by the segment's one rename. Both derive from the
+    // published by the segment's manifest commit. Both derive from the
     // JUST-WRITTEN parquet, not the input frame — re-evaluating a lazy
     // `index` lineage here would re-run the whole tokenize/merge
     // shuffle a second time per streaming trigger. The underscore
@@ -136,8 +149,7 @@ object InvertedIndex {
     // rows and its corpus stats from `_stats` — O(segments) at query
     // time, never a corpus scan.
     val spark = index.sparkSession
-    // explicit schemas: pruned reads, and an EMPTY segment (no part
-    // files) must not die in schema inference
+    // explicit schemas: pruned reads
     // select BEFORE distinct: partition discovery appends the bucket
     // column, and a doc's terms span many buckets — distinct over
     // (doc_id, dl, bucket) would duplicate docs and corrupt _stats
@@ -162,6 +174,7 @@ object InvertedIndex {
       .agg(count(lit(1)).as("df"), max("tf").as("max_tf"), min("dl").as("min_dl"))
       .coalesce(1).sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$segDir/_terms")
+    Some(new java.io.File(segDir).getName)
   }
 
   /** Live segment dirs of the current committed version (empty for a
@@ -173,68 +186,55 @@ object InvertedIndex {
   private def segsOf(spark: SparkSession, dir: String, v: Long): Seq[String] =
     if (v < 0) Nil else StoreManifest.read(spark, dir, v, "seg").sorted
 
-  /** Incrementally index a batch of NEW documents as segment `seg`:
-    * data staged in a reader-invisible tmp dir, renamed to its final
-    * seg dir (ATOMIC_MOVE — a filesystem that would tear it fails
-    * fast), then COMMITTED by the next manifest version referencing
-    * old segments + this one. Readers resolve the manifest, so they
-    * see the whole segment or none of it, and the base postings are
-    * never rewritten. Sound because posting rows are keyed
-    * (term, doc_id) and phrase matching never merges across doc
-    * boundaries, so disjoint doc_ids mean search-after-append ≡ full
-    * rebuild (InvertedIndexSpec proves it). Re-appending an
-    * already-indexed doc_id WOULD double its postings — dedup the batch
-    * first (the BloomDedup / q_dedup_incremental path).
+  /** Incrementally index a batch of NEW documents as segment
+    * `seg=b<batch>`, COMMITTED by the next manifest version referencing
+    * old segments + this one. Readers resolve the manifest, so they see
+    * the whole segment or none of it, and the base postings are never
+    * rewritten. Sound because posting rows are keyed (term, doc_id) and
+    * phrase matching never merges across doc boundaries, so disjoint
+    * doc_ids mean search-after-append ≡ full rebuild (InvertedIndexSpec
+    * proves it). Re-appending an already-indexed doc_id WOULD double
+    * its postings — dedup the batch first (the BloomDedup /
+    * q_dedup_incremental path).
     *
-    * Idempotence (the [[graft.streaming.IndexSink]] replay hook):
-    * a seg already referenced by the current manifest returns false —
-    * a replayed trigger is a no-op. A seg dir present but UNREFERENCED
-    * is the crash window between data rename and manifest commit: the
-    * data is complete (the rename was atomic), so the replay skips the
-    * rewrite and just commits the manifest — as version 0 when the
-    * crashed append was the store's first.
+    * Idempotence (the [[graft.streaming.IndexSink]] replay hook): the
+    * segment commits together with `hw = batch`, and `batch == hw`
+    * returns false — a replayed trigger is a no-op. A batch below `hw`,
+    * or at it from another streaming query, throws
+    * ([[StoreManifest.replayed]]). Because `hw` never decreases, no
+    * retained manifest names a segment above it, so the write goes
+    * straight under its final name: a crash before the commit leaves an
+    * unreferenced dir that the replay overwrites and vacuum sweeps. An
+    * empty batch commits nothing and returns false — it learns that from
+    * the count observed on its own posting write, with no probe job.
     *
-    * `buckets` founds an empty store; once a version is committed, its
-    * count wins — a segment bucketed differently from its siblings
-    * would be pruned wrongly forever.
+    * `buckets` founds a store that holds no segment yet; once one is
+    * committed, its count wins — a segment bucketed differently from its
+    * siblings would be pruned wrongly forever.
     */
-  def append(docs: DataFrame, dir: String, seg: String,
+  def append(docs: DataFrame, dir: String, batch: Long,
              buckets: Int = 32): Boolean = {
     val spark = docs.sparkSession
     val cur = StoreManifest.currentVersion(spark, dir)
-    val live = segsOf(spark, dir, cur)
-    if (live.contains(s"seg=$seg")) return false // committed already: replay no-op
-    val b = if (cur < 0) buckets else storedBuckets(spark, dir, cur)
-    val segDir = new java.io.File(dir, s"seg=$seg")
-    if (!segDir.exists()) { // else: crashed between rename and commit — data is whole
-      val tmp = new java.io.File(dir, s".tmp_seg_$seg") // dot: reader-invisible
-      graft.Fs.rmTree(tmp.toString) // a torn earlier attempt restages cleanly
-      writeSegment(build(docs), tmp.toString, b)
-      graft.Fs.atomicMove(tmp.toString, segDir.toString)
-    } else {
-      // the crash-window heal (adopt an existing complete dir) is only
-      // sound if NO retained manifest references the dir. A dir that an
-      // OLDER manifest still references is a superseded pre-compaction
-      // segment vacuum kept for in-flight readers — adopting it would
-      // commit stale postings as this batch and silently drop the
-      // batch's real data (ADVICE r10). Hit by restarting a sink on a
-      // compacted store with a FRESH checkpoint (batch ids restart at 0
-      // and collide with retired segment names) — fail loudly; the
-      // operator picks a new checkpoint-unique segment prefix.
-      require(!referenced(spark, dir, "seg").contains(s"seg=$seg"),
-        s"seg=$seg exists under $dir but is referenced by an older retained " +
-          "manifest (a superseded pre-compaction segment, not this batch's " +
-          "staged data) — refusing to adopt it; append this batch under a " +
-          "segment name no retained manifest uses")
+    if (StoreManifest.replayed(spark, dir, StoreManifest.guard(spark, dir, cur), batch))
+      return false
+    // a store that has only recorded batches ([[markApplied]]) has no
+    // bucket count yet
+    val b = (if (cur < 0) None else StoreManifest.read(spark, dir, cur, "buckets").headOption)
+      .fold(buckets)(_.toInt)
+    val seg = s"seg=b$batch"
+    val segDir = s"$dir/$seg"
+    graft.Fs.rmTree(segDir) // a torn earlier attempt restages cleanly
+    if (writeSegment(build(docs), segDir, b).isEmpty) {
+      graft.Fs.rmTree(segDir)
+      return false
     }
     // tombstones carry forward unchanged: an append introduces new docs
     // (disjoint ids, the precondition above), so the erased set is the
     // erased set
     val tombs = if (cur < 0) Nil else StoreManifest.read(spark, dir, cur, "tomb")
-    StoreManifest.commit(spark, dir, cur + 1, // THE commit point
-      s"buckets\t$b" +:
-        (tombs.sorted.map("tomb\t" + _) ++
-          (live :+ s"seg=$seg").sorted.map("seg\t" + _)))
+    commit(spark, dir, cur + 1, b, StoreManifest.applying(spark, batch), tombs,
+      segsOf(spark, dir, cur) :+ seg) // THE commit point
     // appends carry every live segment forward, so expiring old
     // manifests never orphans a referenced segment — keeps the
     // manifest count (and with compaction, the whole store) bounded
@@ -242,6 +242,16 @@ object InvertedIndex {
     vacuum(spark, dir)
     true
   }
+
+  /** The highest batch id the index has applied; -1 if none. */
+  def highWater(spark: SparkSession, dir: String): Long =
+    StoreManifest.highWater(spark, dir)
+
+  /** Record `batch` as applied without a segment — what a feeder
+    * commits for a batch that carries no documents.
+    */
+  def markApplied(spark: SparkSession, dir: String, batch: Long): Unit =
+    StoreManifest.markApplied(spark, dir, batch)
 
   /** SIZE-TIERED segment merge (the Lucene-style policy that keeps
     * streaming lookup fan-in bounded WITHOUT unbounded write
@@ -287,14 +297,10 @@ object InvertedIndex {
         .parquet(toMerge.map(s => s"$dir/$s"): _*))
       .select("term", "doc_id", "positions", "tf", "dl")
     val segName = freshName(spark, dir, "seg", i => s"seg=c$i", next) // see write()
-    val segDir = new java.io.File(dir, segName)
-    val tmp = new java.io.File(dir, s".tmp_$segName")
-    graft.Fs.rmTree(tmp.toString)
     // compact rewrites in the STORE's bucket count: a re-bucketed merged
     // segment would be pruned with the wrong modulus by every reader
     val b = storedBuckets(spark, dir, cur)
-    writeSegment(merged, tmp.toString, b)
-    graft.Fs.atomicMove(tmp.toString, segDir.toString)
+    val written = writeSegment(merged, s"$dir/$segName", b)
     // shrink the tombstone set to docs still PHYSICALLY present — i.e.
     // those living in kept (untouched) segments, resolved off their
     // _doclen aux. A full fold (kept empty) retires every tombstone:
@@ -306,16 +312,13 @@ object InvertedIndex {
       else Some(Observed.checkpoint(tombstonesOf(spark, dir, cur)
           .join(docLengthsOf(spark, dir, kept).select("doc_id"), Seq("doc_id"), "left_semi"),
         count(lit(1)).as("n"))).collect { case (rows, n) if n.getLong(0) > 0L => rows }
-    val tombLines = keptTomb.toSeq.map { rows =>
+    val tombs = keptTomb.toSeq.map { rows =>
       val tombName = freshName(spark, dir, "tomb", i => s"tomb=t$i", next)
-      val tombTmp = new java.io.File(dir, s".tmp_$tombName")
-      graft.Fs.rmTree(tombTmp.toString)
-      rows.coalesce(1).write.mode("overwrite").parquet(tombTmp.toString)
-      graft.Fs.atomicMove(tombTmp.toString, new java.io.File(dir, tombName).toString)
-      s"tomb\t$tombName"
+      rows.coalesce(1).write.mode("overwrite").parquet(s"$dir/$tombName")
+      tombName
     }
-    StoreManifest.commit(spark, dir, next, // THE commit point
-      s"buckets\t$b" +: (tombLines ++ (kept :+ segName).sorted.map("seg\t" + _)))
+    commit(spark, dir, next, b, StoreManifest.guard(spark, dir, cur), tombs,
+      kept ++ written) // THE commit point
     vacuum(spark, dir, retainVersions)
     toMerge.size
   }
@@ -336,11 +339,9 @@ object InvertedIndex {
       .flatMap(v => StoreManifest.read(spark, dir, v, tag)).toSet
 
   /** Expire manifests beyond the newest `retain` versions and delete
-    * segment/tombstone dirs no surviving manifest references.
-    * Single-writer, replay-first (the store-wide contract): a crashed
-    * append's complete-but-uncommitted segment is also unreferenced,
-    * and only the guarantee that the append REPLAYS before any other
-    * writer acts keeps it from being swept here first.
+    * segment/tombstone dirs no surviving manifest references — crashed
+    * writes' uncommitted dirs included (a replayed append rewrites its
+    * segment from its batch). Single-writer, like every store write.
     */
   def vacuum(spark: SparkSession, dir: String, retain: Int = 2): Long = {
     if (StoreManifest.currentVersion(spark, dir) < 0) return 0L
@@ -436,14 +437,10 @@ object InvertedIndex {
     // are erased-doc-sized, so the rewrite is trivial and readers union
     // nothing): version-unique fresh name, data lands, manifest commits
     val tombName = freshName(spark, dir, "tomb", i => s"tomb=t$i", next)
-    val tmp = new java.io.File(dir, s".tmp_$tombName")
-    graft.Fs.rmTree(tmp.toString)
     oldTomb.unionByName(newly).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    graft.Fs.atomicMove(tmp.toString, new java.io.File(dir, tombName).toString)
-    StoreManifest.commit(spark, dir, next, // THE commit point
-      s"buckets\t${storedBuckets(spark, dir, cur)}" +:
-        (s"tomb\t$tombName" +: segs.sorted.map("seg\t" + _)))
+      .write.mode("overwrite").parquet(s"$dir/$tombName")
+    commit(spark, dir, next, storedBuckets(spark, dir, cur),
+      StoreManifest.guard(spark, dir, cur), Seq(tombName), segs) // THE commit point
     vacuum(spark, dir)
     n
   }
@@ -480,8 +477,8 @@ object InvertedIndex {
   def docLengths(spark: SparkSession, dir: String): DataFrame = {
     val cur = committed(spark, dir)
     val segs = segsOf(spark, dir, cur)
-    require(segs.nonEmpty, s"no live segments under $dir")
-    minusTombstones(spark, dir, cur, docLengthsOf(spark, dir, segs))
+    if (segs.isEmpty) emptyFrame(spark, "doc_id BIGINT, dl BIGINT")
+    else minusTombstones(spark, dir, cur, docLengthsOf(spark, dir, segs))
   }
 
   /** [[docLengths]] over an already-resolved segment list — the form
@@ -555,8 +552,8 @@ object InvertedIndex {
   def corpusStats(spark: SparkSession, dir: String): DataFrame = {
     val cur = committed(spark, dir)
     val segs = segsOf(spark, dir, cur)
-    require(segs.nonEmpty, s"no live segments under $dir")
-    adjustStats(spark, dir, cur, statsOf(spark, dir, segs))
+    if (segs.isEmpty) spark.range(1).select(lit(0L).as("n_docs"), lit(0L).as("tot_dl"))
+    else adjustStats(spark, dir, cur, statsOf(spark, dir, segs))
   }
 
   /** Subtract the version's tombstoned docs from a one-row
@@ -680,7 +677,8 @@ object InvertedIndex {
     require(qTerms.nonEmpty, "maxScorePlan requires at least one query term")
     val cur = committed(spark, dir)
     val segs = segsOf(spark, dir, cur)
-    require(segs.nonEmpty, s"no live segments under $dir")
+    // no documents: no bound to prune with
+    if (segs.isEmpty) return (qTerms, None)
     maxScorePlanResolved(spark, dir, qTerms, k, segs, cur,
       livePosts(spark, dir, qTerms, segs, cur),
       adjustStats(spark, dir, cur, statsOf(spark, dir, segs)))

@@ -67,11 +67,17 @@ object RollupNav {
 
   private def dayOf(rel: String): String = rel.takeWhile(_ != '/')
 
+  /** Commit a cube version with its applied high-water — `hw` rides
+    * every commit, so a maintenance commit never drops the replay guard.
+    */
   private def commit(spark: SparkSession, dir: String, version: Long,
                      schema: org.apache.spark.sql.types.StructType,
-                     files: Seq[String], batchId: Option[Long]): Unit =
-    StoreManifest.commitFiles(spark, dir, version, schema, files,
-      batchId.map("batch\t" + _).toSeq)
+                     files: Seq[String], hw: StoreManifest.HighWater): Unit =
+    StoreManifest.commitFiles(spark, dir, version, schema, files, Seq(hw.line))
+
+  /** The current version's replay guard. */
+  private def guard(spark: SparkSession, dir: String): StoreManifest.HighWater =
+    StoreManifest.guard(spark, dir, StoreManifest.currentVersion(spark, dir))
 
   private def readManifest(spark: SparkSession, dir: String, version: Long)
       : (org.apache.spark.sql.types.StructType, Seq[String]) =
@@ -108,7 +114,8 @@ object RollupNav {
       val next = StoreManifest.currentVersion(spark, dir) + 1
       val moved = StoreManifest.stageAndMove(spark,
         new org.apache.hadoop.fs.Path(dir), agg, "day", None, next)
-      commit(spark, dir, next, schema, moved, None)
+      // a rebuild keeps the stream's replay guard
+      commit(spark, dir, next, schema, moved, guard(spark, dir))
       vacuum(spark, dir)
     }
 
@@ -126,15 +133,16 @@ object RollupNav {
     * materialize, byte-identical answers).
     *
     * DELTAS ARE NOT IDEMPOTENT — a replayed batch would double-count —
-    * so streaming callers pass the trigger's `batchId`, recorded in the
-    * manifest it commits: a replay finds its id in the CURRENT manifest
-    * and no-ops. The whole batch commits in one rename, so there is no
-    * partially-applied state to recover — a crash anywhere before the
-    * commit leaves version N intact plus unreferenced orphans, and the
-    * replay re-derives every day from N. Only the current manifest is
-    * consulted (sufficient: Structured Streaming replays only the
-    * in-flight trigger, never one that a later trigger has already
-    * superseded — the same argument the r9 per-day markers rested on).
+    * so streaming callers pass the trigger's `batchId`, which commits as
+    * the manifest's `hw` ([[StoreManifest.replayed]]): the batch at `hw`
+    * no-ops, and a lower one, or the one at `hw` from another streaming
+    * query, throws. Every other commit ([[refreshDays]],
+    * [[materialize]], an id-less maintain) carries `hw` forward, so the
+    * guard outlives maintenance between a commit and its replay. The
+    * whole batch commits in one rename, so there is no partially-applied
+    * state to recover — a crash anywhere before the commit leaves
+    * version N intact plus unreferenced orphans, and the replay
+    * re-derives every day from N.
     */
   def maintain(spark: SparkSession, dir: String, rollup: Rollup,
                batch: DataFrame, batchId: Option[Long] = None): Unit =
@@ -170,9 +178,8 @@ object RollupNav {
           "dir was lost; restore it (or rebuild with materialize) instead " +
           "of adopting an unknowable file set")
     }
-    val applied =
-      if (cur >= 0) StoreManifest.read(spark, dir, cur, "batch") else Seq.empty
-    if (batchId.exists(id => applied.contains(id.toString))) return // replay no-op
+    val hw = guard(spark, dir)
+    if (batchId.exists(StoreManifest.replayed(spark, dir, hw, _))) return // replay no-op
     val delta = aggregateRollup(batch, rollup)
     val days = delta.select("day").distinct().as[String].collect().sorted
     if (days.isEmpty) return
@@ -199,7 +206,8 @@ object RollupNav {
     val moved = StoreManifest.stageAndMove(spark,
       new org.apache.hadoop.fs.Path(dir), merged, "day", Some(days.toSet), next)
     val carried = curFiles.filterNot(f => dayDirs.contains(dayOf(f)))
-    commit(spark, dir, next, schema, carried ++ moved, batchId) // THE commit point
+    commit(spark, dir, next, schema, carried ++ moved,
+      batchId.fold(hw)(StoreManifest.applying(spark, _))) // THE commit point
     vacuum(spark, dir)
   }
 
@@ -217,9 +225,9 @@ object RollupNav {
     * commits. A day with NO surviving facts vanishes from the manifest
     * (its bytes go at the next vacuum). Unlike maintain's deltas this
     * is content-idempotent — a replay re-derives the same partials —
-    * so no batchId bookkeeping is needed. The previous version stays
-    * readable until vacuum expires it: the same auditable-erasure
-    * window as MergeInto.deleteWhere.
+    * so it consumes no batch id and carries `hw` forward. The previous
+    * version stays readable until vacuum expires it: the same
+    * auditable-erasure window as MergeInto.deleteWhere.
     */
   def refreshDays(spark: SparkSession, dir: String, rollup: Rollup,
                   facts: DataFrame, days: Seq[String]): Unit = {
@@ -237,7 +245,8 @@ object RollupNav {
         "day", Some(days.toSet), next)
       val dayDirs = days.map(d => s"day=${StoreManifest.esc(d)}").toSet
       val carried = curFiles.filterNot(f => dayDirs.contains(dayOf(f)))
-      commit(spark, dir, next, schema, carried ++ moved, None) // THE commit point
+      commit(spark, dir, next, schema, carried ++ moved,
+        guard(spark, dir)) // THE commit point
       vacuum(spark, dir)
     }
   }

@@ -6,12 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The ONE commit primitive every versioned store publishes through —
   * the Delta/Iceberg-style pointer protocol [[MergeInto]] proved out,
   * extracted so the full-text index ([[InvertedIndex]]), the rollup
-  * cube ([[RollupNav]]), the dedup store ([[DedupStore]]) and the ANN
-  * store ([[AnnIndexStore]]) commit the same way instead of via direct
-  * directory renames (ADVICE r9: two sequential renames let a
-  * concurrent reader transiently see a day missing; a plain
-  * `Files.move` silently degrades to copy+delete on filesystems where
-  * rename is not atomic).
+  * cube ([[RollupNav]]), the dedup store ([[DedupStore]]), the ANN
+  * store ([[AnnIndexStore]]) and the hour-partitioned serving store
+  * ([[graft.streaming.PartitionedServingSink]]) commit the same way
+  * instead of via direct directory renames or pointer files (ADVICE r9:
+  * two sequential renames let a concurrent reader transiently see a day
+  * missing; a plain `Files.move` silently degrades to copy+delete on
+  * filesystems where rename is not atomic).
   *
   * Contract: a version is a newline-joined list of `tag\tvalue` lines
   * under `_graft_manifest/v<N>.manifest`. Manifests are written to a
@@ -78,6 +79,89 @@ object StoreManifest {
       case l if l.startsWith(s"$tag\t") => l.substring(tag.length + 1)
     }
 
+  /** The replay guard of every stream-fed store (the full-text index,
+    * the rollup cube, the ANN store, the partitioned serving store):
+    * one `hw\t<batch>[\t<query>]` line — the highest batch id the store
+    * has applied, and the id of the streaming query that applied it
+    * (empty outside one). Spark keeps a query's id in its checkpoint, so
+    * a restart from that checkpoint keeps it and a fresh checkpoint gets
+    * a new one. Every commit writes the line, carrying it forward
+    * verbatim unless it applies a new batch, so the guard survives
+    * maintenance commits and commits in the same rename as the batch's
+    * data.
+    */
+  final case class HighWater(batch: Long, query: String) {
+    def line: String = if (query.isEmpty) s"hw\t$batch" else s"hw\t$batch\t$query"
+  }
+
+  /** The guard of a store that has applied no batch. */
+  val NoHighWater: HighWater = HighWater(-1L, "")
+
+  /** The guard that commits `batch` applied by this thread. */
+  def applying(spark: SparkSession, batch: Long): HighWater =
+    HighWater(batch, runningQuery(spark))
+
+  /** The id of the streaming query whose batch this thread runs — the
+    * property Spark sets on a query's stream thread, which runs its
+    * foreachBatch function; empty outside a query.
+    */
+  private def runningQuery(spark: SparkSession): String =
+    Option(spark.sparkContext.getLocalProperty(
+      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
+      .getOrElse("")
+
+  /** The guard of a committed version's lines. Every commit of a
+    * stream-fed store writes one, so a version without it predates the
+    * guard: its replay state (IngestPipeline's mark dir beside the
+    * index, the cube's `batch` lines) is not read here, and taking it
+    * for "nothing applied" would apply batches again — refused.
+    */
+  def guard(dir: String, lines: Seq[String]): HighWater =
+    lines.collectFirst { case l if l.startsWith("hw\t") => l.split('\t') }
+      .map(f => HighWater(f(1).toLong, f.lift(2).getOrElse("")))
+      .getOrElse(throw new IllegalArgumentException(s"the store under $dir " +
+        "has no `hw` line: it was written before the manifest carried its " +
+        "replay guard — rebuild it into a new dir"))
+
+  /** The guard of version `v` ([[NoHighWater]] before the first commit). */
+  def guard(spark: SparkSession, dir: String, v: Long): HighWater =
+    if (v < 0) NoHighWater else guard(dir, readLines(spark, dir, v))
+
+  /** The applied high-water of the current version; -1 if none. */
+  def highWater(spark: SparkSession, dir: String): Long =
+    guard(spark, dir, currentVersion(spark, dir)).batch
+
+  /** Whether applying `batch` to a store guarded by `hw` is a replay of
+    * the applied batch. Under one checkpoint Spark re-runs only its
+    * latest batch, under the same query id, so two cases are refused
+    * loudly instead of silently skipped or applied twice: an id below
+    * `hw`, and the id at `hw` from another query — both come from a
+    * checkpoint that did not feed this store (a fresh checkpoint
+    * restarts at batch 0).
+    */
+  def replayed(spark: SparkSession, dir: String, hw: HighWater, batch: Long): Boolean = {
+    require(batch >= hw.batch, s"batch $batch is below the applied high-water " +
+      s"${hw.batch} of the store under $dir — it comes from a checkpoint that " +
+      "did not feed this store; restart from that store's own checkpoint")
+    val query = runningQuery(spark)
+    require(batch > hw.batch || hw.query.isEmpty || query.isEmpty || query == hw.query,
+      s"batch $batch of streaming query $query is at the applied high-water of " +
+        s"the store under $dir, which query ${hw.query} applied — a fresh " +
+        "checkpoint's batch, not a replay; restart from that store's own checkpoint")
+    batch == hw.batch
+  }
+
+  /** Commit the current version's lines again as the next version with
+    * the guard raised to `batch` — how a feeder records a batch that
+    * brought no data. A no-op at or below the high-water.
+    */
+  def markApplied(spark: SparkSession, dir: String, batch: Long): Unit = {
+    val cur = currentVersion(spark, dir)
+    if (batch > guard(spark, dir, cur).batch)
+      commit(spark, dir, cur + 1, (if (cur < 0) Nil else readLines(spark, dir, cur))
+        .filterNot(_.startsWith("hw\t")) :+ applying(spark, batch).line)
+  }
+
   /** Commit `lines` as version `version`: tmp write, ONE rename — the
     * atomic pointer flip every store publish funnels through.
     */
@@ -98,8 +182,7 @@ object StoreManifest {
   /** Commit a (pinned schema, data files, extra lines) version — the
     * shared encoding of every file-listing store (MergeInto snapshots,
     * RollupNav cubes): one `schema\t<json>` line, sorted `file\t<rel>`
-    * lines, then any store-specific lines (e.g. RollupNav's applied
-    * `batch\t<id>` records).
+    * lines, then any store-specific lines (e.g. RollupNav's `hw`).
     */
   def commitFiles(spark: SparkSession, dir: String, version: Long,
                   schema: org.apache.spark.sql.types.StructType,

@@ -12,13 +12,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Exactly-once EFFECT from at-least-once delivery: each trigger's
   * postings become ONE new segment (`seg=b<batchId>`) whose data lands
-  * before a manifest-pointer flip commits it — [[InvertedIndex.append]]
-  * short-circuits if the current manifest already references the
-  * segment, so a replayed trigger is a no-op, a crash mid-write leaves
-  * only an invisible tmp the replay restages, and a crash between the
-  * data rename and the manifest commit is healed by the replay
-  * committing the (already whole) segment. Search-after-stream ≡ batch
-  * rebuild of the same documents (InvertedIndexSpec).
+  * before the manifest rename commits it together with `hw = batchId`
+  * — [[InvertedIndex.append]] returns at once for the batch at `hw`, so
+  * a replayed trigger (a restart from this query's checkpoint) is a
+  * no-op, and a crash before the commit leaves only an unreferenced dir
+  * the replay rewrites. A restart from a fresh checkpoint is refused:
+  * its batch ids restart at 0, below or at `hw` under a new query id. An
+  * empty trigger commits nothing: append learns the batch is empty from
+  * the count it observes on its own posting write, with no probe job.
+  * Search-after-stream ≡ batch rebuild of the same documents
+  * (InvertedIndexSpec).
   *
   * Scale shape per trigger: one batch-sized tokenize + aggregate and
   * ≤ `buckets` files — cost tracks the STREAM rate, not index size.
@@ -45,14 +48,10 @@ object IndexSink {
             buckets: Int = 32, maxSegments: Int = 8): StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the emptiness probe stays: append commits a segment (and a
-        // version) even for an empty batch
-        if (!batch.isEmpty) {
-          InvertedIndex.append(batch, dir, s"b$batchId", buckets)
-          if (InvertedIndex.segments(batch.sparkSession, dir).size > maxSegments)
-            InvertedIndex.compact(batch.sparkSession, dir,
-              targetSegs = math.max(1, maxSegments / 2))
-        }
+        InvertedIndex.append(batch, dir, batchId, buckets)
+        if (InvertedIndex.segments(batch.sparkSession, dir).size > maxSegments)
+          InvertedIndex.compact(batch.sparkSession, dir,
+            targetSegs = math.max(1, maxSegments / 2))
         ()
       }
       .option("checkpointLocation", checkpoint)

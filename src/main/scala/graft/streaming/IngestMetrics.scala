@@ -29,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   *
   * The trigger snapshot also reports catch-up LAG as the three
   * high-waters the pipeline's derivations advance (max ingest version
-  * vs the index's dv mark vs the ANN store's `hw`) plus
+  * vs the index's `hw` vs the ANN store's `hw`) plus
   * [[IngestPipeline.oldestLagging]], and per-store live-object counts
   * (retained manifests, doc/seen files, index segments, ANN manifests) —
   * the numbers an operator needs to see a stuck derivation or an
@@ -61,7 +61,7 @@ object IngestMetrics {
     // ---- attempt-scoped trigger snapshot (replay overwrites)
     val cur = StoreManifest.currentVersion(spark, dedupDir)
     val ingestHw = if (ingestVersions.isEmpty) -1L else ingestVersions.max
-    val dvHw = IngestPipeline.dvHighWater(spark, indexDir)
+    val dvHw = InvertedIndex.highWater(spark, indexDir)
     val annHw = annDir.fold(-1L)(ad => AnnIndexStore.highWater(spark, ad))
     val lagging = IngestPipeline.oldestLagging(spark, dedupDir,
       Some(indexDir), annDir)

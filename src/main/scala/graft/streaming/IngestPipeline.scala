@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.{AnnIndexStore, DedupStore, InvertedIndex, Observed, StoreManifest}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -20,14 +19,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * appendBatch (every fingerprint already committed), so the accepted
   * docs would never reach the derived store. Instead each trigger runs
   * a catch-up per store: every retained dedup version carrying the
-  * `ingest` manifest tag and no corresponding derived commit (index
-  * segment `dv<version>`; ANN store `hw` below the version) appends now,
-  * reading exactly the doc files that version added (its `v<version>-`
-  * prefixed names). Maintenance versions (delete, compactSeen) carry no
-  * tag, so a survivor rewrite can never be re-ingested as new content.
-  * Every half is idempotent (dedup appendBatch is content-convergent;
-  * index append short-circuits on a committed segment; ANN appendBatch
-  * on its `hw`), so any crash point replays to the same end state.
+  * `ingest` manifest tag and above the derived store's applied `hw`
+  * (the [[StoreManifest]] replay guard, committed in the same rename as
+  * the version's data) appends now, keyed by the version, reading
+  * exactly the doc files that version added (its `v<version>-` prefixed
+  * names). Versions ascend and none is skipped, so `v <= hw` is exactly
+  * "done" — whatever compaction later does to segment names.
+  * Maintenance versions (delete, compactSeen) carry no tag, so a
+  * survivor rewrite can never be re-ingested as new content. Every half
+  * is idempotent (dedup appendBatch is content-convergent; index append
+  * and ANN appendBatch skip a version at their `hw`), so any crash
+  * point replays to the same end state.
   *
   * Ordering constraint: [[DedupStore.vacuum]] must never expire an
   * ingest version a derived store has not committed yet — a retain
@@ -178,85 +180,31 @@ object IngestPipeline {
     StoreManifest.versions(spark, dedupDir)
       .filter(v => StoreManifest.read(spark, dedupDir, v, "ingest").nonEmpty)
 
-  /** The max dedup version whose `dv` segment the index has consumed —
-    * needed because COMPACTION FOLDS SEGMENT NAMES AWAY: once
-    * [[InvertedIndex.compact]] merges `dv<v>` into a `c<i>` segment,
-    * "is seg=dv<v> live" stops answering "was v indexed", and without
-    * this mark the catch-up would re-index every folded version
-    * (duplicate postings) and [[vacuumSafe]] would pin forever (found
-    * by VacuumSpec, r13). Catch-up processes versions ASCENDING and
-    * never skips one, so `v <= highWater` is exactly "done". Raised
-    * (atomic tmp+rename) immediately after each version commits — a
-    * crash before the raise is covered by the still-live segment name;
-    * the name is only foldable after the next catch-up, which runs
-    * before any pipeline compaction, re-raises the mark. (Corollary:
-    * compact a pipeline-fed index only through the pipeline trigger or
-    * after a catch-up.)
-    */
-  private val DvHighWater = "_graft_dv_highwater"
-  private val DvMarkRe = """v(\d+)""".r
-
-  /** The mark is a DIRECTORY of `v<N>` files and the max wins — a raise
-    * CREATES a new name (one rename, nothing overwritten or deleted
-    * first), then sweeps older entries; a crash at any point leaves
-    * either the old max or both (harmless). A delete-then-rename single
-    * file would have a lost-mark crash window, and a lost mark after a
-    * compaction folded the dv names would re-index those versions.
-    */
-  private[streaming] def dvHighWater(spark: SparkSession, indexDir: String): Long = {
-    val d = new Path(indexDir, DvHighWater)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) -1L
-    else fs.listStatus(d).map(_.getPath.getName)
-      .collect { case DvMarkRe(n) => n.toLong }
-      .foldLeft(-1L)(math.max)
-  }
-
-  private def raiseDvHighWater(spark: SparkSession, indexDir: String,
-                               v: Long): Unit = {
-    val d = new Path(indexDir, DvHighWater)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (dvHighWater(spark, indexDir) >= v) return
-    fs.mkdirs(d)
-    val tmp = new Path(d, s".v$v-${java.util.UUID.randomUUID()}.tmp")
-    fs.create(tmp, true).close()
-    require(fs.rename(tmp, new Path(d, s"v$v")), s"highwater raise to $v failed")
-    // sweep superseded marks (and crash-orphaned dot-tmps — single
-    // writer, so any tmp left is a dead earlier attempt) AFTER the new
-    // max landed
-    fs.listStatus(d).map(_.getPath.getName).foreach {
-      case DvMarkRe(n) if n.toLong < v => fs.delete(new Path(d, s"v$n"), false)
-      case t if t.startsWith(".") => fs.delete(new Path(d, t), false)
-      case _ => ()
-    }
-  }
-
-  /** Index every retained ingest version the index has not committed
-    * yet (past the [[DvHighWater]] mark, segment `dv<version>`);
-    * returns the segments appended. Safe to call at any time — the
-    * version scan and the append are idempotent. An all-erased lagging
-    * version still commits its (empty) `dv<v>` segment so it stops
-    * lagging and stops pinning [[vacuumSafe]].
+  /** Index every retained ingest version above the index's `hw`
+    * ([[InvertedIndex.highWater]]), ascending; returns versions
+    * consumed. Each version's survivors append keyed by the version,
+    * which commits the segment and the raised `hw` together; a version
+    * with no surviving docs raises `hw` alone
+    * ([[InvertedIndex.markApplied]]) so it stops lagging and stops
+    * pinning [[vacuumSafe]]. Safe to call at any time.
     */
   def indexCatchUp(spark: SparkSession, dedupDir: String, indexDir: String,
                    idxBuckets: Int = 32): Long = {
     val cur = StoreManifest.currentVersion(spark, dedupDir)
     if (cur < 0) return 0L
-    val have = InvertedIndex.segments(spark, indexDir).toSet
     val curDocFiles = StoreManifest.read(spark, dedupDir, cur, "doc").toSet
     val ingestVersions = ingestVersionsOf(spark, dedupDir)
-    val hw = dvHighWater(spark, indexDir)
-    var appended = 0L
+    val hw = InvertedIndex.highWater(spark, indexDir)
+    var consumed = 0L
     for (v <- ingestVersions if v > hw) {
-      if (!have.contains(s"seg=dv$v"))
-        versionSurvivors(spark, dedupDir, v, ingestVersions,
-            curDocFiles, Seq("doc_id", "text")).foreach { docsV =>
-          if (InvertedIndex.append(docsV, indexDir, s"dv$v", idxBuckets))
-            appended += 1
-        }
-      raiseDvHighWater(spark, indexDir, v)
+      val docsV = versionSurvivors(spark, dedupDir, v, ingestVersions,
+        curDocFiles, Seq("doc_id", "text"))
+      // append commits nothing for a version whose docs were all erased
+      if (!docsV.exists(InvertedIndex.append(_, indexDir, v, idxBuckets)))
+        InvertedIndex.markApplied(spark, indexDir, v)
+      consumed += 1
     }
-    appended
+    consumed
   }
 
   /** ANN-index every retained ingest version above the ANN store's
@@ -324,13 +272,10 @@ object IngestPipeline {
                     indexDir: Option[String],
                     annDir: Option[String]): Option[Long] = {
     if (StoreManifest.currentVersion(spark, dedupDir) < 0) return None
-    val have = indexDir.fold(Set.empty[String])(d =>
-      InvertedIndex.segments(spark, d).toSet)
-    val hw = indexDir.fold(Long.MaxValue)(d => dvHighWater(spark, d))
-    val annHw = annDir.fold(Long.MaxValue)(ad => AnnIndexStore.highWater(spark, ad))
-    ingestVersionsOf(spark, dedupDir)
-      .find(v => indexDir.exists(_ => v > hw && !have.contains(s"seg=dv$v")) ||
-        v > annHw)
+    val hw = math.min(
+      indexDir.fold(Long.MaxValue)(InvertedIndex.highWater(spark, _)),
+      annDir.fold(Long.MaxValue)(AnnIndexStore.highWater(spark, _)))
+    ingestVersionsOf(spark, dedupDir).find(_ > hw)
   }
 
   /** Vacuum the dedup store WITHOUT ever expiring a version an

@@ -1,13 +1,12 @@
 package graft.streaming
 
+import graft.operators.StoreManifest
 import graft.sources.JsonIngest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
-import scala.jdk.CollectionConverters._
 
 /** The 100 TB evolution of [[ServingSink]]: serving views PARTITIONED BY
   * HOUR with partition-level incremental rewrite.
@@ -21,95 +20,76 @@ import scala.jdk.CollectionConverters._
   *
   * {{{
   * store/
-  *   _COMMIT                    last committed batch id (atomic pointer)
-  *   manifest/v<batch>.manifest hour-key|version lines: the COMPLETE map
-  *                              of which snapshot serves each hour
-  *   counts_per_user/h<key>/v<batch>/   (parquet snapshot)
-  *   uniques_hourly/h<key>/v<batch>/
+  *   _graft_manifest/v<N>.manifest  one `hour\t<key>\t<ver>` line per hour
+  *                                  (the COMPLETE map of which snapshot
+  *                                  serves each hour) plus one `hw` line
+  *   counts_per_user/h<key>/v<N>/   (parquet snapshot)
+  *   uniques_hourly/h<key>/v<N>/
   *   rejects/v<batch>/
   * }}}
   *
-  * Commit protocol (unchanged from ServingSink, now two-level): write the
-  * touched partitions' new snapshots, write the full manifest for this
-  * batch, then flip `_COMMIT` atomically. A replayed batch id is skipped
-  * before any write; a crash before the flip leaves orphan snapshot dirs
-  * that the next successful commit's GC removes. Readers resolve
-  * `_COMMIT` → manifest → per-hour snapshot paths, so they always see one
-  * consistent version set; the previously-committed version of every
-  * partition survives one more commit for in-flight readers.
+  * Commit protocol: a [[StoreManifest]] store. Write the touched
+  * partitions' new snapshots, then commit the full hour map as the next
+  * version in ONE manifest rename, with `hw` = the applied ingest batch.
+  * The batch at `hw` is a replay, skipped before any write; one below it,
+  * or at it from another streaming query, comes from a checkpoint that
+  * did not feed this store and is refused ([[StoreManifest.replayed]]).
+  * A crash before the rename leaves orphan snapshot dirs that the next
+  * commit's GC removes.
+  * Readers resolve the current manifest → per-hour snapshot paths, so
+  * they always see one consistent version set; the previous version's
+  * snapshots survive one more commit for in-flight readers.
   *
   * The merge math is ServingSink's: counters merge by SUM, uniques merge
   * by HLL sketch union (mergeable state, never a rescan of raw events).
   */
 object PartitionedServingSink {
 
-  private def commitFile(storeDir: String) = Paths.get(storeDir, "_COMMIT")
-
-  /** Committed store VERSION, -1 if the store is empty. Store versions
-    * and ingest batch ids are decoupled (r12): `_COMMIT` line 1 is the
-    * version every snapshot/manifest path resolves through; line 2 is
-    * the highest APPLIED ingest batch id, which alone drives the
-    * replay-skip test. The split is what lets a maintenance commit that
-    * consumes no ingest batch — [[eraseUsers]] — bump the version
-    * without making the replay guard swallow the NEXT real micro-batch
-    * (version N+1 would otherwise read as "batch N+1 already applied"
-    * and its data would be silently dropped).
+  /** Hour-key → snapshot version serving that hour, and the replay
+    * guard (`hw`, the applied ingest batch), of store version `v` (empty
+    * and unapplied before the first commit).
     */
-  def committedBatch(storeDir: String): Long = {
-    val f = commitFile(storeDir)
-    if (Files.exists(f)) Files.readAllLines(f).get(0).trim.toLong else -1L
-  }
-
-  /** Highest ingest batch id already folded into the committed state —
-    * the replay-skip floor (line 2 of `_COMMIT`).
-    */
-  def appliedIngestBatch(storeDir: String): Long = {
-    val f = commitFile(storeDir)
-    if (!Files.exists(f)) -1L
-    else {
-      val lines = Files.readAllLines(f)
-      require(lines.size() == 2,
-        s"$f holds ${lines.size()} line(s); a store commit writes two " +
-          s"(version, applied batch) — $storeDir is not a committed store")
-      lines.get(1).trim.toLong
-    }
-  }
-
-  /** Atomic two-line commit pointer flip (version, applied batch). */
-  private def flipCommit(storeDir: String, version: Long, batch: Long): Unit = {
-    val tmp = Files.createTempFile(Paths.get(storeDir), "_commit", ".tmp")
-    Files.writeString(tmp, s"$version\n$batch", StandardCharsets.UTF_8)
-    Files.move(tmp, commitFile(storeDir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def manifestPath(storeDir: String, batchId: Long): Path =
-    Paths.get(storeDir, "manifest", s"v$batchId.manifest")
-
-  /** hour-key → snapshot version serving that hour, for a committed batch. */
-  private def readManifest(storeDir: String, batchId: Long): Map[String, Long] = {
-    val p = manifestPath(storeDir, batchId)
-    if (batchId < 0 || !Files.exists(p)) Map.empty
-    else Files.readAllLines(p).asScala.filter(_.nonEmpty).map { line =>
-      val Array(k, v) = line.split('|')
-      k -> v.toLong
+  private def committed(spark: SparkSession, storeDir: String,
+                        v: Long): (Map[String, Long], StoreManifest.HighWater) = {
+    val lines = if (v < 0) Nil else StoreManifest.readLines(spark, storeDir, v)
+    val hours = lines.collect { case l if l.startsWith("hour\t") =>
+      val Array(_, k, ver) = l.split('\t')
+      k -> ver.toLong
     }.toMap
+    (hours, if (v < 0) StoreManifest.NoHighWater else StoreManifest.guard(storeDir, lines))
+  }
+
+  /** Commit store version `v` — the complete hour map plus `hw` — then
+    * collect the snapshots no retained version serves.
+    */
+  private def commit(spark: SparkSession, storeDir: String, v: Long,
+                     hours: Map[String, Long], hw: StoreManifest.HighWater): Unit = {
+    StoreManifest.commit(spark, storeDir, v,
+      hours.toSeq.sorted.map { case (k, ver) => s"hour\t$k\t$ver" } :+ hw.line)
+    gc(spark, storeDir)
   }
 
   private def partDir(storeDir: String, table: String, hourKey: String, ver: Long): String =
     s"$storeDir/$table/h$hourKey/v$ver"
 
   /** Idempotent micro-batch commit; see the protocol in the scaladoc.
-    * Replay detection is against the APPLIED-BATCH floor, not the store
+    * Replay detection is against the applied-batch `hw`, not the store
     * version — a maintenance commit between two ingest triggers must
     * not make the second trigger look replayed.
     */
   def upsertBatch(spark: SparkSession, storeDir: String,
                   parsed: DataFrame, batchId: Long): Unit = {
-    if (batchId <= appliedIngestBatch(storeDir)) return // replayed batch
-    val prevCommitted = committedBatch(storeDir)
-    val version = prevCommitted + 1
-    val prevManifest = readManifest(storeDir, prevCommitted)
+    val prev = StoreManifest.currentVersion(spark, storeDir)
+    // no manifest yet: only a crashed first batch's `v0` snapshots can
+    // be here. Any other snapshot was published by a manifest this dir
+    // has lost (or by a layout before the manifest) — refused, since the
+    // commit's GC would delete it
+    require(prev >= 0 || snapshots(storeDir).forall(_.getName == "v0"),
+      s"serving store $storeDir holds snapshots but no manifest — restore " +
+        "the manifest or rebuild the store into a new dir")
+    val (prevManifest, hw) = committed(spark, storeDir, prev)
+    if (StoreManifest.replayed(spark, storeDir, hw, batchId)) return
+    val version = prev + 1
     val batch = parsed.cache()
     try {
       val valid = JsonIngest.valid(batch)
@@ -161,30 +141,15 @@ object PartitionedServingSink {
 
       // complete manifest for this commit: untouched hours keep serving
       // their old snapshots — those files were never opened
-      val newManifest = prevManifest ++ touched.map(_ -> version)
-      writeManifest(storeDir, version, newManifest)
-      flipCommit(storeDir, version, batchId)
-
-      gc(storeDir, prevCommitted, prevManifest)
+      commit(spark, storeDir, version, prevManifest ++ touched.map(_ -> version),
+        StoreManifest.applying(spark, batchId))
     } finally { batch.unpersist(); () }
-  }
-
-  private def writeManifest(storeDir: String, version: Long,
-                            manifest: Map[String, Long]): Unit = {
-    Files.createDirectories(Paths.get(storeDir, "manifest"))
-    val mTmp = Files.createTempFile(Paths.get(storeDir, "manifest"), "_m", ".tmp")
-    Files.writeString(mTmp,
-      manifest.toSeq.sorted.map { case (k, v) => s"$k|$v" }.mkString("\n"),
-      StandardCharsets.UTF_8)
-    Files.move(mTmp, manifestPath(storeDir, version),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** USER-KEYED ERASURE over the serving views (the GDPR path,
     * r12) — rewrite ONLY the hour partitions where any of `userIds`
-    * holds state, through the exact same stage → manifest → pointer
-    * protocol as ingest, consuming NO ingest batch id (the version/
-    * batch split above):
+    * holds state, through the exact same stage → manifest protocol as
+    * ingest, consuming NO ingest batch id (`hw` carries verbatim):
     *
     *  - `counts_per_user` retracts EXACTLY: the user's (hour, user_id)
     *    rows ARE the user's whole contribution, so an anti-filter is
@@ -202,18 +167,18 @@ object PartitionedServingSink {
     * maintained hour holds any of the ids: returns 0 and commits
     * NOTHING (the repo-wide delete-API replay contract). Single-writer
     * with ingest quiesced, like every maintenance pass here; the next
-    * ingest trigger after this commit applies normally because the
-    * replay floor is untouched.
+    * ingest trigger after this commit applies normally because `hw` is
+    * untouched.
     *
     * Returns the number of hour partitions rewritten or dropped.
     */
   def eraseUsers(spark: SparkSession, storeDir: String, userIds: Seq[Long],
                  survivingEvents: DataFrame): Long = {
     if (userIds.isEmpty) return 0L
-    val prevCommitted = committedBatch(storeDir)
-    if (prevCommitted < 0) return 0L // empty store: vacuously erased
-    val prevManifest = readManifest(storeDir, prevCommitted)
-    val version = prevCommitted + 1
+    val prev = StoreManifest.currentVersion(spark, storeDir)
+    if (prev < 0) return 0L // empty store: vacuously erased
+    val (prevManifest, hw) = committed(spark, storeDir, prev)
+    val version = prev + 1
     val hourKey = date_format(col("hour"), "yyyy-MM-dd'T'HH")
     val touched = countsPerUser(spark, storeDir)
       .filter(col("user_id").isin(userIds: _*))
@@ -238,56 +203,32 @@ object PartitionedServingSink {
           .parquet(partDir(storeDir, "uniques_hourly", key, version))
       }
     }
-    val newManifest = (prevManifest -- dropped) ++
-      (touched.toSet -- dropped).map(_ -> version)
-    writeManifest(storeDir, version, newManifest)
-    // the applied-batch floor carries VERBATIM: this commit consumed no
-    // ingest batch, and the next real trigger must not look replayed
-    flipCommit(storeDir, version, appliedIngestBatch(storeDir))
-    gc(storeDir, prevCommitted, prevManifest)
+    // `hw` carries VERBATIM: this commit consumed no ingest batch, and
+    // the next real trigger must not look replayed
+    commit(spark, storeDir, version,
+      (prevManifest -- dropped) ++ (touched.toSet -- dropped).map(_ -> version), hw)
     touched.length.toLong
   }
 
-  /** Drop snapshots no manifest at or after `prevCommitted` references:
-    * per hour dir, keep versions ≥ the previous manifest's version for
-    * that hour (in-flight readers hold at most the previous commit);
-    * drop manifests below the previous commit; sweep orphan tmp files.
+  /** Keep the newest two manifests (in-flight readers hold at most the
+    * previous commit) and delete every `table/h<key>/v<ver>` snapshot
+    * neither serves — crashed batches' orphans included.
     */
-  private def gc(storeDir: String, prevCommitted: Long,
-                 prevManifest: Map[String, Long]): Unit = {
-    def deleteTree(p: Path): Unit = graft.Fs.rmTree(p)
-    Seq("counts_per_user", "uniques_hourly").foreach { table =>
-      val tDir = Paths.get(storeDir, table)
-      if (Files.isDirectory(tDir)) {
-        Files.list(tDir).iterator().asScala.filter(_.getFileName.toString.startsWith("h"))
-          .toList.foreach { hourDir =>
-            val key = hourDir.getFileName.toString.drop(1)
-            // an hour absent from the previous manifest is brand new —
-            // nothing older than it can exist, so GC nothing there
-            val floor = prevManifest.getOrElse(key, Long.MinValue)
-            Files.list(hourDir).iterator().asScala.toList.foreach { vp =>
-              val n = vp.getFileName.toString
-              if (n.startsWith("v") && n.drop(1).forall(_.isDigit) && n.length > 1 &&
-                  n.drop(1).toLong < floor) deleteTree(vp)
-            }
-          }
-      }
-    }
-    val mDir = Paths.get(storeDir, "manifest")
-    if (Files.isDirectory(mDir)) {
-      Files.list(mDir).iterator().asScala.toList.foreach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("_m") && n.endsWith(".tmp")) Files.delete(p)
-        else if (n.startsWith("v") && n.endsWith(".manifest") &&
-          n.stripPrefix("v").stripSuffix(".manifest").forall(_.isDigit) &&
-          n.stripPrefix("v").stripSuffix(".manifest").toLong < prevCommitted)
-          Files.delete(p)
-      }
-    }
-    Files.list(Paths.get(storeDir)).iterator().asScala.toList.foreach { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith("_commit") && n.endsWith(".tmp")) Files.delete(p)
-    }
+  private def gc(spark: SparkSession, storeDir: String): Unit = {
+    val served = StoreManifest.expire(spark, storeDir, retain = 2)
+      .flatMap(v => committed(spark, storeDir, v)._1)
+      .map { case (k, ver) => s"h$k/v$ver" }.toSet
+    snapshots(storeDir)
+      .filterNot(snap => served(s"${snap.getParentFile.getName}/${snap.getName}"))
+      .foreach(snap => graft.Fs.rmTree(snap.toString))
+  }
+
+  /** Every `table/h<key>/v<ver>` snapshot dir on disk. */
+  private def snapshots(storeDir: String): Seq[java.io.File] = {
+    def ls(d: java.io.File) = Option(d.listFiles()).toSeq.flatten
+    for (table <- Seq("counts_per_user", "uniques_hourly");
+         hourDir <- ls(new java.io.File(storeDir, table));
+         snap <- ls(hourDir)) yield snap
   }
 
   /** Launch the topology: tail `inDir` NDJSON → validated ingest →
@@ -305,14 +246,16 @@ object PartitionedServingSink {
       .start()
   }
 
-  // ---- read path: resolve _COMMIT → manifest → per-hour snapshots ----
+  // ---- read path: resolve manifest → per-hour snapshots ----
 
-  private def servingPaths(storeDir: String, table: String): Seq[String] = {
-    val b = committedBatch(storeDir)
-    readManifest(storeDir, b).toSeq.sorted
+  private def servedHours(spark: SparkSession, storeDir: String): Seq[(String, Long)] =
+    committed(spark, storeDir, StoreManifest.currentVersion(spark, storeDir))._1.toSeq.sorted
+
+  private def servingPaths(spark: SparkSession, storeDir: String,
+                           table: String): Seq[String] =
+    servedHours(spark, storeDir)
       .map { case (k, v) => partDir(storeDir, table, k, v) }
       .filter(p => Files.exists(Paths.get(p)))
-  }
 
   // hour is plain TIMESTAMP in snapshots (see ServingSink.emptyCounts)
   private def emptyCounts(spark: SparkSession): DataFrame = {
@@ -325,7 +268,7 @@ object PartitionedServingSink {
 
   /** Keyed per-user counters — only the manifest-listed snapshots load. */
   def countsPerUser(spark: SparkSession, storeDir: String): DataFrame = {
-    val paths = servingPaths(storeDir, "counts_per_user")
+    val paths = servingPaths(spark, storeDir, "counts_per_user")
     if (paths.isEmpty) emptyCounts(spark)
     else spark.read.parquet(paths: _*)
   }
@@ -333,7 +276,7 @@ object PartitionedServingSink {
   /** Distinct users per hour from the merged sketches. */
   def uniquesHourly(spark: SparkSession, storeDir: String): DataFrame = {
     import spark.implicits._
-    val paths = servingPaths(storeDir, "uniques_hourly")
+    val paths = servingPaths(spark, storeDir, "uniques_hourly")
     if (paths.isEmpty)
       Seq.empty[(java.sql.Timestamp, Long)].toDF("hour", "approx_users")
     else spark.read.parquet(paths: _*)
@@ -349,8 +292,7 @@ object PartitionedServingSink {
     import spark.implicits._
     val from = java.time.LocalDateTime.parse(fromHour.replace(' ', 'T'))
     val until = java.time.LocalDateTime.parse(untilHour.replace(' ', 'T'))
-    val b = committedBatch(storeDir)
-    val paths = readManifest(storeDir, b).toSeq.sorted
+    val paths = servedHours(spark, storeDir)
       .filter { case (k, _) =>
         val h = java.time.LocalDateTime.parse(k + ":00:00", DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
         !h.isBefore(from) && h.isBefore(until)

@@ -12,15 +12,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Exactly-once EFFECT from at-least-once delivery: deltas are not
   * content-idempotent (a replayed batch would double-count), so
   * [[RollupNav.maintain]] is handed the trigger's `batchId`, which
-  * rides in the manifest version the batch commits. The WHOLE batch
-  * publishes in one manifest rename, so there is no partially-applied
-  * state: a replayed trigger finds its id in the current manifest and
-  * no-ops; a crash before the commit leaves the previous version
-  * intact plus unreferenced orphans the next vacuum sweeps — proven by
-  * RollupNavSpec's replay and crash-window tests. Older batch ids
-  * become irrelevant the moment the next trigger commits (Structured
-  * Streaming replays only the in-flight trigger), so the record never
-  * needs compaction discipline.
+  * commits as the cube manifest's `hw` line and rides every later
+  * commit, maintenance ones included. The WHOLE batch publishes in one
+  * manifest rename, so there is no partially-applied state: a replayed
+  * trigger finds its id at `hw` and no-ops; a crash before the commit
+  * leaves the previous version intact plus unreferenced orphans the
+  * next vacuum sweeps — proven by RollupNavSpec's replay and
+  * crash-window tests.
   *
   * Scale shape per trigger: one batch-sized aggregate, a manifest-
   * pruned read of just the touched days' partials, and ONE staged

@@ -297,11 +297,15 @@ class AnnStoreSpec extends SparkSpec {
         in.addData(b2); q.processAllAvailable()
       } finally q.stop()
 
-      // at-least-once replay: re-deliver batch 1's rows under its
-      // committed batchId — the store's hw must short-circuit
-      val (b1again, _) = newRows.splitAt(newRows.size / 2)
+      // at-least-once replay: Spark re-runs only a checkpoint's latest
+      // batch — re-deliver it under its committed batchId, and the
+      // store's hw must short-circuit. An older id comes from a
+      // checkpoint that did not feed the store: refused
+      val (b1again, b2again) = newRows.splitAt(newRows.size / 2)
       AnnIndexStore.appendBatch(spark,
-        b1again.toDF("vec_id", "embedding"), streamed, batchId = 0L)
+        b2again.toDF("vec_id", "embedding"), streamed, batchId = 1L)
+      intercept[IllegalArgumentException](AnnIndexStore.appendBatch(spark,
+        b1again.toDF("vec_id", "embedding"), streamed, batchId = 0L))
       // crash before the commit: a third batch's files land uncommitted —
       // searches and counts still answer from the previous version, and
       // the replay commits the batch once

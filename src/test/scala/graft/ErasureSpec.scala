@@ -134,7 +134,7 @@ class ErasureSpec extends SparkSpec {
       val old = docs.filter(col("doc_id") % 2 === 0)
       val fresh = docs.filter(col("doc_id") % 2 === 1)
       InvertedIndex.write(InvertedIndex.build(old), dir)
-      InvertedIndex.append(fresh, dir, "b1")
+      InvertedIndex.append(fresh, dir, 1L)
       val terms = InvertedIndex.topSpan(docs).split(' ').toSeq.distinct
       val matched = InvertedIndex.searchBm25(spark, dir, terms)
         .select("doc_id").collect().map(_.getLong(0)).sorted
@@ -160,7 +160,7 @@ class ErasureSpec extends SparkSpec {
 
       // the store has genuinely forgotten: the id is re-appendable
       InvertedIndex.append(
-        docs.filter(col("doc_id") === deadEven), dir, "b2")
+        docs.filter(col("doc_id") === deadEven), dir, 2L)
       assert(InvertedIndex.searchBm25(spark, dir, terms)
         .filter(col("doc_id") === deadEven).count() == 1L)
     } finally Fs.rmTree(dir)
@@ -173,8 +173,8 @@ class ErasureSpec extends SparkSpec {
       InvertedIndex.write(
         InvertedIndex.build(docs.filter(col("doc_id") % 4 =!= 1)
           .filter(col("doc_id") % 4 =!= 2)), dir)
-      InvertedIndex.append(docs.filter(col("doc_id") % 4 === 1), dir, "s1")
-      InvertedIndex.append(docs.filter(col("doc_id") % 4 === 2), dir, "s2")
+      InvertedIndex.append(docs.filter(col("doc_id") % 4 === 1), dir, 1L)
+      InvertedIndex.append(docs.filter(col("doc_id") % 4 === 2), dir, 2L)
       val ids = docs.select("doc_id").collect().map(_.getLong(0)).sorted
       val deadKept = ids.find(_ % 4 == 0).get  // lives in the big base
       val deadMerged = ids.find(_ % 4 == 1).get // lives in a small seg
@@ -418,7 +418,7 @@ class ErasureSpec extends SparkSpec {
         // ingest catches up in every store
         operators.MergeInto.mergeFiles(spark, snapDir,
           corpus.filter(col("doc_id") === lateId), Seq("doc_id"), "lang")
-        InvertedIndex.append(docs.filter(col("doc_id") === lateId), idxDir, "late")
+        InvertedIndex.append(docs.filter(col("doc_id") === lateId), idxDir, 0L)
         AnnIndexStore.appendBatch(spark, emb.filter(col("vec_id") === lateId), annDir, 99L)
 
         // ANY later trigger (here: a junk ticket for an id that never
@@ -525,11 +525,11 @@ class ErasureSpec extends SparkSpec {
         // replay convergence: the same ticket again commits NOTHING
         val (snapV, cubeV, servV) = (MergeInto.currentVersion(spark, snapDir),
           graft.operators.StoreManifest.currentVersion(spark, cubeDir),
-          PartitionedServingSink.committedBatch(servDir))
+          graft.operators.StoreManifest.currentVersion(spark, servDir))
         def committedNothing() =
           MergeInto.currentVersion(spark, snapDir) == snapV &&
             graft.operators.StoreManifest.currentVersion(spark, cubeDir) == cubeV &&
-            PartitionedServingSink.committedBatch(servDir) == servV
+            graft.operators.StoreManifest.currentVersion(spark, servDir) == servV
         in.addData("2"); q.processAllAvailable()
         assert(committedNothing(), "a replayed ticket must not commit a version in any store")
         // an empty trigger commits nothing either

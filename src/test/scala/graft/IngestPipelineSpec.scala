@@ -122,11 +122,23 @@ class IngestPipelineSpec extends SparkSpec {
       assert(IngestPipeline.oldestLagging(spark, dedupDir, idxDir).contains(1L))
       assert(IngestPipeline.indexCatchUp(spark, dedupDir, idxDir) == 1L)
       assert(indexedDocIds(idxDir) == Set(1L))
-      // the empty dv segment ended the lag — nothing pins vacuum anymore
+      // the version's `hw` mark ended the lag — nothing pins vacuum anymore
       assert(IngestPipeline.oldestLagging(spark, dedupDir, idxDir).isEmpty)
       assert(IngestPipeline.indexCatchUp(spark, dedupDir, idxDir) == 0L)
       // and ranked search over the healed index still works
       assert(InvertedIndex.searchBm25(spark, idxDir, Seq("alpha")).count() == 1L)
+      // a fresh index whose first version is all erased: its store names
+      // no segment, and every read answers "no documents"
+      val dedup2 = s"$base/dedup2"; val idx2 = s"$base/idx2"
+      DedupStore.appendBatch(spark, mkDocs((5L, "eta theta")), dedup2, buckets = 4)
+      assert(DedupStore.delete(spark, dedup2, Seq(5L)) == 1L)
+      assert(IngestPipeline.indexCatchUp(spark, dedup2, idx2) == 1L)
+      assert(IngestPipeline.oldestLagging(spark, dedup2, idx2).isEmpty)
+      assert(InvertedIndex.segments(spark, idx2).isEmpty)
+      assert(InvertedIndex.docLengths(spark, idx2).count() == 0L)
+      assert(InvertedIndex.searchBm25TopK(spark, idx2, Seq("eta"), 3).count() == 0L)
+      assert(InvertedIndex.maxScorePlan(spark, idx2, Seq("eta"), 3) == (Seq("eta"), None))
+      assert(InvertedIndex.corpusStats(spark, idx2).head().getLong(0) == 0L)
     } finally Fs.rmTree(base.toString)
   }
 
@@ -172,7 +184,7 @@ class IngestPipelineSpec extends SparkSpec {
       IngestPipeline.vacuumSafe(spark, dedupDir, idxDir, retain = 2)
       // the lagging version's manifest AND doc files must have survived:
       // the recovered pipeline still indexes it (doc 2 stays indexed —
-      // it was committed in dv0 and index-side erasure is EraseSink's
+      // it was committed by ingest version 0 and index-side erasure is EraseSink's
       // InvertedIndex.delete, not the dedup delete's job)
       assert(IngestPipeline.indexCatchUp(spark, dedupDir, idxDir) == 1L)
       assert(indexedDocIds(idxDir) == Set(1L, 2L, 3L))

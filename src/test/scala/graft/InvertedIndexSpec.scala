@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.InvertedIndex
+import graft.operators.{InvertedIndex, StoreManifest}
 import org.apache.spark.sql.functions._
 
 /** Positional inverted index (operators.InvertedIndex): exact phrase
@@ -59,12 +59,12 @@ class InvertedIndexSpec extends SparkSpec {
     try {
       InvertedIndex.write(InvertedIndex.build(old), incDir)
       val beforeFiles = spark.read.parquet(incDir).inputFiles.toSet
-      assert(InvertedIndex.append(fresh, incDir, "inc1"))
+      assert(InvertedIndex.append(fresh, incDir, 0L))
       assert(spark.read.parquet(incDir).inputFiles.toSet.intersect(beforeFiles)
         == beforeFiles, "append rewrote pre-existing posting files")
-      // a replayed append of the same segment is a committed no-op
+      // a replayed append of the same batch is a committed no-op
       val afterFiles = spark.read.parquet(incDir).inputFiles.toSet
-      assert(!InvertedIndex.append(fresh, incDir, "inc1"))
+      assert(!InvertedIndex.append(fresh, incDir, 0L))
       assert(spark.read.parquet(incDir).inputFiles.toSet == afterFiles)
       InvertedIndex.write(InvertedIndex.build(docs), fullDir)
       val toks = docs.orderBy("doc_id")
@@ -88,18 +88,50 @@ class InvertedIndexSpec extends SparkSpec {
     val slices = rows.grouped((rows.size + 1) / 2).toSeq
     val streamDir = java.nio.file.Files.createTempDirectory("graft_idxsink").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_idxsink_ck").toString
+    val freshCkpt = java.nio.file.Files.createTempDirectory("graft_idxsink_ck2").toString
     val fullDir = java.nio.file.Files.createTempDirectory("graft_idxsink_full").toString
     try {
-      // a torn earlier attempt: junk where batch 0's tmp would stage
-      val torn = new java.io.File(streamDir, ".tmp_seg_b0")
+      // a torn earlier attempt: junk where batch 0's segment lands
+      val torn = new java.io.File(streamDir, "seg=b0")
       torn.mkdirs()
       java.nio.file.Files.writeString(
         new java.io.File(torn, "junk.parquet").toPath, "not parquet")
       val in = MemoryStream[(Long, String)]
-      val q = graft.streaming.IndexSink.start(
+      def start() = graft.streaming.IndexSink.start(
         in.toDF().toDF("doc_id", "text"), streamDir, ckpt)
-      try slices.foreach { s => in.addData(s); q.processAllAvailable() }
-      finally q.stop()
+      val q = start()
+      try { in.addData(slices(0)); q.processAllAvailable() } finally q.stop()
+      val v0 = StoreManifest.currentVersion(spark, streamDir)
+      // a fresh checkpoint restarts at batch 0 — the store's high-water,
+      // applied by another query: refused, nothing committed
+      val other = MemoryStream[(Long, String)]
+      val qf = graft.streaming.IndexSink.start(
+        other.toDF().toDF("doc_id", "text"), streamDir, freshCkpt)
+      try {
+        other.addData(slices(1))
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+          qf.processAllAvailable())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(c => Option(c.getMessage).exists(_.contains("fresh checkpoint"))), e.toString)
+      } finally qf.stop()
+      assert(StoreManifest.currentVersion(spark, streamDir) == v0, "the refused batch committed")
+      // the query dies after the store's commit, before Spark's commit
+      // log: its restart re-runs batch 0 under the same query id — a no-op
+      Seq("0", ".0.crc").foreach(f => java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(ckpt, "commits", f)))
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        assert(java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt, "commits", "0")),
+          "test premise: the restart re-ran batch 0")
+        assert(StoreManifest.currentVersion(spark, streamDir) == v0, "the replayed batch committed")
+        in.addData(slices(1)); q2.processAllAvailable()
+        // an empty trigger commits no index version
+        val v = graft.operators.StoreManifest.currentVersion(spark, streamDir)
+        in.addData(Seq.empty[(Long, String)]); q2.processAllAvailable()
+        assert(graft.operators.StoreManifest.currentVersion(spark, streamDir) == v,
+          "an empty trigger committed an index version")
+      } finally q2.stop()
       InvertedIndex.write(InvertedIndex.build(docs), fullDir)
       val toks = docs.orderBy("doc_id")
         .select(split(col("text"), " ").as("t")).head().getSeq[String](0)
@@ -118,7 +150,25 @@ class InvertedIndexSpec extends SparkSpec {
       val (sb, fb) = (bm(streamDir), bm(fullDir))
       assert(sb == fb, "streamed-store BM25 != batch-store BM25 (bitwise)")
       assert(sb.nonEmpty)
-    } finally { Fs.rmTree(streamDir); Fs.rmTree(ckpt); Fs.rmTree(fullDir) }
+    } finally { Fs.rmTree(streamDir); Fs.rmTree(ckpt); Fs.rmTree(freshCkpt); Fs.rmTree(fullDir) }
+  }
+
+  test("a store committed without an hw line is refused by writes and still served") {
+    val docs = Tables.t(spark, sfDir, "documents")
+    val dir = java.nio.file.Files.createTempDirectory("graft_idxold").toString
+    try {
+      InvertedIndex.write(InvertedIndex.build(docs.filter(col("doc_id") % 2 === 0)), dir)
+      val n = InvertedIndex.docLengths(spark, dir).count()
+      // the layout before the guard: the same lines, no `hw`
+      StoreManifest.commit(spark, dir, 1L, StoreManifest.readLines(spark, dir, 0L)
+        .filterNot(_.startsWith("hw\t")))
+      val e = intercept[IllegalArgumentException](
+        InvertedIndex.append(docs.filter(col("doc_id") % 2 === 1), dir, 0L))
+      assert(e.getMessage.contains("no `hw` line") && e.getMessage.contains(dir), e.getMessage)
+      intercept[IllegalArgumentException](InvertedIndex.highWater(spark, dir))
+      assert(StoreManifest.currentVersion(spark, dir) == 1L, "the refused append committed")
+      assert(InvertedIndex.docLengths(spark, dir).count() == n)
+    } finally Fs.rmTree(dir)
   }
 
   test("bucket count is committed: reads ignore a mismatched caller; append/compact inherit it") {
@@ -132,7 +182,7 @@ class InvertedIndexSpec extends SparkSpec {
         dir, buckets = 8)
       // the append passes a WRONG count — the store's committed 8 must win
       assert(InvertedIndex.append(docs.filter(col("doc_id") % 2 === 1),
-        dir, "inc1", buckets = 16))
+        dir, 0L, buckets = 16))
       def bucketDirs(seg: String): Set[String] =
         Option(new java.io.File(dir, seg).listFiles()).toSeq.flatten
           .map(_.getName).filter(_.startsWith("bucket=")).toSet
@@ -169,21 +219,25 @@ class InvertedIndexSpec extends SparkSpec {
     // ADVICE r10: a compacted-away segment dir, retained on disk for an
     // older manifest's readers, passed the crash-window heal under a
     // reused name (fresh checkpoint restarting at b0) — the new batch's
-    // data was silently replaced by stale pre-compaction postings
+    // data was silently replaced by stale pre-compaction postings. The
+    // fresh checkpoint's batch 0 sits at the store's high-water under a
+    // new query id: refused, not taken for a replay
     val docs = Tables.t(spark, sfDir, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_idxadopt").toString
     try {
       InvertedIndex.write(InvertedIndex.build(docs.filter(col("doc_id") % 3 === 0)), dir)
-      assert(InvertedIndex.append(docs.filter(col("doc_id") % 3 === 1), dir, "b0"))
+      assert(asQuery("checkpoint-a")(
+        InvertedIndex.append(docs.filter(col("doc_id") % 3 === 1), dir, 0L)))
       assert(InvertedIndex.compact(spark, dir) > 0)
       // default retention keeps the pre-compaction manifest, so its
       // segment dirs survive vacuum — exactly the trap
       assert(new java.io.File(dir, "seg=b0").exists(),
         "test premise: superseded seg dir must still be on disk")
       val before = InvertedIndex.segments(spark, dir)
-      val e = intercept[IllegalArgumentException](
-        InvertedIndex.append(docs.filter(col("doc_id") % 3 === 2), dir, "b0"))
-      assert(e.getMessage.contains("older retained manifest"), e.getMessage)
+      val e = intercept[IllegalArgumentException](asQuery("checkpoint-b")(
+        InvertedIndex.append(docs.filter(col("doc_id") % 3 === 2), dir, 0L)))
+      assert(e.getMessage.contains("fresh checkpoint") &&
+        e.getMessage.contains(dir), e.getMessage)
       assert(InvertedIndex.segments(spark, dir) == before,
         "refused append must commit nothing")
     } finally Fs.rmTree(dir)
@@ -197,7 +251,7 @@ class InvertedIndexSpec extends SparkSpec {
       // five appended segments (disjoint doc slices)
       (0 until 5).foreach { i =>
         assert(InvertedIndex.append(docs.filter(col("doc_id") % 5 === i),
-          dir, s"b$i"))
+          dir, i.toLong))
       }
       assert(InvertedIndex.segments(spark, dir).size == 5)
       val toks = docs.orderBy("doc_id")
@@ -233,19 +287,6 @@ class InvertedIndexSpec extends SparkSpec {
     } finally Fs.rmTree(dir)
   }
 
-  /** A crashed append's leftovers: `docs` indexed by the writer into a
-    * scratch store and its segment renamed into `dir` as `seg`, with no
-    * manifest commit.
-    */
-  private def stageCrashedAppend(docs: org.apache.spark.sql.DataFrame,
-                                 dir: String, seg: String): Unit = {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_idxstage").toString
-    try {
-      InvertedIndex.write(InvertedIndex.build(docs), scratch)
-      Fs.atomicMove(s"$scratch/seg=base", new java.io.File(dir, seg).toString)
-    } finally Fs.rmTree(scratch)
-  }
-
   test("append crash window: data renamed, manifest not committed — replay commits it") {
     val docs = Tables.t(spark, sfDir, "documents")
     val old = docs.filter(col("doc_id") % 2 === 0)
@@ -266,22 +307,57 @@ class InvertedIndexSpec extends SparkSpec {
         val dir = java.nio.file.Files.createTempDirectory("graft_idxcw").toString
         try {
           if (withBase) InvertedIndex.write(InvertedIndex.build(old), dir)
-          stageCrashedAppend(fresh, dir, "seg=bX")
+          crashBeforeCommit(dir)(d => InvertedIndex.append(fresh, d, 0L))
           // readers on the committed version do not see the orphan segment
           val committed = if (withBase) Seq("seg=base") else Nil
           assert(InvertedIndex.segments(spark, dir) == committed)
-          // the replayed append finds whole data and just commits the pointer
-          assert(InvertedIndex.append(fresh, dir, "bX"))
+          // the replayed append rewrites the orphan and commits it
+          assert(InvertedIndex.append(fresh, dir, 0L))
           assert(graft.operators.StoreManifest.currentVersion(spark, dir) ==
             (if (withBase) 1L else 0L), s"withBase=$withBase: heal committed the wrong version")
-          assert(InvertedIndex.segments(spark, dir).toSet == (committed :+ "seg=bX").toSet)
-          if (!withBase) assert(InvertedIndex.append(old, dir, "bY"))
+          assert(InvertedIndex.segments(spark, dir).toSet == (committed :+ "seg=b0").toSet)
+          if (!withBase) assert(InvertedIndex.append(old, dir, 1L))
           assert(res(dir) == res(full), s"withBase=$withBase: healed phrase search != full rebuild")
           assert(bm(dir) == bm(full), s"withBase=$withBase: healed BM25 != full rebuild (bitwise)")
         } finally Fs.rmTree(dir)
       }
       assert(res(full).nonEmpty && bm(full).nonEmpty)
     } finally Fs.rmTree(full)
+  }
+
+  test("compact crash window: merged segment written, manifest not committed — readers keep the previous version; replay converges") {
+    val docs = Tables.t(spark, sfDir, "documents")
+    val toks = docs.orderBy("doc_id")
+      .select(split(col("text"), " ").as("t")).head().getSeq[String](0)
+      .take(3).toSeq
+    def res(d: String) = InvertedIndex.searchPhrase(spark, d, toks)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def bm(d: String) = InvertedIndex.searchBm25(spark, d, toks.distinct)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val dir = java.nio.file.Files.createTempDirectory("graft_idxccw").toString
+    val twin = java.nio.file.Files.createTempDirectory("graft_idxccw_twin").toString
+    try {
+      for (d <- Seq(dir, twin); i <- 0 until 3)
+        assert(InvertedIndex.append(docs.filter(col("doc_id") % 3 === i), d, i.toLong))
+      val (segs, phrase, scores) = (InvertedIndex.segments(spark, dir), res(dir), bm(dir))
+      crashBeforeCommit(dir)(d => InvertedIndex.compact(spark, d))
+      assert(InvertedIndex.segments(spark, dir) == segs,
+        "an uncommitted merged segment became live")
+      assert(res(dir) == phrase && bm(dir) == scores,
+        "readers of the previous version saw the crashed compaction")
+      // the replayed compaction converges to a crash-free one
+      assert(InvertedIndex.compact(spark, dir) == 3)
+      assert(InvertedIndex.compact(spark, twin) == 3)
+      assert(InvertedIndex.segments(spark, dir).size == 1)
+      assert(res(dir) == res(twin) && bm(dir) == bm(twin),
+        "the replayed compaction diverges from a crash-free one")
+      // the crashed attempt's segment is swept: disk = retained segments
+      val referenced = graft.operators.StoreManifest.versions(spark, dir).flatMap(v =>
+        graft.operators.StoreManifest.read(spark, dir, v, "seg")).toSet
+      val onDisk = new java.io.File(dir).listFiles()
+        .map(_.getName).filter(_.startsWith("seg=")).toSet
+      assert(onDisk == referenced, s"crashed compaction left ${onDisk -- referenced}")
+    } finally { Fs.rmTree(dir); Fs.rmTree(twin) }
   }
 
   test("rebuild never claims a crashed append's segment name; the replayed batch survives") {
@@ -292,18 +368,18 @@ class InvertedIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_idxclaim").toString
     try {
       InvertedIndex.write(InvertedIndex.build(old), dir) // v0: seg=base
-      // a crashed append whose caller-chosen name collides with the
-      // rebuild's generated one: data renamed in, manifest never committed
-      stageCrashedAppend(fresh, dir, "seg=r1")
+      // a crashed append: data written, manifest never committed
+      crashBeforeCommit(dir)(d => InvertedIndex.append(fresh, d, 0L))
       // an in-place rebuild interleaves BEFORE the replay: claiming
-      // seg=r1 would make the replay see its name committed and no-op —
+      // seg=b0 would make the replay see its name committed and no-op —
       // the appended batch would be silently lost forever
       InvertedIndex.write(InvertedIndex.build(old), dir)
-      assert(InvertedIndex.segments(spark, dir) == Seq("seg=r2"),
+      val rebuilt = InvertedIndex.segments(spark, dir)
+      assert(rebuilt.size == 1 && rebuilt != Seq("seg=b0"),
         "rebuild claimed the crashed append's segment name")
       // the replay re-applies the batch (restaging from source if the
       // rebuild's vacuum already swept the unreferenced orphan)
-      assert(InvertedIndex.append(fresh, dir, "r1"),
+      assert(InvertedIndex.append(fresh, dir, 0L),
         "replay of the crashed append no-opped — its batch is lost")
       val toks = docs.orderBy("doc_id")
         .select(split(col("text"), " ").as("t")).head().getSeq[String](0)
@@ -358,9 +434,9 @@ class InvertedIndexSpec extends SparkSpec {
     val docs = Tables.t(spark, sfDir, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_idxtier").toString
     try {
-      assert(InvertedIndex.append(docs.filter(col("doc_id") % 10 < 7), dir, "big"))
+      assert(InvertedIndex.append(docs.filter(col("doc_id") % 10 < 7), dir, 0L))
       (7 to 9).foreach { i =>
-        assert(InvertedIndex.append(docs.filter(col("doc_id") % 10 === i), dir, s"s$i"))
+        assert(InvertedIndex.append(docs.filter(col("doc_id") % 10 === i), dir, i.toLong))
       }
       def filesOf(seg: String): Map[String, Long] = {
         def walk(f: java.io.File): Seq[java.io.File] =
@@ -369,15 +445,15 @@ class InvertedIndexSpec extends SparkSpec {
         walk(new java.io.File(dir, seg))
           .map(f => f.getPath -> f.lastModified()).toMap
       }
-      val bigBefore = filesOf("seg=big")
+      val bigBefore = filesOf("seg=b0")
       // 4 live, target 2: the 3 smallest (the s* slices) fold into one;
       // the big segment graduates out of the merge pool untouched —
       // write amplification must not track index size
       assert(InvertedIndex.compact(spark, dir, targetSegs = 2) == 3)
       val live = InvertedIndex.segments(spark, dir)
-      assert(live.size == 2 && live.contains("seg=big"),
+      assert(live.size == 2 && live.contains("seg=b0"),
         s"tiered merge rewrote the large segment: $live")
-      assert(filesOf("seg=big") == bigBefore,
+      assert(filesOf("seg=b0") == bigBefore,
         "the kept segment's files were rewritten or touched")
       // at/below target: no-op
       assert(InvertedIndex.compact(spark, dir, targetSegs = 2) == 0)
@@ -473,7 +549,7 @@ class InvertedIndexSpec extends SparkSpec {
       val ref = java.nio.file.Files.createTempDirectory("graft_idxrw_ref").toString
       try {
         (0 until 3).foreach { i =>
-          assert(InvertedIndex.append(docs.filter(col("doc_id") % 3 === i), dir, s"s$i"))
+          assert(InvertedIndex.append(docs.filter(col("doc_id") % 3 === i), dir, i.toLong))
         }
         val erased = docs.filter(col("doc_id") % 7 === 0).select("doc_id")
           .as[Long].collect().toSet
@@ -487,7 +563,7 @@ class InvertedIndexSpec extends SparkSpec {
         val kept = before.intersect(after)
         val merged = after.diff(before)
         assert(merged.size == 1 && kept.size == target - 1, s"$before -> $after")
-        val foldedRes = before.diff(kept).map(_.stripPrefix("seg=s").toInt)
+        val foldedRes = before.diff(kept).map(_.stripPrefix("seg=b").toInt)
         val survivors = docs.filter(col("doc_id").isin(
           docs.select("doc_id").as[Long].collect().filter(id =>
             foldedRes.contains((id % 3).toInt) && !(tomb && erased(id))).toSeq: _*))
@@ -501,7 +577,7 @@ class InvertedIndexSpec extends SparkSpec {
           s"tomb=$tomb: _stats is not (count, sum) of _doclen")
         val keptTombs = InvertedIndex.tombstones(spark, dir).select("doc_id")
           .as[Long].collect().toSet
-        val keptRes = kept.map(_.stripPrefix("seg=s").toInt)
+        val keptRes = kept.map(_.stripPrefix("seg=b").toInt)
         assert(keptTombs == erased.filter(id => keptRes.contains((id % 3).toInt)),
           s"tomb=$tomb: tombstones must shrink to the kept segment's docs")
       } finally { Fs.rmTree(dir); Fs.rmTree(ref) }
@@ -514,7 +590,7 @@ class InvertedIndexSpec extends SparkSpec {
       // no manifest, even with a whole segment on disk: a typo'd path or
       // a store whose manifest was lost — every read must raise, not
       // silently report "no relevant documents"
-      stageCrashedAppend(handCorpus, dir, "seg=base")
+      crashBeforeCommit(dir)(d => InvertedIndex.append(handCorpus, d, 0L))
       assert(InvertedIndex.segments(spark, dir).isEmpty)
       def refused(read: => Any): Unit = intercept[IllegalArgumentException](read)
       refused(InvertedIndex.searchBm25(spark, dir, Seq("a")).collect())
@@ -580,7 +656,7 @@ class InvertedIndexSpec extends SparkSpec {
       // 12 appended slices with compaction every time the live list
       // exceeds 3 — the IndexSink loop, run synchronously
       (0 until 12).foreach { i =>
-        InvertedIndex.append(docs.filter(col("doc_id") % 12 === i), dir, s"b$i")
+        InvertedIndex.append(docs.filter(col("doc_id") % 12 === i), dir, i.toLong)
         assertOneLayout(s"append b$i")
         if (InvertedIndex.segments(spark, dir).size > 3) {
           InvertedIndex.compact(spark, dir)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Fanout
+import graft.operators.{Fanout, StoreManifest}
 import graft.sources.JsonIngest
 import graft.streaming.PartitionedServingSink
 import java.nio.file.{Files, Paths}
@@ -34,12 +34,15 @@ class PartitionedSinkSpec extends SparkSpec {
       Files.writeString(tmp, rows.mkString("\n"))
       Files.move(tmp, Paths.get(in, name))
     }
-    // every commit writes the two-line pointer (version, applied batch)
-    def commitLines(): Int = Files.readAllLines(Paths.get(store, "_COMMIT")).size
-    def drain(): Unit = {
+    // every commit carries exactly one `hw` line: the last applied batch
+    // (then the id of the query that applied it)
+    def hwLines(): Seq[String] = StoreManifest.read(spark, store,
+      StoreManifest.currentVersion(spark, store), "hw").map(_.split('\t').head)
+    def drain(batch: Long): Unit = {
       val q = PartitionedServingSink.start(spark, in, store, ckpt)
       q.awaitTermination()
-      assert(commitLines() == 2, "_COMMIT must hold exactly two lines")
+      assert(hwLines() == Seq(batch.toString),
+        s"the manifest must hold exactly one hw line, $batch: ${hwLines()}")
     }
 
     // batch 0 touches hours 00 and 01
@@ -48,7 +51,7 @@ class PartitionedSinkSpec extends SparkSpec {
       event(2, "2024-01-01T00:20:00", 2, "view", 3.0),
       event(3, "2024-01-01T01:10:00", 1, "click", 1.0),
       "this is not json"))
-    drain()
+    drain(0L)
     assert(Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T00", "v0")))
     assert(Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T01", "v0")))
     val rejects = spark.read.parquet(s"$store/rejects/v0").collect()
@@ -59,7 +62,7 @@ class PartitionedSinkSpec extends SparkSpec {
     writeBatch("b2.ndjson", Seq(
       event(4, "2024-01-01T02:05:00", 2, "view", 7.0),
       event(5, "2024-01-01T02:35:00", 3, "view", 4.0)))
-    drain()
+    drain(1L)
     assert(Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T02", "v1")))
     assert(!Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T00", "v1")),
       "untouched hour 00 must not be rewritten")
@@ -70,7 +73,7 @@ class PartitionedSinkSpec extends SparkSpec {
     // hour 00 advances to v2, hours 01/02 stay on their old snapshots
     writeBatch("b3.ndjson", Seq(
       event(6, "2024-01-01T00:40:00", 1, "view", 5.0)))
-    drain()
+    drain(2L)
     assert(Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T00", "v2")))
     assert(!Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T01", "v2")))
     assert(!Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T02", "v2")))
@@ -98,23 +101,58 @@ class PartitionedSinkSpec extends SparkSpec {
       "2024-01-01 00:00:00", "2024-01-01 02:00:00").collect()
     assert(ranged.length == 1 && ranged(0).getLong(0) == 2L, ranged.mkString)
 
-    // replay storm from a fresh checkpoint: already-committed ids skipped
-    val before = PartitionedServingSink.committedBatch(store)
+    // replay storm from a fresh checkpoint: its batch 0 re-delivers every
+    // file below the store's high-water — refused, nothing committed
+    val before = StoreManifest.currentVersion(spark, store)
     val q = PartitionedServingSink.start(spark, in, store, dir.resolve("ckpt2").toString)
-    q.awaitTermination()
-    assert(PartitionedServingSink.committedBatch(store) == before)
-    assert(commitLines() == 2, "_COMMIT must hold exactly two lines")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains("below the applied high-water"))),
+      e.toString)
+    assert(StoreManifest.currentVersion(spark, store) == before)
+    assert(hwLines() == Seq("2"), s"the manifest must hold exactly one hw line: ${hwLines()}")
     val replayed = PartitionedServingSink.countsPerUser(spark, store)
       .collect().map(r => (r.get(0).toString, r.getLong(1)) ->
         (r.getLong(2), r.getDecimal(3).toPlainString)).toMap
     assert(replayed == expectCounts, "replay must not change any counter")
+  }
 
-    // a one-line pointer is no commit this sink wrote: refused, naming
-    // the store
-    val bad = Files.createDirectory(dir.resolve("bad")).toString
-    Files.writeString(Paths.get(bad, "_COMMIT"), "3")
-    val e = intercept[IllegalArgumentException](
-      PartitionedServingSink.appliedIngestBatch(bad))
-    assert(e.getMessage.contains(bad), e.getMessage)
+  test("crash before the manifest commit: readers keep the previous version; the replay converges") {
+    val dir = Files.createTempDirectory("graft_psink_crash")
+    try {
+      def batchOf(name: String, rows: String*) = {
+        val f = dir.resolve(name)
+        Files.writeString(f, rows.mkString("\n"))
+        JsonIngest.readJsonLines(spark, f.toString)
+      }
+      val b0 = batchOf("b0.ndjson",
+        event(1, "2024-01-01T00:10:00", 1, "view", 2.0),
+        event(2, "2024-01-01T01:10:00", 2, "view", 3.0))
+      // batch 1 merges into hour 00 and opens hour 02
+      val b1 = batchOf("b1.ndjson",
+        event(3, "2024-01-01T00:20:00", 3, "click", 1.0),
+        event(4, "2024-01-01T02:05:00", 3, "view", 4.0))
+      def state(store: String) = (
+        PartitionedServingSink.countsPerUser(spark, store).collect()
+          .map(r => (r.get(0).toString, r.getLong(1)) ->
+            (r.getLong(2), r.getDecimal(3).toPlainString)).toMap,
+        PartitionedServingSink.uniquesHourly(spark, store).collect()
+          .map(r => r.get(0).toString -> r.getLong(1)).toMap)
+      val store = dir.resolve("store").toString
+      val truth = dir.resolve("truth").toString
+      PartitionedServingSink.upsertBatch(spark, store, b0, 0L)
+      val before = state(store)
+      crashBeforeCommit(store)(d => PartitionedServingSink.upsertBatch(spark, d, b1, 1L))
+      assert(Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T02", "v1")),
+        "test premise: the crashed batch's snapshots are on disk")
+      assert(StoreManifest.currentVersion(spark, store) == 0L)
+      assert(state(store) == before, "an uncommitted snapshot leaked into a read")
+      // the replay converges to the crash-free end state
+      PartitionedServingSink.upsertBatch(spark, store, b1, 1L)
+      PartitionedServingSink.upsertBatch(spark, truth, b0, 0L)
+      PartitionedServingSink.upsertBatch(spark, truth, b1, 1L)
+      assert(state(store) == state(truth), "the replayed batch diverges from a crash-free run")
+      assert(state(store) != before)
+    } finally Fs.rmTree(dir.toString)
   }
 }

@@ -162,23 +162,35 @@ class RollupNavSpec extends SparkSpec {
   test("batchId in the manifest: a replayed trigger is an exact no-op") {
     def answers(dir: String) =
       RollupNav.answer(spark, dir, shape, Seq("event_type"), "day").get
-    val dir = tmp()
     val truthDir = tmp()
     try {
-      RollupNav.materialize(base.filter(col("day") < "2024-01-10"), shape, dir)
-      val batch = base.filter(col("day").between("2024-01-10", "2024-01-11"))
-      RollupNav.maintain(spark, dir, shape, batch, Some(2L))
-      val vAfter = graft.operators.StoreManifest.currentVersion(spark, dir)
-      // replays of the committed trigger: no new version, no double count
-      RollupNav.maintain(spark, dir, shape, batch, Some(2L))
-      RollupNav.maintain(spark, dir, shape, batch, Some(2L))
-      assert(graft.operators.StoreManifest.currentVersion(spark, dir) == vAfter,
-        "a replayed batch must not commit a new version")
       RollupNav.materialize(base.filter(col("day") <= "2024-01-11"), shape, truthDir)
-      val (inc, truth) = (answers(dir), answers(truthDir))
-      assert(inc.exceptAll(truth).isEmpty && truth.exceptAll(inc).isEmpty,
-        "replayed maintenance double-counted or lost a day")
-    } finally { Fs.rmTree(dir); Fs.rmTree(truthDir) }
+      val batch = base.filter(col("day").between("2024-01-10", "2024-01-11"))
+      // what lands between the commit and its replay: nothing, or a
+      // maintenance commit that consumes no batch id (an erasure's
+      // refreshDays of an earlier, unchanged day)
+      val between: Seq[(String, String => Unit)] = Seq(
+        "plain replay" -> (_ => ()),
+        "replay after refreshDays" -> (d =>
+          RollupNav.refreshDays(spark, d, shape, base, Seq("2024-01-05"))))
+      for ((name, interleave) <- between) {
+        val dir = tmp()
+        try {
+          RollupNav.materialize(base.filter(col("day") < "2024-01-10"), shape, dir)
+          RollupNav.maintain(spark, dir, shape, batch, Some(2L))
+          interleave(dir)
+          val vAfter = graft.operators.StoreManifest.currentVersion(spark, dir)
+          // replays of the committed trigger: no new version, no double count
+          RollupNav.maintain(spark, dir, shape, batch, Some(2L))
+          RollupNav.maintain(spark, dir, shape, batch, Some(2L))
+          assert(graft.operators.StoreManifest.currentVersion(spark, dir) == vAfter,
+            s"$name: a replayed batch must not commit a new version")
+          val (inc, truth) = (answers(dir), answers(truthDir))
+          assert(inc.exceptAll(truth).isEmpty && truth.exceptAll(inc).isEmpty,
+            s"$name: replayed maintenance double-counted or lost a day")
+        } finally Fs.rmTree(dir)
+      }
+    } finally Fs.rmTree(truthDir)
   }
 
   test("bulk backfill: one maintain over 20+ days costs a day-count-independent job count") {

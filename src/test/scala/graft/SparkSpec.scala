@@ -15,6 +15,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir: String =
     sys.env.getOrElse("GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+  /** Run `body` on this thread as a batch of streaming query `id` — the
+    * property Spark's stream thread carries while it runs the query's
+    * foreachBatch function. A restart from the query's checkpoint keeps
+    * its id; a fresh checkpoint gets a new one.
+    */
+  def asQuery[T](id: String)(body: => T): T = {
+    val key = org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, id)
+    try body finally sc.setLocalProperty(key, prev)
+  }
+
   /** Leave `dir` as a store writer leaves it when it dies after staging
     * its files and before its manifest commit: `write` runs on a copy
     * of `dir`, and every file it added there, except manifests, is
