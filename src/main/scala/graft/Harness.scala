@@ -4,8 +4,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
 /** What every graft main shares: the bench session and the environment
@@ -16,10 +19,10 @@ import scala.jdk.CollectionConverters._
   * (default: every SparkEntry query) against SPARK_GRAFT_SF_DIR, cold
   * and then warm, both under the listener. It prints one line per query
   * and writes one JSON record per query to OUT: cold/warm seconds and
-  * rows, then the warm run's layers — jobs, stages, tasks, time outside
-  * every stage, summed stage wall, task run, task CPU and GC time, and
-  * shuffle_read_bytes / shuffle_write_bytes / spilled_bytes /
-  * input_bytes as integers.
+  * rows, then the warm run's layers — SQL executions, Catalyst planning
+  * ms, jobs, stages, tasks, time outside every stage, summed stage wall,
+  * task run, task CPU and GC time, and shuffle_read_bytes /
+  * shuffle_write_bytes / spilled_bytes / input_bytes as integers.
   */
 object Harness {
 
@@ -127,22 +130,31 @@ object Harness {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** What one measured window did, from the public listener bus. Times
-    * are ms; the last four are bytes.
+  /** What one measured window did, from the public listener buses. Times
+    * are ms; the last four are bytes. `planningMs` sums the Catalyst
+    * phases (analysis, optimization, planning) of every query execution
+    * that ended in the window.
     */
-  final case class Layers(wallMs: Long, jobs: Long, stages: Long, tasks: Long,
+  final case class Layers(wallMs: Long, sqlExecutions: Long, planningMs: Long,
+                          jobs: Long, stages: Long, tasks: Long,
                           outsideStageMs: Long, stageMs: Long, taskRunMs: Long,
                           taskCpuMs: Long, gcMs: Long, shuffleRead: Long,
                           shuffleWrite: Long, spilled: Long, input: Long)
 
-  private final class Meter extends SparkListener {
-    val jobs, stages, tasks, stageMs, runMs, cpuNs, gcMs,
+  private final class Meter extends SparkListener with QueryExecutionListener {
+    val sqlExecs, planMs, jobs, stages, tasks, stageMs, runMs, cpuNs, gcMs,
         read, write, spill, input = new AtomicLong
-    private val counters =
-      Seq(jobs, stages, tasks, stageMs, runMs, cpuNs, gcMs, read, write, spill, input)
+    private val counters = Seq(sqlExecs, planMs, jobs, stages, tasks, stageMs,
+      runMs, cpuNs, gcMs, read, write, spill, input)
     /** (submission, completion) wall ms of every completed stage. */
     val spans = new ConcurrentLinkedQueue[(Long, Long)]
 
+    override def onOtherEvent(e: SparkListenerEvent): Unit =
+      if (e.isInstanceOf[SparkListenerSQLExecutionStart]) sqlExecs.incrementAndGet()
+    private def planned(qe: QueryExecution): Unit =
+      planMs.addAndGet(qe.tracker.phases.values.map(_.durationMs).sum)
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = planned(qe)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = planned(qe)
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       stages.incrementAndGet()
@@ -198,18 +210,20 @@ object Harness {
   def measure[A](spark: SparkSession)(fn: => A): (A, Layers) = {
     val m = new Meter
     val sc = spark.sparkContext
+    val executions = spark.listenerManager
     sc.addSparkListener(m)
+    executions.register(m)
     try {
       val t0 = System.currentTimeMillis()
       val out = fn
       val t1 = System.currentTimeMillis()
       m.settle()
       val wall = t1 - t0
-      (out, Layers(wall, m.jobs.get, m.stages.get, m.tasks.get,
+      (out, Layers(wall, m.sqlExecs.get, m.planMs.get, m.jobs.get, m.stages.get, m.tasks.get,
         math.max(0L, wall - covered(m.spans.asScala.toSeq, t0, t1)),
         m.stageMs.get, m.runMs.get, m.cpuNs.get / 1000000L, m.gcMs.get,
         m.read.get, m.write.get, m.spill.get, m.input.get))
-    } finally sc.removeSparkListener(m)
+    } finally { executions.unregister(m); sc.removeSparkListener(m) }
   }
 
   /** `measure`'s byte counters alone: (shuffle read, shuffle write,
@@ -249,6 +263,7 @@ object Harness {
     */
   def record(name: String, rows: Long, cold: Layers, w: Layers): String =
     s"""${quote(name)}: {"cold_s":${fmt(cold.wallMs / 1e3)},"warm_s":${fmt(w.wallMs / 1e3)},"rows":$rows,""" +
+      s""""sql_executions":${w.sqlExecutions},"planning_ms":${w.planningMs},""" +
       s""""jobs":${w.jobs},"stages":${w.stages},"tasks":${w.tasks},"outside_stage_ms":${w.outsideStageMs},""" +
       s""""stage_ms":${w.stageMs},"task_run_ms":${w.taskRunMs},"task_cpu_ms":${w.taskCpuMs},"gc_ms":${w.gcMs},""" +
       s""""shuffle_read_bytes":${w.shuffleRead},"shuffle_write_bytes":${w.shuffleWrite},"spilled_bytes":${w.spilled},"input_bytes":${w.input}}"""
@@ -265,7 +280,7 @@ object Harness {
       (_, fn) => measure(spark)(fn(spark, sf).count())
     }.map {
       case Outcome(name, Seq((rows, cold), (_, w)), _) =>
-        println(f"[harness] $name%-28s cold ${cold.wallMs / 1e3}%6.2f s  warm ${w.wallMs / 1e3}%6.2f s  rows $rows  jobs ${w.jobs}  stages ${w.stages}  tasks ${w.tasks}  outside ${w.outsideStageMs} ms")
+        println(f"[harness] $name%-28s cold ${cold.wallMs / 1e3}%6.2f s  warm ${w.wallMs / 1e3}%6.2f s  rows $rows  sql ${w.sqlExecutions}  planning ${w.planningMs} ms  jobs ${w.jobs}  stages ${w.stages}  tasks ${w.tasks}  outside ${w.outsideStageMs} ms")
         record(name, rows, cold, w)
       case o =>
         val msg = o.error.fold("no result")(describe(_, 200))

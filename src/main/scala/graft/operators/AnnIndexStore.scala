@@ -212,7 +212,8 @@ object AnnIndexStore {
     * (foreachBatch's at-least-once contract) leaves the index
     * unchanged; a batch below it, or at it from another streaming query,
     * throws ([[StoreManifest.replayed]]). A crash before the commit
-    * leaves orphans the replay never reads.
+    * leaves orphans the replay never reads. An empty batch stages no
+    * list file and commits nothing.
     */
   def appendBatch(spark: SparkSession, newVectors: DataFrame, dir: String,
                   batchId: Long): Unit = {
@@ -235,7 +236,9 @@ object AnnIndexStore {
                        vectors: DataFrame, hw: StoreManifest.HighWater): Unit = {
     val next = cur.v + 1
     val moved = stageLists(spark, dir, vectors, loadCentroids(spark, dir, cur), next)
-    commit(spark, dir, cur.copy(v = next, hw = hw, lists = cur.lists ++ moved))
+    // no staged file: the write found no vector, so nothing commits
+    if (moved.nonEmpty)
+      commit(spark, dir, cur.copy(v = next, hw = hw, lists = cur.lists ++ moved))
   }
 
   /** Erase vectors from the index — the ANN half of the derived-store

@@ -47,6 +47,9 @@ object InvertedIndex {
         count(lit(1)).as("tf"))
       .select("term", "doc_id", "positions", "tf", "dl")
 
+  /** The stored schema of [[build]]'s posting rows. */
+  private val PostingDdl = "term STRING, doc_id BIGINT, positions ARRAY<INT>, tf BIGINT, dl BIGINT"
+
   /** Persist posting rows as the index's BASE segment and commit
     * manifest version 0 referencing it. Layout is
     * seg=<name>/bucket=<hash mod B>/: the seg layer is the atomic
@@ -67,7 +70,11 @@ object InvertedIndex {
     // committed data) — it becomes unreferenced and vacuum sweeps it
     val segName = freshName(spark, dir, "seg",
       i => if (i == 0) "seg=base" else s"seg=r$i", cur + 1)
-    val written = writeSegment(index, s"$dir/$segName", buckets)
+    val segDir = s"$dir/$segName"
+    // a posting frame carries no doc table: doc lengths come off the
+    // postings just written (select BEFORE distinct: the read adds bucket)
+    val written = writeSegment(index, spark.read.schema("doc_id BIGINT, dl BIGINT")
+      .parquet(segDir).select("doc_id", "dl").distinct(), segDir, buckets)
     // write is a REBUILD, so its caller-chosen bucket count becomes the
     // store's committed one (see storedBuckets); tombstones retire with
     // the old segments, and the replay guard carries forward
@@ -77,15 +84,20 @@ object InvertedIndex {
   }
 
   /** Commit version `v` of the index: its bucket count, replay guard,
-    * tombstone dirs and live segments — every index commit writes all
-    * four, so none is lost to a later commit.
+    * tombstone dirs and live segments with their corpus stats — every
+    * index commit writes all four, so none is lost to a later commit.
     */
   private def commit(spark: SparkSession, dir: String, v: Long, buckets: Int,
                      hw: StoreManifest.HighWater, tombs: Seq[String],
-                     segs: Seq[String]): Unit =
+                     segs: Seq[Seg]): Unit =
     StoreManifest.commit(spark, dir, v,
       Seq(s"buckets\t$buckets", hw.line) ++
-        tombs.sorted.map("tomb\t" + _) ++ segs.sorted.map("seg\t" + _))
+        tombs.sorted.map("tomb\t" + _) ++ segs.sortBy(_.name).map("seg\t" + _.line))
+
+  /** A live segment and its corpus stats (docs, summed dl): its manifest line. */
+  private final case class Seg(name: String, nDocs: Long, totDl: Long) {
+    def line: String = s"$name\t$nDocs\t$totDl"
+  }
 
   /** The bucket count committed at version `v` — the modulus every
     * read prunes with and every later append and compact writes with.
@@ -121,13 +133,14 @@ object InvertedIndex {
       .get
   }
 
-  /** Write `index` as a segment at `segDir`, named by the result — or,
-    * when it holds no posting, stop after the posting write that counts
-    * them and return None: the caller commits no segment (an index with
-    * no documents has none), and vacuum sweeps the dir.
+  /** Write `index` as a segment at `segDir` with `docLens` (doc_id, dl,
+    * by-name: built after the posting write) as its doc table — or, when
+    * it holds no posting, stop after the posting write that counts them
+    * and return None: the caller commits no segment, and vacuum sweeps
+    * the dir.
     */
-  private def writeSegment(index: DataFrame, segDir: String,
-                           buckets: Int): Option[String] = {
+  private def writeSegment(index: DataFrame, docLens: => DataFrame, segDir: String,
+                           buckets: Int): Option[Seg] = {
     require(index.columns.contains("dl"),
       "writeSegment expects dl-bearing postings (the build() schema)")
     val (_, posted) = Observed.observing(
@@ -138,53 +151,49 @@ object InvertedIndex {
       _.write.partitionBy("bucket").mode("overwrite").parquet(segDir)
     }
     if (posted.getLong(0) == 0L) return None
-    // per-doc token counts (the standalone doc-length table backing
-    // [[docLengths]]) plus a ONE-ROW `_stats` (n_docs, tot_dl) summary,
-    // published by the segment's manifest commit. Both derive from the
-    // JUST-WRITTEN parquet, not the input frame — re-evaluating a lazy
-    // `index` lineage here would re-run the whole tokenize/merge
-    // shuffle a second time per streaming trigger. The underscore
-    // prefix hides them from posting-scan file discovery, so phrase
-    // search never reads them; BM25 reads dl inline off the posting
-    // rows and its corpus stats from `_stats` — O(segments) at query
-    // time, never a corpus scan.
-    val spark = index.sparkSession
-    // explicit schemas: pruned reads
-    // select BEFORE distinct: partition discovery appends the bucket
-    // column, and a doc's terms span many buckets — distinct over
-    // (doc_id, dl, bucket) would duplicate docs and corrupt _stats
-    // _stats is the (count, sum) observed on the _doclen write — no
-    // re-read of the table just written
-    val (_, stats) = Observed.observing(
-        spark.read.schema("doc_id BIGINT, dl BIGINT").parquet(segDir)
-          .select("doc_id", "dl").distinct(),
+    // per-doc token counts (the doc table backing [[docLengths]]); the
+    // (count, sum) observed on its write is the segment's corpus stats,
+    // which its manifest line carries. The underscore prefix hides the
+    // aux dirs from posting-scan file discovery, so phrase search never
+    // reads them; BM25 reads dl inline off the posting rows
+    val (_, stats) = Observed.observing(docLens,
         count(lit(1)).as("n_docs"), sum("dl").as("tot_dl")) {
       _.write.mode("overwrite").parquet(s"$segDir/_doclen")
     }
-    spark.createDataFrame(java.util.List.of(stats), stats.schema)
-      .write.mode("overwrite").parquet(s"$segDir/_stats")
     // per-term score-bound aux (the MaxScore/WAND dictionary): df plus
     // the tf/dl extremes that bound any posting's BM25 tf-norm (the
     // norm is monotone ↑tf, ↓dl). Vocab-sized, term-sorted in ONE file
     // so a query's terms resolve via rowgroup pushdown; [[searchBm25TopK]]
     // uses it to skip scoring docs that cannot reach the top-k.
-    spark.read.schema("term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT")
+    index.sparkSession.read.schema("term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT")
       .parquet(segDir)
       .groupBy("term")
       .agg(count(lit(1)).as("df"), max("tf").as("max_tf"), min("dl").as("min_dl"))
       .coalesce(1).sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$segDir/_terms")
-    Some(new java.io.File(segDir).getName)
+    Some(Seg(new java.io.File(segDir).getName, stats.getLong(0), stats.getLong(1)))
   }
+
+  /** (doc_id, dl) of raw documents: the `dl` [[build]] puts on their postings. */
+  private def docLensOf(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("dl"))
 
   /** Live segment dirs of the current committed version (empty for a
     * dir with no manifest).
     */
   def segments(spark: SparkSession, dir: String): Seq[String] =
-    segsOf(spark, dir, StoreManifest.currentVersion(spark, dir))
+    segsOf(spark, dir, StoreManifest.currentVersion(spark, dir)).map(_.name)
 
-  private def segsOf(spark: SparkSession, dir: String, v: Long): Seq[String] =
-    if (v < 0) Nil else StoreManifest.read(spark, dir, v, "seg").sorted
+  /** Version `v`'s live segments; reads and writes refuse one without stats. */
+  private def segsOf(spark: SparkSession, dir: String, v: Long): Seq[Seg] =
+    if (v < 0) Nil
+    else StoreManifest.read(spark, dir, v, "seg").map(_.split('\t') match {
+      case Array(name, n, t) => Seg(name, n.toLong, t.toLong)
+      case f => throw new IllegalArgumentException(s"the index store under $dir " +
+        s"names segment ${f.head} without corpus stats: it was written before " +
+        "the manifest carried them — rebuild it into a new dir")
+    }).sortBy(_.name)
 
   /** Incrementally index a batch of NEW documents as segment
     * `seg=b<batch>`, COMMITTED by the next manifest version referencing
@@ -197,6 +206,10 @@ object InvertedIndex {
     * its postings — dedup the batch first (the BloomDedup /
     * q_dedup_incremental path).
     *
+    * When one more segment would exceed `maxSegments`, the batch joins
+    * a [[compact]] to `max(1, maxSegments / 2)` segments instead: one
+    * segment write per trigger. An empty batch there still commits.
+    *
     * Idempotence (the [[graft.streaming.IndexSink]] replay hook): the
     * segment commits together with `hw = batch`, and `batch == hw`
     * returns false — a replayed trigger is a no-op. A batch below `hw`,
@@ -205,27 +218,32 @@ object InvertedIndex {
     * retained manifest names a segment above it, so the write goes
     * straight under its final name: a crash before the commit leaves an
     * unreferenced dir that the replay overwrites and vacuum sweeps. An
-    * empty batch commits nothing and returns false — it learns that from
-    * the count observed on its own posting write, with no probe job.
+    * empty batch below the cap commits nothing and returns false — it
+    * learns that from the count observed on its own posting write, with
+    * no probe job.
     *
     * `buckets` founds a store that holds no segment yet; once one is
     * committed, its count wins — a segment bucketed differently from its
     * siblings would be pruned wrongly forever.
     */
   def append(docs: DataFrame, dir: String, batch: Long,
-             buckets: Int = 32): Boolean = {
+             buckets: Int = 32, maxSegments: Int = Int.MaxValue): Boolean = {
+    require(maxSegments >= 1, s"maxSegments must be at least 1, got $maxSegments")
     val spark = docs.sparkSession
     val cur = StoreManifest.currentVersion(spark, dir)
     if (StoreManifest.replayed(spark, dir, StoreManifest.guard(spark, dir, cur), batch))
       return false
+    val live = segsOf(spark, dir, cur)
+    if (live.size + 1 > maxSegments)
+      return compact(spark, dir, math.max(1, maxSegments / 2), 2, Some(docs -> batch)) > 0
     // a store that has only recorded batches ([[markApplied]]) has no
     // bucket count yet
     val b = (if (cur < 0) None else StoreManifest.read(spark, dir, cur, "buckets").headOption)
       .fold(buckets)(_.toInt)
-    val seg = s"seg=b$batch"
-    val segDir = s"$dir/$seg"
+    val segDir = s"$dir/seg=b$batch"
     graft.Fs.rmTree(segDir) // a torn earlier attempt restages cleanly
-    if (writeSegment(build(docs), segDir, b).isEmpty) {
+    val written = writeSegment(build(docs), docLensOf(docs), segDir, b)
+    if (written.isEmpty) {
       graft.Fs.rmTree(segDir)
       return false
     }
@@ -234,7 +252,7 @@ object InvertedIndex {
     // erased set
     val tombs = if (cur < 0) Nil else StoreManifest.read(spark, dir, cur, "tomb")
     commit(spark, dir, cur + 1, b, StoreManifest.applying(spark, batch), tombs,
-      segsOf(spark, dir, cur) :+ seg) // THE commit point
+      live ++ written) // THE commit point
     // appends carry every live segment forward, so expiring old
     // manifests never orphans a referenced segment — keeps the
     // manifest count (and with compaction, the whole store) bounded
@@ -274,33 +292,41 @@ object InvertedIndex {
     * Returns the number of segments merged (0 = at/below target).
     */
   def compact(spark: SparkSession, dir: String,
-              targetSegs: Int = 1, retainVersions: Int = 2): Int = {
+              targetSegs: Int = 1, retainVersions: Int = 2): Int =
+    compact(spark, dir, targetSegs, retainVersions, None)
+
+  /** [[compact]] with [[append]]'s `batch` (docs, id) as one more,
+    * always merged, input; the commit raises `hw` to the batch id.
+    */
+  private def compact(spark: SparkSession, dir: String, targetSegs: Int,
+                      retainVersions: Int, batch: Option[(DataFrame, Long)]): Int = {
     val cur = StoreManifest.currentVersion(spark, dir)
     val live = segsOf(spark, dir, cur)
-    if (live.size <= targetSegs) return 0
+    val inputs = live.size + batch.size
+    if (inputs <= targetSegs) return 0
     val next = cur + 1
     // smallest first (name tiebreak keeps the pick deterministic)
-    val bySize = live.sortBy(s => (segBytes(new java.io.File(dir, s)), s))
-    val toMerge = bySize.take(live.size - targetSegs + 1)
-    val kept = bySize.drop(live.size - targetSegs + 1)
+    val bySize = live.sortBy(s => (segBytes(new java.io.File(dir, s.name)), s.name))
+    val (toMerge, kept) = bySize.splitAt(inputs - targetSegs + 1 - batch.size)
     // Tombstoned docs are dropped HERE — compact is where a logical
-    // delete becomes physical erasure: their postings never enter the
-    // merged segment, whose freshly-derived _doclen/_stats aux then
-    // excludes them for free.
+    // delete becomes physical erasure: their postings and doc lengths
+    // never enter the merged segment, nor its corpus stats.
     val hasTombs = StoreManifest.read(spark, dir, cur, "tomb").nonEmpty
-    // the fold is a REWRITE (read with the stored schema — doc_id
-    // BIGINT, as every aux read assumes): appends carry disjoint
-    // doc_ids, so each (term, doc_id) posting already occurs once and
-    // its stored dl equals the doc's sum(tf)
-    val merged = minusTombstones(spark, dir, cur, spark.read.option("basePath", dir)
-        .schema("term STRING, doc_id BIGINT, positions ARRAY<INT>, tf BIGINT, dl BIGINT")
-        .parquet(toMerge.map(s => s"$dir/$s"): _*))
+    // the fold is a REWRITE (read with the stored schema): appends carry
+    // disjoint doc_ids, so each (term, doc_id) posting already occurs
+    // once and its stored dl equals the doc's sum(tf)
+    val posts = minusTombstones(spark, dir, cur, spark.read.option("basePath", dir)
+        .schema(PostingDdl)
+        .parquet(toMerge.map(s => s"$dir/${s.name}"): _*))
       .select("term", "doc_id", "positions", "tf", "dl")
+    val lens = minusTombstones(spark, dir, cur, docLengthsOf(spark, dir, toMerge.map(_.name)))
     val segName = freshName(spark, dir, "seg", i => s"seg=c$i", next) // see write()
     // compact rewrites in the STORE's bucket count: a re-bucketed merged
     // segment would be pruned with the wrong modulus by every reader
     val b = storedBuckets(spark, dir, cur)
-    val written = writeSegment(merged, s"$dir/$segName", b)
+    val written = writeSegment(
+      batch.fold(posts)(d => posts.unionByName(build(d._1))),
+      batch.fold(lens)(d => lens.unionByName(docLensOf(d._1))), s"$dir/$segName", b)
     // shrink the tombstone set to docs still PHYSICALLY present — i.e.
     // those living in kept (untouched) segments, resolved off their
     // _doclen aux. A full fold (kept empty) retires every tombstone:
@@ -310,17 +336,19 @@ object InvertedIndex {
     val keptTomb =
       if (!hasTombs || kept.isEmpty) None
       else Some(Observed.checkpoint(tombstonesOf(spark, dir, cur)
-          .join(docLengthsOf(spark, dir, kept).select("doc_id"), Seq("doc_id"), "left_semi"),
+          .join(docLengthsOf(spark, dir, kept.map(_.name)).select("doc_id"),
+            Seq("doc_id"), "left_semi"),
         count(lit(1)).as("n"))).collect { case (rows, n) if n.getLong(0) > 0L => rows }
     val tombs = keptTomb.toSeq.map { rows =>
       val tombName = freshName(spark, dir, "tomb", i => s"tomb=t$i", next)
       rows.coalesce(1).write.mode("overwrite").parquet(s"$dir/$tombName")
       tombName
     }
-    commit(spark, dir, next, b, StoreManifest.guard(spark, dir, cur), tombs,
-      kept ++ written) // THE commit point
+    val hw = batch.fold(StoreManifest.guard(spark, dir, cur))(d =>
+      StoreManifest.applying(spark, d._2))
+    commit(spark, dir, next, b, hw, tombs, kept ++ written) // THE commit point
     vacuum(spark, dir, retainVersions)
-    toMerge.size
+    inputs - kept.size
   }
 
   /** Recursive on-disk size of a segment (driver-side metadata walk —
@@ -336,7 +364,10 @@ object InvertedIndex {
     */
   private def referenced(spark: SparkSession, dir: String, tag: String): Set[String] =
     StoreManifest.versions(spark, dir)
-      .flatMap(v => StoreManifest.read(spark, dir, v, tag)).toSet
+      .flatMap(v => StoreManifest.read(spark, dir, v, tag)).map(dirOf).toSet
+
+  /** The dir a `seg` or `tomb` line names: its first field. */
+  private def dirOf(line: String): String = line.takeWhile(_ != '\t')
 
   /** Expire manifests beyond the newest `retain` versions and delete
     * segment/tombstone dirs no surviving manifest references — crashed
@@ -347,7 +378,7 @@ object InvertedIndex {
     if (StoreManifest.currentVersion(spark, dir) < 0) return 0L
     val keep = StoreManifest.expire(spark, dir, retain)
     val refd = keep.flatMap(v => StoreManifest.read(spark, dir, v, "seg") ++
-      StoreManifest.read(spark, dir, v, "tomb")).toSet
+      StoreManifest.read(spark, dir, v, "tomb")).map(dirOf).toSet
     val stale = Option(new java.io.File(dir).listFiles()).toSeq.flatten
       .filter(f => (f.getName.startsWith("seg=") || f.getName.startsWith("tomb=")) &&
         !refd(f.getName))
@@ -358,21 +389,16 @@ object InvertedIndex {
   /** Tombstoned (doc_id, dl) rows of the current committed version —
     * empty for stores with no deletions. The carried `dl` is what keeps
     * post-delete BM25 EXACT: [[searchBm25]] subtracts the erased docs'
-    * counts from the segments' `_stats` sums, so corpus stats (and
+    * counts from the segments' manifest stats, so corpus stats (and
     * therefore every surviving doc's score) equal a fresh index built
     * without the deleted documents — delete ≡ rebuild-without, to the
     * bit (ErasureSpec proves it).
     */
-  def tombstones(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark
-    tombstonesOf(s, dir, StoreManifest.currentVersion(s, dir))
-  }
+  def tombstones(spark: SparkSession, dir: String): DataFrame =
+    tombstonesOf(spark, dir, StoreManifest.currentVersion(spark, dir))
 
-  private def tombstonesOf(spark: SparkSession, dir: String,
-                           version: Long): DataFrame = {
-    val tombs =
-      if (version < 0) Nil
-      else StoreManifest.read(spark, dir, version, "tomb")
+  private def tombstonesOf(spark: SparkSession, dir: String, version: Long): DataFrame = {
+    val tombs = if (version < 0) Nil else StoreManifest.read(spark, dir, version, "tomb")
     if (tombs.isEmpty) emptyFrame(spark, "doc_id BIGINT, dl BIGINT")
     else spark.read.schema("doc_id BIGINT, dl BIGINT")
       .parquet(tombs.map(t => s"$dir/$t"): _*)
@@ -418,14 +444,14 @@ object InvertedIndex {
     */
   def delete(spark: SparkSession, dir: String, docIds: DataFrame): Long = {
     val cur = committed(spark, dir)
-    val segs = StoreManifest.read(spark, dir, cur, "seg")
+    val segs = segsOf(spark, dir, cur)
     if (segs.isEmpty) return 0L // zero-segment store: nothing to erase
     val oldTomb = tombstonesOf(spark, dir, cur)
     // resolve dl off the _doclen aux (exact: a doc lives in ONE segment)
     // and drop ids that are absent or already tombstoned — checkpointed
     // because the tiny result is read twice (count + write) and must
     // not re-resolve across the commit
-    val newly = docLengthsOf(spark, dir, segs)
+    val newly = docLengthsOf(spark, dir, segs.map(_.name))
       .join(docIds.select(col("doc_id").cast("long").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
       .join(oldTomb.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -459,9 +485,7 @@ object InvertedIndex {
   def readForTerms(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
     val cur = committed(spark, dir)
     val segs = segsOf(spark, dir, cur)
-    if (segs.isEmpty)
-      emptyFrame(spark, "term STRING, doc_id BIGINT, positions ARRAY<INT>, tf BIGINT, " +
-        "dl BIGINT, seg STRING, bucket INT")
+    if (segs.isEmpty) emptyFrame(spark, s"$PostingDdl, seg STRING, bucket INT")
     else livePosts(spark, dir, terms, segs, cur)
   }
 
@@ -478,7 +502,7 @@ object InvertedIndex {
     val cur = committed(spark, dir)
     val segs = segsOf(spark, dir, cur)
     if (segs.isEmpty) emptyFrame(spark, "doc_id BIGINT, dl BIGINT")
-    else minusTombstones(spark, dir, cur, docLengthsOf(spark, dir, segs))
+    else minusTombstones(spark, dir, cur, docLengthsOf(spark, dir, segs.map(_.name)))
   }
 
   /** [[docLengths]] over an already-resolved segment list — the form
@@ -487,7 +511,8 @@ object InvertedIndex {
     */
   private def docLengthsOf(spark: SparkSession, dir: String,
                            segs: Seq[String]): DataFrame =
-    spark.read.parquet(segs.map(s => s"$dir/$s/_doclen"): _*).select("doc_id", "dl")
+    spark.read.schema("doc_id BIGINT, dl BIGINT")
+      .parquet(segs.map(s => s"$dir/$s/_doclen"): _*)
 
   /** The BM25 per-(term, doc) score term over columns
     * (tf, df, dl, n_docs, tot_dl), k1 = 1.2, b = 0.75, as ONE textual
@@ -545,38 +570,38 @@ object InvertedIndex {
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** One-row (n_docs, tot_dl) corpus summary of the current version —
-    * the union of the live segments' co-committed `_stats` rows (sums
-    * are exact by the disjoint-doc append precondition). O(segments)
-    * tiny files.
+    * the live segments' manifest stats summed on the driver (sums are
+    * exact by the disjoint-doc append precondition), minus tombstones.
     */
   def corpusStats(spark: SparkSession, dir: String): DataFrame = {
     val cur = committed(spark, dir)
-    val segs = segsOf(spark, dir, cur)
-    if (segs.isEmpty) spark.range(1).select(lit(0L).as("n_docs"), lit(0L).as("tot_dl"))
-    else adjustStats(spark, dir, cur, statsOf(spark, dir, segs))
+    spark.range(1).select(corpusOf(spark, dir, cur, segsOf(spark, dir, cur)).cols: _*)
   }
 
-  /** Subtract the version's tombstoned docs from a one-row
-    * (n_docs, tot_dl) summary — exact integer arithmetic off the dl the
-    * [[delete]] commit recorded, so post-delete corpus stats (and every
-    * BM25 score built on them) equal a rebuild without the erased docs.
-    */
-  private def adjustStats(spark: SparkSession, dir: String, version: Long,
-                          stats: DataFrame): DataFrame =
-    if (StoreManifest.read(spark, dir, version, "tomb").isEmpty) stats
-    else stats.crossJoin(broadcast(tombstonesOf(spark, dir, version)
-        .agg(count(lit(1)).as("t_docs"),
-          coalesce(sum("dl"), lit(0L)).as("t_dl"))))
-      .select((col("n_docs") - col("t_docs")).as("n_docs"),
-        (col("tot_dl") - col("t_dl")).as("tot_dl"))
+  /** A version's live corpus: docs, summed dl, and tombstoned docs. */
+  private final case class Corpus(nDocs: Long, totDl: Long, tombs: Long) {
+    /** The `n_docs` and `tot_dl` columns [[Bm25ScoreSql]] names, as literals. */
+    def cols: Seq[Column] = Seq(lit(nDocs).as("n_docs"), lit(totDl).as("tot_dl"))
+    /** [[bm25Over]]'s `withStats`. */
+    def withStats(df: DataFrame): DataFrame = df.select(col("*") +: cols: _*)
+  }
 
-  /** [[corpusStats]] over an already-resolved segment list (the
-    * [[searchBm25]] one-version form).
+  /** Version `v`'s corpus: its segments' manifest stats summed on the
+    * driver, minus the tombstoned docs' (count, dl) — exact, so
+    * post-delete BM25 equals a rebuild without the erased docs. One
+    * collect, only when the version has tombstones.
     */
-  private def statsOf(spark: SparkSession, dir: String,
-                      segs: Seq[String]): DataFrame =
-    spark.read.parquet(segs.map(s => s"$dir/$s/_stats"): _*)
-      .agg(sum("n_docs").as("n_docs"), sum("tot_dl").as("tot_dl"))
+  private def corpusOf(spark: SparkSession, dir: String, v: Long,
+                       segs: Seq[Seg]): Corpus = {
+    val (tDocs, tDl) =
+      if (StoreManifest.read(spark, dir, v, "tomb").isEmpty) (0L, 0L)
+      else {
+        val r = tombstonesOf(spark, dir, v)
+          .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
+        (r.getLong(0), r.getLong(1))
+      }
+    Corpus(segs.map(_.nDocs).sum - tDocs, segs.map(_.totDl).sum - tDl, tDocs)
+  }
 
   /** BM25 ranked retrieval from dl-bearing posting rows (the [[build]]
     * schema) already filtered to the query's terms, plus a one-row
@@ -590,20 +615,20 @@ object InvertedIndex {
     * tie-flip doctrine).
     */
   def bm25(postings: DataFrame, stats: DataFrame): DataFrame =
-    bm25Over(postings, postings, stats)
+    bm25Over(postings, postings, _.crossJoin(broadcast(stats)))
 
   /** [[bm25]] scoring a doc SUBSET: `scorePosts` feeds the per-doc
     * aggregate while df still counts over `dfPosts` (the full pruned
     * posting read) — the split [[searchBm25TopK]] needs so MaxScore
     * pruning shrinks the expensive aggregate without perturbing a
-    * single surviving score.
+    * single surviving score. `withStats` adds the `n_docs` and `tot_dl`
+    * columns: a broadcast one-row frame, or a store's literals.
     */
   private def bm25Over(scorePosts: DataFrame, dfPosts: DataFrame,
-                       stats: DataFrame): DataFrame = {
+                       withStats: DataFrame => DataFrame): DataFrame = {
     val df = dfPosts.groupBy("term").agg(count(lit(1)).as("df"))
-    scorePosts.select("term", "doc_id", "tf", "dl")
-      .join(broadcast(df), "term")
-      .crossJoin(broadcast(stats))
+    withStats(scorePosts.select("term", "doc_id", "tf", "dl")
+      .join(broadcast(df), "term"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms"),
         // ORDERED left fold over term-sorted scores — the per-doc sum
@@ -617,11 +642,11 @@ object InvertedIndex {
   }
 
   /** End-to-end: BM25-score a PERSISTED index for query `terms`,
-    * reading only those terms' buckets plus the per-segment one-row
-    * `_stats` aux.
+    * reading only those terms' buckets; the corpus stats are literals
+    * summed from the manifest's segment lines.
     *
     * The manifest resolves exactly ONCE: postings and corpus stats both
-    * read the SAME committed segment list — resolving per-read would
+    * come from the SAME committed segment list — resolving per-read would
     * let a concurrent append/compact supply stats for documents whose
     * postings were never read, producing scores that match no
     * committed snapshot.
@@ -633,11 +658,11 @@ object InvertedIndex {
     // documents"
     if (segs.isEmpty) return emptyFrame(spark, "doc_id BIGINT, n_terms BIGINT, bm25 DOUBLE")
     // erased docs drop out of the candidate set inside livePosts, and
-    // adjustStats subtracts their (count, dl) from the corpus summary —
+    // corpusOf subtracts their (count, dl) from the corpus summary —
     // together the two make post-delete scores bit-equal to a rebuild
     // without them
-    bm25(livePosts(spark, dir, terms, segs, cur),
-      adjustStats(spark, dir, cur, statsOf(spark, dir, segs)))
+    val posts = livePosts(spark, dir, terms, segs, cur)
+    bm25Over(posts, posts, corpusOf(spark, dir, cur, segs).withStats)
   }
 
   /** The bucket-pruned, tombstone-filtered posting read of one
@@ -646,12 +671,13 @@ object InvertedIndex {
     * segment list and prunes with the committed bucket count.
     */
   private def livePosts(spark: SparkSession, dir: String, terms: Seq[String],
-                        segs: Seq[String], cur: Long): DataFrame = {
+                        segs: Seq[Seg], cur: Long): DataFrame = {
     val b = storedBuckets(spark, dir, cur)
     val wanted = terms.map(t => bucketOf(t, b)).distinct
     minusTombstones(spark, dir, cur, spark.read
       .option("basePath", dir)
-      .parquet(segs.map(s => s"$dir/$s"): _*)
+      .schema(s"$PostingDdl, seg STRING, bucket INT")
+      .parquet(segs.map(s => s"$dir/${s.name}"): _*)
       .filter(col("bucket").isin(wanted: _*))
       .filter(col("term").isin(terms: _*)))
   }
@@ -679,29 +705,21 @@ object InvertedIndex {
     val segs = segsOf(spark, dir, cur)
     // no documents: no bound to prune with
     if (segs.isEmpty) return (qTerms, None)
-    maxScorePlanResolved(spark, dir, qTerms, k, segs, cur,
-      livePosts(spark, dir, qTerms, segs, cur),
-      adjustStats(spark, dir, cur, statsOf(spark, dir, segs)))
+    maxScorePlanResolved(spark, qTerms, k, segs.map(s => s"$dir/${s.name}"),
+      livePosts(spark, dir, qTerms, segs, cur), corpusOf(spark, dir, cur, segs))
   }
 
-  /** [[maxScorePlan]] over an already-resolved (segments, version,
-    * postings, stats) — the form [[searchBm25TopK]] uses so one query
-    * resolves the manifest and builds the pruned posting/stats reads
-    * exactly once (review r11).
+  /** [[maxScorePlan]] over an already-resolved (segment dirs, postings,
+    * corpus) — the form [[searchBm25TopK]] uses so one query resolves
+    * the manifest and builds the pruned posting read exactly once
+    * (review r11).
     */
-  private def maxScorePlanResolved(spark: SparkSession, dir: String,
-                                   qTerms: Seq[String], k: Int,
-                                   segs: Seq[String], cur: Long,
-                                   posts: DataFrame, stats: DataFrame)
-      : (Seq[String], Option[Double]) = {
-    val statsRow = stats.head()
-    val nDocs = statsRow.getLong(0)
-    val totDl = statsRow.getLong(1)
-    val tombCount =
-      if (StoreManifest.read(spark, dir, cur, "tomb").isEmpty) 0L
-      else tombstonesOf(spark, dir, cur).count()
+  private def maxScorePlanResolved(spark: SparkSession, qTerms: Seq[String], k: Int,
+                                   segDirs: Seq[String], posts: DataFrame,
+                                   corpus: Corpus): (Seq[String], Option[Double]) = {
+    val (nDocs, totDl, tombCount) = (corpus.nDocs, corpus.totDl, corpus.tombs)
     val tr = spark.read.schema("term STRING, df BIGINT, max_tf BIGINT, min_dl BIGINT")
-      .parquet(segs.map(s => s"$dir/$s/_terms"): _*)
+      .parquet(segDirs.map(d => s"$d/_terms"): _*)
       .filter(col("term").isin(qTerms: _*))
       .groupBy("term").agg(sum("df").as("df"), max("max_tf").as("max_tf"),
         min("min_dl").as("min_dl"))
@@ -719,7 +737,7 @@ object InvertedIndex {
     }.toMap
     val ordered = qTerms.sortBy(t => (-ub(t), t))
     val c1 = posts.filter(col("term") === ordered.head).select("doc_id")
-    val top1 = bm25Over(posts.join(c1, Seq("doc_id"), "left_semi"), posts, stats)
+    val top1 = bm25Over(posts.join(c1, Seq("doc_id"), "left_semi"), posts, corpus.withStats)
       .orderBy(col("bm25").desc, col("doc_id")).limit(k)
       .select("bm25").collect()
     val theta = if (top1.length < k) None else Some(top1.last.getDouble(0))
@@ -742,7 +760,9 @@ object InvertedIndex {
     * the scoring aggregate. On a skewed query (one rare high-idf term
     * among common ones) the common terms' doc sets never aggregate:
     * the scored-posting-row reduction is measured in InvertedIndexSpec.
-    * Costs one extra tiny job (phase-1 θ probe).
+    * The planning step (the `_terms` collect and the θ probe) runs 7
+    * Spark jobs, of the 13 a warm top-10 read runs (4 for the
+    * exhaustive scorer) on the sf0.001 `documents` store.
     *
     * `buckets` is unused — pruning always takes the store's committed
     * count; the parameter stays only for source compatibility with
@@ -752,19 +772,19 @@ object InvertedIndex {
                      k: Int, buckets: Int = 32): DataFrame = {
     val qTerms = terms.distinct
     // resolve the store ONCE: segments, version, pruned postings and
-    // adjusted stats are shared by the planning probe and the final
+    // corpus stats are shared by the planning probe and the final
     // scoring (review r11 — the first cut rebuilt all four twice)
     val cur = committed(spark, dir)
     val segs = segsOf(spark, dir, cur)
     if (qTerms.isEmpty || segs.isEmpty)
       return searchBm25(spark, dir, terms).orderBy(col("bm25").desc, col("doc_id")).limit(k)
     val posts = livePosts(spark, dir, qTerms, segs, cur)
-    val stats = adjustStats(spark, dir, cur, statsOf(spark, dir, segs))
-    val (essential, _) =
-      maxScorePlanResolved(spark, dir, qTerms, k, segs, cur, posts, stats)
+    val corpus = corpusOf(spark, dir, cur, segs)
+    val (essential, _) = maxScorePlanResolved(spark, qTerms, k,
+      segs.map(s => s"$dir/${s.name}"), posts, corpus)
     val cands = posts.filter(col("term").isin(essential: _*))
       .select("doc_id").distinct()
-    bm25Over(posts.join(cands, Seq("doc_id"), "left_semi"), posts, stats)
+    bm25Over(posts.join(cands, Seq("doc_id"), "left_semi"), posts, corpus.withStats)
       .orderBy(col("bm25").desc, col("doc_id")).limit(k)
   }
 

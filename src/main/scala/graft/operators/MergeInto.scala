@@ -262,6 +262,8 @@ object MergeInto {
       }
       live.write.partitionBy(partitionCol).mode("overwrite").parquet(dir)
       val files = relFiles()
+      // no data file: the batch was empty, and an empty store has no version
+      if (files.isEmpty) return (0L, 0L)
       val dataSchema = live.drop(partitionCol).schema
       writeManifest(spark, dir, 0L,
         dataSchema.add(partitionCol, org.apache.spark.sql.types.StringType), files)

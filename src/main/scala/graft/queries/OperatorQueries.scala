@@ -1534,9 +1534,9 @@ object OperatorQueries extends QueryPack {
     }),
 
     // persisted BM25 ranked retrieval: the same bucket-pruned posting
-    // read (dl inline on every posting row) plus the segments'
-    // co-committed one-row `_stats` aux for N/avgdl — nothing
-    // corpus-sized is read — DuckDB recomputes the identical score
+    // read (dl inline on every posting row) plus the segments' corpus
+    // stats from the manifest for N/avgdl — nothing corpus-sized is
+    // read — DuckDB recomputes the identical score
     // expression (InvertedIndex.Bm25ScoreSql) straight from documents,
     // so the on-disk store must reproduce corpus-truth relevance bit
     // for bit at 6 dp. Query = the corpus's top trigram's distinct
@@ -1582,7 +1582,7 @@ object OperatorQueries extends QueryPack {
     // every doc_id % 7 == 0 (one manifest flip; segments untouched), and
     // the measured query is the bucket-pruned BM25 search over the
     // SURVIVORS — posting candidates anti-join the tombstones and the
-    // _stats corpus sums subtract the erased docs' (count, dl) exactly,
+    // manifest corpus sums subtract the erased docs' (count, dl) exactly,
     // so DuckDB recomputing BM25 from scratch over the kept documents
     // must match bit for bit at 6 dp: delete ≡ rebuild-without, proven
     // hash-grade. Probe = the top trigram of the kept corpus.
@@ -2229,7 +2229,7 @@ object OperatorQueries extends QueryPack {
     // oracle constant as q_text_bm25 (InvertedIndex.Bm25OracleSql —
     // one copy, so the score text cannot drift between the proofs),
     // computed by DuckDB straight from documents while Spark's came
-    // off the on-disk postings (dl inline) + per-segment _stats
+    // off the on-disk postings (dl inline) + the manifest's segment stats
     "s_text_index_bm25" -> graft.operators.InvertedIndex.Bm25OracleSql,
 
     // hash-grade promotion of the k-core decomposition (VERDICT r10

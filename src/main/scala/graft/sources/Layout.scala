@@ -24,15 +24,4 @@ object Layout {
 
   def readPartitionedEvents(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
-
-  /** Bucketed fact layout: co-locates both sides of an equi-join so the
-    * shuffle disappears (see PlanSpec's bucketed-join test).
-    */
-  def writeBucketed(df: DataFrame, table: String, path: String,
-                    bucketCol: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .option("path", path)
-      .saveAsTable(table)
 }

@@ -45,8 +45,9 @@ object AnnIndexSink {
     vectors.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        if (!batch.isEmpty)
-          AnnIndexStore.appendBatch(spark, batch, dir, batchId)
+        // no emptiness probe: an empty batch stages no list file, so the
+        // append commits nothing
+        AnnIndexStore.appendBatch(spark, batch, dir, batchId)
         // threshold test reads the manifest, never a Spark job —
         // per-trigger overhead must not scale with batch frequency when
         // far below the bound (ADVICE r11)

@@ -10,32 +10,27 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * rollup cube: [[RollupSink]], full-text index: here), all the same
   * composition: foreachBatch + an idempotent atomic storage commit.
   *
-  * Exactly-once EFFECT from at-least-once delivery: each trigger's
-  * postings become ONE new segment (`seg=b<batchId>`) whose data lands
-  * before the manifest rename commits it together with `hw = batchId`
-  * — [[InvertedIndex.append]] returns at once for the batch at `hw`, so
-  * a replayed trigger (a restart from this query's checkpoint) is a
-  * no-op, and a crash before the commit leaves only an unreferenced dir
-  * the replay rewrites. A restart from a fresh checkpoint is refused:
-  * its batch ids restart at 0, below or at `hw` under a new query id. An
-  * empty trigger commits nothing: append learns the batch is empty from
-  * the count it observes on its own posting write, with no probe job.
+  * Exactly-once EFFECT from at-least-once delivery: each trigger writes
+  * ONE segment whose data lands before the manifest rename commits it
+  * together with `hw = batchId` — [[InvertedIndex.append]] returns at
+  * once for the batch at `hw`, so a replayed trigger (a restart from
+  * this query's checkpoint) is a no-op, and a crash before the commit
+  * leaves only an unreferenced dir. A restart from a fresh checkpoint
+  * is refused: its batch ids restart at 0, below or at `hw` under a new
+  * query id. An empty trigger below the cap commits nothing: append
+  * learns that from the count it observes on its own posting write.
   * Search-after-stream ≡ batch rebuild of the same documents
   * (InvertedIndexSpec).
   *
   * Scale shape per trigger: one batch-sized tokenize + aggregate and
   * ≤ `buckets` files — cost tracks the STREAM rate, not index size.
-  * Segment COUNT stays bounded: once the live list exceeds
-  * `maxSegments`, the trigger runs [[InvertedIndex.compact]] — a
-  * Lucene-style SIZE-TIERED merge (fold the smallest segments down to
-  * half the cap, carry the largest forward untouched) behind the same
-  * manifest flip, so lookup fan-in is O(maxSegments) forever instead
-  * of one segment per trigger for the stream's lifetime (the r9
-  * verdict's one genuine scale defect), while a long-lived stream's
-  * big, old segments stop being rewritten — merge cost tracks the
-  * RECENT segments, not index size, so write amplification per
-  * document stays O(log corpus). Readers racing a merge resolve the
-  * pre-compact manifest and never double-count.
+  * Segment COUNT stays bounded: when one more segment would exceed
+  * `maxSegments`, append folds the batch into [[InvertedIndex.compact]]
+  * — a Lucene-style SIZE-TIERED merge (the batch and the smallest
+  * segments become one segment, leaving half the cap; the largest
+  * carry forward untouched), so lookup fan-in is O(maxSegments) and
+  * write amplification per document O(log corpus). Readers racing a
+  * merge resolve the pre-merge manifest and never double-count.
   */
 object IndexSink {
 
@@ -48,10 +43,7 @@ object IndexSink {
             buckets: Int = 32, maxSegments: Int = 8): StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        InvertedIndex.append(batch, dir, batchId, buckets)
-        if (InvertedIndex.segments(batch.sparkSession, dir).size > maxSegments)
-          InvertedIndex.compact(batch.sparkSession, dir,
-            targetSegs = math.max(1, maxSegments / 2))
+        InvertedIndex.append(batch, dir, batchId, buckets, maxSegments)
         ()
       }
       .option("checkpointLocation", checkpoint)

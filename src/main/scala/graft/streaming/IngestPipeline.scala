@@ -60,13 +60,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Scale per trigger: the dedup probe reads the touched seen buckets
   * (batch × corpus/buckets); each catch-up reads only the NEW doc
   * files (batch-sized); segment count stays bounded by the
-  * IndexSink-style auto-compact, list files by the cell-keyed append.
+  * append's fold into a compaction ([[InvertedIndex.append]]'s
+  * `maxSegments`), list files by the cell-keyed append.
   * No job probes the batch for emptiness, and no job re-reads a frame
   * the trigger has just materialized: counts and touched-bucket sets
   * are observed on the checkpoints and writes that run anyway
   * ([[graft.operators.Observed]]). Measured on a 24-message delivery
-  * with near mode, the ANN arm and a compaction per trigger: 41 Spark
-  * jobs — DedupStore 21, InvertedIndex 15 (append 8, compaction 7),
+  * with near mode, the ANN arm and a compaction per trigger: 32 Spark
+  * jobs — DedupStore 21, InvertedIndex 6 (one merged segment write; 15
+  * when the append and the compaction wrote a segment each),
   * AnnIndexStore 4, this object 1.
   */
 object IngestPipeline {
@@ -105,10 +107,7 @@ object IngestPipeline {
           DedupStore.compactSeen(spark, dedupDir)
         // AFTER the append so this trigger's version lands immediately;
         // also sweeps any version a prior crash left un-consumed
-        indexCatchUp(spark, dedupDir, indexDir, idxBuckets)
-        if (InvertedIndex.segments(spark, indexDir).size > maxSegments)
-          InvertedIndex.compact(spark, indexDir,
-            targetSegs = math.max(1, maxSegments / 2))
+        indexCatchUp(spark, dedupDir, indexDir, idxBuckets, maxSegments)
         annDir.foreach(ad => annCatchUp(spark, dedupDir, ad, annNlist))
         // vacuumRetain > 0 bounds the dedup store's manifest/file growth
         // under an ENDLESS stream (each trigger commits versions; the
@@ -189,7 +188,7 @@ object IngestPipeline {
     * pinning [[vacuumSafe]]. Safe to call at any time.
     */
   def indexCatchUp(spark: SparkSession, dedupDir: String, indexDir: String,
-                   idxBuckets: Int = 32): Long = {
+                   idxBuckets: Int = 32, maxSegments: Int = Int.MaxValue): Long = {
     val cur = StoreManifest.currentVersion(spark, dedupDir)
     if (cur < 0) return 0L
     val curDocFiles = StoreManifest.read(spark, dedupDir, cur, "doc").toSet
@@ -200,7 +199,7 @@ object IngestPipeline {
       val docsV = versionSurvivors(spark, dedupDir, v, ingestVersions,
         curDocFiles, Seq("doc_id", "text"))
       // append commits nothing for a version whose docs were all erased
-      if (!docsV.exists(InvertedIndex.append(_, indexDir, v, idxBuckets)))
+      if (!docsV.exists(InvertedIndex.append(_, indexDir, v, idxBuckets, maxSegments)))
         InvertedIndex.markApplied(spark, indexDir, v)
       consumed += 1
     }

@@ -330,6 +330,34 @@ class AnnStoreSpec extends SparkSpec {
     } finally graft.Fs.rmTree(base)
   }
 
+  test("AnnIndexSink: an empty trigger commits no store version") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val base = java.nio.file.Files.createTempDirectory("graft_ann_empty")
+    val dir = base.resolve("store").toString
+    val ckpt = base.resolve("ckpt").toString
+    try {
+      AnnIndexStore.save(spark, emb.filter(col("vec_id") >= 100), dir)
+      val saved = graft.operators.StoreManifest.currentVersion(spark, dir)
+      val newRows = emb.filter(col("vec_id") < 20).select(col("vec_id"), col("embedding"))
+        .as[(Long, Seq[Float])].collect().toSeq
+      val in = MemoryStream[(Long, Seq[Float])]
+      val q = graft.streaming.AnnIndexSink.start(
+        in.toDF().toDF("vec_id", "embedding"), dir, ckpt)
+      def version = graft.operators.StoreManifest.currentVersion(spark, dir)
+      try {
+        in.addData(Seq.empty[(Long, Seq[Float])]); q.processAllAvailable()
+        assert(version == saved, "an empty first trigger committed a version")
+        in.addData(newRows); q.processAllAvailable()
+        assert(version == saved + 1 && AnnIndexStore.highWater(spark, dir) == 1L)
+        in.addData(Seq.empty[(Long, Seq[Float])]); q.processAllAvailable()
+        assert(version == saved + 1, "an empty trigger committed a version")
+      } finally q.stop()
+      assert((0L until 20L).toSet.subsetOf(ids(dir)), "a streamed vector is missing")
+    } finally graft.Fs.rmTree(base.toString)
+  }
+
   test("probed cells prune the lists scan as partition filters") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_plan").toString
     try {

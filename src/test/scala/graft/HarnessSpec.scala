@@ -44,6 +44,7 @@ class HarnessSpec extends SparkSpec {
     assert(l.jobs >= 1 && l.stages >= 2 && l.tasks >= l.stages, l.toString)
     assert(l.shuffleWrite > 0 && l.shuffleRead > 0, l.toString)
     assert(l.outsideStageMs >= 0 && l.outsideStageMs <= l.wallMs, l.toString)
+    assert(l.sqlExecutions > 0 && l.planningMs > 0, l.toString)
     // the record carries the bytes as integers, so a small shuffle
     // reads non-zero instead of rounding to 0.00 MB
     val rec = Harness.record("q", rows, l, l)
@@ -53,5 +54,6 @@ class HarnessSpec extends SparkSpec {
       "spilled_bytes", "input_bytes"), rec)
     assert(bytes("shuffle_read_bytes") == l.shuffleRead && bytes("shuffle_read_bytes") > 0, rec)
     assert(bytes("shuffle_write_bytes") == l.shuffleWrite && bytes("shuffle_write_bytes") > 0, rec)
+    assert(rec.contains(s""""sql_executions":${l.sqlExecutions},"planning_ms":${l.planningMs},"""), rec)
   }
 }

@@ -353,7 +353,7 @@ class InvertedIndexSpec extends SparkSpec {
         "the replayed compaction diverges from a crash-free one")
       // the crashed attempt's segment is swept: disk = retained segments
       val referenced = graft.operators.StoreManifest.versions(spark, dir).flatMap(v =>
-        graft.operators.StoreManifest.read(spark, dir, v, "seg")).toSet
+        segNames(dir, v)).toSet
       val onDisk = new java.io.File(dir).listFiles()
         .map(_.getName).filter(_.startsWith("seg=")).toSet
       assert(onDisk == referenced, s"crashed compaction left ${onDisk -- referenced}")
@@ -500,7 +500,7 @@ class InvertedIndexSpec extends SparkSpec {
       assert(math.abs(got(d)._2 - sc) < 2e-6,
         s"doc $d score ${got(d)._2} != expected $sc")
     }
-    // persisted path (pruned buckets + one-row _stats) == in-memory formula
+    // persisted path (pruned buckets + manifest stats) == in-memory formula
     val docs = Tables.t(spark, sfDir, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_idxbm25").toString
     try {
@@ -520,24 +520,34 @@ class InvertedIndexSpec extends SparkSpec {
       val viaDl = InvertedIndex.docLengths(spark, dir)
         .agg(count(lit(1)), sum("dl")).collect()(0)
       assert((st.getLong(0), st.getLong(1)) == (viaDl.getLong(0), viaDl.getLong(1)),
-        "_stats summary diverges from the _doclen table")
+        "manifest corpus stats diverge from the _doclen table")
     } finally Fs.rmTree(dir)
   }
 
-  /** A segment's postings, `_doclen`, `_stats` and `_terms` as sorted
-    * row lists (row multisets).
+  /** The segment dir names of version `v` (a `seg` line's first field). */
+  private def segNames(dir: String, v: Long): Seq[String] =
+    StoreManifest.read(spark, dir, v, "seg").map(_.takeWhile(_ != '\t'))
+
+  /** Live segment `seg`'s manifest corpus stats, as `n_docs|tot_dl`. */
+  private def segStats(dir: String, seg: String): String =
+    StoreManifest.read(spark, dir, StoreManifest.currentVersion(spark, dir), "seg")
+      .find(_.startsWith(seg + "\t")).get.split('\t').drop(1).mkString("|")
+
+  /** A live segment's postings, `_doclen` and `_terms` as sorted row
+    * lists (row multisets), and its manifest stats.
     */
-  private def segContents(segDir: String): Map[String, Seq[String]] = {
+  private def segContents(dir: String, seg: String): Map[String, Seq[String]] = {
     def rows(path: String, cols: Seq[String]) =
       spark.read.parquet(path).select(cols.map(col): _*)
         .collect().map(_.toSeq.map {
           case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
           case v => String.valueOf(v)
         }.mkString("|")).toSeq.sorted
+    val segDir = s"$dir/$seg"
     Map(
       "postings" -> rows(segDir, Seq("bucket", "term", "doc_id", "positions", "tf", "dl")),
       "_doclen" -> rows(s"$segDir/_doclen", Seq("doc_id", "dl")),
-      "_stats" -> rows(s"$segDir/_stats", Seq("n_docs", "tot_dl")),
+      "stats" -> Seq(segStats(dir, seg)),
       "_terms" -> rows(s"$segDir/_terms", Seq("term", "df", "max_tf", "min_dl")))
   }
 
@@ -568,13 +578,13 @@ class InvertedIndexSpec extends SparkSpec {
           docs.select("doc_id").as[Long].collect().filter(id =>
             foldedRes.contains((id % 3).toInt) && !(tomb && erased(id))).toSeq: _*))
         InvertedIndex.write(InvertedIndex.build(survivors), ref)
-        val got = segContents(s"$dir/${merged.head}")
-        val want = segContents(s"$ref/${InvertedIndex.segments(spark, ref).head}")
+        val got = segContents(dir, merged.head)
+        val want = segContents(ref, InvertedIndex.segments(spark, ref).head)
         for (part <- want.keys)
           assert(got(part) == want(part), s"tomb=$tomb: $part differs from a rebuild")
         val dls = got("_doclen").map(_.split('|')(1).toLong)
-        assert(got("_stats") == Seq(s"${dls.size}|${dls.sum}"),
-          s"tomb=$tomb: _stats is not (count, sum) of _doclen")
+        assert(got("stats") == Seq(s"${dls.size}|${dls.sum}"),
+          s"tomb=$tomb: the manifest stats are not (count, sum) of _doclen")
         val keptTombs = InvertedIndex.tombstones(spark, dir).select("doc_id")
           .as[Long].collect().toSet
         val keptRes = kept.map(_.stripPrefix("seg=b").toInt)
@@ -582,6 +592,114 @@ class InvertedIndexSpec extends SparkSpec {
           s"tomb=$tomb: tombstones must shrink to the kept segment's docs")
       } finally { Fs.rmTree(dir); Fs.rmTree(ref) }
     }
+  }
+
+  test("folded append == write(build(survivors)), with and without a tombstone") {
+    import spark.implicits._
+    val docs = Tables.t(spark, sfDir, "documents")
+    for (tomb <- Seq(false, true)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_idxfold").toString
+      val ref = java.nio.file.Files.createTempDirectory("graft_idxfold_ref").toString
+      try {
+        (0 until 4).foreach { i =>
+          assert(InvertedIndex.append(docs.filter(col("doc_id") % 5 === i), dir, i.toLong))
+        }
+        val erased = docs.filter(col("doc_id") % 7 === 0 && col("doc_id") % 5 < 4)
+          .select("doc_id").as[Long].collect().toSet
+        if (tomb) assert(InvertedIndex.delete(spark, dir, erased.toSeq) == erased.size)
+        val before = InvertedIndex.segments(spark, dir)
+        // batch 4 would be a fifth segment: at cap 4 it folds with the
+        // three smallest (one segment kept, so its tombstones carry
+        // forward); at cap 1 with all four
+        val cap = if (tomb) 4 else 1
+        assert(InvertedIndex.append(docs.filter(col("doc_id") % 5 === 4), dir, 4L,
+          maxSegments = cap))
+        val after = InvertedIndex.segments(spark, dir)
+        val kept = before.intersect(after)
+        val merged = after.diff(before)
+        assert(merged.size == 1 && kept.size == math.max(1, cap / 2) - 1, s"$before -> $after")
+        assert(InvertedIndex.highWater(spark, dir) == 4L)
+        val foldedRes = before.diff(kept).map(_.stripPrefix("seg=b").toInt) :+ 4
+        val survivors = docs.filter(col("doc_id").isin(
+          docs.select("doc_id").as[Long].collect().filter(id =>
+            foldedRes.contains((id % 5).toInt) && !(tomb && erased(id))).toSeq: _*))
+        InvertedIndex.write(InvertedIndex.build(survivors), ref)
+        val got = segContents(dir, merged.head)
+        val want = segContents(ref, InvertedIndex.segments(spark, ref).head)
+        for (part <- want.keys)
+          assert(got(part) == want(part), s"tomb=$tomb: $part differs from a rebuild")
+        val dls = got("_doclen").map(_.split('|')(1).toLong)
+        assert(got("stats") == Seq(s"${dls.size}|${dls.sum}"),
+          s"tomb=$tomb: the manifest stats are not (count, sum) of _doclen")
+        val keptTombs = InvertedIndex.tombstones(spark, dir).select("doc_id")
+          .as[Long].collect().toSet
+        val keptRes = kept.map(_.stripPrefix("seg=b").toInt)
+        assert(keptTombs == erased.filter(id => tomb && keptRes.contains((id % 5).toInt)),
+          s"tomb=$tomb: tombstones must shrink to the kept segment's docs")
+      } finally { Fs.rmTree(dir); Fs.rmTree(ref) }
+    }
+  }
+
+  test("folded append crash window: merged segment written, manifest not committed — readers keep the previous version; replay converges") {
+    val docs = Tables.t(spark, sfDir, "documents")
+    val toks = docs.orderBy("doc_id")
+      .select(split(col("text"), " ").as("t")).head().getSeq[String](0)
+      .take(3).toSeq
+    def res(d: String) = InvertedIndex.searchPhrase(spark, d, toks)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def bm(d: String) = InvertedIndex.searchBm25(spark, d, toks.distinct)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    def stats(d: String) = InvertedIndex.corpusStats(spark, d).head().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft_idxfcw").toString
+    val twin = java.nio.file.Files.createTempDirectory("graft_idxfcw_twin").toString
+    try {
+      for (d <- Seq(dir, twin); i <- 0 until 2)
+        assert(InvertedIndex.append(docs.filter(col("doc_id") % 3 === i), d, i.toLong))
+      val batch = docs.filter(col("doc_id") % 3 === 2)
+      val (segs, phrase, scores) = (InvertedIndex.segments(spark, dir), res(dir), bm(dir))
+      crashBeforeCommit(dir)(d => InvertedIndex.append(batch, d, 2L, maxSegments = 2))
+      assert(InvertedIndex.segments(spark, dir) == segs,
+        "an uncommitted merged segment became live")
+      assert(res(dir) == phrase && bm(dir) == scores && InvertedIndex.highWater(spark, dir) == 1L,
+        "readers of the previous version saw the crashed fold")
+      // the replayed batch folds again and converges to a crash-free twin
+      assert(InvertedIndex.append(batch, dir, 2L, maxSegments = 2))
+      assert(InvertedIndex.append(batch, twin, 2L, maxSegments = 2))
+      assert(InvertedIndex.segments(spark, dir).size == 1)
+      assert(res(dir) == res(twin) && bm(dir) == bm(twin) && stats(dir) == stats(twin),
+        "the replayed fold diverges from a crash-free one")
+      assert(InvertedIndex.highWater(spark, dir) == 2L)
+      val referenced = StoreManifest.versions(spark, dir).flatMap(v => segNames(dir, v)).toSet
+      val onDisk = new java.io.File(dir).listFiles()
+        .map(_.getName).filter(_.startsWith("seg=")).toSet
+      assert(onDisk == referenced, s"crashed fold left ${onDisk -- referenced}")
+    } finally { Fs.rmTree(dir); Fs.rmTree(twin) }
+  }
+
+  test("a version whose segment lines carry no corpus stats is refused by writes and reads") {
+    val docs = Tables.t(spark, sfDir, "documents")
+    val dir = java.nio.file.Files.createTempDirectory("graft_idxnostats").toString
+    try {
+      InvertedIndex.write(InvertedIndex.build(docs.filter(col("doc_id") % 2 === 0)), dir)
+      // the layout before the stats: the same lines, each `seg` line
+      // holding only its name
+      StoreManifest.commit(spark, dir, 1L, StoreManifest.readLines(spark, dir, 0L)
+        .map(l => if (l.startsWith("seg\t")) l.split('\t').take(2).mkString("\t") else l))
+      def refused(op: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](op)
+        assert(e.getMessage.contains("without corpus stats") && e.getMessage.contains(dir),
+          e.getMessage)
+      }
+      refused(InvertedIndex.append(docs.filter(col("doc_id") % 2 === 1), dir, 0L))
+      refused(InvertedIndex.compact(spark, dir))
+      refused(InvertedIndex.delete(spark, dir, Seq(0L)))
+      refused(InvertedIndex.searchBm25(spark, dir, Seq("a")).collect())
+      refused(InvertedIndex.searchBm25TopK(spark, dir, Seq("a"), 5).collect())
+      refused(InvertedIndex.searchPhrase(spark, dir, Seq("a", "b")).collect())
+      refused(InvertedIndex.docLengths(spark, dir).collect())
+      refused(InvertedIndex.corpusStats(spark, dir).collect())
+      assert(StoreManifest.currentVersion(spark, dir) == 1L, "a refused write committed")
+    } finally Fs.rmTree(dir)
   }
 
   test("searchBm25: unmanifested dir fails loudly; committed zero-segment store answers empty") {
@@ -621,8 +739,7 @@ class InvertedIndexSpec extends SparkSpec {
       // retain=2 default: v0's segment is still on disk and resolvable
       assert(new java.io.File(dir, "seg=base").exists(),
         "rebuild destroyed the previous version's committed data")
-      assert(graft.operators.StoreManifest
-        .read(spark, dir, 0L, "seg") == Seq("seg=base"))
+      assert(segNames(dir, 0L) == Seq("seg=base"))
       val toks = docs.orderBy("doc_id")
         .select(split(col("text"), " ").as("t")).head().getSeq[String](0)
         .take(3).toSeq
@@ -645,13 +762,17 @@ class InvertedIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_idxgrow").toString
     try {
       // the one layout every writer keeps: one buckets line per
-      // manifest, and every live segment carries its three aux dirs
+      // manifest, every live segment carries its two aux dirs, and its
+      // manifest line its corpus stats
       def assertOneLayout(after: String): Unit = {
         val cur = graft.operators.StoreManifest.currentVersion(spark, dir)
         assert(graft.operators.StoreManifest.read(spark, dir, cur, "buckets").size == 1,
           s"$after: v$cur must carry exactly one buckets line")
-        for (seg <- InvertedIndex.segments(spark, dir); aux <- Seq("_doclen", "_stats", "_terms"))
-          assert(new java.io.File(s"$dir/$seg/$aux").isDirectory, s"$after: $seg lacks $aux")
+        for (seg <- InvertedIndex.segments(spark, dir)) {
+          for (aux <- Seq("_doclen", "_terms"))
+            assert(new java.io.File(s"$dir/$seg/$aux").isDirectory, s"$after: $seg lacks $aux")
+          assert(segStats(dir, seg).split('|').length == 2, s"$after: $seg lacks its stats")
+        }
       }
       // 12 appended slices with compaction every time the live list
       // exceeds 3 — the IndexSink loop, run synchronously
@@ -668,8 +789,7 @@ class InvertedIndexSpec extends SparkSpec {
       // disk = segments referenced by the <= 2 retained manifests
       val versions = graft.operators.StoreManifest.versions(spark, dir)
       assert(versions.size <= 2, s"manifests grow with stream age: $versions")
-      val referenced = versions.flatMap(v =>
-        graft.operators.StoreManifest.read(spark, dir, v, "seg")).toSet
+      val referenced = versions.flatMap(v => segNames(dir, v)).toSet
       val onDisk = new java.io.File(dir).listFiles()
         .map(_.getName).filter(_.startsWith("seg=")).toSet
       assert(onDisk == referenced,

@@ -46,6 +46,34 @@ class StreamRecoverySpec extends SparkSpec {
     assert(spark.read.parquet(snap).count() == 2)
   }
 
+  test("UpsertSink: an empty trigger commits no snapshot version") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val dir = Files.createTempDirectory("graft_upsert_empty")
+    val snap = dir.resolve("snap").toString
+    val ckpt = dir.resolve("ckpt").toString
+    val input = MemoryStream[(Long, String, Double, Long, Boolean)]
+    val q = graft.streaming.UpsertSink.start(
+      input.toDF().toDF("id", "day", "v", "seq", "del"),
+      snap, Seq("id"), "day", "seq", ckpt, Some("del"))
+    def version = graft.operators.StoreManifest.currentVersion(spark, snap)
+    try {
+      // before the bootstrap batch, and after it
+      input.addData(Seq.empty[(Long, String, Double, Long, Boolean)]); q.processAllAvailable()
+      assert(version == -1L, "an empty first trigger committed a version")
+      input.addData(Seq((1L, "d1", 10.0, 1L, false))); q.processAllAvailable()
+      val v = version
+      assert(v >= 0L)
+      input.addData(Seq.empty[(Long, String, Double, Long, Boolean)]); q.processAllAvailable()
+      assert(version == v, "an empty trigger committed a version")
+    } finally q.stop()
+    val got = graft.operators.MergeInto.readSnapshot(spark, snap)
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
+    assert(got == Seq((1L, 10.0, "d1")), got.toString)
+    Fs.rmTree(dir.toString)
+  }
+
   test("file-stream aggregation survives stop/restart via checkpoint") {
     val dir = Files.createTempDirectory("graft_recover")
     val in = Files.createDirectory(dir.resolve("in")).toString
