@@ -17,12 +17,15 @@ import scala.jdk.CollectionConverters._
   *
   * `runMain graft.Harness OUT.json [query...]` runs each named query
   * (default: every SparkEntry query) against SPARK_GRAFT_SF_DIR, cold
-  * and then warm, both under the listener. It prints one line per query
-  * and writes one JSON record per query to OUT: cold/warm seconds and
-  * rows, then the warm run's layers — SQL executions, Catalyst planning
-  * ms, jobs, stages, tasks, time outside every stage, summed stage wall,
-  * task run, task CPU and GC time, and shuffle_read_bytes /
-  * shuffle_write_bytes / spilled_bytes / input_bytes as integers.
+  * and then warm, both under the listener, timing `count()` as Bench
+  * does; then once more through a `noop` write, which computes every
+  * output column that `count()` lets Catalyst prune. It prints one line
+  * per query and writes one JSON record per query to OUT: cold/warm/noop
+  * seconds and rows, then the warm run's layers — SQL executions,
+  * Catalyst planning ms, jobs, stages, tasks, time outside every stage,
+  * summed stage wall, task run, task CPU and GC time, and
+  * shuffle_read_bytes / shuffle_write_bytes / spilled_bytes /
+  * input_bytes as integers.
   */
 object Harness {
 
@@ -258,11 +261,12 @@ object Harness {
     try Files.write(Paths.get(path), text.getBytes(UTF_8))
     catch { case e: Throwable => System.err.println(s"[graft] could not write $path: $e") }
 
-  /** One query's JSON record: cold and warm seconds, rows, and the warm
-    * run's layers, bytes as integers.
+  /** One query's JSON record: cold, warm and `noop`-write seconds, rows,
+    * and the warm run's layers, bytes as integers.
     */
-  def record(name: String, rows: Long, cold: Layers, w: Layers): String =
-    s"""${quote(name)}: {"cold_s":${fmt(cold.wallMs / 1e3)},"warm_s":${fmt(w.wallMs / 1e3)},"rows":$rows,""" +
+  def record(name: String, rows: Long, cold: Layers, w: Layers, noopS: Double): String =
+    s"""${quote(name)}: {"cold_s":${fmt(cold.wallMs / 1e3)},"warm_s":${fmt(w.wallMs / 1e3)},""" +
+      s""""noop_s":${fmt(noopS)},"rows":$rows,""" +
       s""""sql_executions":${w.sqlExecutions},"planning_ms":${w.planningMs},""" +
       s""""jobs":${w.jobs},"stages":${w.stages},"tasks":${w.tasks},"outside_stage_ms":${w.outsideStageMs},""" +
       s""""stage_ms":${w.stageMs},"task_run_ms":${w.taskRunMs},"task_cpu_ms":${w.taskCpuMs},"gc_ms":${w.gcMs},""" +
@@ -276,12 +280,14 @@ object Harness {
     val names = if (args.length > 1) args.toSeq.drop(1) else registry.keys.toSeq.sorted
     val (known, unknown) = names.partition(registry.contains)
     unknown.foreach(n => println(s"[harness] unknown query: $n"))
-    val records = each(spark, known.map(n => n -> registry(n)), passes = 2) {
-      (_, fn) => measure(spark)(fn(spark, sf).count())
+    val records = each(spark, known.map(n => n -> registry(n))) { (_, fn) =>
+      val (rows, cold) = measure(spark)(fn(spark, sf).count())
+      val (_, w) = measure(spark)(fn(spark, sf).count())
+      (rows, cold, w, secs(fn(spark, sf).write.format("noop").mode("overwrite").save()))
     }.map {
-      case Outcome(name, Seq((rows, cold), (_, w)), _) =>
-        println(f"[harness] $name%-28s cold ${cold.wallMs / 1e3}%6.2f s  warm ${w.wallMs / 1e3}%6.2f s  rows $rows  sql ${w.sqlExecutions}  planning ${w.planningMs} ms  jobs ${w.jobs}  stages ${w.stages}  tasks ${w.tasks}  outside ${w.outsideStageMs} ms")
-        record(name, rows, cold, w)
+      case Outcome(name, Seq((rows, cold, w, noopS)), _) =>
+        println(f"[harness] $name%-28s cold ${cold.wallMs / 1e3}%6.2f s  warm ${w.wallMs / 1e3}%6.2f s  noop $noopS%6.2f s  rows $rows  sql ${w.sqlExecutions}  planning ${w.planningMs} ms  jobs ${w.jobs}  stages ${w.stages}  tasks ${w.tasks}  outside ${w.outsideStageMs} ms")
+        record(name, rows, cold, w, noopS)
       case o =>
         val msg = o.error.fold("no result")(describe(_, 200))
         println(s"[harness] ${o.name} failed: $msg")

@@ -312,17 +312,14 @@ object AnnIndexStore {
     tombsOf(spark, dir, current(spark, dir))
 
   private def tombsOf(spark: SparkSession, dir: String, ver: Version): DataFrame =
-    if (ver.tombs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL("vec_id BIGINT"))
-    else spark.read.schema("vec_id BIGINT")
-      .parquet(ver.tombs.map(t => s"$dir/${t._1}"): _*)
+    StoreManifest.scan(spark, dir, StructType.fromDDL("vec_id BIGINT"), ver.tombs.map(_._1))
 
   /** The current version's inverted lists, (vec_id, embedding, nrm,
     * list_id), tombstoned rows included — the ONE read of list data:
-    * files come from the manifest and `list_id` stays a partition
-    * column, so a filter on it prunes files as a PartitionFilter. A dir
-    * with no committed version is not an ANN store and throws.
+    * the [[StoreManifest.scan]] of the manifest's `list` files under its
+    * pinned schema, which declares `list_id`, so a filter on it prunes
+    * files as a PartitionFilter. A dir with no committed version is not
+    * an ANN store and throws.
     */
   def readLists(spark: SparkSession, dir: String): DataFrame = {
     val cur = current(spark, dir)
@@ -333,10 +330,7 @@ object AnnIndexStore {
   private def listsOf(spark: SparkSession, dir: String, ver: Version): DataFrame = {
     val schema = ver.schema.getOrElse(StructType.fromDDL(
       "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, list_id INT"))
-    if (ver.lists.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.option("basePath", dir).schema(schema)
-      .parquet(ver.lists.map(f => s"$dir/$f"): _*)
+    StoreManifest.scan(spark, dir, schema, ver.lists)
   }
 
   /** The cell of a list file (`list_id=<n>/…`). */
@@ -386,8 +380,9 @@ object AnnIndexStore {
 
   /** Persisted PQ sub-codebooks as codebooks(subspace)(code) = centroid. */
   def loadCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.schema("subspace INT, code INT, c ARRAY<DOUBLE>")
-      .parquet(trainedVersion(spark, dir).codebooks.map(f => s"$dir/$f"): _*)
+    val rows = StoreManifest.scan(spark, dir,
+        StructType.fromDDL("subspace INT, code INT, c ARRAY<DOUBLE>"),
+        trainedVersion(spark, dir).codebooks)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, bs) =>
       bs.sortBy(_._2).map(_._3)
@@ -399,8 +394,8 @@ object AnnIndexStore {
     */
   private def loadCentroids(spark: SparkSession, dir: String,
                             ver: Version): Array[Array[Double]] =
-    spark.read.schema("list_id INT, c ARRAY<DOUBLE>")
-      .parquet(ver.centroids.map(f => s"$dir/$f"): _*)
+    StoreManifest.scan(spark, dir, StructType.fromDDL("list_id INT, c ARRAY<DOUBLE>"),
+        ver.centroids)
       .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   /** Assign `vectors` to their cells and stage them as version `next`'s
@@ -451,8 +446,8 @@ object AnnIndexStore {
                  k: Int = 5, nprobe: Int = 6): DataFrame = {
     graft.functions.VectorFunctions.register(spark)
     val cur = trainedVersion(spark, dir)
-    val centroidsDf = spark.read.schema("list_id INT, c ARRAY<DOUBLE>, c_normsq DOUBLE")
-      .parquet(cur.centroids.map(f => s"$dir/$f"): _*)
+    val centroidsDf = StoreManifest.scan(spark, dir,
+      StructType.fromDDL("list_id INT, c ARRAY<DOUBLE>, c_normsq DOUBLE"), cur.centroids)
     val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
       .withColumn("pn", sqrt(expr("graft_dot(pv, pv)")))
     val np = if (nprobe > 0) nprobe else math.max(1, cur.nlist / 4)

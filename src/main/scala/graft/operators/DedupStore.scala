@@ -253,8 +253,7 @@ object DedupStore {
         // seen side carries no stats (manifest-resolved file list) —
         // SHUFFLE_HASH keeps the planner from sorting both sides (r5);
         // both sides are already pruned: batch-sized vs touched dirs
-        val seen = spark.read.schema(SeenSchema)
-          .parquet(seenFiles.map(f => s"$dir/seen/$f"): _*)
+        val seen = StoreManifest.scan(spark, s"$dir/seen", SeenSchema, seenFiles)
         val (f, r) = Observed.checkpoint(
           firsts.join(seen.hint("shuffle_hash"), Seq("fp"), "left_anti"),
           count(lit(1)).as("n"))
@@ -294,7 +293,7 @@ object DedupStore {
         val drops = banded.select(col("doc_id"), col("band"), col("bucket"),
             col("sig").as("b_sig"))
           .join(probeSide(spark, banded.select("doc_id", "band", "bucket", "sig"),
-              nearSeen.map(f => s"$dir/near/$f"), NearSchema).hint("shuffle_hash"),
+              s"$dir/near", nearSeen, NearSchema).hint("shuffle_hash"),
             Seq("band", "bucket"))
           .filter((col("a_id").isNull || col("a_id") < col("doc_id")) &&
             MinHashDedup.estJaccard("sig", "b_sig") >= nc.threshold)
@@ -338,7 +337,7 @@ object DedupStore {
         val drops = withB.select(col("doc_id"), col("table_id"), col("bucket"),
             col("v").as("bv"), col("nrm").as("bn"))
           .join(probeSide(spark, withB.select("doc_id", "table_id", "bucket", "v", "nrm"),
-              embSeen.map(f => s"$dir/embs/$f"), EmbSchema).hint("shuffle_hash"),
+              s"$dir/embs", embSeen, EmbSchema).hint("shuffle_hash"),
             Seq("table_id", "bucket"))
           .filter((col("a_id").isNull || col("a_id") < col("doc_id")) &&
             AnnLsh.cosineRaw("v", "nrm", "bv", "bn") >= ec.threshold)
@@ -402,31 +401,28 @@ object DedupStore {
     AppendStats(batchRows, nNew, nLex, nAcc, next)
   }
 
-  /** The accepted corpus at the current version (manifest-resolved —
-    * never enumerate the dirs, r7).
+  /** The accepted corpus at the current version: the
+    * [[StoreManifest.scan]] of the manifest's `doc` files under the
+    * manifest's `schema` line (never enumerate the dirs, r7).
     */
   def readDocs(spark: SparkSession, dir: String): DataFrame = {
     val cur = StoreManifest.currentVersion(spark, dir)
     require(cur >= 0, s"no committed dedup store under $dir")
-    val schema = schemaAt(spark, dir, cur)
-    val files = docFiles(spark, dir, cur)
-    if (files.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files.map(f => s"$dir/docs/$f"): _*)
+    StoreManifest.scan(spark, s"$dir/docs", schemaAt(spark, dir, cur),
+      docFiles(spark, dir, cur))
   }
 
-  /** The committed fingerprint set, optionally pruned to the buckets a
-    * fingerprint frame touches (the membership-probe read path).
+  /** The committed fingerprint set (fp, b), optionally pruned to the
+    * buckets a fingerprint frame touches (the membership-probe read
+    * path): the [[StoreManifest.scan]] of the manifest's `fp` files,
+    * read as leaves — the `pb=` dirs name no column.
     */
   def readSeen(spark: SparkSession, dir: String,
                touched: Option[Set[Long]] = None): DataFrame = {
     val cur = StoreManifest.currentVersion(spark, dir)
     require(cur >= 0, s"no committed dedup store under $dir")
-    val files = fpFiles(spark, dir, cur)
-      .filter(f => touched.forall(_.contains(bucketOfPath(f))))
-    if (files.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], SeenSchema)
-    else spark.read.schema(SeenSchema).parquet(files.map(f => s"$dir/seen/$f"): _*)
+    StoreManifest.scan(spark, s"$dir/seen", SeenSchema, fpFiles(spark, dir, cur)
+      .filter(f => touched.forall(_.contains(bucketOfPath(f)))))
   }
 
   /** Committed probe-set files (exact fp + near bands) at the current
@@ -468,8 +464,7 @@ object DedupStore {
     val nearFs =
       if (prevNear.isEmpty) Seq.empty[String]
       else StoreManifest.stageAndMove(spark, new Path(dir, "near"),
-        spark.read.schema(NearSchema)
-          .parquet(prevNear.map(f => s"$dir/near/$f"): _*)
+        StoreManifest.scan(spark, s"$dir/near", NearSchema, prevNear)
           .withColumn("pb", pmod(col("bucket"), lit(b.toLong)))
           .repartition(math.max(1, math.min(b, 32)), col("pb")),
         "pb", None, next)
@@ -477,8 +472,7 @@ object DedupStore {
     val embFs =
       if (prevEmb.isEmpty) Seq.empty[String]
       else StoreManifest.stageAndMove(spark, new Path(dir, "embs"),
-        spark.read.schema(EmbSchema)
-          .parquet(prevEmb.map(f => s"$dir/embs/$f"): _*)
+        StoreManifest.scan(spark, s"$dir/embs", EmbSchema, prevEmb)
           .withColumn("pb",
             pmod(xxhash64(col("table_id"), col("bucket")), lit(b.toLong)))
           .repartition(math.max(1, math.min(b, 32)), col("pb")),
@@ -520,8 +514,7 @@ object DedupStore {
     val b = storedBuckets(spark, dir, cur)
     // which doc files hold a target row — file-granular COW, probed with
     // one id-pruned, column-pruned scan
-    val hitRows = spark.read.schema(schema)
-      .parquet(docFiles(spark, dir, cur).map(f => s"$dir/docs/$f"): _*)
+    val hitRows = StoreManifest.scan(spark, s"$dir/docs", schema, docFiles(spark, dir, cur))
       .select(input_file_name().as("f"), col("doc_id"), col("fp"))
       .filter(col("doc_id").isin(ids: _*))
       .collect()
@@ -537,8 +530,7 @@ object DedupStore {
     val rewrittenDocs =
       if (hitDocFiles.isEmpty) Seq.empty[String]
       else {
-        val survivors = spark.read.schema(schema)
-          .parquet(hitDocFiles.toSeq.map(f => s"$dir/docs/$f"): _*)
+        val survivors = StoreManifest.scan(spark, s"$dir/docs", schema, hitDocFiles.toSeq)
           .filter(!col("doc_id").isin(ids: _*))
         if (survivors.isEmpty) Seq.empty[String]
         else stageDocs(spark, root, survivors, next)
@@ -550,8 +542,7 @@ object DedupStore {
     val rewrittenFps =
       if (hitFpFiles.isEmpty) Seq.empty[String]
       else {
-        val survivors = spark.read.schema(SeenSchema)
-          .parquet(hitFpFiles.map(f => s"$dir/seen/$f"): _*)
+        val survivors = StoreManifest.scan(spark, s"$dir/seen", SeenSchema, hitFpFiles)
           .filter(!col("fp").isin(goneFps.toSeq: _*))
           .withColumn("pb", col("b"))
         if (survivors.isEmpty) Seq.empty[String]
@@ -568,8 +559,7 @@ object DedupStore {
     val prevNearFs = nearFiles(spark, dir, cur)
     val nearLines: Seq[String] = nearCfg match {
       case Some(nc) if prevNearFs.nonEmpty =>
-        val erased = spark.read.schema(schema)
-          .parquet(hitDocFiles.toSeq.map(f => s"$dir/docs/$f"): _*)
+        val erased = StoreManifest.scan(spark, s"$dir/docs", schema, hitDocFiles.toSeq)
           .filter(col("doc_id").isin(ids: _*))
           .select("doc_id", "text")
         val erasedBands = MinHashDedup.banded(
@@ -584,8 +574,7 @@ object DedupStore {
         val rewrittenNear =
           if (hitNearFs.isEmpty) Seq.empty[String]
           else {
-            val nearSurvivors = spark.read.schema(NearSchema)
-              .parquet(hitNearFs.map(f => s"$dir/near/$f"): _*)
+            val nearSurvivors = StoreManifest.scan(spark, s"$dir/near", NearSchema, hitNearFs)
               .filter(!col("doc_id").isin(ids: _*))
               .withColumn("pb", pmod(col("bucket"), lit(b.toLong)))
             if (nearSurvivors.isEmpty) Seq.empty[String]
@@ -605,8 +594,7 @@ object DedupStore {
         graft.functions.VectorFunctions.register(spark)
         // zero-norm vectors never landed emb rows (the gate's guard) —
         // same exemption here so the touched-pb set matches what wrote
-        val erasedV = spark.read.schema(schema)
-          .parquet(hitDocFiles.toSeq.map(f => s"$dir/docs/$f"): _*)
+        val erasedV = StoreManifest.scan(spark, s"$dir/docs", schema, hitDocFiles.toSeq)
           .filter(col("doc_id").isin(ids: _*) && col("embedding").isNotNull &&
             expr("graft_dot(embedding, embedding)") > 0)
           .select(col("doc_id"), col("embedding").as("v"))
@@ -621,8 +609,7 @@ object DedupStore {
         val rewrittenEmb =
           if (hitEmbFs.isEmpty) Seq.empty[String]
           else {
-            val embSurvivors = spark.read.schema(EmbSchema)
-              .parquet(hitEmbFs.map(f => s"$dir/embs/$f"): _*)
+            val embSurvivors = StoreManifest.scan(spark, s"$dir/embs", EmbSchema, hitEmbFs)
               .filter(!col("doc_id").isin(ids: _*))
               .withColumn("pb",
                 pmod(xxhash64(col("table_id"), col("bucket")), lit(b.toLong)))
@@ -729,14 +716,14 @@ object DedupStore {
 
   /** The a-side of one near-dup probe join: the batch's own probe rows
     * with their doc_id as `a_id`, unioned with the committed rows in
-    * `files` under a null `a_id` (see the object scaladoc's near mode).
+    * `files` (relative to `root`) under a null `a_id` (see the object
+    * scaladoc's near mode).
     */
-  private def probeSide(spark: SparkSession, batchRows: DataFrame,
-                        files: Seq[String],
-                        schema: StructType): DataFrame = {
+  private def probeSide(spark: SparkSession, batchRows: DataFrame, root: String,
+                        files: Seq[String], schema: StructType): DataFrame = {
     val a = batchRows.withColumnRenamed("doc_id", "a_id")
     if (files.isEmpty) a
-    else a.unionByName(spark.read.schema(schema).parquet(files: _*)
+    else a.unionByName(StoreManifest.scan(spark, root, schema, files)
       .select(lit(null).cast("long").as("a_id") +:
         a.columns.filterNot(_ == "a_id").map(col).toSeq: _*))
   }

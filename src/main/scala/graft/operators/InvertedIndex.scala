@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Positional inverted index over a tokenized corpus — the full-text
   * half of a curation engine: term → (doc, positions) posting lists,
@@ -50,6 +51,14 @@ object InvertedIndex {
   /** The stored schema of [[build]]'s posting rows. */
   private val PostingDdl = "term STRING, doc_id BIGINT, positions ARRAY<INT>, tf BIGINT, dl BIGINT"
 
+  /** [[PostingDdl]] read across segments: the `seg=` and `bucket=` dirs
+    * are declared columns.
+    */
+  private val SegPostingSchema = StructType.fromDDL(s"$PostingDdl, seg STRING, bucket INT")
+
+  /** The stored schema of a segment's `_doclen` table and of a tombstone. */
+  private val DocLenSchema = StructType.fromDDL("doc_id BIGINT, dl BIGINT")
+
   /** Persist posting rows as the index's BASE segment and commit
     * manifest version 0 referencing it. Layout is
     * seg=<name>/bucket=<hash mod B>/: the seg layer is the atomic
@@ -70,11 +79,11 @@ object InvertedIndex {
     // committed data) — it becomes unreferenced and vacuum sweeps it
     val segName = freshName(spark, dir, "seg",
       i => if (i == 0) "seg=base" else s"seg=r$i", cur + 1)
-    val segDir = s"$dir/$segName"
     // a posting frame carries no doc table: doc lengths come off the
-    // postings just written (select BEFORE distinct: the read adds bucket)
-    val written = writeSegment(index, spark.read.schema("doc_id BIGINT, dl BIGINT")
-      .parquet(segDir).select("doc_id", "dl").distinct(), segDir, buckets)
+    // postings just written
+    val written = writeSegment(index,
+      StoreManifest.scan(spark, dir, DocLenSchema, Seq(segName)).distinct(),
+      dir, segName, buckets)
     // write is a REBUILD, so its caller-chosen bucket count becomes the
     // store's committed one (see storedBuckets); tombstones retire with
     // the old segments, and the replay guard carries forward
@@ -133,14 +142,15 @@ object InvertedIndex {
       .get
   }
 
-  /** Write `index` as a segment at `segDir` with `docLens` (doc_id, dl,
-    * by-name: built after the posting write) as its doc table — or, when
-    * it holds no posting, stop after the posting write that counts them
-    * and return None: the caller commits no segment, and vacuum sweeps
-    * the dir.
+  /** Write `index` as segment `segName` of the store at `dir` with
+    * `docLens` (doc_id, dl, by-name: built after the posting write) as
+    * its doc table — or, when it holds no posting, stop after the
+    * posting write that counts them and return None: the caller commits
+    * no segment, and vacuum sweeps the dir.
     */
-  private def writeSegment(index: DataFrame, docLens: => DataFrame, segDir: String,
-                           buckets: Int): Option[Seg] = {
+  private def writeSegment(index: DataFrame, docLens: => DataFrame, dir: String,
+                           segName: String, buckets: Int): Option[Seg] = {
+    val segDir = s"$dir/$segName"
     require(index.columns.contains("dl"),
       "writeSegment expects dl-bearing postings (the build() schema)")
     val (_, posted) = Observed.observing(
@@ -165,13 +175,13 @@ object InvertedIndex {
     // norm is monotone ↑tf, ↓dl). Vocab-sized, term-sorted in ONE file
     // so a query's terms resolve via rowgroup pushdown; [[searchBm25TopK]]
     // uses it to skip scoring docs that cannot reach the top-k.
-    index.sparkSession.read.schema("term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT")
-      .parquet(segDir)
+    StoreManifest.scan(index.sparkSession, dir,
+        StructType.fromDDL("term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT"), Seq(segName))
       .groupBy("term")
       .agg(count(lit(1)).as("df"), max("tf").as("max_tf"), min("dl").as("min_dl"))
       .coalesce(1).sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$segDir/_terms")
-    Some(Seg(new java.io.File(segDir).getName, stats.getLong(0), stats.getLong(1)))
+    Some(Seg(segName, stats.getLong(0), stats.getLong(1)))
   }
 
   /** (doc_id, dl) of raw documents: the `dl` [[build]] puts on their postings. */
@@ -240,9 +250,10 @@ object InvertedIndex {
     // bucket count yet
     val b = (if (cur < 0) None else StoreManifest.read(spark, dir, cur, "buckets").headOption)
       .fold(buckets)(_.toInt)
-    val segDir = s"$dir/seg=b$batch"
+    val segName = s"seg=b$batch"
+    val segDir = s"$dir/$segName"
     graft.Fs.rmTree(segDir) // a torn earlier attempt restages cleanly
-    val written = writeSegment(build(docs), docLensOf(docs), segDir, b)
+    val written = writeSegment(build(docs), docLensOf(docs), dir, segName, b)
     if (written.isEmpty) {
       graft.Fs.rmTree(segDir)
       return false
@@ -315,9 +326,8 @@ object InvertedIndex {
     // the fold is a REWRITE (read with the stored schema): appends carry
     // disjoint doc_ids, so each (term, doc_id) posting already occurs
     // once and its stored dl equals the doc's sum(tf)
-    val posts = minusTombstones(spark, dir, cur, spark.read.option("basePath", dir)
-        .schema(PostingDdl)
-        .parquet(toMerge.map(s => s"$dir/${s.name}"): _*))
+    val posts = minusTombstones(spark, dir, cur,
+        StoreManifest.scan(spark, dir, SegPostingSchema, toMerge.map(_.name)))
       .select("term", "doc_id", "positions", "tf", "dl")
     val lens = minusTombstones(spark, dir, cur, docLengthsOf(spark, dir, toMerge.map(_.name)))
     val segName = freshName(spark, dir, "seg", i => s"seg=c$i", next) // see write()
@@ -326,7 +336,7 @@ object InvertedIndex {
     val b = storedBuckets(spark, dir, cur)
     val written = writeSegment(
       batch.fold(posts)(d => posts.unionByName(build(d._1))),
-      batch.fold(lens)(d => lens.unionByName(docLensOf(d._1))), s"$dir/$segName", b)
+      batch.fold(lens)(d => lens.unionByName(docLensOf(d._1))), dir, segName, b)
     // shrink the tombstone set to docs still PHYSICALLY present — i.e.
     // those living in kept (untouched) segments, resolved off their
     // _doclen aux. A full fold (kept empty) retires every tombstone:
@@ -399,9 +409,7 @@ object InvertedIndex {
 
   private def tombstonesOf(spark: SparkSession, dir: String, version: Long): DataFrame = {
     val tombs = if (version < 0) Nil else StoreManifest.read(spark, dir, version, "tomb")
-    if (tombs.isEmpty) emptyFrame(spark, "doc_id BIGINT, dl BIGINT")
-    else spark.read.schema("doc_id BIGINT, dl BIGINT")
-      .parquet(tombs.map(t => s"$dir/$t"): _*)
+    StoreManifest.scan(spark, dir, DocLenSchema, tombs)
   }
 
   /** Anti-join `df` against the version's tombstones — the one filter
@@ -484,14 +492,8 @@ object InvertedIndex {
     */
   def readForTerms(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
     val cur = committed(spark, dir)
-    val segs = segsOf(spark, dir, cur)
-    if (segs.isEmpty) emptyFrame(spark, s"$PostingDdl, seg STRING, bucket INT")
-    else livePosts(spark, dir, terms, segs, cur)
+    livePosts(spark, dir, terms, segsOf(spark, dir, cur), cur)
   }
-
-  private def emptyFrame(spark: SparkSession, ddl: String): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** Per-doc token counts (doc_id, dl) of the current version — the
     * union of the live segments' co-committed `_doclen` tables. Exact
@@ -500,9 +502,8 @@ object InvertedIndex {
     */
   def docLengths(spark: SparkSession, dir: String): DataFrame = {
     val cur = committed(spark, dir)
-    val segs = segsOf(spark, dir, cur)
-    if (segs.isEmpty) emptyFrame(spark, "doc_id BIGINT, dl BIGINT")
-    else minusTombstones(spark, dir, cur, docLengthsOf(spark, dir, segs.map(_.name)))
+    minusTombstones(spark, dir, cur,
+      docLengthsOf(spark, dir, segsOf(spark, dir, cur).map(_.name)))
   }
 
   /** [[docLengths]] over an already-resolved segment list — the form
@@ -511,8 +512,7 @@ object InvertedIndex {
     */
   private def docLengthsOf(spark: SparkSession, dir: String,
                            segs: Seq[String]): DataFrame =
-    spark.read.schema("doc_id BIGINT, dl BIGINT")
-      .parquet(segs.map(s => s"$dir/$s/_doclen"): _*)
+    StoreManifest.scan(spark, dir, DocLenSchema, segs.map(_ + "/_doclen"))
 
   /** The BM25 per-(term, doc) score term over columns
     * (tf, df, dl, n_docs, tot_dl), k1 = 1.2, b = 0.75, as ONE textual
@@ -656,7 +656,8 @@ object InvertedIndex {
     val segs = segsOf(spark, dir, cur)
     // a committed store with zero segments legitimately answers "no
     // documents"
-    if (segs.isEmpty) return emptyFrame(spark, "doc_id BIGINT, n_terms BIGINT, bm25 DOUBLE")
+    if (segs.isEmpty) return StoreManifest.scan(spark, dir,
+      StructType.fromDDL("doc_id BIGINT, n_terms BIGINT, bm25 DOUBLE"), Nil)
     // erased docs drop out of the candidate set inside livePosts, and
     // corpusOf subtracts their (count, dl) from the corpus summary —
     // together the two make post-delete scores bit-equal to a rebuild
@@ -674,12 +675,10 @@ object InvertedIndex {
                         segs: Seq[Seg], cur: Long): DataFrame = {
     val b = storedBuckets(spark, dir, cur)
     val wanted = terms.map(t => bucketOf(t, b)).distinct
-    minusTombstones(spark, dir, cur, spark.read
-      .option("basePath", dir)
-      .schema(s"$PostingDdl, seg STRING, bucket INT")
-      .parquet(segs.map(s => s"$dir/${s.name}"): _*)
-      .filter(col("bucket").isin(wanted: _*))
-      .filter(col("term").isin(terms: _*)))
+    minusTombstones(spark, dir, cur,
+      StoreManifest.scan(spark, dir, SegPostingSchema, segs.map(_.name))
+        .filter(col("bucket").isin(wanted: _*))
+        .filter(col("term").isin(terms: _*)))
   }
 
   /** MaxScore planning for [[searchBm25TopK]]: per-term score UPPER
@@ -705,21 +704,22 @@ object InvertedIndex {
     val segs = segsOf(spark, dir, cur)
     // no documents: no bound to prune with
     if (segs.isEmpty) return (qTerms, None)
-    maxScorePlanResolved(spark, qTerms, k, segs.map(s => s"$dir/${s.name}"),
+    maxScorePlanResolved(spark, dir, qTerms, k, segs,
       livePosts(spark, dir, qTerms, segs, cur), corpusOf(spark, dir, cur, segs))
   }
 
-  /** [[maxScorePlan]] over an already-resolved (segment dirs, postings,
+  /** [[maxScorePlan]] over an already-resolved (segments, postings,
     * corpus) — the form [[searchBm25TopK]] uses so one query resolves
     * the manifest and builds the pruned posting read exactly once
     * (review r11).
     */
-  private def maxScorePlanResolved(spark: SparkSession, qTerms: Seq[String], k: Int,
-                                   segDirs: Seq[String], posts: DataFrame,
+  private def maxScorePlanResolved(spark: SparkSession, dir: String, qTerms: Seq[String],
+                                   k: Int, segs: Seq[Seg], posts: DataFrame,
                                    corpus: Corpus): (Seq[String], Option[Double]) = {
     val (nDocs, totDl, tombCount) = (corpus.nDocs, corpus.totDl, corpus.tombs)
-    val tr = spark.read.schema("term STRING, df BIGINT, max_tf BIGINT, min_dl BIGINT")
-      .parquet(segDirs.map(d => s"$d/_terms"): _*)
+    val tr = StoreManifest.scan(spark, dir,
+        StructType.fromDDL("term STRING, df BIGINT, max_tf BIGINT, min_dl BIGINT"),
+        segs.map(_.name + "/_terms"))
       .filter(col("term").isin(qTerms: _*))
       .groupBy("term").agg(sum("df").as("df"), max("max_tf").as("max_tf"),
         min("min_dl").as("min_dl"))
@@ -780,8 +780,7 @@ object InvertedIndex {
       return searchBm25(spark, dir, terms).orderBy(col("bm25").desc, col("doc_id")).limit(k)
     val posts = livePosts(spark, dir, qTerms, segs, cur)
     val corpus = corpusOf(spark, dir, cur, segs)
-    val (essential, _) = maxScorePlanResolved(spark, qTerms, k,
-      segs.map(s => s"$dir/${s.name}"), posts, corpus)
+    val (essential, _) = maxScorePlanResolved(spark, dir, qTerms, k, segs, posts, corpus)
     val cands = posts.filter(col("term").isin(essential: _*))
       .select("doc_id").distinct()
     bm25Over(posts.join(cands, Seq("doc_id"), "left_semi"), posts, corpus.withStats)

@@ -70,12 +70,6 @@ object MergeInto {
   // snapshot-isolated readers, time travel, vacuum.
   // ---------------------------------------------------------------------
 
-  private def esc(v: String): String = StoreManifest.esc(v)
-  private def unesc(v: String): String = StoreManifest.unesc(v)
-
-  private def hfs(spark: org.apache.spark.sql.SparkSession,
-                  p: org.apache.hadoop.fs.Path) = StoreManifest.hfs(spark, p)
-
   /** Latest committed snapshot version, -1 if the dir has no manifest.
     * The newest complete manifest IS the commit pointer: manifests are
     * written tmp-then-rename, so a half-written one is never visible
@@ -85,48 +79,31 @@ object MergeInto {
   def currentVersion(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
     StoreManifest.currentVersion(spark, dir)
 
-  /** (schema, relative data-file paths) of a committed version.
-    * `private[operators]`: ZoneMaps keys its per-file stats off the same
-    * manifest file list readers resolve.
-    */
-  private[operators] def readManifest(spark: org.apache.spark.sql.SparkSession, dir: String,
-                           version: Long): (org.apache.spark.sql.types.StructType, Seq[String]) =
-    StoreManifest.readFiles(spark, dir, version)
-
   /** Relative data-file paths of a committed version (SHOW FILES): the
     * exact list readers of that version resolve — metadata only.
     */
   def manifestFiles(spark: org.apache.spark.sql.SparkSession, dir: String,
                     version: Long): Seq[String] =
-    readManifest(spark, dir, version)._2
+    StoreManifest.readFiles(spark, dir, version)._2
 
-  private def writeManifest(spark: org.apache.spark.sql.SparkSession, dir: String,
-                            version: Long,
-                            schema: org.apache.spark.sql.types.StructType,
-                            files: Seq[String]): Unit =
-    StoreManifest.commitFiles(spark, dir, version, schema, files)
-
-  /** Read a committed snapshot version (default: latest) — the ONLY read
-    * path that sees exactly one consistent version: the file list comes
-    * from the manifest, so files an in-flight or crashed merge has
-    * already moved in are invisible until their manifest commits, and
-    * the previous version keeps reading its own files while (and after)
-    * the next one commits. The manifest carries the schema, so the
-    * partition column comes back STRING-typed with no reliance on
-    * session-wide partition-type-inference state.
+  /** Read a committed snapshot version (default: latest): the
+    * [[StoreManifest.scan]] of its manifest's files under its pinned
+    * schema, so files an in-flight or crashed merge has already moved in
+    * are invisible until their manifest commits, and the previous
+    * version keeps reading its own files while (and after) the next one
+    * commits. The schema declares the partition column as STRING, so it
+    * comes back STRING-typed with no reliance on session-wide
+    * partition-type-inference state.
     *
-    * A dir without a manifest (never merged) falls back to a plain
-    * parquet read.
+    * A dir without a manifest (never merged: a user's Hive-style tree)
+    * falls back to a plain parquet read.
     */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession, dir: String,
                    version: Option[Long] = None): DataFrame = {
     val v = version.getOrElse(currentVersion(spark, dir))
     if (v < 0) return spark.read.parquet(dir)
-    val (schema, files) = readManifest(spark, dir, v)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.option("basePath", dir).schema(schema)
-      .parquet(files.map(f => s"$dir/$f"): _*)
+    val (schema, files) = StoreManifest.readFiles(spark, dir, v)
+    StoreManifest.scan(spark, dir, schema, files)
   }
 
   /** Change-data-feed between two committed versions: every row-level
@@ -153,23 +130,16 @@ object MergeInto {
                     fromVersion: Long, toVersion: Long,
                     keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "diffSnapshots needs at least one key column")
-    val (schemaF, filesF) = readManifest(spark, dir, fromVersion)
-    val (schemaT, filesT) = readManifest(spark, dir, toVersion)
+    val (schemaF, filesF) = StoreManifest.readFiles(spark, dir, fromVersion)
+    val (schemaT, filesT) = StoreManifest.readFiles(spark, dir, toVersion)
     require(schemaF.fieldNames.sameElements(schemaT.fieldNames),
       s"schema changed between v$fromVersion and v$toVersion — diff undefined")
     val fSet = filesF.toSet
     val tSet = filesT.toSet
-    def read(schema: org.apache.spark.sql.types.StructType,
-             files: Seq[String]): DataFrame =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.option("basePath", dir).schema(schema)
-        .parquet(files.map(f => s"$dir/$f"): _*)
     val cols = schemaT.fieldNames.toSeq
-    val b = read(schemaF, filesF.filterNot(tSet))
+    val b = StoreManifest.scan(spark, dir, schemaF, filesF.filterNot(tSet))
       .select(keys.map(col) :+ struct(cols.map(col): _*).as("_b"): _*)
-    val a = read(schemaT, filesT.filterNot(fSet))
+    val a = StoreManifest.scan(spark, dir, schemaT, filesT.filterNot(fSet))
       .select(keys.map(col) :+ struct(cols.map(col): _*).as("_a"): _*)
     b.join(a, keys, "full_outer")
       .withColumn("change",
@@ -189,7 +159,7 @@ object MergeInto {
     */
   def vacuum(spark: org.apache.spark.sql.SparkSession, dir: String,
              retain: Int = 2): Long =
-    StoreManifest.vacuumFiles(spark, dir, retain, readManifest(spark, dir, _)._2)
+    StoreManifest.vacuumFiles(spark, dir, retain, manifestFiles(spark, dir, _))
 
   /** Partition-scoped copy-on-write MERGE against a parquet snapshot —
     * the file-level form of [[merge]], now with the Delta/Iceberg-style
@@ -230,10 +200,9 @@ object MergeInto {
     def partOf(rel: String) = rel.takeWhile(_ != '/')
     def liveParts(files: Seq[String]) = files.map(partOf).distinct.size.toLong
     val canonical = source.withColumn(partitionCol, col(partitionCol).cast("string"))
-    require(canonical.filter(col(partitionCol).isNull).isEmpty,
-      s"mergeFiles: NULL $partitionCol values are not supported")
+    val nullRefused = s"mergeFiles: NULL $partitionCol values are not supported"
     val root = new Path(dir)
-    val fs = hfs(spark, root)
+    val fs = StoreManifest.hfs(spark, root)
     def relFiles(): Seq[String] = fs.listStatus(root)
       .filter(p => p.isDirectory && p.getPath.getName.startsWith(s"$partitionCol="))
       .flatMap(pd => fs.listStatus(pd.getPath)
@@ -247,14 +216,17 @@ object MergeInto {
       // the STRING partition column
       val files = relFiles()
       val dataSchema = spark.read.parquet(s"$dir/${files.head}").schema
-      writeManifest(spark, dir, 0L,
+      StoreManifest.commitFiles(spark, dir, 0L,
         dataSchema.add(partitionCol, org.apache.spark.sql.types.StringType),
         files)
       cur = 0L
     }
     if (cur < 0) {
       // bootstrap: the batch (minus tombstoned keys) IS version 0 —
-      // lets a streaming upsert sink start from nothing
+      // lets a streaming upsert sink start from nothing. The NULL check
+      // runs before the write: a refused bootstrap leaves no files in a
+      // dir without a manifest
+      require(canonical.filter(col(partitionCol).isNull).isEmpty, nullRefused)
       val live = tombstoneCol match {
         case Some(t) => canonical
           .filter(!coalesce(col(t).cast("boolean"), lit(false))).drop(t)
@@ -265,22 +237,24 @@ object MergeInto {
       // no data file: the batch was empty, and an empty store has no version
       if (files.isEmpty) return (0L, 0L)
       val dataSchema = live.drop(partitionCol).schema
-      writeManifest(spark, dir, 0L,
+      StoreManifest.commitFiles(spark, dir, 0L,
         dataSchema.add(partitionCol, org.apache.spark.sql.types.StringType), files)
       return (liveParts(files), liveParts(files))
     }
-    val (schema, curFiles) = readManifest(spark, dir, cur)
+    val (schema, curFiles) = StoreManifest.readFiles(spark, dir, cur)
     val target = readSnapshot(spark, dir, Some(cur))
     val srcData = tombstoneCol.map(canonical.drop(_)).getOrElse(canonical)
     val srcKeys = canonical.select(keys.map(col): _*).distinct()
-    // step 1: affected partition values (skinny scan + batch partitions)
+    // step 1: affected partition values (skinny scan + batch partitions);
+    // a NULL among the batch's values is refused here, before any write
     val affected = target
       .join(srcKeys, keys, "left_semi")
       .select(col(partitionCol))
       .union(srcData.select(col(partitionCol)))
       .distinct().collect().map(_.getString(0)).toSet
+    require(!affected.contains(null), nullRefused)
     if (affected.isEmpty) return (liveParts(curFiles), 0L)
-    val affectedDirs = affected.map(v => s"$partitionCol=${esc(v)}")
+    val affectedDirs = affected.map(v => s"$partitionCol=${StoreManifest.esc(v)}")
     // step 2: merge only the affected slice. The result is cast back to
     // the manifest schema (target-schema-wins, as in SQL MERGE): source
     // expressions routinely widen types (DECIMAL(18,2)+1 → (19,2), which
@@ -295,7 +269,7 @@ object MergeInto {
     val moved = moveIn(spark, root, merged, partitionCol, affected, next)
     val carried = curFiles.filterNot(f => affectedDirs.contains(partOf(f)))
     val newFiles = carried ++ moved
-    writeManifest(spark, dir, next, schema, newFiles) // THE commit point
+    StoreManifest.commitFiles(spark, dir, next, schema, newFiles) // THE commit point
     vacuum(spark, dir, retainVersions)
     (liveParts(newFiles), affected.size.toLong)
   }
@@ -324,10 +298,10 @@ object MergeInto {
                 dataType: org.apache.spark.sql.types.DataType): Long = {
     val cur = currentVersion(spark, dir)
     require(cur >= 0, s"addColumn: no committed snapshot under $dir")
-    val (schema, files) = readManifest(spark, dir, cur)
+    val (schema, files) = StoreManifest.readFiles(spark, dir, cur)
     require(!schema.fieldNames.contains(name),
       s"addColumn: column $name already exists in v$cur")
-    writeManifest(spark, dir, cur + 1, schema.add(name, dataType), files)
+    StoreManifest.commitFiles(spark, dir, cur + 1, schema.add(name, dataType), files)
     cur + 1
   }
 
@@ -366,7 +340,7 @@ object MergeInto {
     def partOf(rel: String) = rel.takeWhile(_ != '/')
     val cur = currentVersion(spark, dir)
     require(cur >= 0, s"deleteWhere: no committed snapshot under $dir")
-    val (schema, curFiles) = readManifest(spark, dir, cur)
+    val (schema, curFiles) = StoreManifest.readFiles(spark, dir, cur)
     val target = readSnapshot(spark, dir, Some(cur))
     val hit = coalesce(predicate, lit(false))
     // affected-partition discovery: a column-pruned scan over (predicate
@@ -375,7 +349,7 @@ object MergeInto {
     val affected = target.filter(hit).select(col(partitionCol))
       .distinct().collect().map(_.getString(0)).toSet
     if (affected.isEmpty) return (0L, 0L)
-    val affectedDirs = affected.map(v => s"$partitionCol=${esc(v)}")
+    val affectedDirs = affected.map(v => s"$partitionCol=${StoreManifest.esc(v)}")
     // evaluate the predicate EXACTLY ONCE per slice row and checkpoint
     // the flagged slice: kept rows, the deleted count and the rewritten
     // files all read the same materialized flags, so a predicate that
@@ -392,7 +366,7 @@ object MergeInto {
       val root = new Path(dir)
       val moved = moveIn(spark, root, kept, partitionCol, affected, next)
       val carried = curFiles.filterNot(f => affectedDirs.contains(partOf(f)))
-      writeManifest(spark, dir, next, schema, carried ++ moved) // THE commit point
+      StoreManifest.commitFiles(spark, dir, next, schema, carried ++ moved) // THE commit point
       vacuum(spark, dir, retainVersions)
       (deleted, affected.size.toLong)
     } finally slice.unpersist(blocking = false)
@@ -438,7 +412,7 @@ object MergeInto {
       s"maxFilesPerPartition must be >= 1, got $maxFilesPerPartition")
     val cur = currentVersion(spark, dir)
     require(cur >= 0, s"no committed snapshot under $dir — nothing to compact")
-    val (schema, curFiles) = readManifest(spark, dir, cur)
+    val (schema, curFiles) = StoreManifest.readFiles(spark, dir, cur)
     def partOf(rel: String) = rel.takeWhile(_ != '/')
     val byPart = curFiles.groupBy(partOf)
     val affectedDirs = byPart.collect {
@@ -446,7 +420,7 @@ object MergeInto {
     }.toSet
     if (affectedDirs.isEmpty) return (0L, 0L)
     val affectedVals =
-      affectedDirs.map(d => unesc(d.stripPrefix(s"$partitionCol=")))
+      affectedDirs.map(d => StoreManifest.unesc(d.stripPrefix(s"$partitionCol=")))
     val slice = readSnapshot(spark, dir, Some(cur))
       .filter(col(partitionCol).isin(affectedVals.toSeq: _*))
       .repartition(col(partitionCol))
@@ -454,7 +428,7 @@ object MergeInto {
     val root = new Path(dir)
     val moved = moveIn(spark, root, slice, partitionCol, affectedVals, next)
     val carried = curFiles.filterNot(f => affectedDirs.contains(partOf(f)))
-    writeManifest(spark, dir, next, schema, carried ++ moved) // commit point
+    StoreManifest.commitFiles(spark, dir, next, schema, carried ++ moved) // commit point
     vacuum(spark, dir, retainVersions)
     val oldCount = affectedDirs.toSeq.map(byPart(_).size).sum.toLong
     (affectedDirs.size.toLong, oldCount - moved.size)

@@ -79,24 +79,17 @@ object RollupNav {
   private def guard(spark: SparkSession, dir: String): StoreManifest.HighWater =
     StoreManifest.guard(spark, dir, StoreManifest.currentVersion(spark, dir))
 
-  private def readManifest(spark: SparkSession, dir: String, version: Long)
-      : (org.apache.spark.sql.types.StructType, Seq[String]) =
-    StoreManifest.readFiles(spark, dir, version)
-
   /** The current committed cube as a frame (day STRING + dims +
-    * partial-aggregate columns) — the ONLY read path: file list and
-    * schema come from the manifest, so an in-flight maintenance batch
-    * is invisible until its one-rename commit. A dir with no manifest
-    * holds no cube and throws.
+    * partial-aggregate columns): the [[StoreManifest.scan]] of the
+    * current manifest's files under its pinned schema, so an in-flight
+    * maintenance batch is invisible until its one-rename commit. A dir
+    * with no manifest holds no cube and throws.
     */
   def readStore(spark: SparkSession, dir: String): DataFrame = {
     val cur = StoreManifest.currentVersion(spark, dir)
     require(cur >= 0, s"no committed rollup cube under $dir (no manifest)")
-    val (schema, files) = readManifest(spark, dir, cur)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.option("basePath", dir).schema(schema)
-      .parquet(files.map(f => s"$dir/$f"): _*)
+    val (schema, files) = StoreManifest.readFiles(spark, dir, cur)
+    StoreManifest.scan(spark, dir, schema, files)
   }
 
   /** Materialize `base` (already carrying a `day` column and long
@@ -184,15 +177,12 @@ object RollupNav {
     val days = delta.select("day").distinct().as[String].collect().sorted
     if (days.isEmpty) return
     val (schema, curFiles) =
-      if (cur >= 0) readManifest(spark, dir, cur)
+      if (cur >= 0) StoreManifest.readFiles(spark, dir, cur)
       else (delta.schema, Seq.empty[String])
     val dayDirs = days.map(d => s"day=${StoreManifest.esc(d)}").toSet
     val touched = curFiles.filter(f => dayDirs.contains(dayOf(f)))
-    val existing =
-      if (touched.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.option("basePath", dir).schema(schema)
-        .parquet(touched.map(f => s"$dir/$f"): _*) // manifest prune: touched days only
+    // manifest prune: touched days only
+    val existing = StoreManifest.scan(spark, dir, schema, touched)
     val merged = existing.select(delta.columns.map(col): _*)
       .unionByName(delta)
       .groupBy((col("day") +: rollup.dims.map(col)): _*)
@@ -236,7 +226,7 @@ object RollupNav {
       val cur = StoreManifest.currentVersion(spark, dir)
       require(cur >= 0,
         s"refreshDays requires a materialized (manifested) cube at $dir")
-      val (schema, curFiles) = readManifest(spark, dir, cur)
+      val (schema, curFiles) = StoreManifest.readFiles(spark, dir, cur)
       val delta = aggregateRollup(
         facts.filter(col("day").cast("string").isin(days: _*)), rollup)
       val next = cur + 1
@@ -257,7 +247,7 @@ object RollupNav {
     * version readable for in-flight readers.
     */
   def vacuum(spark: SparkSession, dir: String, retain: Int = 2): Long =
-    StoreManifest.vacuumFiles(spark, dir, retain, readManifest(spark, dir, _)._2)
+    StoreManifest.vacuumFiles(spark, dir, retain, StoreManifest.readFiles(spark, dir, _)._2)
 
   /** Route a (groupDims, grain) aggregate to the rollup. Returns None
     * when the rollup cannot answer it (dims outside the cube or a grain

@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The ONE commit primitive every versioned store publishes through —
   * the Delta/Iceberg-style pointer protocol [[MergeInto]] proved out,
@@ -185,7 +186,7 @@ object StoreManifest {
     * lines, then any store-specific lines (e.g. RollupNav's `hw`).
     */
   def commitFiles(spark: SparkSession, dir: String, version: Long,
-                  schema: org.apache.spark.sql.types.StructType,
+                  schema: StructType,
                   files: Seq[String], extra: Seq[String] = Nil): Unit =
     commit(spark, dir, version,
       s"schema\t${schema.json}" +: (files.sorted.map("file\t" + _) ++ extra))
@@ -194,13 +195,38 @@ object StoreManifest {
     * file paths).
     */
   def readFiles(spark: SparkSession, dir: String, version: Long)
-      : (org.apache.spark.sql.types.StructType, Seq[String]) = {
+      : (StructType, Seq[String]) = {
     val lines = readLines(spark, dir, version)
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(lines.head.stripPrefix("schema\t"))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = DataType.fromJson(lines.head.stripPrefix("schema\t"))
+      .asInstanceOf[StructType]
     (schema, lines.collect { case l if l.startsWith("file\t") => l.substring(5) })
   }
+
+  /** The ONE read of store data: `paths` (files or dirs, relative to
+    * `dir`, as a version's manifest lists them) under `schema`. No
+    * paths is a typed empty frame. Partition columns are declared, not
+    * discovered: a `k=` dir in the paths becomes column `k` only when
+    * `schema` declares `k` (the read is then based at `dir`); otherwise
+    * the paths are read as leaves, and no column outside `schema`
+    * comes back. Several dirs that hold `k=` dirs below them are read
+    * together only with `k` declared (Spark refuses the conflicting
+    * roots). With a schema and at most 32 paths the read resolves
+    * without a Spark job.
+    */
+  def scan(spark: SparkSession, dir: String, schema: StructType,
+           paths: Seq[String]): DataFrame =
+    if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else {
+      val declared = schema.fieldNames.toSet
+      val partitioned = paths.exists(_.split('/').exists(d =>
+        d.contains('=') && declared(d.takeWhile(_ != '='))))
+      val reader = spark.read.schema(schema)
+      val df = (if (partitioned) reader.option("basePath", dir) else reader)
+        .parquet(paths.map(p => s"$dir/$p"): _*)
+      // a dir read as a leaf still discovers the `k=` dirs below it
+      val undeclared = df.columns.filterNot(declared)
+      if (undeclared.isEmpty) df else df.drop(undeclared.toIndexedSeq: _*)
+    }
 
   /** Delete manifests older than the newest `retain` versions and return
     * the SURVIVING versions (callers sweep their own unreferenced data

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-file zone maps (min / max / null count per column) and the
@@ -27,15 +27,21 @@ object ZoneMaps {
     */
   def build(spark: SparkSession, path: String, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "zone maps need at least one column")
-    val aggs = count(lit(1)).as("n_rows") +: cols.flatMap(c => Seq(
-      min(col(c)).as(s"${c}__min"),
-      max(col(c)).as(s"${c}__max"),
-      sum(when(col(c).isNull, 1).otherwise(0)).cast("long").as(s"${c}__nulls")))
+    val aggs = statsOf(cols)
     spark.read.parquet(path)
       .select(cols.map(col): _*)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
   }
+
+  /** A zone map's per-file aggregates: row count, then min / max / null
+    * count per column.
+    */
+  private def statsOf(cols: Seq[String]): Seq[Column] =
+    count(lit(1)).as("n_rows") +: cols.flatMap(c => Seq(
+      min(col(c)).as(s"${c}__min"),
+      max(col(c)).as(s"${c}__max"),
+      sum(when(col(c).isNull, 1).otherwise(0)).cast("long").as(s"${c}__nulls")))
 
   /** Range read through the zone map: open only files whose [min, max]
     * envelope on `c` intersects [lo, hi], then apply the exact predicate
@@ -89,11 +95,19 @@ object ZoneMaps {
     require(cols.nonEmpty, "zone maps need at least one column")
     val v = version.getOrElse(MergeInto.currentVersion(spark, dir))
     require(v >= 0, s"no committed snapshot under $dir")
-    val (_, files) = MergeInto.readManifest(spark, dir, v)
+    val (schema, files) = StoreManifest.readFiles(spark, dir, v)
+    // read ONLY the given files, under the manifest schema; relativize the
+    // absolute scan path back to the manifest's key so the map joins
+    // across versions
+    def mapOf(fs: Seq[String]): DataFrame = {
+      val aggs = statsOf(cols)
+      StoreManifest.scan(spark, dir, schema, fs)
+        .select((cols.map(col)) :+ input_file_name().as("__abs"): _*)
+        .groupBy(regexp_extract(col("__abs"), "([^/]+/[^/]+)$", 1).as("file"))
+        .agg(aggs.head, aggs.tail: _*)
+    }
     if (files.isEmpty) // degenerate: empty snapshot → empty map
-      return prev.map(_.limit(0)).getOrElse(
-        build(spark, dir, cols).limit(0))
-    val fileSet = files.toSet
+      return prev.map(_.limit(0)).getOrElse(mapOf(Nil))
     val carried = prev.map(_.filter(col("file").isin(files: _*)))
     val newFiles = carried match {
       case None => files
@@ -101,21 +115,7 @@ object ZoneMaps {
         val have = p.select("file").collect().map(_.getString(0)).toSet
         files.filterNot(have)
     }
-    val fresh =
-      if (newFiles.isEmpty) None
-      else {
-        val aggs = count(lit(1)).as("n_rows") +: cols.flatMap(c => Seq(
-          min(col(c)).as(s"${c}__min"),
-          max(col(c)).as(s"${c}__max"),
-          sum(when(col(c).isNull, 1).otherwise(0)).cast("long").as(s"${c}__nulls")))
-        // read ONLY the new files; relativize the absolute scan path back
-        // to the manifest's key so the map joins across versions
-        Some(spark.read.option("basePath", dir)
-          .parquet(newFiles.map(f => s"$dir/$f"): _*)
-          .select((cols.map(col)) :+ input_file_name().as("__abs"): _*)
-          .groupBy(regexp_extract(col("__abs"), "([^/]+/[^/]+)$", 1).as("file"))
-          .agg(aggs.head, aggs.tail: _*))
-      }
+    val fresh = if (newFiles.isEmpty) None else Some(mapOf(newFiles))
     (carried, fresh) match {
       case (Some(p), Some(f)) => p.unionByName(f)
       case (Some(p), None)    => p
@@ -133,18 +133,13 @@ object ZoneMaps {
                          c: String, lo: Any, hi: Any,
                          version: Option[Long] = None): (DataFrame, Long, Long) = {
     val v = version.getOrElse(MergeInto.currentVersion(spark, dir))
-    val (schema, files) = MergeInto.readManifest(spark, dir, v)
+    val (schema, files) = StoreManifest.readFiles(spark, dir, v)
     val keep = zonemap
       .filter(!(col(s"${c}__max") < lit(lo) || col(s"${c}__min") > lit(hi)))
       .select("file").collect().map(_.getString(0)).toSet
     val chosen = files.filter(keep)
-    val pruned =
-      if (chosen.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.option("basePath", dir).schema(schema)
-        .parquet(chosen.map(f => s"$dir/$f"): _*)
-    (pruned.filter(col(c) >= lit(lo) && col(c) <= lit(hi)),
+    (StoreManifest.scan(spark, dir, schema, chosen)
+        .filter(col(c) >= lit(lo) && col(c) <= lit(hi)),
       chosen.size.toLong, files.size.toLong)
   }
 }

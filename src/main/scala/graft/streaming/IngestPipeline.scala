@@ -139,8 +139,7 @@ object IngestPipeline {
       .filter(_.startsWith(s"v$v-"))
     if (newFiles.isEmpty) return None
     val schema = DedupStore.schemaAt(spark, dedupDir, v)
-    def read(fs: Seq[String]) = spark.read.schema(schema)
-      .parquet(fs.map(f => s"$dedupDir/docs/$f"): _*)
+    def read(fs: Seq[String]) = StoreManifest.scan(spark, s"$dedupDir/docs", schema, fs)
     // files the current manifest still references are untouched by any
     // delete — the common case, ingested whole with no extra read
     val (live, rewritten) = newFiles.partition(curDocFiles.contains)
@@ -165,10 +164,7 @@ object IngestPipeline {
           .join(accepted.hint("shuffle_hash"), Seq("doc_id", "fp"), "left_semi")
         val filtered =
           if (laterClaimed.isEmpty) base
-          else base.join(
-            spark.read.schema(schema)
-              .parquet(laterClaimed.map(f => s"$dedupDir/docs/$f"): _*)
-              .select("doc_id").hint("shuffle_hash"),
+          else base.join(read(laterClaimed).select("doc_id").hint("shuffle_hash"),
             Seq("doc_id"), "left_anti")
         Some(filtered.select(cols.map(col): _*))
       }

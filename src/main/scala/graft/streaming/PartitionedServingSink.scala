@@ -5,6 +5,7 @@ import graft.sources.JsonIngest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
 
@@ -45,6 +46,15 @@ import java.time.format.DateTimeFormatter
   */
 object PartitionedServingSink {
 
+  /** The stored schema of a `counts_per_user` snapshot (`hour` is plain
+    * TIMESTAMP: date_trunc's type under the UTC session).
+    */
+  val CountsSchema: StructType = StructType.fromDDL(
+    "hour TIMESTAMP, user_id BIGINT, cnt BIGINT, sum_value DECIMAL(18,2)")
+
+  /** The stored schema of a `uniques_hourly` snapshot. */
+  val UniquesSchema: StructType = StructType.fromDDL("hour TIMESTAMP, sketch BINARY")
+
   /** Hour-key → snapshot version serving that hour, and the replay
     * guard (`hw`, the applied ingest batch), of store version `v` (empty
     * and unapplied before the first commit).
@@ -69,8 +79,9 @@ object PartitionedServingSink {
     gc(spark, storeDir)
   }
 
-  private def partDir(storeDir: String, table: String, hourKey: String, ver: Long): String =
-    s"$storeDir/$table/h$hourKey/v$ver"
+  /** A snapshot's dir, relative to the store dir. */
+  private def partDir(table: String, hourKey: String, ver: Long): String =
+    s"$table/h$hourKey/v$ver"
 
   /** Idempotent micro-batch commit; see the protocol in the scaladoc.
     * Replay detection is against the applied-batch `hw`, not the store
@@ -115,7 +126,8 @@ object PartitionedServingSink {
           val dC = countsDelta.filter(hourKey === key)
           val mergedCounts = prevManifest.get(key) match {
             case Some(prevVer) =>
-              spark.read.parquet(partDir(storeDir, "counts_per_user", key, prevVer))
+              StoreManifest.scan(spark, storeDir, CountsSchema,
+                  Seq(partDir("counts_per_user", key, prevVer)))
                 .unionByName(dC)
                 .groupBy("hour", "user_id")
                 .agg(sum("cnt").cast("long").as("cnt"),
@@ -123,19 +135,20 @@ object PartitionedServingSink {
             case None => dC
           }
           mergedCounts.write.mode("overwrite")
-            .parquet(partDir(storeDir, "counts_per_user", key, version))
+            .parquet(s"$storeDir/${partDir("counts_per_user", key, version)}")
 
           val dU = valid.filter(hourKey === key).groupBy("hour")
             .agg(expr("hll_sketch_agg(user_id)").as("sketch"))
           val mergedUniq = prevManifest.get(key) match {
             case Some(prevVer) =>
-              spark.read.parquet(partDir(storeDir, "uniques_hourly", key, prevVer))
+              StoreManifest.scan(spark, storeDir, UniquesSchema,
+                  Seq(partDir("uniques_hourly", key, prevVer)))
                 .unionByName(dU)
                 .groupBy("hour").agg(expr("hll_union_agg(sketch)").as("sketch"))
             case None => dU
           }
           mergedUniq.write.mode("overwrite")
-            .parquet(partDir(storeDir, "uniques_hourly", key, version))
+            .parquet(s"$storeDir/${partDir("uniques_hourly", key, version)}")
         }
       } finally { countsDelta.unpersist(); () }
 
@@ -187,20 +200,20 @@ object PartitionedServingSink {
     val dropped = scala.collection.mutable.ArrayBuffer.empty[String]
     touched.foreach { key =>
       val prevVer = prevManifest(key) // touched ⇒ manifested by construction
-      val kept = spark.read
-        .parquet(partDir(storeDir, "counts_per_user", key, prevVer))
+      val kept = StoreManifest.scan(spark, storeDir, CountsSchema,
+          Seq(partDir("counts_per_user", key, prevVer)))
         .filter(!col("user_id").isin(userIds: _*))
       if (kept.isEmpty) { dropped += key; () }
       else {
         kept.write.mode("overwrite")
-          .parquet(partDir(storeDir, "counts_per_user", key, version))
+          .parquet(s"$storeDir/${partDir("counts_per_user", key, version)}")
         // sketch recompute from surviving facts — scoped to THIS hour
         survivingEvents
           .select(date_trunc("hour", col("ts")).as("hour"), col("user_id"))
           .filter(date_format(col("hour"), "yyyy-MM-dd'T'HH") === key)
           .groupBy("hour").agg(expr("hll_sketch_agg(user_id)").as("sketch"))
           .write.mode("overwrite")
-          .parquet(partDir(storeDir, "uniques_hourly", key, version))
+          .parquet(s"$storeDir/${partDir("uniques_hourly", key, version)}")
       }
     }
     // `hw` carries VERBATIM: this commit consumed no ingest batch, and
@@ -251,37 +264,22 @@ object PartitionedServingSink {
   private def servedHours(spark: SparkSession, storeDir: String): Seq[(String, Long)] =
     committed(spark, storeDir, StoreManifest.currentVersion(spark, storeDir))._1.toSeq.sorted
 
-  private def servingPaths(spark: SparkSession, storeDir: String,
-                           table: String): Seq[String] =
-    servedHours(spark, storeDir)
-      .map { case (k, v) => partDir(storeDir, table, k, v) }
-      .filter(p => Files.exists(Paths.get(p)))
-
-  // hour is plain TIMESTAMP in snapshots (see ServingSink.emptyCounts)
-  private def emptyCounts(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(java.sql.Timestamp, Long, Long, java.math.BigDecimal)]
-      .toDF("hour", "user_id", "cnt", "sum_value")
-      .select(col("hour"), col("user_id"), col("cnt"),
-        col("sum_value").cast("decimal(18,2)"))
-  }
+  /** The served snapshots of `table` among `hours`, relative to the store dir. */
+  private def served(storeDir: String, table: String,
+                     hours: Seq[(String, Long)]): Seq[String] =
+    hours.map { case (k, v) => partDir(table, k, v) }
+      .filter(p => Files.exists(Paths.get(storeDir, p)))
 
   /** Keyed per-user counters — only the manifest-listed snapshots load. */
-  def countsPerUser(spark: SparkSession, storeDir: String): DataFrame = {
-    val paths = servingPaths(spark, storeDir, "counts_per_user")
-    if (paths.isEmpty) emptyCounts(spark)
-    else spark.read.parquet(paths: _*)
-  }
+  def countsPerUser(spark: SparkSession, storeDir: String): DataFrame =
+    StoreManifest.scan(spark, storeDir, CountsSchema,
+      served(storeDir, "counts_per_user", servedHours(spark, storeDir)))
 
   /** Distinct users per hour from the merged sketches. */
-  def uniquesHourly(spark: SparkSession, storeDir: String): DataFrame = {
-    import spark.implicits._
-    val paths = servingPaths(spark, storeDir, "uniques_hourly")
-    if (paths.isEmpty)
-      Seq.empty[(java.sql.Timestamp, Long)].toDF("hour", "approx_users")
-    else spark.read.parquet(paths: _*)
+  def uniquesHourly(spark: SparkSession, storeDir: String): DataFrame =
+    StoreManifest.scan(spark, storeDir, UniquesSchema,
+        served(storeDir, "uniques_hourly", servedHours(spark, storeDir)))
       .select(col("hour"), expr("hll_sketch_estimate(sketch)").as("approx_users"))
-  }
 
   /** Distinct users over an hour range — union of per-hour sketch state;
     * partition pruning happens at the MANIFEST level: out-of-range hours'
@@ -289,18 +287,16 @@ object PartitionedServingSink {
     */
   def uniquesRange(spark: SparkSession, storeDir: String,
                    fromHour: String, untilHour: String): DataFrame = {
-    import spark.implicits._
     val from = java.time.LocalDateTime.parse(fromHour.replace(' ', 'T'))
     val until = java.time.LocalDateTime.parse(untilHour.replace(' ', 'T'))
-    val paths = servedHours(spark, storeDir)
+    val snaps = served(storeDir, "uniques_hourly", servedHours(spark, storeDir)
       .filter { case (k, _) =>
         val h = java.time.LocalDateTime.parse(k + ":00:00", DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
         !h.isBefore(from) && h.isBefore(until)
-      }
-      .map { case (k, v) => partDir(storeDir, "uniques_hourly", k, v) }
-      .filter(p => Files.exists(Paths.get(p)))
-    if (paths.isEmpty) Seq.empty[Long].toDF("approx_users")
-    else spark.read.parquet(paths: _*)
-      .agg(expr("hll_sketch_estimate(hll_union_agg(sketch))").as("approx_users"))
+      })
+    val sketches = StoreManifest.scan(spark, storeDir, UniquesSchema, snaps)
+    // a range serving no hour answers no row, not one NULL estimate
+    if (snaps.isEmpty) sketches.select(expr("hll_sketch_estimate(sketch)").as("approx_users"))
+    else sketches.agg(expr("hll_sketch_estimate(hll_union_agg(sketch))").as("approx_users"))
   }
 }

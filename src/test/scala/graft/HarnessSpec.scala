@@ -47,7 +47,7 @@ class HarnessSpec extends SparkSpec {
     assert(l.sqlExecutions > 0 && l.planningMs > 0, l.toString)
     // the record carries the bytes as integers, so a small shuffle
     // reads non-zero instead of rounding to 0.00 MB
-    val rec = Harness.record("q", rows, l, l)
+    val rec = Harness.record("q", rows, l, l, 0.25)
     val field = """"(\w+_bytes)":(\d+)""".r
     val bytes = field.findAllMatchIn(rec).map(m => m.group(1) -> m.group(2).toLong).toMap
     assert(bytes.keySet == Set("shuffle_read_bytes", "shuffle_write_bytes",
@@ -55,5 +55,7 @@ class HarnessSpec extends SparkSpec {
     assert(bytes("shuffle_read_bytes") == l.shuffleRead && bytes("shuffle_read_bytes") > 0, rec)
     assert(bytes("shuffle_write_bytes") == l.shuffleWrite && bytes("shuffle_write_bytes") > 0, rec)
     assert(rec.contains(s""""sql_executions":${l.sqlExecutions},"planning_ms":${l.planningMs},"""), rec)
+    // the noop-write pass's seconds, beside the count() passes' cold and warm
+    assert(rec.contains(""""noop_s":0.250,"""), rec)
   }
 }

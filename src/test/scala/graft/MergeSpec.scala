@@ -165,6 +165,20 @@ class MergeSpec extends SparkSpec {
           Seq("id"), "day", Some("del"))
       }
       assert(e.getMessage.contains("NULL"), e.getMessage)
+      assert(MergeInto.currentVersion(spark, dir) == 1L, "a refused merge committed")
+      // the same batch into an empty dir (the bootstrap) is refused before
+      // any write: the dir keeps no data file and no manifest
+      val fresh = java.nio.file.Files.createTempDirectory("graft_cow_null").toString
+      try {
+        val eb = intercept[IllegalArgumentException] {
+          MergeInto.mergeFiles(spark, fresh,
+            Seq((9L, null: String, 9.0, false)).toDF("id", "day", "v", "del"),
+            Seq("id"), "day", Some("del"))
+        }
+        assert(eb.getMessage.contains("NULL"), eb.getMessage)
+        assert(new java.io.File(fresh).list().isEmpty,
+          new java.io.File(fresh).list().mkString(", "))
+      } finally graft.Fs.rmTree(fresh)
     } finally graft.Fs.rmTree(dir)
   }
 

@@ -77,6 +77,14 @@ class PartitionedSinkSpec extends SparkSpec {
     assert(Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T00", "v2")))
     assert(!Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T01", "v2")))
     assert(!Files.exists(Paths.get(store, "counts_per_user", "h2024-01-01T02", "v2")))
+    // the pinned snapshot schemas are the ones Spark infers from what the
+    // sink wrote, on a first write (v0) and on a merge (v2) alike
+    for (snap <- Seq("h2024-01-01T01/v0", "h2024-01-01T00/v2")) {
+      assert(spark.read.parquet(s"$store/counts_per_user/$snap").schema ==
+        PartitionedServingSink.CountsSchema)
+      assert(spark.read.parquet(s"$store/uniques_hourly/$snap").schema ==
+        PartitionedServingSink.UniquesSchema)
+    }
 
     // read path equals the batch Fanout views over all events
     val allValid = JsonIngest.valid(JsonIngest.readJsonLines(spark, in))

@@ -3,6 +3,7 @@ package graft
 import graft.operators.{AnnIndexStore, DedupStore, InvertedIndex, MergeInto, StoreManifest, Vacuum}
 import graft.streaming.IngestPipeline
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The unified retention sweep (operators.Vacuum.sweepAll — VERDICT r12
   * missing #3): one retainVersions knob across snapshot + index + ANN +
@@ -246,5 +247,61 @@ class VacuumSpec extends SparkSpec {
       assert(InvertedIndex.docLengths(spark, idxDir)
         .select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 3L))
     } finally Fs.rmTree(base)
+  }
+
+  /** Data-file paths under `dir`, relative to it. */
+  private def relFiles(dir: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.map(p => root.relativize(p).toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted
+    finally walk.close()
+  }
+
+  test("StoreManifest.scan: no paths is a typed empty frame; k= dirs are columns only when declared") {
+    import org.apache.spark.sql.types.StructType
+    val dir = java.nio.file.Files.createTempDirectory("graft_scan").toString
+    try {
+      // '01' would come back as int 1 if the column were discovered
+      Seq((1L, "01", 1), (2L, "01", 2), (3L, "2", 1)).toDF("id", "k", "bucket")
+        .write.partitionBy("k", "bucket").parquet(s"$dir/seg=x")
+      val files = relFiles(dir)
+      val rows = Set((1L, "01"), (2L, "01"), (3L, "2"))
+      val declared = StructType.fromDDL("id BIGINT, k STRING")
+      val empty = StoreManifest.scan(spark, dir, declared, Nil)
+      assert(empty.schema == declared && empty.isEmpty)
+      // a declared k= dir comes back as a column of the declared type,
+      // from file paths and from a dir path alike
+      val byFiles = StoreManifest.scan(spark, dir,
+        StructType.fromDDL("id BIGINT, k STRING, bucket INT"), files)
+      assert(byFiles.columns.toSeq == Seq("id", "k", "bucket"), byFiles.schema)
+      assert(byFiles.schema("k").dataType == org.apache.spark.sql.types.StringType)
+      assert(byFiles.select("id", "k").as[(Long, String)].collect().toSet == rows)
+      val byDir = StoreManifest.scan(spark, dir, declared, Seq("seg=x"))
+      assert(byDir.columns.toSeq == Seq("id", "k"), byDir.schema)
+      assert(byDir.as[(Long, String)].collect().toSet == rows)
+      // undeclared k= dirs name no column: files read as leaves, and the
+      // dirs a dir path discovers below it are dropped
+      val undeclared = StructType.fromDDL("id BIGINT")
+      for (paths <- Seq(files, Seq("seg=x"))) {
+        val df = StoreManifest.scan(spark, dir, undeclared, paths)
+        assert(df.columns.toSeq == Seq("id"), df.schema)
+        assert(df.as[Long].collect().toSet == Set(1L, 2L, 3L))
+      }
+    } finally Fs.rmTree(dir)
+  }
+
+  test("StoreManifest.scan: a read of 32 files resolves in 0 jobs") {
+    import org.apache.spark.sql.types.StructType
+    val dir = java.nio.file.Files.createTempDirectory("graft_scan32").toString
+    try {
+      spark.range(0, 320, 1, 32).write.parquet(s"$dir/data")
+      val files = relFiles(dir)
+      assert(files.size == 32, files)
+      val (df, layers) = Harness.measure(spark)(
+        StoreManifest.scan(spark, dir, StructType.fromDDL("id BIGINT"), files))
+      assert(layers.jobs == 0, layers.toString)
+      assert(df.count() == 320L)
+    } finally Fs.rmTree(dir)
   }
 }
